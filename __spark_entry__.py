@@ -20,23 +20,22 @@ from __future__ import annotations
 import math
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s2js_spark.geometry.cap import Cap
 from s2js_spark.geometry.interval import R1Interval, S1Interval
 from s2js_spark.geometry.point import Point
 from s2js_spark.geometry.rect import Rect
-from s2js_spark.spark import functions as s2f
 from s2js_spark.spark import textops
-from s2js_spark.spark.pages import PAGES_SQL, pages, register_documents
+from s2js_spark.spark.pages import PAGES_SQL, pages
 from s2js_spark.spark.pipeline import (
     dedup_latest,
     encode_cells,
     extract_geotags,
     tag_pipeline,
 )
-from s2js_spark.spark.similarity import brute_force_topk, cosine_expr, lsh_topk
+from s2js_spark.spark.similarity import brute_force_topk, lsh_topk
 from s2js_spark.spark.tagjoin import tag_tiles_pairs
 from s2js_spark.spark.tiles import build_tileset
 

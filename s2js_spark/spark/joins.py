@@ -1,4 +1,4 @@
-"""Distributed spatial joins beyond the broadcast tile kernel.
+"""Distributed spatial joins beyond the broadcast tile join (tagjoin).
 
 ``knn_join`` is the scale path for many-query nearest-neighbor joins
 (SURVEY §2.5): both sides key by their cell at a chosen level, queries
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from ..geometry import cellid_scalar as cs
 from ..geometry.metric import MIN_WIDTH_METRIC
 from ..kernels import cellid as kc
 
@@ -363,12 +364,11 @@ def polygon_pair_join(
     exact polygon intersection. Tile sets are driver-sized objects; the
     sweep is O(cells log cells).
     """
-    events = []  # (key, end, side, tile)
+    events = []  # (range_min, range_max, side, tile)
     for side, ts in ((0, ts_a), (1, ts_b)):
-        seg = ts.seg_start
-        for s in range(len(seg) - 1):
-            for j in range(ts.csr_off[s], ts.csr_off[s + 1]):
-                events.append((int(seg[s]), int(seg[s + 1]) - 1, side, int(ts.csr_tile[j])))
+        for c, tile in zip(ts.cov_cell, ts.cov_tile):
+            c = int(c)
+            events.append((cs.range_min(c), cs.range_max(c), side, int(tile)))
     events.sort()
     # sweep: active intervals per side
     candidates = set()

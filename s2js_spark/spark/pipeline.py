@@ -4,37 +4,15 @@ dedup re-crawls -> spatial join to tile sets.
 Stage order is chosen for scan efficiency at 100 TB: the geotag regex
 reads only ``html``; ``text`` is carried through untouched (byte
 identity asserted in tests); dedup shuffles on ``url`` once; the tile
-join is map-side (broadcast kernel, no shuffle).
+join is map-side (broadcast covering join, no shuffle).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
 
 from .tiles import TileSetStruct
-
-# Decimal-degree geotag in <meta name="geo.position" content="lat;lng">
-# (engine-only op, SURVEY §2.9 input_hint).
-_GEO_RE = r'<meta name="geo\.position" content="(-?\d+\.\d+);(-?\d+\.\d+)"'
-
-_GEO_SCHEMA = StructType(
-    [StructField("lat", DoubleType()), StructField("lng", DoubleType())]
-)
-
-
-@F.pandas_udf(_GEO_SCHEMA)
-def geo_extract(html: pd.Series) -> pd.DataFrame:
-    """Arrow-batched geotag extraction from raw html bytes (Python
-    variant; kept for parity tests — the pipeline uses the JVM path)."""
-    s = html.map(lambda b: b.decode("utf-8", "replace") if isinstance(b, (bytes, bytearray)) else b)
-    ex = s.str.extract(_GEO_RE)
-    return pd.DataFrame(
-        {"lat": pd.to_numeric(ex[0]), "lng": pd.to_numeric(ex[1])}
-    )
 
 
 def extract_geotags(df: DataFrame) -> DataFrame:

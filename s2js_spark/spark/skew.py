@@ -1,16 +1,12 @@
 """Explicit skew handling for hot cell keys (north rule, SURVEY §4.3).
 
-Zipfian geotags make coarse cell prefixes (cities) extremely hot. Two
-mechanisms are provided on top of AQE's runtime skew-join splitting:
+Zipfian geotags make coarse cell prefixes (cities) extremely hot. On
+top of AQE's runtime skew-join splitting, ``salted_agg`` provides
+two-phase aggregation — hash-salt the keys, partial-aggregate on
+(key, salt), then final-aggregate on key. For algebraic aggregates
+this removes single-reducer hot spots entirely.
 
-- ``salted_agg``: two-phase aggregation — hash-salt the hot keys,
-  partial-aggregate on (key, salt), then final-aggregate on key. For
-  algebraic aggregates this removes single-reducer hot spots entirely.
-- ``detect_hot_keys``: the first-pass count sketch used to decide how
-  much salt a key needs (and, for broadcast-range joins, which ranges
-  to replicate).
-
-The broadcast tile join (spark/tiles.py) is deliberately map-side, so
+The broadcast tile join (spark/tagjoin.py) is deliberately map-side, so
 join-skew never arises there; this module covers the groupBy paths
 (per-cell roll-ups) where a hot city cell would otherwise serialize on
 one reducer.
@@ -20,24 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def detect_hot_keys(
-    df: DataFrame, key_col: str, threshold_ratio: float = 0.01
-) -> DataFrame:
-    """Keys holding more than ``threshold_ratio`` of all rows.
-
-    A cheap pre-pass (map-side partial counts); at 100 TB run it on a
-    sample (``df.sample(0.001)``) — hot keys are by definition visible
-    in any sample.
-    """
-    total = df.count()
-    return (
-        df.groupBy(key_col)
-        .count()
-        .filter(F.col("count") >= threshold_ratio * total)
-        .select(key_col, F.col("count").alias("hot_count"))
-    )
 
 
 def salted_agg(
@@ -63,40 +41,3 @@ def salted_agg(
         *[fin(f"_p_{name}").alias(name) for _, fin, name in aggs]
     )
 
-
-def maybe_salted_agg(
-    df: DataFrame,
-    key_col: str,
-    aggs: list,
-    plain_aggs: list,
-    n_salts: int = 16,
-    threshold_ratio: float = 0.05,
-    sample_fraction: float | None = None,
-) -> tuple[DataFrame, bool]:
-    """Auto-salting: run ``detect_hot_keys`` first and engage the
-    two-phase salted plan ONLY when some key holds more than
-    ``threshold_ratio`` of the rows; otherwise emit the plain one-phase
-    groupBy. Returns ``(result_df, salted)``.
-
-    ``plain_aggs`` is a list of ``(expr, name)`` for the direct plan —
-    the salted triples' partial/final decomposition is not invertible
-    (plain ``count(*)`` vs sum-of-partial-counts), so the caller
-    supplies both forms; their equality is property-tested in
-    tests/test_skew_and_cover.py.
-
-    The pre-pass is one map-side-combined count job; pass
-    ``sample_fraction`` at scale (a >=5%-hot key is visible in any
-    sample with overwhelming probability). Where salting matters most
-    — HOLISTIC aggregates like ``collect_set``, whose per-key partial
-    state all converges on a single reducer — express the salted form
-    as ``(F.collect_set(c), lambda p:
-    F.array_distinct(F.flatten(F.collect_list(p))), name)``; algebraic
-    aggregates rarely need salt at all because Spark's partial
-    aggregation already sends one row per map task per key.
-    """
-    probe = df.sample(sample_fraction) if sample_fraction else df
-    hot = detect_hot_keys(probe, key_col, threshold_ratio)
-    if hot.limit(1).count() > 0:
-        return salted_agg(df, key_col, aggs, n_salts=n_salts), True
-    plain = df.groupBy(key_col).agg(*[e.alias(n) for e, n in plain_aggs])
-    return plain, False

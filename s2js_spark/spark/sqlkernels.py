@@ -29,7 +29,7 @@ Parity with the NumPy kernel (kernels/cellid.py):
   V8's libm — a third implementation — so bit-for-bit trig parity
   across engines is unattainable for ANY port; the engine defines the
   JVM result as canonical for DataFrame cell assignment, and exact
-  geometric refinement (tiles.py) makes join answers independent of
+  geometric refinement (tagjoin.py) makes join answers independent of
   ulp-level leaf placement.
 
 Intermediate values are lateral column aliases inside ONE

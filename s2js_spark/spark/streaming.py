@@ -15,12 +15,9 @@ events stream through Arrow batches.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -46,11 +43,10 @@ def streaming_tag_pairs(
     Identical plan to the batch path (encode + broadcast covering join
     + SQL refinement are all stateless map-side operators), so
     incremental micro-batches produce exactly the batch answer —
-    asserted in tests/test_streaming_ops.py. The exact-residual branch
-    requires a second pass and is therefore not available on streams;
-    uncertified polygon lanes (organic-data probability ~0) are
-    dropped from the certified output, matching the batch
-    ``exact_residuals=False`` mode.
+    asserted in tests/test_streaming_ops.py. Streams run the certified
+    pass only: uncertified polygon lanes (organic-data probability ~0)
+    are dropped, exactly as in the batch ``exact_residuals=False``
+    mode.
     """
     return tag_tiles_pairs(
         spark, stream_df, ts, lat_col, lng_col, exact_residuals=False

@@ -1,10 +1,11 @@
 """All-JVM spatial tag join: covering broadcast join + SQL refinement.
 
-Round 1 tagged documents against tile sets inside an Arrow-batched
-pandas kernel (tiles.py tag_tiles). Correct and shuffle-free, but the
-local JVM's Python runners cap throughput and block demonstrating the
-north rule's 8->32 scaling. This module keeps the same semantics with
-ZERO Python on the certified path:
+The one tag path. Its answer must equal the scalar ``geometry/`` port
+(and so the s2js reference) for every (point, tile) pair: a point is
+tagged with a tile iff ``shape.contains_point`` (``Rect.contains_latlng``
+for rects) holds for the point built as
+``Point.from_latlng_radians(lat * pi/180, lng * pi/180)``. The
+certified path runs with ZERO Python:
 
 1.  leaf cell ids via the pure-SQL encode (sqlkernels.with_s2_cellid);
 2.  candidate lookup: each tile's RegionCoverer covering becomes a row
@@ -18,26 +19,27 @@ ZERO Python on the certified path:
 3.  refinement entirely in SQL:
     - interior covering cells: candidate is in by construction
       (the reference's locateCellID INDEXED/interior trichotomy);
-    - rect tiles: interval comparisons on radians (bitwise-identical
-      arithmetic to the NumPy kernel — multiply/compare only);
-    - cap tiles: chord^2 test (multiply/add, same operation order as
-      the kernel);
+    - rect tiles: interval comparisons on radians (multiply/compare
+      only, so exactly ``Rect.contains_latlng``);
+    - cap tiles: chord^2 test, with the operation order of
+      ``Point.chord_angle_between`` (so exactly ``Cap.contains_point``);
     - polygon tiles: winding parity (reference Loop.ts:372-380) as an
       ``aggregate`` over the tile's edge array (broadcast column),
       with the triage determinant sign band of predicates.ts:186-191.
-      Lanes where any determinant falls inside the certified error
-      band (|det| <= 1.8274*eps, i.e. the point within ~2.5 nm of an
-      edge plane) are counted into the accumulator's high digits and
-      the pair is flagged uncertified.
+      A determinant's sign is used only when it lies outside the
+      certified error band (|det| <= 1.8274*eps, i.e. the point within
+      ~2.5 nm of an edge plane), so every certified lane has the exact
+      sign. Lanes with any determinant inside the band are counted
+      into the accumulator's high digits and the pair is flagged
+      uncertified.
 4.  uncertified polygon lanes (statistically never on organic data)
-    are exactly resolved by the scalar geometry library in a second,
-    ~empty job when ``exact_residuals=True`` (the default; graded
-    queries keep it on — bit-for-bit agreement with the kernel path).
+    are exactly resolved by the scalar geometry library in one
+    map-side filter over the matched rows when ``exact_residuals=True``
+    (the default; graded queries keep it on).
 
 Edge normals and their origin-side determinants are precomputed
-driver-side in NumPy with the exact operation order of
-tiles.polygon_contains_points, so SQL lane arithmetic is
-bitwise-identical to the kernel for every certified lane.
+driver-side in NumPy and shipped as round-trip double literals; the
+certified band bounds the rounding error of that evaluation order.
 """
 
 from __future__ import annotations
@@ -91,6 +93,24 @@ _EDGE_STRUCT = (
 )
 
 
+def _edge_planes(ts: TileSetStruct, t: int) -> list[tuple[float, ...]]:
+    """Per edge of polygon tile ``t``: (c, d, n = c x d, n . origin) as
+    ten floats. Computed once in NumPy so the inlined and the
+    array-column winding evaluate the same literals."""
+    e0, e1 = int(ts.edge_off[t]), int(ts.edge_off[t + 1])
+    cx, cy, cz = ts.cx[e0:e1], ts.cy[e0:e1], ts.cz[e0:e1]
+    dx, dy, dz = ts.dx[e0:e1], ts.dy[e0:e1], ts.dz[e0:e1]
+    nx = cy * dz - cz * dy
+    ny = cz * dx - cx * dz
+    nz = cx * dy - cy * dx
+    ox, oy, oz = _origin_xyz()
+    dea = nx * ox + ny * oy + nz * oz
+    return [
+        tuple(float(v) for v in row)
+        for row in zip(cx, cy, cz, dx, dy, dz, nx, ny, nz, dea)
+    ]
+
+
 def covering_frames(
     spark: SparkSession, ts: TileSetStruct
 ) -> tuple[DataFrame, DataFrame, list[int]]:
@@ -118,53 +138,46 @@ def covering_frames(
     hit = _COV_FRAME_CACHE.get(key)
     if hit is not None and hit[0]() is ts and hit[1]() is spark:
         return hit[2]
-    cells = ts.cov_cell
-    levels = sorted({int(cs.level(int(c))) for c in cells})
+    levels = sorted({int(cs.level(int(c))) for c in ts.cov_cell})
 
     def d(v: float) -> str:  # shortest round-trip double literal
         return f"CAST('{float(v)!r}' AS DOUBLE)"
 
-    cov_rows = [
-        f"({int(np.uint64(c).astype(np.int64))}L, {int(t)},"
-        f" {'true' if i else 'false'})"
-        for c, t, i in zip(ts.cov_cell, ts.cov_tile, ts.cov_interior)
-    ]
-    cov = spark.sql(
-        "SELECT * FROM VALUES " + ", ".join(cov_rows)
-        + " AS _cov(cell, tile_i, interior)"
+    def values(rows: list[str], empty_row: str, alias: str) -> DataFrame:
+        # VALUES needs at least one row: an empty set takes its column
+        # types from a typed placeholder row and filters it out.
+        if not rows:
+            return spark.sql(f"SELECT * FROM VALUES {empty_row} AS {alias} WHERE false")
+        return spark.sql(f"SELECT * FROM VALUES {', '.join(rows)} AS {alias}")
+
+    cov = values(
+        [
+            f"({int(np.uint64(c).astype(np.int64))}L, {int(t)},"
+            f" {'true' if i else 'false'})"
+            for c, t, i in zip(ts.cov_cell, ts.cov_tile, ts.cov_interior)
+        ],
+        "(0L, 0, false)",
+        "_cov(cell, tile_i, interior)",
     )
 
-    ox, oy, oz = _origin_xyz()
+    no_edges = f"CAST(array() AS {_EDGE_STRUCT})"
     geom_rows = []
     for t in range(len(ts.tile_ids)):
         kind = int(ts.tile_kind[t])
-        e0, e1 = int(ts.edge_off[t]), int(ts.edge_off[t + 1])
         # small polygons are fully inlined into the plan
         # (_winding_inline_sql); only big ones need the array column
-        if kind == KIND_POLYGON and e1 - e0 > MAX_INLINE_EDGES:
-            cx = ts.cx[e0:e1]
-            cy = ts.cy[e0:e1]
-            cz = ts.cz[e0:e1]
-            dx = ts.dx[e0:e1]
-            dy = ts.dy[e0:e1]
-            dz = ts.dz[e0:e1]
-            # edge normals + origin-side determinant, same op order as
-            # tiles.polygon_contains_points (bitwise parity)
-            nx = cy * dz - cz * dy
-            ny = cz * dx - cx * dz
-            nz = cx * dy - cy * dx
-            dea = nx * ox + ny * oy + nz * oz
-            structs = ", ".join(
+        planes = _edge_planes(ts, t) if kind == KIND_POLYGON else []
+        if len(planes) > MAX_INLINE_EDGES:
+            edges_sql = "array({})".format(", ".join(
                 "named_struct("
-                f"'cx', {d(cx[k])}, 'cy', {d(cy[k])}, 'cz', {d(cz[k])},"
-                f" 'dx', {d(dx[k])}, 'dy', {d(dy[k])}, 'dz', {d(dz[k])},"
-                f" 'nx', {d(nx[k])}, 'ny', {d(ny[k])}, 'nz', {d(nz[k])},"
-                f" 'dea', {d(dea[k])})"
-                for k in range(e1 - e0)
-            )
-            edges_sql = f"array({structs})"
+                f"'cx', {d(cx)}, 'cy', {d(cy)}, 'cz', {d(cz)},"
+                f" 'dx', {d(dx)}, 'dy', {d(dy)}, 'dz', {d(dz)},"
+                f" 'nx', {d(nx)}, 'ny', {d(ny)}, 'nz', {d(nz)},"
+                f" 'dea', {d(dea)})"
+                for cx, cy, cz, dx, dy, dz, nx, ny, nz, dea in planes
+            ))
         else:
-            edges_sql = f"CAST(array() AS {_EDGE_STRUCT})"
+            edges_sql = no_edges
         lat_lo, lat_hi, lng_lo, lng_hi = (float(v) for v in ts.rect_bounds[t])
         ccx, ccy, ccz = (float(v) for v in ts.cap_center[t])
         geom_rows.append(
@@ -174,10 +187,12 @@ def covering_frames(
             f" {d(ccx)}, {d(ccy)}, {d(ccz)}, {d(float(ts.cap_r2[t]))},"
             f" {edges_sql})"
         )
-    geom = spark.sql(
-        "SELECT * FROM VALUES " + ", ".join(geom_rows)
-        + " AS _geom(tile_i, kind, origin_parity,"
-        " lat_lo, lat_hi, lng_lo, lng_hi, ccx, ccy, ccz, cr2, edges)"
+    zero = d(0.0)
+    geom = values(
+        geom_rows,
+        f"(0, 0, false, {', '.join([zero] * 8)}, {no_edges})",
+        "_geom(tile_i, kind, origin_parity,"
+        " lat_lo, lat_hi, lng_lo, lng_hi, ccx, ccy, ccz, cr2, edges)",
     )
     _COV_FRAME_CACHE[key] = (weakref.ref(ts), weakref.ref(spark), (cov, geom, levels))
     return cov, geom, levels
@@ -204,9 +219,10 @@ def _crossing_terms(
 ) -> tuple[str, str]:
     """(crossing 0/1, indeterminate boolean) for one edge.
 
-    Orientation identities and sign band match
-    tiles.polygon_contains_points: acb=-s(ab.c), bda=s(ab.d),
+    EdgeCrosser orientation identities: acb=-s(ab.c), bda=s(ab.d),
     cbd=-s(n.b), dac=s(n.a); proper crossing iff all equal and != 0.
+    A sign inside the certified band marks the lane indeterminate, so
+    a certified crossing count is the exact one.
     """
     acb = f"(-{_sgn(det_ab_c)})"
     bda = _sgn(det_ab_d)
@@ -251,37 +267,22 @@ def _winding_inline_sql(ts: TileSetStruct) -> str:
     This is 10-30x faster than the interpreted higher-order-function
     aggregate and is the difference between the winding refinement
     dominating the flagship and it being noise. Edge normals and
-    origin determinants are precomputed driver-side in NumPy with the
-    exact kernel op order (bitwise parity preserved).
+    origin determinants are precomputed driver-side (_edge_planes).
     """
-    ox, oy, oz = _origin_xyz()
     branches = []
     for t in range(len(ts.tile_ids)):
         if int(ts.tile_kind[t]) != KIND_POLYGON:
             continue
-        e0, e1 = int(ts.edge_off[t]), int(ts.edge_off[t + 1])
-        if e1 - e0 > MAX_INLINE_EDGES or e1 == e0:
+        planes = _edge_planes(ts, t)
+        if not planes or len(planes) > MAX_INLINE_EDGES:
             continue
-        cx = ts.cx[e0:e1]
-        cy = ts.cy[e0:e1]
-        cz = ts.cz[e0:e1]
-        dx = ts.dx[e0:e1]
-        dy = ts.dy[e0:e1]
-        dz = ts.dz[e0:e1]
-        nx = cy * dz - cz * dy
-        ny = cz * dx - cx * dz
-        nz = cx * dy - cy * dx
-        dea = nx * ox + ny * oy + nz * oz
         crosses, uncerts = [], []
-        for k in range(e1 - e0):
+        for cx, cy, cz, dx, dy, dz, nx, ny, nz, dea in planes:
             cross, uncert = _crossing_terms(
-                f"(_abx * {float(cx[k])!r}D + _aby * {float(cy[k])!r}D"
-                f" + _abz * {float(cz[k])!r}D)",
-                f"(_abx * {float(dx[k])!r}D + _aby * {float(dy[k])!r}D"
-                f" + _abz * {float(dz[k])!r}D)",
-                f"({float(nx[k])!r}D * _px + {float(ny[k])!r}D * _py"
-                f" + {float(nz[k])!r}D * _pz)",
-                f"{float(dea[k])!r}D",
+                f"(_abx * {cx!r}D + _aby * {cy!r}D + _abz * {cz!r}D)",
+                f"(_abx * {dx!r}D + _aby * {dy!r}D + _abz * {dz!r}D)",
+                f"({nx!r}D * _px + {ny!r}D * _py + {nz!r}D * _pz)",
+                f"{dea!r}D",
             )
             crosses.append(cross)
             uncerts.append(uncert)
@@ -350,8 +351,9 @@ def tag_candidates(
     ox, oy, oz = _origin_xyz()
     pi = repr(math.pi)
     # One selectExpr of lateral aliases (single analysis pass; nested
-    # Projects at runtime — see sqlkernels.with_s2_cellid). Operation
-    # order mirrors tiles.refine_candidates for bitwise parity.
+    # Projects at runtime — see sqlkernels.with_s2_cellid). The point
+    # must be exactly Point.from_latlng_radians(lat * d, lng * d): the
+    # one the exact residual and the scalar reference decide on.
     refine_exprs = [
         f"({lat_col} * {_D!r}D) AS _latr",
         f"({lng_col} * {_D!r}D) AS _lngr",
@@ -370,7 +372,8 @@ def tag_candidates(
         f" AND NOT (lng_lo = {pi}D AND lng_hi = -{pi}D)"
         f" ELSE _l >= lng_lo AND _l <= lng_hi END) AS _rect_lng",
         "(_rect_lat AND _rect_lng) AS _rect_ok",
-        # cap: chord^2 <= r2, same op order as tiles.cap_contains_points
+        # cap: Cap.contains_point, i.e. Point.chord_angle_between's
+        # min(4, dx*dx + dy*dy + dz*dz) <= rad in that op order
         "least(4.0D, (_px - ccx) * (_px - ccx) + (_py - ccy) * (_py - ccy)"
         " + (_pz - ccz) * (_pz - ccz)) AS _chord2",
         "(_chord2 <= cr2) AS _cap_ok",
@@ -409,10 +412,12 @@ def tag_tiles_pairs(
 
     The certified decision runs 100% JVM in one pass. With
     ``exact_residuals`` (default), triage-uncertified polygon lanes
-    are re-decided exactly by the scalar geometry library in a second
-    job over only those lanes (zero rows for organic data), making the
-    result bit-for-bit equal to the pandas-kernel path (tag_tiles).
-    ``cellid_col`` additionally carries the leaf cell id through.
+    are re-decided by the scalar geometry library in the same pass, a
+    map-side filter over the matched rows (zero such lanes on organic
+    data), so every pair is exactly the scalar port's decision.
+    Without it, uncertified lanes are dropped. ``cellid_col``
+    additionally carries the leaf cell id through. An empty tile set
+    gives zero pairs with the same output columns.
 
     The fully-analyzed result DataFrame is memoized per
     (tile set, session, input-plan semantics, arguments): Catalyst

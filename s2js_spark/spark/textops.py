@@ -23,11 +23,6 @@ LANG_MARKERS = {
 STOPWORDS = ["the", "a", "and", "of", "to", "in", "is", "it"]
 
 
-def token_count(col: str = "text"):
-    """Whitespace token count (JVM-side)."""
-    return F.size(F.split(F.trim(F.col(col)), r"\s+"))
-
-
 def quality_features(df: DataFrame, col: str = "text") -> DataFrame:
     """Length / punctuation / stopword / word-length quality scores."""
     tokens = F.split(F.trim(F.col(col)), r"\s+")
@@ -65,37 +60,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", key_col: str = "url") -> 
     )
 
 
-def shingles(col: str, k: int = 8):
-    """Array of k-character shingles (JVM higher-order functions)."""
-    return F.expr(
-        f"transform(sequence(1, greatest(length({col}) - {k - 1}, 1)),"
-        f" i -> substring({col}, i, {k}))"
-    )
-
-
-def minhash_signature(col: str, k: int = 8, num_hashes: int = 8):
-    """MinHash signature: ceil(num_hashes/4) salted md5s per shingle,
-    each sliced into four 8-hex-char (32-bit) sub-hashes.
-
-    Slicing amortizes the md5 cost 4x versus one digest per hash
-    function; hex strings order identically everywhere so DuckDB can
-    reproduce the signature verbatim.
-    """
-    sh = (
-        f"transform(sequence(1, greatest(length({col}) - {k - 1}, 1)),"
-        f" i -> substring({col}, i, {k}))"
-    )
-    n_salts = (num_hashes + 3) // 4
-    mins = []
-    for i in range(num_hashes):
-        salt, slice_i = divmod(i, 4)
-        digest = f"transform({sh}, s -> md5(concat('salt{salt}:', s)))"
-        mins.append(
-            f"array_min(transform({digest}, h -> substring(h, {1 + 8 * slice_i}, 8)))"
-        )
-    return F.expr(f"array({', '.join(mins)})")
-
-
 def minhash_dedup_groups(
     df: DataFrame, text_col: str = "text", key_col: str = "url",
     k: int = 8, num_hashes: int = 8, bands: int = 4,
@@ -117,10 +81,12 @@ def minhash_dedup_groups(
     # comes off the url-dedup window (or the bucketed table) the
     # groupBy reuses its HashPartitioning — ZERO additional shuffle —
     # and `_sig` is an aggregate output attribute, so nothing can be
-    # re-inlined downstream. Values are identical to the HOF form
-    # (min over the shingle multiset == min over the set; verified
-    # set-equal on sf0.1). Rows with null/empty text produce no bands
-    # (they cannot be near-dups of anything).
+    # re-inlined downstream. Signature value i is the minimum over the
+    # key's k-shingles of the (i % 4)-th 8-hex-char slice of
+    # md5('salt{i // 4}:' || shingle) — min over the shingle multiset
+    # == min over the set, so the `minhash_bands` oracle reproduces it.
+    # Rows with null/empty text produce no bands (they cannot be
+    # near-dups of anything).
     # Round 6 (guide §4.1/§1.2): explode the shingle INDEX (a primitive
     # int sequence) and compute substring(text, i, k) in the codegen
     # projection above the Generate, instead of materializing a

@@ -1,45 +1,32 @@
-"""Broadcast tile-set structure and the vectorized spatial-join kernels.
+"""Broadcast tile-set structure: the driver-side half of the tag join.
 
 This is the engine's replacement for the reference's ShapeIndex
-(SURVEY §2.11/§4): driver-side we cover every tile polygon with the
-RegionCoverer, split each covering into *interior* cells (fully inside
-— candidate docs skip refinement entirely) and *boundary* cells, then
-flatten ALL tiles' cell ranges into a single interval-stabbing index:
-
-- the union of range endpoints cuts the Hilbert line into disjoint
-  atomic segments;
-- a CSR mapping (seg -> [(tile, is_interior), ...]) answers "which
-  tile coverings contain this leaf id" with two ``np.searchsorted``
-  gathers, fully vectorized over an Arrow batch.
-
-Refinement for boundary candidates is the reference's winding-parity
-test (Loop.ts:372-380) vectorized over (docs x edges) with the triage
-determinant (predicates.ts:186-191); lanes whose determinant falls in
-the certified error band fall back to the exact scalar EdgeCrosser —
-statistically never for organic data, always correct when it matters.
+(SURVEY §2.11/§4): on the driver we cover every tile with the
+RegionCoverer and mark each covering cell *interior* (fully inside the
+tile — candidate docs skip refinement entirely) or *boundary*. The
+covering rows, together with the flattened polygon edges and the
+rect/cap parameters, are what ``tagjoin`` turns into its broadcast
+covering join and SQL refinement; the driver-side shapes resolve the
+lanes that refinement cannot certify.
 
 At cluster scale the broadcast is O(total covering cells + vertices)
 per executor, docs never shuffle for this join, and skew in hot cells
-is irrelevant because membership is a map-side kernel, not a key join.
+is irrelevant because membership is a map-side join, not a key join.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType
 
-from ..geometry import cellid_scalar as cs
+from ..geometry.cap import Cap
+from ..geometry.cell import Cell
 from ..geometry.geojson import GeoJSONRegionCoverer, from_geojson
 from ..geometry.loop import Loop
 from ..geometry.point import Point
 from ..geometry.polygon import Polygon
 from ..geometry.rect import Rect
-from ..kernels import cellid as kc
 
 MAX_DETERMINANT_ERROR = 1.8274 * 2.220446049250313e-16
 
@@ -50,13 +37,8 @@ KIND_CAP = 2
 
 @dataclass
 class TileSetStruct:
-    """Plain-numpy broadcastable tile index (built once on the driver)."""
+    """Plain-numpy broadcastable tile set (built once on the driver)."""
 
-    # interval-stabbing index over leaf-id space
-    seg_start: np.ndarray  # uint64 [nseg]
-    csr_off: np.ndarray  # int64 [nseg+1]
-    csr_tile: np.ndarray  # int32 [nnz]
-    csr_interior: np.ndarray  # bool  [nnz]
     # tiles
     tile_kind: np.ndarray  # int8  [ntiles]
     tile_ids: list  # user-facing tile identifiers
@@ -75,11 +57,11 @@ class TileSetStruct:
     cap_center: np.ndarray  # float64 [ntiles, 3]
     cap_r2: np.ndarray  # float64 [ntiles]
     # driver-side shapes for exact-fallback lanes
-    shapes: list = field(default_factory=list)
-    # raw covering cells (for the JVM broadcast-join path)
-    cov_cell: np.ndarray = None  # uint64 [ncov]
-    cov_tile: np.ndarray = None  # int32 [ncov]
-    cov_interior: np.ndarray = None  # bool [ncov]
+    shapes: list
+    # covering cells, one row per (cell, tile)
+    cov_cell: np.ndarray  # uint64 [ncov]
+    cov_tile: np.ndarray  # int32 [ncov]
+    cov_interior: np.ndarray  # bool [ncov]
 
 
 def _origin_xyz() -> tuple[float, float, float]:
@@ -99,7 +81,6 @@ def build_tileset(
     """
     coverer = GeoJSONRegionCoverer(max_cells=max_cells)
 
-    intervals: list[tuple[int, int, int, bool]] = []  # lo, hi, tile, interior
     cov_cells: list[tuple[int, int, bool]] = []  # cell, tile, interior
     tile_ids = []
     kinds = []
@@ -126,11 +107,8 @@ def build_tileset(
         # Covering cells fully inside the region skip refinement — the
         # INDEXED/interior trichotomy of the reference's locateCellID
         # (ShapeIndexIterator.ts:185-207), computed per covering cell.
-        from ..geometry.cell import Cell as _Cell
-
         for c in covering:
-            is_int = bool(region.contains_cell(_Cell.from_cellid(c)))
-            intervals.append((cs.range_min(c), cs.range_max(c), idx, is_int))
+            is_int = bool(region.contains_cell(Cell.from_cellid(c)))
             cov_cells.append((int(c), idx, is_int))
 
         if isinstance(shape, Polygon):
@@ -161,9 +139,7 @@ def build_tileset(
             rect_bounds.append((shape.lat.lo, shape.lat.hi, shape.lng.lo, shape.lng.hi))
             cap_center.append((0.0, 0.0, 0.0))
             cap_r2.append(0.0)
-        else:  # Cap
-            from ..geometry.cap import Cap
-
+        else:
             assert isinstance(shape, Cap)
             kinds.append(KIND_CAP)
             edge_off.append(edge_off[-1])
@@ -172,41 +148,8 @@ def build_tileset(
             cap_center.append((shape.center.x, shape.center.y, shape.center.z))
             cap_r2.append(shape.rad)
 
-    # ---- atomic segment decomposition of the interval set
-    events: set[int] = set()
-    for lo, hi, _, _ in intervals:
-        events.add(lo)
-        events.add(hi + 1)
-    seg_start = np.array(sorted(events), dtype=np.uint64)
-    nseg = max(0, len(seg_start) - 1)
-    per_seg: list[list[tuple[int, bool]]] = [[] for _ in range(nseg)]
-    starts = seg_start[:-1] if nseg else seg_start
-    import bisect
-
-    seg_list = [int(s) for s in starts]
-    for lo, hi, tile, is_int in intervals:
-        i0 = bisect.bisect_left(seg_list, lo)
-        i1 = bisect.bisect_right(seg_list, hi)
-        for s in range(i0, i1):
-            per_seg[s].append((tile, is_int))
-
-    csr_off = np.zeros(nseg + 1, dtype=np.int64)
-    csr_tile = []
-    csr_interior = []
-    for s, lst in enumerate(per_seg):
-        lst.sort()
-        for tile, is_int in lst:
-            csr_tile.append(tile)
-            csr_interior.append(is_int)
-        csr_off[s + 1] = len(csr_tile)
-
-    n_tiles = len(tile_ids)
     earr = np.array(edges, dtype=np.float64) if edges else np.zeros((0, 6))
     return TileSetStruct(
-        seg_start=seg_start,
-        csr_off=csr_off,
-        csr_tile=np.array(csr_tile, dtype=np.int32),
-        csr_interior=np.array(csr_interior, dtype=bool),
         tile_kind=np.array(kinds, dtype=np.int8),
         tile_ids=tile_ids,
         edge_off=np.array(edge_off, dtype=np.int64),
@@ -228,253 +171,6 @@ def build_tileset(
 
 
 def _as_region(shape):
-    from ..geometry.cap import Cap
-
     if isinstance(shape, (Polygon, Rect, Cap, Loop)):
         return shape
     raise TypeError(type(shape))
-
-
-# ------------------------------------------------------------------ kernels
-
-def candidates_for_leaves(ts: TileSetStruct, leaf: np.ndarray):
-    """leaf uint64[n] -> (doc_idx int64[m], tile int32[m], interior bool[m])."""
-    if len(ts.seg_start) < 2:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.astype(np.int32), z.astype(bool)
-    seg = np.searchsorted(ts.seg_start, leaf, side="right") - 1
-    valid = (seg >= 0) & (seg < len(ts.seg_start) - 1)
-    seg = np.where(valid, seg, 0)
-    start = ts.csr_off[seg]
-    end = np.where(valid, ts.csr_off[seg + 1], start)
-    counts = end - start
-    total = int(counts.sum())
-    if total == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z.astype(np.int32), z.astype(bool)
-    doc_idx = np.repeat(np.arange(len(leaf), dtype=np.int64), counts)
-    # vectorized CSR slice gather: flat[j] = start[doc] + offset-within-slice
-    excl = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    within = np.arange(total, dtype=np.int64) - np.repeat(excl, counts)
-    flat = np.repeat(start, counts) + within
-    return doc_idx, ts.csr_tile[flat], ts.csr_interior[flat]
-
-
-def _sign_band(det: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(sign in {-1,0,1}, indeterminate mask) with the certified band."""
-    s = np.where(det > MAX_DETERMINANT_ERROR, 1, np.where(det < -MAX_DETERMINANT_ERROR, -1, 0))
-    return s.astype(np.int8), np.abs(det) <= MAX_DETERMINANT_ERROR
-
-
-def polygon_contains_points(
-    ts: TileSetStruct, tile: int, px: np.ndarray, py: np.ndarray, pz: np.ndarray
-) -> np.ndarray:
-    """Vectorized winding parity of docs against one tile polygon.
-
-    Chain crossing of segment (origin -> p) against every polygon edge,
-    triage-signed; indeterminate lanes resolved exactly per doc.
-    """
-    ox, oy, oz = _origin_xyz()
-    e0 = int(ts.edge_off[tile])
-    e1 = int(ts.edge_off[tile + 1])
-    n_edges = e1 - e0
-    n = len(px)
-    if n_edges == 0:
-        return np.full(n, bool(ts.origin_parity[tile]))
-
-    cx = ts.cx[e0:e1]
-    cy = ts.cy[e0:e1]
-    cz = ts.cz[e0:e1]
-    dx = ts.dx[e0:e1]
-    dy = ts.dy[e0:e1]
-    dz = ts.dz[e0:e1]
-
-    # A = origin (fixed), B = doc point. A x B per doc:
-    abx = oy * pz - oz * py
-    aby = oz * px - ox * pz
-    abz = ox * py - oy * px
-
-    # det(A,B,V) = (A x B) . V for edge starts and ends: (n, e)
-    det_ab_c = abx[:, None] * cx + aby[:, None] * cy + abz[:, None] * cz
-    det_ab_d = abx[:, None] * dx + aby[:, None] * dy + abz[:, None] * dz
-
-    # edge normals C x D (precomputable; cheap enough here)
-    nx = cy * dz - cz * dy
-    ny = cz * dx - cx * dz
-    nz = cx * dy - cy * dx
-    det_e_a = nx * ox + ny * oy + nz * oz  # (e,)
-    det_e_b = nx * px[:, None] + ny * py[:, None] + nz * pz[:, None]  # (n, e)
-
-    s_ab_c, i1 = _sign_band(det_ab_c)
-    s_ab_d, i2 = _sign_band(det_ab_d)
-    s_e_a, i3 = _sign_band(det_e_a)
-    s_e_b, i4 = _sign_band(det_e_b)
-
-    # EdgeCrosser orientation identities: acb = -sign(a,b,c),
-    # bda = sign(a,b,d), cbd = -sign(c,d,b), dac = sign(c,d,a);
-    # proper crossing iff acb == bda == cbd == dac != 0.
-    acb = -s_ab_c
-    bda = s_ab_d
-    cbd = -s_e_b
-    dac = np.broadcast_to(s_e_a, det_e_b.shape)
-    cross = (acb == bda) & (cbd == acb) & (dac == acb) & (acb != 0)
-
-    indeterminate = i1 | i2 | i4 | np.broadcast_to(i3, det_e_b.shape)
-    bad_docs = np.unique(np.nonzero(indeterminate.any(axis=1))[0])
-
-    parity = (cross.sum(axis=1) & 1).astype(bool) ^ bool(ts.origin_parity[tile])
-
-    if len(bad_docs):
-        shape = ts.shapes[tile]
-        for di in bad_docs:
-            p = Point(float(px[di]), float(py[di]), float(pz[di]))
-            parity[di] = shape.contains_point(p)
-    return parity
-
-
-def rect_contains_points(
-    ts: TileSetStruct, tile: int, lat: np.ndarray, lng: np.ndarray
-) -> np.ndarray:
-    """Vectorized Rect.containsLatLng with S1 lng wrap (Rect.ts:287-290)."""
-    lat_lo, lat_hi, lng_lo, lng_hi = ts.rect_bounds[tile]
-    ok_lat = (lat >= lat_lo) & (lat <= lat_hi)
-    l = np.where(lng == -np.pi, np.pi, lng)
-    if lng_lo > lng_hi:  # inverted (wraps antimeridian)
-        ok_lng = (l >= lng_lo) | (l <= lng_hi)
-        if lng_lo == np.pi and lng_hi == -np.pi:  # empty
-            ok_lng = np.zeros_like(ok_lat)
-    else:
-        ok_lng = (l >= lng_lo) & (l <= lng_hi)
-    return ok_lat & ok_lng
-
-
-def cap_contains_points(
-    ts: TileSetStruct, tile: int, px: np.ndarray, py: np.ndarray, pz: np.ndarray
-) -> np.ndarray:
-    c = ts.cap_center[tile]
-    dx = px - c[0]
-    dy = py - c[1]
-    dz = pz - c[2]
-    chord2 = np.minimum(4.0, dx * dx + dy * dy + dz * dz)
-    return chord2 <= ts.cap_r2[tile]
-
-
-def refine_candidates(
-    ts: TileSetStruct,
-    doc_idx: np.ndarray,
-    tile: np.ndarray,
-    interior: np.ndarray,
-    lat_deg: np.ndarray,
-    lng_deg: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Exact membership for candidate (doc, tile) pairs.
-
-    lat/lng are per-DOC arrays (degrees); doc_idx indexes into them.
-    Returns the surviving (doc_idx, tile) pairs.
-    """
-    from ..kernels import stuv
-
-    if len(doc_idx) == 0:
-        return doc_idx, tile
-
-    keep = interior.copy()
-    todo = ~interior
-    if todo.any():
-        d = np.pi / 180.0
-        lat_r = lat_deg * d
-        lng_r = lng_deg * d
-        px, py, pz = stuv.latlng_to_xyz(lat_r, lng_r)
-        for t in np.unique(tile[todo]):
-            mask = todo & (tile == t)
-            di = doc_idx[mask]
-            kind = int(ts.tile_kind[t])
-            if kind == KIND_POLYGON:
-                ok = polygon_contains_points(ts, int(t), px[di], py[di], pz[di])
-            elif kind == KIND_RECT:
-                ok = rect_contains_points(ts, int(t), lat_r[di], lng_r[di])
-            else:
-                ok = cap_contains_points(ts, int(t), px[di], py[di], pz[di])
-            keep[mask] = ok
-    return doc_idx[keep], tile[keep]
-
-
-def _group_tiles_by_doc(n_docs: int, doc_idx: np.ndarray, tile: np.ndarray) -> list:
-    """Vectorized (doc_idx, tile) pairs -> per-doc tile lists.
-
-    np.bincount + np.split instead of a per-candidate Python loop;
-    candidates arrive sorted by doc (np.repeat order is preserved
-    through the boolean-mask filter in refine_candidates).
-    """
-    if len(doc_idx) == 0:
-        return [[] for _ in range(n_docs)]
-    counts = np.bincount(doc_idx, minlength=n_docs)
-    return [a.tolist() for a in np.split(tile.astype(np.int32), np.cumsum(counts)[:-1])]
-
-
-# ------------------------------------------------------------- DataFrame API
-
-def tag_tiles(
-    spark: SparkSession,
-    df: DataFrame,
-    ts: TileSetStruct,
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-) -> DataFrame:
-    """Append an array<int> column ``tile_idx`` of matching tile indexes.
-
-    Map-side only: candidate lookup via the broadcast interval index,
-    exact refinement in the same Arrow batch. No shuffle.
-    """
-    bc = spark.sparkContext.broadcast(ts)
-
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def _tag(lat: pd.Series, lng: pd.Series) -> pd.Series:
-        t = bc.value
-        lat_np = lat.to_numpy(np.float64)
-        lng_np = lng.to_numpy(np.float64)
-        leaf = kc.from_latlng_degrees(lat_np, lng_np)
-        doc_idx, tile, interior = candidates_for_leaves(t, leaf)
-        doc_idx, tile = refine_candidates(t, doc_idx, tile, interior, lat_np, lng_np)
-        return pd.Series(_group_tiles_by_doc(len(lat_np), doc_idx, tile))
-
-    return df.withColumn("tile_idx", _tag(F.col(lat_col), F.col(lng_col)))
-
-
-def tag_and_encode(
-    spark: SparkSession,
-    df: DataFrame,
-    ts: TileSetStruct,
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-) -> DataFrame:
-    """Fused kernel: leaf cellid + token + tile membership in ONE
-    Arrow crossing (the flagship hot path: 3 ArrowEvalPython nodes
-    collapse into 1, and only two double columns are shipped)."""
-    from pyspark.sql.types import LongType as _Long, StructField, StructType
-
-    bc = spark.sparkContext.broadcast(ts)
-    schema = StructType(
-        [
-            StructField("cellid", _Long()),
-            StructField("tile_idx", ArrayType(IntegerType())),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def _fused(lat: pd.Series, lng: pd.Series) -> pd.DataFrame:
-        t = bc.value
-        lat_np = lat.to_numpy(np.float64)
-        lng_np = lng.to_numpy(np.float64)
-        leaf = kc.from_latlng_degrees(lat_np, lng_np)
-        doc_idx, tile, interior = candidates_for_leaves(t, leaf)
-        doc_idx, tile = refine_candidates(t, doc_idx, tile, interior, lat_np, lng_np)
-        tiles = _group_tiles_by_doc(len(lat_np), doc_idx, tile)
-        # NOTE: no token column here — hex formatting is a per-row
-        # Python loop and belongs on the (small) output side, not the
-        # 10^12-row hot path.
-        return pd.DataFrame({"cellid": kc.to_int64(leaf), "tile_idx": tiles})
-
-    # F.inline is a generator node: the UDF is evaluated exactly once
-    # (plain struct-field projection would duplicate the ArrowEvalPython
-    # node once per referenced field).
-    return df.select("*", F.inline(F.array(_fused(F.col(lat_col), F.col(lng_col)))))

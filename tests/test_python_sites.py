@@ -1,0 +1,101 @@
+"""Python runs in the engine only where the Python work is the operator.
+
+Every pandas_udf / mapInPandas / applyInPandas / applyInPandasWithState
+site under s2js_spark/spark/ is listed here by module and enclosing (or
+decorated) function, with the reason it is Python. A new site — say a
+Python twin of a SQL path — fails this test until it is added to the
+allowlist with its reason.
+"""
+
+from __future__ import annotations
+
+import ast
+import fnmatch
+import pathlib
+
+SPARK_DIR = pathlib.Path(__file__).resolve().parent.parent / "s2js_spark" / "spark"
+
+PYTHON_ENTRYPOINTS = ("pandas_udf", "mapInPandas", "applyInPandas", "applyInPandasWithState")
+
+ALLOWLIST = {
+    "functions.*": "SQL surface: registered S2 functions (SURVEY §2.13)",
+    "tagjoin._exact_or_keep": "exact residual over triage-uncertified polygon lanes",
+    "polyline_ops.clip_polylines": "exact concave clip for lines the SQL triage cannot decide",
+    "joins._neighborhood_cells": "3x3 cell neighbourhoods of distributed knn query frames",
+    "streaming.sessionize_events": "stateful sessionization (GroupState) is the operator",
+    "multimodal.synth_real_media": "media container synthesis (PPM/WAV encode)",
+    "multimodal.synth_mixed_media": "media container synthesis (PPM/WAV encode)",
+    "multimodal.extract_features": "media decode + feature extraction",
+    "multimodal.extract_decoded_features": "media decode + feature extraction",
+}
+
+
+def _name(node: ast.AST) -> str | None:
+    f = node.func if isinstance(node, ast.Call) else node
+    if isinstance(f, ast.Attribute):
+        return f.attr
+    if isinstance(f, ast.Name):
+        return f.id
+    return None
+
+
+def _sites(tree: ast.AST, module: str) -> set[str]:
+    """``module.function`` for every Python-execution site in ``tree``:
+    the decorated function for a decorator, else the enclosing one."""
+    found: set[str] = set()
+
+    def visit(node: ast.AST, enclosing: str) -> None:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            if any(_name(d) in PYTHON_ENTRYPOINTS for d in node.decorator_list):
+                found.add(f"{module}.{node.name}")
+            for stmt in node.body:
+                visit(stmt, node.name)
+            return
+        if isinstance(node, ast.Call) and _name(node) in PYTHON_ENTRYPOINTS:
+            found.add(f"{module}.{enclosing}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, enclosing)
+
+    visit(tree, "<module>")
+    return found
+
+
+def python_sites() -> set[str]:
+    found: set[str] = set()
+    for path in sorted(SPARK_DIR.glob("*.py")):
+        found |= _sites(ast.parse(path.read_text()), path.stem)
+    return found
+
+
+def test_python_sites_match_allowlist():
+    sites = python_sites()
+    unlisted = sorted(
+        s for s in sites if not any(fnmatch.fnmatchcase(s, p) for p in ALLOWLIST)
+    )
+    stale = sorted(
+        p for p in ALLOWLIST if not any(fnmatch.fnmatchcase(s, p) for s in sites)
+    )
+    assert not unlisted, f"Python sites without an allowlist reason: {unlisted}"
+    assert not stale, f"allowlist entries with no site left: {stale}"
+
+
+def test_site_scanner_sees_every_form():
+    """Decorated UDFs, inline pandas_udf calls and the DataFrame
+    Pandas-function APIs are all found, each under the right name."""
+    src = (
+        "@F.pandas_udf('long')\n"
+        "def deco(x): return x\n"
+        "def inline(df):\n"
+        "    f = pandas_udf(lambda s: s, 'long')\n"
+        "    return df.mapInPandas(f, 's')\n"
+        "def grouped(df):\n"
+        "    def run(k, p): return p\n"
+        "    return df.groupBy('k').applyInPandas(run, 's')\n"
+        "def stateful(df):\n"
+        "    return df.groupBy('k').applyInPandasWithState(f, 's', 's', 'append', 'none')\n"
+        "def plain(df):\n"
+        "    return df.select('k')\n"
+    )
+    assert _sites(ast.parse(src), "m") == {
+        "m.deco", "m.inline", "m.grouped", "m.stateful",
+    }

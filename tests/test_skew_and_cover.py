@@ -1,4 +1,4 @@
-"""Salted aggregation, hot-key detection, and the covering UDFs."""
+"""Salted aggregation and the covering UDFs."""
 
 from __future__ import annotations
 
@@ -20,15 +20,13 @@ def spark():
 
 
 def test_salted_agg_matches_plain(spark):
-    from s2js_spark.spark.skew import detect_hot_keys, salted_agg
+    from s2js_spark.spark.skew import salted_agg
 
     # Zipf-ish: key 0 holds ~50% of rows
     df = spark.range(20000).selectExpr(
         "case when id % 2 = 0 then 0 else id % 37 end as key",
         "cast(id as double) as v",
     )
-    hot = detect_hot_keys(df, "key", threshold_ratio=0.2)
-    assert [r["key"] for r in hot.collect()] == [0]
 
     got = salted_agg(
         df,
@@ -139,31 +137,3 @@ def test_salted_collect_set_matches_plain(spark):
     )
     assert got["key"].tolist() == want["key"].tolist()
     assert got["n_urls"].tolist() == want["n_urls"].tolist()
-
-
-def test_maybe_salted_agg_engages_only_on_hot_keys(spark):
-    from s2js_spark.spark.skew import maybe_salted_agg
-
-    aggs = [(F.count("*"), F.sum, "n")]
-    plain_aggs = [(F.count("*"), "n")]
-
-    hot_df = spark.range(20000).selectExpr(
-        "case when id % 2 = 0 then 0 else id % 37 end as key")
-    uni_df = spark.range(20000).selectExpr("id % 1000 as key")
-
-    got_hot, salted = maybe_salted_agg(
-        hot_df, "key", aggs, plain_aggs, threshold_ratio=0.05)
-    assert salted is True
-    # the engaged plan really is the two-phase salted shape
-    assert "_salt" in got_hot._jdf.queryExecution().optimizedPlan().toString()
-
-    got_uni, salted = maybe_salted_agg(
-        uni_df, "key", aggs, plain_aggs, threshold_ratio=0.05)
-    assert salted is False
-    assert "_salt" not in got_uni._jdf.queryExecution().optimizedPlan().toString()
-
-    for got, src in ((got_hot, hot_df), (got_uni, uni_df)):
-        want = src.groupBy("key").count().toPandas().sort_values("key")
-        gp = got.toPandas().sort_values("key")
-        assert gp["key"].tolist() == want["key"].tolist()
-        assert gp["n"].tolist() == want["count"].tolist()

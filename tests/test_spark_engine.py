@@ -176,7 +176,9 @@ def test_streaming_incremental_tiling(spark, tmp_path):
     import __spark_entry__ as entry
     from s2js_spark.spark.pages import pages
     from s2js_spark.spark.pipeline import extract_geotags
-    from s2js_spark.spark.tiles import build_tileset, tag_tiles
+    from s2js_spark.spark.streaming import streaming_tag_pairs
+    from s2js_spark.spark.tagjoin import tag_tiles_pairs
+    from s2js_spark.spark.tiles import build_tileset
 
     ts = build_tileset(entry.PIP_TILES + entry.RECT_TILES, max_cells=32)
 
@@ -189,8 +191,8 @@ def test_streaming_incremental_tiling(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)  # incremental batches
         .parquet(src_dir)
     )
-    tagged = tag_tiles(spark, extract_geotags(stream), ts)
-    out = tagged.selectExpr("url", "explode(tile_idx) as tile_i")
+    tagged = streaming_tag_pairs(spark, extract_geotags(stream), ts)
+    out = tagged.select("url", "tile_i")
 
     out_dir = str(tmp_path / "tags_out")
     ckpt = str(tmp_path / "tags_ckpt")
@@ -205,8 +207,8 @@ def test_streaming_incremental_tiling(spark, tmp_path):
     q.awaitTermination(180)
 
     got = {(r["url"], r["tile_i"]) for r in spark.read.parquet(out_dir).collect()}
-    batch = tag_tiles(spark, extract_geotags(p), ts).selectExpr(
-        "url", "explode(tile_idx) as tile_i"
+    batch = tag_tiles_pairs(
+        spark, extract_geotags(p), ts, exact_residuals=False
     )
     want = {(r["url"], r["tile_i"]) for r in batch.collect()}
     assert got == want and len(got) > 0

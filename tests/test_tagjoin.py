@@ -1,7 +1,7 @@
-"""Parity of the all-JVM tag join (tagjoin.tag_tiles_pairs) with the
-Arrow-kernel path (tiles.tag_tiles), including adversarial points on
-polygon edges/vertices that exercise the triage-uncertified residual
-path."""
+"""The all-JVM tag join (tagjoin.tag_tiles_pairs) against the scalar
+geometry port (tests/test_tiles_kernel.scalar_pairs), including
+adversarial points on polygon edges/vertices that exercise the
+triage-uncertified residual path."""
 
 from __future__ import annotations
 
@@ -13,8 +13,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from s2js_spark.spark.session import get_session
-from s2js_spark.spark.tagjoin import tag_candidates, tag_tiles_pairs
-from s2js_spark.spark.tiles import build_tileset, tag_tiles
+from s2js_spark.spark.tagjoin import (
+    covering_frames,
+    tag_candidates,
+    tag_tiles_pairs,
+)
+from s2js_spark.spark.tiles import build_tileset
+from tests.test_tiles_kernel import scalar_pairs
 
 SF = "/root/testdata/sf0.001"
 
@@ -36,6 +41,10 @@ def _pairs_set(df, key="url"):
     return {(r[key], int(r["tile_i"])) for r in df.collect()}
 
 
+def _rows(df):
+    return [(r["url"], r["lat"], r["lng"]) for r in df.select("url", "lat", "lng").collect()]
+
+
 def test_pairs_match_kernel_on_corpus(spark):
     from s2js_spark.spark.pages import pages
     from s2js_spark.spark.pipeline import extract_geotags
@@ -45,19 +54,14 @@ def test_pairs_match_kernel_on_corpus(spark):
     geo = geo.select("url", "lat", "lng")
 
     jvm = _pairs_set(tag_tiles_pairs(spark, geo, ts))
-    kernel = _pairs_set(
-        tag_tiles(spark, geo, ts).select(
-            "url", F.explode("tile_idx").alias("tile_i")
-        )
-    )
-    assert jvm == kernel
+    assert jvm == scalar_pairs(ts, _rows(geo))
     assert len(jvm) > 0
 
 
 def test_pairs_match_kernel_adversarial_boundary(spark):
-    """Points exactly on / nanometers from polygon vertices and edge
-    midpoints: the SQL triage must flag them and the exact residual job
-    must reproduce the kernel's exact decision bit-for-bit."""
+    """Points exactly on / 1e-14 degrees from polygon vertices and edge
+    midpoints: the SQL triage must flag them and the exact residual
+    must reproduce the scalar port's decision for every one."""
     import __spark_entry__ as e
 
     ts = build_tileset(e.PIP_TILES, max_cells=64)
@@ -80,10 +84,8 @@ def test_pairs_match_kernel_adversarial_boundary(spark):
 
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["url", "lat", "lng"]))
     jvm = _pairs_set(tag_tiles_pairs(spark, df, ts))
-    kernel = _pairs_set(
-        tag_tiles(spark, df, ts).select("url", F.explode("tile_idx").alias("tile_i"))
-    )
-    assert jvm == kernel
+    assert jvm == scalar_pairs(ts, rows)
+    assert tag_candidates(spark, df, ts).filter(F.col("_uncert_poly")).count() > 0
     assert ("in8", 0) in jvm and ("in9", 1) in jvm
     assert not any(u == "out" for u, _ in jvm)
 
@@ -103,8 +105,8 @@ def test_certified_fraction_is_total_on_organic_data(spark):
 def test_big_polygon_aggregate_path_matches_kernel(spark):
     """The 240-edge concave tile exceeds MAX_INLINE_EDGES, so its
     winding runs through the array-aggregate fallback — must agree
-    with the Arrow-kernel path and need zero exact residuals on the
-    organic corpus."""
+    with the scalar port and need zero exact residuals on the organic
+    corpus."""
     import __spark_entry__ as e
     from s2js_spark.spark.pages import pages
     from s2js_spark.spark.pipeline import extract_geotags
@@ -117,10 +119,7 @@ def test_big_polygon_aggregate_path_matches_kernel(spark):
     geo = extract_geotags(pages(spark, SF)).filter(F.col("lat").isNotNull())
     geo = geo.select("url", "lat", "lng")
     jvm = _pairs_set(tag_tiles_pairs(spark, geo, ts))
-    kernel = _pairs_set(
-        tag_tiles(spark, geo, ts).select("url", F.explode("tile_idx").alias("tile_i"))
-    )
-    assert jvm == kernel
+    assert jvm == scalar_pairs(ts, _rows(geo))
     assert len(jvm) > 0
     cand = tag_candidates(spark, geo, ts)
     assert cand.filter(F.col("_uncert_poly")).count() == 0
@@ -148,8 +147,9 @@ def test_pairs_plan_stays_compact(spark):
 
 def test_rect_cap_sql_bitwise_vs_kernel(spark):
     """Dense sample near rect and cap boundaries: SQL refinement uses
-    the same correctly-rounded op order as the kernel, so membership
-    must agree everywhere (trig-input ulp caveat aside)."""
+    the correctly-rounded op order of Rect.contains_latlng and
+    Cap.contains_point, so membership must agree with the scalar port
+    everywhere (trig-input ulp caveat aside)."""
     import __spark_entry__ as e
 
     ts = build_tileset(e.RECT_TILES + e.CAP_TILES, max_cells=48)
@@ -168,11 +168,32 @@ def test_rect_cap_sql_bitwise_vs_kernel(spark):
     )
     df = spark.createDataFrame(pdf)
     jvm = _pairs_set(tag_tiles_pairs(spark, df, ts))
-    kernel = _pairs_set(
-        tag_tiles(spark, df, ts).select("url", F.explode("tile_idx").alias("tile_i"))
-    )
-    assert jvm == kernel
+    assert jvm == scalar_pairs(ts, pdf.itertuples(index=False))
     assert len(jvm) > 100
+
+
+def test_empty_tileset_gives_zero_pairs(spark):
+    """An empty tile list yields typed empty covering frames and zero
+    pairs with the same output columns as a non-empty tile set."""
+    import __spark_entry__ as e
+
+    ts = build_tileset([])
+    cov, geom, levels = covering_frames(spark, ts)
+    assert levels == [] and cov.count() == 0 and geom.count() == 0
+    assert cov.columns == ["cell", "tile_i", "interior"]
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"url": ["a", "b"], "lat": [1.0, 50.0], "lng": [8.0, 50.0]})
+    )
+    full = tag_tiles_pairs(
+        spark, df, build_tileset(e.PIP_TILES, max_cells=16), cellid_col="cellid"
+    )
+    for exact in (True, False):
+        out = tag_tiles_pairs(
+            spark, df, ts, exact_residuals=exact, cellid_col="cellid"
+        )
+        assert out.count() == 0
+        assert out.dtypes == full.dtypes
 
 
 def test_registered_predicate_functions(spark):
