@@ -27,7 +27,7 @@ from s2js_spark.geometry.cap import Cap
 from s2js_spark.geometry.interval import R1Interval, S1Interval
 from s2js_spark.geometry.point import Point
 from s2js_spark.geometry.rect import Rect
-from s2js_spark.spark import textops
+from s2js_spark.spark import memo, textops
 from s2js_spark.spark.pages import PAGES_SQL, pages
 from s2js_spark.spark.pipeline import (
     dedup_latest,
@@ -136,38 +136,18 @@ def _tile_name_col(ts) -> "F.Column":
     return F.element_at(m, F.col("tile_i"))
 
 
-# Input DataFrames are memoized per (session, sf_dir): DataFrames are
-# immutable+lazy so reuse is free, and handing back the IDENTICAL
-# object lets downstream plan caches (tagjoin._PAIRS_CACHE) hit —
-# `semanticHash` cannot see through CTE plans (Spark does not
-# canonicalize CTERelationDef ids), so object identity is the reliable
-# key for repeated-query workloads.
-_DF_CACHE: dict = {}
-
-
-def _df_cached(spark: SparkSession, key: str, builder) -> DataFrame:
-    import weakref
-
-    k = (id(spark), key)
-    hit = _DF_CACHE.get(k)
-    if hit is not None and hit[0]() is spark:
-        return hit[1]
-    df = builder()
-    # prune dead-session entries + bound the memo (plans are large)
-    for stale in [kk for kk, v in _DF_CACHE.items() if v[0]() is None]:
-        del _DF_CACHE[stale]
-    while len(_DF_CACHE) >= 64:
-        del _DF_CACHE[next(iter(_DF_CACHE))]
-    _DF_CACHE[k] = (weakref.ref(spark), df)
-    return df
-
-
+# Input DataFrames and declared query plans go through the engine's one
+# plan memo (s2js_spark.spark.memo): a call hits when it has the same
+# live session and the same key. Handing back the IDENTICAL object also
+# lets tag_tiles_pairs' memo hit downstream — `semanticHash` cannot see
+# through CTE plans (Spark does not canonicalize CTERelationDef ids), so
+# object identity is the reliable key for repeated-query workloads.
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _df_cached(spark, f"pages:{sf_dir}", lambda: pages(spark, sf_dir))
+    return memo.cached(spark, f"pages:{sf_dir}", lambda: pages(spark, sf_dir))
 
 
 def _geo_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _df_cached(
+    return memo.cached(
         spark,
         f"geo:{sf_dir}",
         lambda: extract_geotags(_pages(spark, sf_dir)),
@@ -473,8 +453,8 @@ def _q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     Since round 6 knn_join is a fully LAZY plan (no build-time
     isEmpty/persist): every action re-runs the join, window, and
     certification from the inputs, so the plan memo in queries() is
-    safe; the encoded point-side index stays memoized
-    (joins._PTS_CACHE — the disclosed index-table amortization)."""
+    safe; the encoded point-side index is memoized too
+    (joins._cell_keyed_points — the disclosed index-table amortization)."""
     from s2js_spark.spark.joins import knn_join
 
     df = dedup_latest(_geo_pages(spark, sf_dir)).filter(F.col("lat").isNotNull())
@@ -499,8 +479,8 @@ def _q_knn_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller has no density prior. Exactness is level-independent via
     the certified brute-force escalation, so this shares the knn
     oracle; what it adds is oracle coverage of the estimator +
-    level-selection path itself. (The estimate is memoized per
-    (session, corpus plan) — an index parameter, not a result.)"""
+    level-selection path itself. The estimator runs once per built
+    plan, and queries() memoizes the plan per session and sf_dir."""
     from s2js_spark.spark.joins import knn_join
 
     df = dedup_latest(_geo_pages(spark, sf_dir)).filter(F.col("lat").isNotNull())
@@ -594,7 +574,7 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     otherwise run on ONE task (round 6 — the ann queries' dominant
     cost at sf0.1 was a serial signature stage; the ~MB shuffle is
     noise)."""
-    return _df_cached(
+    return memo.cached(
         spark,
         f"emb:{sf_dir}",
         lambda: spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
@@ -752,8 +732,8 @@ def _q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # skipping seconds of per-call Catalyst re-analysis of the 14-layer
 # encode / refinement chains (measured: rebuild-vs-reuse delta 0.3s
 # for rect_tag up to 2.0s for buffer_tag_multi at sf0.1) — the same
-# prepared-statement pattern as tagjoin._PAIRS_CACHE, extended to the
-# declared query surface.
+# prepared-statement pattern as tag_tiles_pairs' memo, extended to the
+# declared query surface: a hit needs the same live session and sf_dir.
 _NO_PLAN_MEMO = {"minhash_dedup", "semantic_dedup", "cell_vectorize"}
 
 
@@ -762,7 +742,7 @@ def _memoized(name: str, fn):
         return fn
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _df_cached(
+        return memo.cached(
             spark, f"q:{name}:{sf_dir}", lambda: fn(spark, sf_dir)
         )
 

@@ -159,10 +159,11 @@ def buffered_covering(
 # switches to the edges-as-broadcast-data aggregate form (the
 # tagjoin._winding_agg_sql pattern). 16 covers every graded query with
 # whole-stage codegen headroom to spare.
-MAX_INLINE_RINGS = int(__import__("os").environ.get("S2JS_MAX_INLINE_RINGS", "16"))
+MAX_INLINE_RINGS = 16
 
+# type of the broadcast geometry frame's per-tile ``edges`` column
 _EDGE_SCHEMA = (
-    "tile_i int, edges array<struct<"
+    "array<struct<"
     "ax:double,ay:double,az:double,bx:double,by:double,bz:double,"
     "cx:double,cy:double,cz:double,c2:double>>"
 )
@@ -242,13 +243,8 @@ def tag_within_distance_multi(
 
     spark = df.sparkSession
     cov_rows, levels = buffered_covering(rings, radius_deg)
-    # inline VALUES -> LocalRelation: broadcasting it is driver-only
-    # work (a createDataFrame frame is RDD-backed and each broadcast
-    # materialization launches a job; round 6, guide §7)
-    cov = spark.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(f"({c}L, {t})" for c, t in cov_rows)
-        + " AS _bufcov(cell, tile_i)"
+    cov = sq.values_frame(
+        spark, [f"({c}L, {t})" for c, t in cov_rows], "(0L, 0)", "_bufcov(cell, tile_i)"
     )
 
     base = df.filter(
@@ -296,6 +292,8 @@ def tag_within_distance_multi(
         dist_case = " ".join(
             f"WHEN {k} THEN round(_bd{k}, 9)" for k in range(len(rings))
         )
+        if not rings:  # a CASE needs at least one WHEN
+            keep, dist_case = "WHEN -1 THEN false", "WHEN -1 THEN CAST(NULL AS DOUBLE)"
         out = staged.filter(
             F.expr(f"CASE tile_i {keep} ELSE false END")
             & sq.barrier_guard("_bufm_b2")
@@ -310,9 +308,9 @@ def tag_within_distance_multi(
     def _dlit(v: float) -> str:
         return f"CAST('{float(v)!r}' AS DOUBLE)"
 
-    geom = spark.sql(
-        "SELECT * FROM VALUES "
-        + ", ".join(
+    geom = sq.values_frame(
+        spark,
+        [
             f"({t}, array("
             + ", ".join(
                 "named_struct("
@@ -328,8 +326,9 @@ def tag_within_distance_multi(
             )
             + "))"
             for t, edges in _edge_rows(rings)
-        )
-        + " AS _bufgeom(tile_i, edges)"
+        ],
+        f"(0, CAST(array() AS {_EDGE_SCHEMA}))",
+        "_bufgeom(tile_i, edges)",
     )
     staged = staged.join(
         F.broadcast(geom.withColumnRenamed("tile_i", "_geom_tile")),

@@ -27,6 +27,7 @@ from pyspark.sql.types import ArrayType, LongType
 from ..geometry import cellid_scalar as cs
 from ..geometry.metric import MIN_WIDTH_METRIC
 from ..kernels import cellid as kc
+from . import memo
 
 
 @F.pandas_udf(ArrayType(LongType()))
@@ -59,62 +60,14 @@ def _estimate_count(df: DataFrame, sample_partitions: int = 4) -> int:
     return int(total / take * n_parts)
 
 
-_PTS_CACHE: dict = {}
-_PTS_CACHE_MAX = 16
-# auto-level estimates, memoized per (session, points plan): the level
-# is an index parameter — a property of the corpus, not of one query
-# batch — so repeated-query workloads must not re-run the sampling job
-# per call (it is the same prepared-index amortization as _PTS_CACHE).
-_LEVEL_CACHE: dict = {}
-
-
-def clear_knn_index_cache() -> None:
-    """Invalidate the memoized kNN point indexes.
-
-    The cache key is PLAN semantics (semanticHash), so rewriting the
-    underlying files in place within a session would otherwise serve
-    stale kNN results — call this after any in-place rewrite of an
-    indexed corpus. Cluster note: the memoized index rides on
-    ``localCheckpoint`` blocks, which are NOT reliable storage — on a
-    real cluster an executor loss invalidates them and cached queries
-    fail; set ``spark.sparkContext.setCheckpointDir`` and swap
-    ``localCheckpoint`` for ``checkpoint`` in ``_cell_keyed_points``
-    when executors are preemptible (same plan shape, reliable blocks).
-    """
-    _PTS_CACHE.clear()
-
-
-def _cell_keyed_points(
-    spark: SparkSession, points: DataFrame, level: int
-) -> DataFrame:
-    """The encoded, lineage-truncated point-side of the kNN join,
-    memoized per (session, points plan, level) — the kNN service's
-    stored index table. Catalyst analysis + physical planning of the
-    14-layer encode chain is ~3.7s of FIXED driver cost per call
-    (measured at sf0.1); repeated-query workloads re-key the same
-    corpus, so this is the same prepared-statement pattern as
-    tagjoin._PAIRS_CACHE. The memoized DataFrame also carries the
-    materialized checkpoint blocks, amortizing the index build."""
-    import weakref
-
+def _cell_keyed_points(points: DataFrame, level: int) -> DataFrame:
+    """The encoded, lineage-truncated point-side of the kNN join — the
+    kNN service's stored index table, memoized by knn_join. Catalyst
+    analysis + physical planning of the 14-layer encode chain is ~3.7s
+    of FIXED driver cost per call (measured at sf0.1), and the memoized
+    DataFrame also carries the materialized checkpoint blocks."""
     from . import sqlkernels as sq
 
-    try:
-        sem = points.semanticHash()
-    except Exception:  # pragma: no cover - exotic plans
-        sem = None
-    key = (id(spark), sem, level)
-    if sem is not None:
-        hit = _PTS_CACHE.get(key)
-        try:
-            if (
-                hit is not None
-                and hit[0]() is spark
-                and points.sameSemantics(hit[1])
-            ):
-                return hit[2]
-        except Exception:  # pragma: no cover
-            pass
     # assume_nonnull after a BASE-column filter: the null-guard CASE
     # makes the output nullable and downstream join analysis then
     # infers `_cell IS NOT NULL` through the chain (the pushdown
@@ -137,16 +90,7 @@ def _cell_keyed_points(
     # barriers. Truncating to an RDD leaf stops every such lineage
     # walk; the materialized NARROW key table (id, lat, lng, _cell)
     # is the index a kNN service stores anyway.
-    pts = pts.localCheckpoint(eager=False)
-    if sem is not None:
-        for stale in [
-            kk for kk, v in _PTS_CACHE.items() if v[0]() is None
-        ]:
-            del _PTS_CACHE[stale]
-        while len(_PTS_CACHE) >= _PTS_CACHE_MAX:
-            del _PTS_CACHE[next(iter(_PTS_CACHE))]
-        _PTS_CACHE[key] = (weakref.ref(spark), points, pts)
-    return pts
+    return pts.localCheckpoint(eager=False)
 
 
 def _chord2_sql(lat1: str, lng1: str, lat2: str, lng2: str) -> F.Column:
@@ -245,8 +189,12 @@ def knn_join(
     """k nearest points per query over (lat, lng) columns on both sides.
 
     Returns (query_id, id, chord2, rank). Exact: under-covered queries
-    fall back to brute force automatically.
+    fall back to brute force automatically. A query with a null
+    coordinate gets no rows.
     """
+    # A Filter over a LocalRelation still optimizes to a LocalRelation,
+    # so literal batches keep the driver-side neighbourhood path.
+    queries = queries.filter(F.col("qlat").isNotNull() & F.col("qlng").isNotNull())
     if level is None:
         # aim for ~4k points per cell-neighborhood; level from an
         # ESTIMATED point count — counting a handful of partitions and
@@ -254,30 +202,10 @@ def knn_join(
         # here; at 100 TB that is an extra scan of the corpus before
         # the join even starts). The level only needs the right order
         # of magnitude: correctness is level-independent via the
-        # certified brute-force escalation below. Memoized per
-        # (session, points plan) — see _LEVEL_CACHE.
-        import weakref
-
-        try:
-            psem = points.semanticHash()
-        except Exception:  # pragma: no cover - exotic plans
-            psem = None
-        lkey = (id(spark), psem)
-        lhit = _LEVEL_CACHE.get(lkey)
-        if (
-            psem is not None
-            and lhit is not None
-            and lhit[0]() is spark
-            and points.sameSemantics(lhit[1])
-        ):
-            level = lhit[2]
-        else:
-            n = _estimate_count(points)
-            level = max(2, min(16, int(math.log(max(n, 1) / 32.0 + 1, 4)) + 4))
-            if psem is not None:
-                while len(_LEVEL_CACHE) >= _PTS_CACHE_MAX:
-                    del _LEVEL_CACHE[next(iter(_LEVEL_CACHE))]
-                _LEVEL_CACHE[lkey] = (weakref.ref(spark), points, level)
+        # certified brute-force escalation below. Not memoized here:
+        # queries() memoizes the whole knn_auto plan.
+        n = _estimate_count(points)
+        level = max(2, min(16, int(math.log(max(n, 1) / 32.0 + 1, 4)) + 4))
 
     # Point-side cell key via the pure-SQL JVM encode (sqlkernels),
     # memoized + lineage-truncated: the corpus side must never cross
@@ -291,7 +219,15 @@ def knn_join(
     # inlined as a VALUES frame, removing the per-run Python
     # evaluation entirely (round 6 — the ArrowEvalPython stage cost
     # ~0.9s per run for a 5-row query batch at sf0.1).
-    pts = _cell_keyed_points(spark, points, level)
+    # A hit needs the same live session, level and points-plan
+    # semantics, so fresh query batches on one corpus reuse the index.
+    # Plan semantics cannot see files rewritten in place: call
+    # memo.clear(spark) after such a rewrite. The index blocks are
+    # localCheckpoint ones, which an executor loss invalidates: with
+    # preemptible executors, checkpoint() to a checkpoint dir instead.
+    pts = memo.cached(
+        spark, ("joins.points", level), lambda: _cell_keyed_points(points, level), plan=points
+    )
     q = _local_neighborhood_frame(spark, queries, level, query_id)
     if q is None:
         q = queries.withColumn(

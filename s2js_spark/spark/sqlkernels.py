@@ -65,6 +65,15 @@ def _lookup_lit() -> Column:
     return F.lit(_LOOKUP_POS_LIST)
 
 
+def values_frame(spark, rows: list[str], empty_row: str, alias: str) -> DataFrame:
+    """Inline ``VALUES`` frame (a LocalRelation: broadcasting it is
+    driver-only work). An empty ``rows`` takes its column types from
+    the typed ``empty_row`` placeholder and filters it out."""
+    if not rows:
+        return spark.sql(f"SELECT * FROM VALUES {empty_row} AS {alias} WHERE false")
+    return spark.sql(f"SELECT * FROM VALUES {', '.join(rows)} AS {alias}")
+
+
 # ----------------------------------------------------------- encode chain
 
 def pushdown_barrier(df: DataFrame, name: str = "_pd_barrier") -> DataFrame:

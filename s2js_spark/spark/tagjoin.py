@@ -45,7 +45,6 @@ certified band bounds the rounding error of that evaluation order.
 from __future__ import annotations
 
 import math
-import weakref
 
 import numpy as np
 import pandas as pd
@@ -54,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from ..geometry import cellid_scalar as cs
+from . import memo
 from . import sqlkernels as sq
 from .tiles import (
     KIND_CAP,
@@ -66,25 +66,6 @@ from .tiles import (
 
 _D = math.pi / 180.0
 _UNCERT = 1_000_000  # accumulator stride separating crossing count / flags
-_COV_FRAME_CACHE: dict = {}
-_PAIRS_CACHE: dict = {}
-_PAIRS_CACHE_MAX = 32
-
-
-def _prune_pairs_cache() -> None:
-    """Evict entries whose tileset/session weakrefs died, then bound
-    the memo (FIFO over dict insertion order): a long-lived
-    interactive driver must not accumulate one analyzed plan per
-    distinct query shape forever."""
-    dead = [
-        k for k, v in _PAIRS_CACHE.items()
-        if v[0]() is None or v[1]() is None
-    ]
-    for k in dead:
-        del _PAIRS_CACHE[k]
-    while len(_PAIRS_CACHE) >= _PAIRS_CACHE_MAX:
-        del _PAIRS_CACHE[next(iter(_PAIRS_CACHE))]
-
 
 _EDGE_STRUCT = (
     "array<struct<cx:double,cy:double,cz:double,"
@@ -131,26 +112,16 @@ def covering_frames(
     ``createDataFrame`` frames were pickled-RDD-backed
     (``Scan ExistingRDD``) and every broadcast materialization
     launched a real job with Python-deserializing tasks (2 of
-    rect_tag's 5 jobs per run). Memoized per (tile set, session) as
-    before, with weakref identity guards.
+    rect_tag's 5 jobs per run). Not memoized itself: its one engine
+    caller, tag_tiles_pairs, builds it only on a ``memo`` miss.
     """
-    key = (id(ts), id(spark))
-    hit = _COV_FRAME_CACHE.get(key)
-    if hit is not None and hit[0]() is ts and hit[1]() is spark:
-        return hit[2]
     levels = sorted({int(cs.level(int(c))) for c in ts.cov_cell})
 
     def d(v: float) -> str:  # shortest round-trip double literal
         return f"CAST('{float(v)!r}' AS DOUBLE)"
 
-    def values(rows: list[str], empty_row: str, alias: str) -> DataFrame:
-        # VALUES needs at least one row: an empty set takes its column
-        # types from a typed placeholder row and filters it out.
-        if not rows:
-            return spark.sql(f"SELECT * FROM VALUES {empty_row} AS {alias} WHERE false")
-        return spark.sql(f"SELECT * FROM VALUES {', '.join(rows)} AS {alias}")
-
-    cov = values(
+    cov = sq.values_frame(
+        spark,
         [
             f"({int(np.uint64(c).astype(np.int64))}L, {int(t)},"
             f" {'true' if i else 'false'})"
@@ -188,13 +159,13 @@ def covering_frames(
             f" {edges_sql})"
         )
     zero = d(0.0)
-    geom = values(
+    geom = sq.values_frame(
+        spark,
         geom_rows,
         f"(0, 0, false, {', '.join([zero] * 8)}, {no_edges})",
         "_geom(tile_i, kind, origin_parity,"
         " lat_lo, lat_hi, lng_lo, lng_hi, ccx, ccy, ccz, cr2, edges)",
     )
-    _COV_FRAME_CACHE[key] = (weakref.ref(ts), weakref.ref(spark), (cov, geom, levels))
     return cov, geom, levels
 
 
@@ -419,41 +390,22 @@ def tag_tiles_pairs(
     additionally carries the leaf cell id through. An empty tile set
     gives zero pairs with the same output columns.
 
-    The fully-analyzed result DataFrame is memoized per
-    (tile set, session, input-plan semantics, arguments): Catalyst
-    analysis of the inlined encode chain + winding CASE is seconds of
-    fixed driver cost, and interactive workloads re-issue the same
-    query shape — a prepared-statement cache, exactly like
-    covering_frames' own memo. DataFrames are immutable/lazy, so
-    handing the same object back is safe; each action re-executes.
+    The fully-analyzed result is memoized (``memo``): a call hits when
+    it has the same live session, the same live tile set object, an
+    input plan with the same semantics and the same arguments.
+    Catalyst analysis of the inlined encode chain + winding CASE is
+    seconds of fixed driver cost, and interactive workloads re-issue
+    the same query shape.
     """
-    try:
-        sem = df.semanticHash()
-    except Exception:  # pragma: no cover - e.g. exotic streaming plans
-        sem = None
-    key = (
-        id(ts), id(spark), sem, lat_col, lng_col,
-        exact_residuals, cellid_col, tuple(df.columns),
+    return memo.cached(
+        spark,
+        ("tagjoin.pairs", lat_col, lng_col, exact_residuals, cellid_col, tuple(df.columns)),
+        lambda: _tag_tiles_pairs_build(
+            spark, df, ts, lat_col, lng_col, exact_residuals, cellid_col
+        ),
+        plan=df,
+        owner=ts,
     )
-    if sem is not None:
-        hit = _PAIRS_CACHE.get(key)
-        try:
-            if (
-                hit is not None
-                and hit[0]() is ts
-                and hit[1]() is spark
-                and df.sameSemantics(hit[2])
-            ):
-                return hit[3]
-        except Exception:  # pragma: no cover
-            pass
-    out = _tag_tiles_pairs_build(
-        spark, df, ts, lat_col, lng_col, exact_residuals, cellid_col
-    )
-    if sem is not None:
-        _prune_pairs_cache()
-        _PAIRS_CACHE[key] = (weakref.ref(ts), weakref.ref(spark), df, out)
-    return out
 
 
 def _tag_tiles_pairs_build(

@@ -150,6 +150,23 @@ def test_multi_matches_per_ring_scan(spark):
     assert len(want) > 10
 
 
+def test_multi_empty_rings_gives_zero_rows(spark):
+    """No rings: zero rows, with the input columns plus tile_i and the
+    distance column, typed as for a non-empty ring list."""
+    from s2js_spark.spark.distance import tag_within_distance_multi
+
+    df = spark.createDataFrame(
+        [(0, 8.0, 1.0), (1, None, None)], "id long, lat double, lng double"
+    )
+    out = tag_within_distance_multi(df, [], 0.5)
+    assert out.schema.simpleString() == (
+        "struct<id:bigint,lat:double,lng:double,tile_i:int,bdist:double>"
+    )
+    assert out.collect() == []
+    ref = tag_within_distance_multi(df, [("a", DIAMOND)], 0.5)
+    assert out.schema == ref.schema
+
+
 def _grid_rings(n: int) -> list[tuple[str, list[list[float]]]]:
     """n small convex CCW diamonds tiling a lat/lng band."""
     rings = []

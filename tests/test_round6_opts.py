@@ -110,13 +110,14 @@ def test_knn_local_values_path_matches_udf_path(spark):
         for i in range(800)
     ]
     points = spark.createDataFrame(pts, ["id", "lat", "lng"])
-    qrows = [(0, 40.0, 7.0), (1, 41.5, 8.5), (2, 39.0, 5.5)]
+    # query 3 has no coordinates: no neighbours on either path
+    qrows = [(0, 40.0, 7.0), (1, 41.5, 8.5), (2, 39.0, 5.5), (3, None, None)]
     # UDF path: RDD-backed createDataFrame query frame
-    q_udf = spark.createDataFrame(qrows, ["query_id", "qlat", "qlng"])
+    q_udf = spark.createDataFrame(qrows, "query_id long, qlat double, qlng double")
     # local path: inline VALUES (LocalRelation)
+    dbl = lambda v: "NULL" if v is None else f"CAST('{v!r}' AS DOUBLE)"  # noqa: E731
     vals = ", ".join(
-        f"({qid}, CAST('{qlat!r}' AS DOUBLE), CAST('{qlng!r}' AS DOUBLE))"
-        for qid, qlat, qlng in qrows
+        f"({qid}, {dbl(qlat)}, {dbl(qlng)})" for qid, qlat, qlng in qrows
     )
     q_local = spark.sql(
         f"SELECT * FROM VALUES {vals} AS q(query_id, qlat, qlng)"
@@ -125,8 +126,15 @@ def test_knn_local_values_path_matches_udf_path(spark):
         q_local._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
         == "LocalRelation"
     )
-    a = knn_join(spark, points, q_udf, k=4, level=8).collect()
-    b = knn_join(spark, points, q_local, k=4, level=8).collect()
+    a_df = knn_join(spark, points, q_udf, k=4, level=8)
+    b_df = knn_join(spark, points, q_local, k=4, level=8)
+    # the null-coordinate filter keeps the batch a LocalRelation, so it
+    # still takes the driver-side path (no Python node in its plan)
+    plan = lambda df: df._jdf.queryExecution().optimizedPlan().toString()  # noqa: E731
+    assert "_neighborhood_cells" in plan(a_df)
+    assert "_neighborhood_cells" not in plan(b_df)
+    a, b = a_df.collect(), b_df.collect()
+    assert {r["query_id"] for r in a} == {r["query_id"] for r in b} == {0, 1, 2}
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
     aa = sorted([(r["query_id"], r["rank"], r["id"], r["chord2"]) for r in a])
     bb = sorted([(int(r["query_id"]), r["rank"], r["id"], r["chord2"]) for r in b])
