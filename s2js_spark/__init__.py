@@ -5,12 +5,15 @@ library (missinglink/s2js, read-only snapshot at /root/reference).
 
 Layers
 ------
-- ``s2js_spark.kernels``   vectorized NumPy S2 core (encode/decode,
-  hierarchy, tokens) — runs inside Arrow-batched pandas UDFs.
-- ``s2js_spark.geometry``  driver-side geometry objects (Cap, Rect,
-  Loop, Polygon, CellUnion, RegionCoverer, GeoJSON bridge) — used to
-  build broadcast tile structures, never per-document.
-- ``s2js_spark.spark``     the Spark surface: registered pandas UDFs,
+- ``s2js_spark.kernels``   Hilbert lookup tables and NumPy (s,t)/(u,v)
+  transforms shared by the layers below.
+- ``s2js_spark.geometry``  the scalar S2 port: CellID arithmetic
+  (``cellid_scalar``) and geometry objects (Cap, Rect, Loop, Polygon,
+  CellUnion, RegionCoverer, GeoJSON bridge). Runs on the driver to
+  build broadcast tile structures, never per document, and is the
+  reference the tests compare against.
+- ``s2js_spark.spark``     the Spark surface: cell arithmetic as SQL
+  expressions (``sqlkernels``) and registered SQL functions,
   deterministic pages-table synthesis, spatial joins, dedup/text/
   similarity pipeline operators.
 """

@@ -159,19 +159,8 @@ class Cell:
     def from_cellid(id: int) -> "Cell":
         f, i, j, orientation = cs.face_ij_orientation(id)
         level = cs.level(id)
-        cell_size = cs.size_ij(level)
-        x_lo = i & -cell_size
-        y_lo = j & -cell_size
-        uv = R2Rect(
-            R1Interval(
-                cs._st_to_uv_scalar(cs.ij_to_st_min(x_lo)),
-                cs._st_to_uv_scalar(cs.ij_to_st_min(x_lo + cell_size)),
-            ),
-            R1Interval(
-                cs._st_to_uv_scalar(cs.ij_to_st_min(y_lo)),
-                cs._st_to_uv_scalar(cs.ij_to_st_min(y_lo + cell_size)),
-            ),
-        )
+        u_lo, u_hi, v_lo, v_hi = cs.ij_level_to_bound_uv(i, j, level)
+        uv = R2Rect(R1Interval(u_lo, u_hi), R1Interval(v_lo, v_hi))
         return Cell(f, level, orientation, id, uv)
 
     @staticmethod

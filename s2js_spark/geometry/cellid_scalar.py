@@ -1,11 +1,13 @@
 """Scalar (pure Python int) S2 CellID operations.
 
 Used by the driver-side geometry layer (RegionCoverer, CellUnion) where
-per-polygon object code runs, never per-document. Python ints are exact
-uint64 carriers; every function masks to 64 bits. Semantics match
-/root/reference/s2/cellid.ts (citations inline) and are property-tested
-for equivalence against the vectorized kernels in
-``s2js_spark.kernels.cellid``.
+per-polygon object code runs, never per-document, and by knn for the
+neighbourhoods of literal query batches. Python ints are exact uint64
+carriers; every function masks to 64 bits. Semantics match the
+reference s2js ``s2/cellid.ts`` (citations inline): the ported
+``cellid_test.ts`` vectors are asserted against this module, and the
+engine's SQL cell arithmetic (``spark.sqlkernels``, the registered SQL
+functions) is tested for bit-equality with it.
 """
 
 from __future__ import annotations
@@ -19,7 +21,6 @@ from ..kernels.hilbert import (
     LOOKUP_POS,
     SWAP_MASK,
 )
-from ..kernels import stuv as _stuv
 
 FACE_BITS = 3
 NUM_FACES = 6
@@ -280,6 +281,19 @@ def ij_to_st_min(i: int) -> float:
 
 def size_st(lvl: int) -> float:
     return ij_to_st_min(size_ij(lvl))
+
+
+def ij_level_to_bound_uv(i: int, j: int, lvl: int) -> tuple[float, float, float, float]:
+    """(u_lo, u_hi, v_lo, v_hi) of the cell at ``lvl`` holding leaf
+    (i, j) (cellid.ts:483-492)."""
+    size = size_ij(lvl)
+    i_lo, j_lo = i & -size, j & -size
+    return (
+        _st_to_uv_scalar(ij_to_st_min(i_lo)),
+        _st_to_uv_scalar(ij_to_st_min(i_lo + size)),
+        _st_to_uv_scalar(ij_to_st_min(j_lo)),
+        _st_to_uv_scalar(ij_to_st_min(j_lo + size)),
+    )
 
 
 def from_point(x: float, y: float, z: float) -> int:

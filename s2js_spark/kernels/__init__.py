@@ -1,9 +1,10 @@
-"""Vectorized NumPy S2 core kernels.
+"""Vectorized NumPy S2 building blocks.
 
-Everything here operates on NumPy arrays (uint64 cell ids, float64
-coordinates) so it can run columnar inside Arrow-batched pandas UDFs
-with no per-row Python. Semantics match the reference S2 library
-bit-for-bit (see per-function citations).
+``hilbert`` holds the Hilbert-curve lookup tables that the scalar
+``geometry.cellid_scalar`` port, the SQL encode (``spark.sqlkernels``)
+and the DuckDB oracle (``tools/duckdb_s2.py``) share; ``stuv`` holds
+the coordinate transforms over NumPy arrays. Semantics match the
+reference S2 library bit-for-bit (see per-function citations).
 """
 
-from . import cellid, hilbert, stuv  # noqa: F401
+from . import hilbert, stuv  # noqa: F401

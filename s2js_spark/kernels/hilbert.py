@@ -6,8 +6,9 @@ Ports the table construction of the reference (semantics of
 (LOOKUP_IJ), where i/j are 4 leaf-grid bits each, p is 8 Hilbert
 position bits, and o is the 2-bit orientation (SWAP, INVERT).
 
-The tables are plain int64 NumPy arrays so the encode/decode loops can
-gather with ``np.take`` over whole Arrow batches.
+The scalar port (``geometry.cellid_scalar``) reads them as int lists;
+the SQL encode (``spark.sqlkernels``) and the DuckDB oracle ship
+LOOKUP_POS as a literal table.
 """
 
 from __future__ import annotations
@@ -19,15 +20,6 @@ SWAP_MASK = 0x01
 INVERT_MASK = 0x02
 
 # Canonical Hilbert sub-cell orderings (reference s2/lookupIJ.ts:5-17).
-IJ_TO_POS = np.array(
-    [
-        [0, 1, 3, 2],  # canonical order
-        [0, 3, 1, 2],  # axes swapped
-        [2, 3, 1, 0],  # bits inverted
-        [2, 1, 3, 0],  # swapped & inverted
-    ],
-    dtype=np.int64,
-)
 POS_TO_IJ = np.array(
     [
         [0, 1, 3, 2],  # canonical: (0,0), (0,1), (1,1), (1,0)

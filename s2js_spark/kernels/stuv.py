@@ -1,10 +1,11 @@
-"""Vectorized S2 coordinate-system transforms.
+"""Vectorized S2 coordinate transforms over NumPy arrays.
 
-The (lat,lng) -> xyz -> (face,u,v) -> (face,s,t) -> (face,i,j) chain,
-matching the reference semantics (/root/reference/s2/stuv.ts) with the
-quadratic projection. All functions are NumPy ufunc pipelines over
-float64/int64 arrays; operation order is kept identical to the
-reference so results are bit-for-bit equal.
+The array forms the geometry layer and the predicate UDFs call:
+(lat,lng) -> xyz, the quadratic (s,t) -> (u,v) projection and the
+(si,ti) <-> (s,t) codec, matching the reference semantics (s2js
+``s2/stuv.ts``). Operation order is kept identical to the
+reference so results are bit-for-bit equal. The scalar forms of the
+whole chain live in ``geometry.cellid_scalar``.
 """
 
 from __future__ import annotations
@@ -24,15 +25,6 @@ def st_to_uv(s: np.ndarray) -> np.ndarray:
     hi = _ONE_THIRD * (4.0 * s * s - 1.0)
     lo = _ONE_THIRD * (1.0 - 4.0 * (1.0 - s) * (1.0 - s))
     return np.where(s >= 0.5, hi, lo)
-
-
-def uv_to_st(u: np.ndarray) -> np.ndarray:
-    """Inverse quadratic projection (stuv.ts:167-170)."""
-    u = np.asarray(u, dtype=np.float64)
-    # Evaluate both branches on clipped inputs to avoid sqrt-domain NaNs.
-    pos = 0.5 * np.sqrt(np.maximum(1.0 + 3.0 * u, 0.0))
-    neg = 1.0 - 0.5 * np.sqrt(np.maximum(1.0 - 3.0 * u, 0.0))
-    return np.where(u >= 0.0, pos, neg)
 
 
 def si_ti_to_st(si: np.ndarray) -> np.ndarray:
@@ -58,79 +50,3 @@ def latlng_to_xyz(lat: np.ndarray, lng: np.ndarray) -> tuple[np.ndarray, np.ndar
     lng = np.asarray(lng, dtype=np.float64)
     cosphi = np.cos(lat)
     return np.cos(lng) * cosphi, np.sin(lng) * cosphi, np.sin(lat)
-
-
-def xyz_to_latlng(x: np.ndarray, y: np.ndarray, z: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """xyz -> (lat,lng) radians (s2/LatLng.ts:37-47)."""
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    z = np.asarray(z, dtype=np.float64)
-    lat = np.arctan2(z, np.sqrt(x * x + y * y))
-    lng = np.arctan2(y, x)
-    return lat, lng
-
-
-def face(x: np.ndarray, y: np.ndarray, z: np.ndarray) -> np.ndarray:
-    """Cube face 0-5 containing direction (x,y,z) (stuv.ts:176-190).
-
-    Largest-magnitude axis wins with the reference tie-breaks
-    (x>y else y>z else z), +3 when that component is negative.
-    """
-    ax, ay, az = np.abs(x), np.abs(y), np.abs(z)
-    # largestComponent (r3/Vector.ts:112-120): strict > comparisons.
-    is_x = (ax > ay) & (ax > az)
-    is_y = (~(ax > ay)) & (ay > az)
-    f = np.where(is_x, 0, np.where(is_y, 1, 2)).astype(np.int64)
-    comp = np.where(is_x, x, np.where(is_y, y, z))
-    return np.where(comp < 0, f + 3, f)
-
-
-def valid_face_xyz_to_uv(
-    f: np.ndarray, x: np.ndarray, y: np.ndarray, z: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Project xyz onto face f -> (u,v) (stuv.ts:196-211)."""
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    z = np.asarray(z, dtype=np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        u = np.select(
-            [f == 0, f == 1, f == 2, f == 3, f == 4],
-            [y / x, -x / y, -x / z, z / x, z / y],
-            default=-y / z,
-        )
-        v = np.select(
-            [f == 0, f == 1, f == 2, f == 3, f == 4],
-            [z / x, z / y, -y / z, y / x, -x / y],
-            default=-x / z,
-        )
-    return u, v
-
-
-def xyz_to_face_uv(
-    x: np.ndarray, y: np.ndarray, z: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """xyz -> (face,u,v) (stuv.ts:216-220)."""
-    f = face(x, y, z)
-    u, v = valid_face_xyz_to_uv(f, x, y, z)
-    return f, u, v
-
-
-def face_uv_to_xyz(
-    f: np.ndarray, u: np.ndarray, v: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(face,u,v) -> unnormalized xyz (stuv.ts:225-240)."""
-    f = np.asarray(f)
-    u = np.asarray(u, dtype=np.float64)
-    v = np.asarray(v, dtype=np.float64)
-    one = np.ones_like(u)
-    x = np.select([f == 0, f == 1, f == 2, f == 3, f == 4], [one, -u, -u, -one, v], default=v)
-    y = np.select([f == 0, f == 1, f == 2, f == 3, f == 4], [u, one, -v, -v, -one], default=u)
-    z = np.select([f == 0, f == 1, f == 2, f == 3, f == 4], [v, v, one, -u, -u], default=-one)
-    return x, y, z
-
-
-def face_si_ti_to_xyz(
-    f: np.ndarray, si: np.ndarray, ti: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(face,si,ti) -> unnormalized xyz (stuv.ts:297-299)."""
-    return face_uv_to_xyz(f, st_to_uv(si_ti_to_st(si)), st_to_uv(si_ti_to_st(ti)))

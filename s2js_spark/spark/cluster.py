@@ -36,11 +36,14 @@ MASTER_URL = f"spark://127.0.0.1:{MASTER_PORT}"
 # its own process-group leader (executors fork inside the Worker's
 # group), and a tiny detached watchdog process kills those groups the
 # moment its parent (the bench process) disappears — robust against
-# SIGKILL, where no in-process cleanup can run.
+# SIGKILL, where no in-process cleanup can run. The pgid file always
+# lists exactly the daemons alive now.
 _WATCHDOG_SRC = """
 import os, signal, sys, time
-pgid_file = sys.argv[1]
-while os.getppid() != 1:
+pgid_file, parent = sys.argv[1], int(sys.argv[2])
+# an orphan is re-parented to init or to a subreaper: either way its
+# parent pid changes
+while os.getppid() == parent:
     time.sleep(1.0)
 try:
     with open(pgid_file) as fh:
@@ -48,7 +51,12 @@ try:
 except Exception:
     pgids = []
 for pg in pgids:
+    # a recorded pgid the OS has since reused must not be killed: the
+    # group leader is the daemon itself, so check it still is one
     try:
+        with open(f"/proc/{pg}/cmdline", "rb") as fh:
+            if b"org.apache.spark.deploy" not in fh.read():
+                continue
         os.killpg(pg, signal.SIGKILL)
     except Exception:
         pass
@@ -118,7 +126,7 @@ class StandaloneCluster:
             fh.write(" ".join(str(p) for p in pgids))
         if self.watchdog is None or self.watchdog.poll() is not None:
             self.watchdog = subprocess.Popen(
-                [sys.executable, "-c", _WATCHDOG_SRC, self._pgid_file],
+                [sys.executable, "-c", _WATCHDOG_SRC, self._pgid_file, str(os.getpid())],
                 stdout=subprocess.DEVNULL,
                 stderr=subprocess.DEVNULL,
             )
@@ -147,6 +155,7 @@ class StandaloneCluster:
             self.worker.terminate()
             self.worker.wait(timeout=15)
             self.worker = None
+            self._record_pgids()
             time.sleep(1)
 
     def stop(self) -> None:
@@ -157,6 +166,7 @@ class StandaloneCluster:
             self.master = None
         if self.watchdog is not None:
             self.watchdog.terminate()
+            self.watchdog.wait(timeout=15)
             self.watchdog = None
         try:
             os.unlink(self._pgid_file)

@@ -1,278 +1,169 @@
-"""Registered S2 scalar functions as Arrow-batched pandas UDFs.
+"""The S2 functions registered for SQL.
 
-Every function is a thin wrapper over ``s2js_spark.kernels`` — pure
-NumPy per batch, no per-row Python. Cell ids travel in LongType as the
-raw uint64 bit pattern; ``s2_flip_key`` exposes the order-preserving
-signed key for sorts/range predicates in SQL.
+Cell arithmetic is SQL-bodied session functions, the bit operations of
+the ``sqlkernels`` column helpers: Catalyst inlines each body into the
+calling plan, with no Python node. Cell ids travel in LongType as the
+raw uint64 bit pattern; ``s2_flip_key`` gives the order-preserving
+signed key. There is no registered encode: ``sqlkernels.with_s2_cellid``,
+a chain of lateral aliases, is the engine's.
+
+Coverings, cell-union normalization and the geometry predicates are
+pandas UDFs: there the scalar ``geometry/`` port's Python is the
+operator.
 """
 
 from __future__ import annotations
+
+import json
+import math
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-)
+from pyspark.sql.types import ArrayType, BooleanType, LongType
 
-from ..kernels import cellid as kc
+from ..geometry.cellunion import CellUnion
+from ..geometry.geojson import GeoJSONRegionCoverer, from_geojson
+from ..geometry.point import Point
+from ..kernels import stuv
 
+_FLIP = "shiftleft(1L, 63)"  # XOR with 2^63: signed order == unsigned S2 order
+_PARENT_LSB = "shiftleft(1L, 60 - 2 * level)"
 
-@F.pandas_udf(LongType())
-def s2_cellid(lat: pd.Series, lng: pd.Series) -> pd.Series:
-    """(lat, lng) degrees -> leaf cell id (raw uint64 bits in int64)."""
-    ids = kc.from_latlng_degrees(lat.to_numpy(np.float64), lng.to_numpy(np.float64))
-    return pd.Series(kc.to_int64(ids))
-
-
-@F.pandas_udf(StringType())
-def s2_token(cid: pd.Series) -> pd.Series:
-    return pd.Series(kc.to_token(kc.from_int64(cid.to_numpy(np.int64))))
-
-
-@F.pandas_udf(LongType())
-def s2_from_token(tok: pd.Series) -> pd.Series:
-    return pd.Series(kc.to_int64(kc.from_token(tok.to_numpy(object))))
-
-
-@F.pandas_udf(IntegerType())
-def s2_level(cid: pd.Series) -> pd.Series:
-    return pd.Series(kc.level(kc.from_int64(cid.to_numpy(np.int64))).astype(np.int32))
+# One declaration each, with the cellid.ts lines it ports
+_SQL_FUNCTIONS = [
+    # 30 - ctz/2 (67-69); -2 for id 0, as the scalar port
+    "s2_level(id BIGINT) RETURNS INT"
+    " RETURN 30 - shiftrightunsigned(bit_count((id & -id) - 1), 1)",
+    # 74-77
+    "s2_parent(id BIGINT, level INT) RETURNS BIGINT"
+    f" RETURN (id & -{_PARENT_LSB}) | {_PARENT_LSB}",
+    # 194-203
+    "s2_range_min(id BIGINT) RETURNS BIGINT RETURN id - ((id & -id) - 1)",
+    "s2_range_max(id BIGINT) RETURNS BIGINT RETURN id + ((id & -id) - 1)",
+    # unsigned range_min(a) <= b <= range_max(a) (208-210)
+    "s2_contains(a BIGINT, b BIGINT) RETURNS BOOLEAN"
+    f" RETURN (b ^ {_FLIP}) BETWEEN ((a - ((a & -a) - 1)) ^ {_FLIP})"
+    f" AND ((a + ((a & -a) - 1)) ^ {_FLIP})",
+    f"s2_flip_key(id BIGINT) RETURNS BIGINT RETURN id ^ {_FLIP}",
+    # hex, trailing zeros stripped, 'X' for 0 (224-228)
+    "s2_token(id BIGINT) RETURNS STRING RETURN CASE WHEN id = 0 THEN 'X'"
+    " ELSE regexp_replace(lower(lpad(hex(id), 16, '0')), '0+$', '') END",
+]
 
 
-def _parent_udf():
-    @F.pandas_udf(LongType())
-    def s2_parent(cid: pd.Series, level: pd.Series) -> pd.Series:
-        ids = kc.from_int64(cid.to_numpy(np.int64))
-        return pd.Series(kc.to_int64(kc.parent(ids, level.to_numpy(np.int64))))
+@F.pandas_udf(ArrayType(LongType()))
+def s2_cover(geojson_str: pd.Series, max_cells: pd.Series) -> pd.Series:
+    """GeoJSON geometry string -> covering cell ids (array<long>).
 
-    return s2_parent
+    Per-geometry object code (SURVEY §2.13 [D->column]); runs
+    distributed, one geometry per row — the tile-set ingestion
+    path when tiles arrive as a DataFrame column.
+    """
+    out = []
+    coverers: dict[int, GeoJSONRegionCoverer] = {}
+    for gj, mc in zip(geojson_str, max_cells):
+        if gj is None:
+            out.append(None)
+            continue
+        mc = int(mc)
+        cov = coverers.setdefault(mc, GeoJSONRegionCoverer(max_cells=mc))
+        cells = cov.covering(json.loads(gj))
+        out.append(
+            list(np.array(cells, dtype=np.uint64).view(np.int64))
+            if cells else []
+        )
+    return pd.Series(out)
 
 
-s2_parent = _parent_udf()
+@F.pandas_udf(ArrayType(LongType()))
+def s2_cell_union_normalize(cells: pd.Series) -> pd.Series:
+    """Normalize an array<long> of cell ids per row (sort, drop
+    contained, collapse sibling quads) — CellUnion.normalize."""
+    out = []
+    for arr in cells:
+        if arr is None:
+            out.append(None)
+            continue
+        cu = CellUnion(int(np.int64(c).astype(np.uint64)) for c in arr)
+        cu.normalize()
+        out.append(list(np.array(cu, dtype=np.uint64).view(np.int64)))
+    return pd.Series(out)
 
 
-@F.pandas_udf(LongType())
-def s2_range_min(cid: pd.Series) -> pd.Series:
-    return pd.Series(kc.to_int64(kc.range_min(kc.from_int64(cid.to_numpy(np.int64)))))
-
-
-@F.pandas_udf(LongType())
-def s2_range_max(cid: pd.Series) -> pd.Series:
-    return pd.Series(kc.to_int64(kc.range_max(kc.from_int64(cid.to_numpy(np.int64)))))
-
-
-@F.pandas_udf(LongType())
-def s2_flip_key(cid: pd.Series) -> pd.Series:
-    """Signed order == unsigned S2 order (XOR with 2**63)."""
-    return pd.Series(kc.flip_key(kc.from_int64(cid.to_numpy(np.int64))))
+# Standalone geometry predicates (SURVEY §2.13). The fused tag kernels
+# (tagjoin/tiles) are the hot path; these are the per-row SQL API
+# surface. Geometry params arrive as plain columns so the functions
+# compose in any SQL expression; the polygon variant parses GeoJSON
+# once per distinct string per batch.
+_D = math.pi / 180.0
 
 
 @F.pandas_udf(BooleanType())
-def s2_contains(a: pd.Series, b: pd.Series) -> pd.Series:
-    ia = kc.from_int64(a.to_numpy(np.int64))
-    ib = kc.from_int64(b.to_numpy(np.int64))
-    return pd.Series(kc.contains(ia, ib))
+def s2_point_in_polygon(lat: pd.Series, lng: pd.Series, geojson: pd.Series) -> pd.Series:
+    shapes: dict[str, object] = {}
+    out = np.zeros(len(lat), dtype=bool)
+    la = lat.to_numpy(np.float64) * _D
+    ln = lng.to_numpy(np.float64) * _D
+    for n, gj in enumerate(geojson):
+        shape = shapes.get(gj)
+        if shape is None:
+            shape = shapes[gj] = from_geojson(json.loads(gj))
+        out[n] = bool(shape.contains_point(Point.from_latlng_radians(la[n], ln[n])))
+    return pd.Series(out)
 
 
-@F.pandas_udf(ArrayType(LongType()))
-def s2_children(cid: pd.Series) -> pd.Series:
-    ch = kc.children(kc.from_int64(cid.to_numpy(np.int64)))
-    out = kc.to_int64(ch).T  # (n, 4)
-    return pd.Series(list(out))
+@F.pandas_udf(BooleanType())
+def s2_rect_contains(
+    lat: pd.Series, lng: pd.Series,
+    lat_lo: pd.Series, lat_hi: pd.Series,
+    lng_lo: pd.Series, lng_hi: pd.Series,
+) -> pd.Series:
+    la = lat.to_numpy(np.float64) * _D
+    ln = lng.to_numpy(np.float64) * _D
+    lo = lat_lo.to_numpy(np.float64) * _D
+    hi = lat_hi.to_numpy(np.float64) * _D
+    glo = lng_lo.to_numpy(np.float64) * _D
+    ghi = lng_hi.to_numpy(np.float64) * _D
+    ok_lat = (la >= lo) & (la <= hi)
+    l = np.where(ln == -np.pi, np.pi, ln)
+    inverted = glo > ghi
+    ok_lng = np.where(
+        inverted, (l >= glo) | (l <= ghi), (l >= glo) & (l <= ghi)
+    )
+    return pd.Series(ok_lat & ok_lng)
 
 
-@F.pandas_udf(ArrayType(LongType()))
-def s2_edge_neighbors(cid: pd.Series) -> pd.Series:
-    nb = kc.edge_neighbors(kc.from_int64(cid.to_numpy(np.int64)))
-    return pd.Series(list(kc.to_int64(nb).T))
+@F.pandas_udf(BooleanType())
+def s2_cap_contains(
+    lat: pd.Series, lng: pd.Series,
+    clat: pd.Series, clng: pd.Series, radius_deg: pd.Series,
+) -> pd.Series:
+    px, py, pz = stuv.latlng_to_xyz(
+        lat.to_numpy(np.float64) * _D, lng.to_numpy(np.float64) * _D
+    )
+    cx, cy, cz = stuv.latlng_to_xyz(
+        clat.to_numpy(np.float64) * _D, clng.to_numpy(np.float64) * _D
+    )
+    dx, dy, dz = px - cx, py - cy, pz - cz
+    chord2 = np.minimum(4.0, dx * dx + dy * dy + dz * dz)
+    r2 = (2 * np.sin(np.minimum(np.pi, radius_deg.to_numpy(np.float64) * _D) / 2)) ** 2
+    return pd.Series(chord2 <= r2)
 
 
-@F.pandas_udf(DoubleType())
-def s2_lat(cid: pd.Series) -> pd.Series:
-    lat, _ = kc.to_latlng_degrees(kc.from_int64(cid.to_numpy(np.int64)))
-    return pd.Series(lat)
-
-
-@F.pandas_udf(DoubleType())
-def s2_lng(cid: pd.Series) -> pd.Series:
-    _, lng = kc.to_latlng_degrees(kc.from_int64(cid.to_numpy(np.int64)))
-    return pd.Series(lng)
-
-
-@F.pandas_udf(DoubleType())
-def s2_chord2(lat1: pd.Series, lng1: pd.Series, lat2: pd.Series, lng2: pd.Series) -> pd.Series:
-    """Squared chord distance between two (lat,lng)-degree points."""
-    from ..kernels import stuv
-
-    d = np.pi / 180.0
-    x1, y1, z1 = stuv.latlng_to_xyz(lat1.to_numpy() * d, lng1.to_numpy() * d)
-    x2, y2, z2 = stuv.latlng_to_xyz(lat2.to_numpy() * d, lng2.to_numpy() * d)
-    dx, dy, dz = x1 - x2, y1 - y2, z1 - z2
-    return pd.Series(np.minimum(4.0, dx * dx + dy * dy + dz * dz))
-
-
-_ALL = {
-    "s2_cellid": s2_cellid,
-    "s2_token": s2_token,
-    "s2_from_token": s2_from_token,
-    "s2_level": s2_level,
-    "s2_parent": s2_parent,
-    "s2_range_min": s2_range_min,
-    "s2_range_max": s2_range_max,
-    "s2_flip_key": s2_flip_key,
-    "s2_contains": s2_contains,
-    "s2_children": s2_children,
-    "s2_edge_neighbors": s2_edge_neighbors,
-    "s2_lat": s2_lat,
-    "s2_lng": s2_lng,
-    "s2_chord2": s2_chord2,
+_UDFS = {
+    "s2_cover": s2_cover,
+    "s2_cell_union_normalize": s2_cell_union_normalize,
+    "s2_point_in_polygon": s2_point_in_polygon,
+    "s2_rect_contains": s2_rect_contains,
+    "s2_cap_contains": s2_cap_contains,
 }
 
 
 def register_all(spark: SparkSession) -> None:
-    """Make every S2 function callable from SQL."""
-    for name, udf in _ALL.items():
+    """Make every S2 function callable from SQL in ``spark``'s session."""
+    for decl in _SQL_FUNCTIONS:
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {decl}")
+    for name, udf in _UDFS.items():
         spark.udf.register(name, udf)
-
-
-def _cover_udf():
-    from ..geometry import cellid_scalar as _cs
-    from ..geometry.geojson import GeoJSONRegionCoverer
-    import json as _json
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def s2_cover(geojson_str: pd.Series, max_cells: pd.Series) -> pd.Series:
-        """GeoJSON geometry string -> covering cell ids (array<long>).
-
-        Per-geometry object code (SURVEY §2.13 [D->column]); runs
-        distributed, one geometry per row — the tile-set ingestion
-        path when tiles arrive as a DataFrame column.
-        """
-        out = []
-        coverers: dict[int, GeoJSONRegionCoverer] = {}
-        for gj, mc in zip(geojson_str, max_cells):
-            if gj is None:
-                out.append(None)
-                continue
-            mc = int(mc)
-            cov = coverers.setdefault(mc, GeoJSONRegionCoverer(max_cells=mc))
-            cells = cov.covering(_json.loads(gj))
-            out.append(
-                list(np.array(cells, dtype=np.uint64).view(np.int64))
-                if cells else []
-            )
-        return pd.Series(out)
-
-    return s2_cover
-
-
-s2_cover = _cover_udf()
-
-
-def _union_normalize_udf():
-    from ..geometry.cellunion import CellUnion
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def s2_cell_union_normalize(cells: pd.Series) -> pd.Series:
-        """Normalize an array<long> of cell ids per row (sort, drop
-        contained, collapse sibling quads) — CellUnion.normalize."""
-        out = []
-        for arr in cells:
-            if arr is None:
-                out.append(None)
-                continue
-            cu = CellUnion(int(np.int64(c).astype(np.uint64)) for c in arr)
-            cu.normalize()
-            out.append(list(np.array(cu, dtype=np.uint64).view(np.int64)))
-        return pd.Series(out)
-
-    return s2_cell_union_normalize
-
-
-s2_cell_union_normalize = _union_normalize_udf()
-
-def _predicate_udfs():
-    """Standalone registered geometry predicates (SURVEY §2.13).
-
-    The fused tag kernels (tagjoin/tiles) are the hot path; these are
-    the per-row SQL API surface. Geometry params arrive as plain
-    columns so the functions compose in any SQL expression; the
-    polygon variant parses GeoJSON once per distinct string per batch.
-    """
-    import json as _json
-    import math as _math
-
-    from ..geometry.geojson import from_geojson
-    from ..geometry.point import Point as _Pt
-    from ..kernels import stuv as _stuv
-
-    d = _math.pi / 180.0
-
-    @F.pandas_udf(BooleanType())
-    def s2_point_in_polygon(lat: pd.Series, lng: pd.Series, geojson: pd.Series) -> pd.Series:
-        shapes: dict[str, object] = {}
-        out = np.zeros(len(lat), dtype=bool)
-        la = lat.to_numpy(np.float64) * d
-        ln = lng.to_numpy(np.float64) * d
-        for n, gj in enumerate(geojson):
-            shape = shapes.get(gj)
-            if shape is None:
-                shape = shapes[gj] = from_geojson(_json.loads(gj))
-            out[n] = bool(
-                shape.contains_point(_Pt.from_latlng_radians(la[n], ln[n]))
-            )
-        return pd.Series(out)
-
-    @F.pandas_udf(BooleanType())
-    def s2_rect_contains(
-        lat: pd.Series, lng: pd.Series,
-        lat_lo: pd.Series, lat_hi: pd.Series,
-        lng_lo: pd.Series, lng_hi: pd.Series,
-    ) -> pd.Series:
-        la = lat.to_numpy(np.float64) * d
-        ln = lng.to_numpy(np.float64) * d
-        lo = lat_lo.to_numpy(np.float64) * d
-        hi = lat_hi.to_numpy(np.float64) * d
-        glo = lng_lo.to_numpy(np.float64) * d
-        ghi = lng_hi.to_numpy(np.float64) * d
-        ok_lat = (la >= lo) & (la <= hi)
-        l = np.where(ln == -np.pi, np.pi, ln)
-        inverted = glo > ghi
-        ok_lng = np.where(
-            inverted, (l >= glo) | (l <= ghi), (l >= glo) & (l <= ghi)
-        )
-        return pd.Series(ok_lat & ok_lng)
-
-    @F.pandas_udf(BooleanType())
-    def s2_cap_contains(
-        lat: pd.Series, lng: pd.Series,
-        clat: pd.Series, clng: pd.Series, radius_deg: pd.Series,
-    ) -> pd.Series:
-        px, py, pz = _stuv.latlng_to_xyz(
-            lat.to_numpy(np.float64) * d, lng.to_numpy(np.float64) * d
-        )
-        cx, cy, cz = _stuv.latlng_to_xyz(
-            clat.to_numpy(np.float64) * d, clng.to_numpy(np.float64) * d
-        )
-        dx, dy, dz = px - cx, py - cy, pz - cz
-        chord2 = np.minimum(4.0, dx * dx + dy * dy + dz * dz)
-        r2 = (2 * np.sin(np.minimum(np.pi, radius_deg.to_numpy(np.float64) * d) / 2)) ** 2
-        return pd.Series(chord2 <= r2)
-
-    return s2_point_in_polygon, s2_rect_contains, s2_cap_contains
-
-
-s2_point_in_polygon, s2_rect_contains, s2_cap_contains = _predicate_udfs()
-
-_ALL["s2_cover"] = s2_cover
-_ALL["s2_cell_union_normalize"] = s2_cell_union_normalize
-_ALL["s2_point_in_polygon"] = s2_point_in_polygon
-_ALL["s2_rect_contains"] = s2_rect_contains
-_ALL["s2_cap_contains"] = s2_cap_contains

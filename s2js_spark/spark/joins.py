@@ -2,8 +2,9 @@
 
 ``knn_join`` is the scale path for many-query nearest-neighbor joins
 (SURVEY §2.5): both sides key by their cell at a chosen level, queries
-fan out to their 3x3 cell neighborhood (edge+vertex neighbors via the
-kernels), candidates equi-join on the cell key (a plain shuffle join —
+fan out to their 3x3 cell neighborhood (edge+vertex neighbors, in SQL
+for a distributed query frame and from the scalar port for a literal
+batch), candidates equi-join on the cell key (a plain shuffle join —
 AQE handles skew), and a window takes the top-k by chord^2. Queries
 whose k-th neighbor cannot be certified inside the neighborhood
 (k-th distance > the level's minimum cell width) are re-run brute
@@ -19,27 +20,13 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from ..geometry import cellid_scalar as cs
 from ..geometry.metric import MIN_WIDTH_METRIC
-from ..kernels import cellid as kc
 from . import memo
-
-
-@F.pandas_udf(ArrayType(LongType()))
-def _neighborhood_cells(lat: pd.Series, lng: pd.Series, level: pd.Series) -> pd.Series:
-    """Cell at ``level`` + all 8 neighbors (vectorized, face-wrap-exact
-    via kernels.cellid.neighbors_3x3; cube-corner duplicates dropped
-    per row)."""
-    lvl = int(level.iloc[0])
-    leaf = kc.from_latlng_degrees(lat.to_numpy(np.float64), lng.to_numpy(np.float64))
-    stack = kc.neighbors_3x3(leaf, lvl)
-    out = kc.to_int64(stack).T  # (n, 9)
-    return pd.Series([list(dict.fromkeys(row)) for row in out])
+from . import sqlkernels as sq
 
 
 def _estimate_count(df: DataFrame, sample_partitions: int = 4) -> int:
@@ -66,8 +53,6 @@ def _cell_keyed_points(points: DataFrame, level: int) -> DataFrame:
     analysis + physical planning of the 14-layer encode chain is ~3.7s
     of FIXED driver cost per call (measured at sf0.1), and the memoized
     DataFrame also carries the materialized checkpoint blocks."""
-    from . import sqlkernels as sq
-
     # assume_nonnull after a BASE-column filter: the null-guard CASE
     # makes the output nullable and downstream join analysis then
     # infers `_cell IS NOT NULL` through the chain (the pushdown
@@ -117,6 +102,22 @@ def _chord2_sql(lat1: str, lng1: str, lat2: str, lng2: str) -> F.Column:
     return F.least(F.lit(4.0), dx * dx + dy * dy + dz * dz)
 
 
+def _neighbors_3x3(leaf: int, level: int) -> list[int]:
+    """The cell at ``level`` holding ``leaf`` followed by its
+    neighbours in (di, dj) order, cube-corner duplicates dropped: the
+    scalar form of ``sqlkernels.with_s2_neighborhood``."""
+    center = cs.parent(leaf, level)
+    size = cs.size_ij(level)
+    f, i, j, _ = cs.face_ij_orientation(center)
+    cells = [center] + [
+        cs.parent(cs.from_face_ij_wrap(f, i + di * size, j + dj * size), level)
+        for di in (-1, 0, 1)
+        for dj in (-1, 0, 1)
+        if di or dj
+    ]
+    return list(dict.fromkeys(cells))
+
+
 def _local_neighborhood_frame(
     spark: SparkSession,
     queries: DataFrame,
@@ -125,8 +126,8 @@ def _local_neighborhood_frame(
 ) -> DataFrame | None:
     """Driver-side (query_id, qlat, qlng, _cell) VALUES frame for a
     LocalRelation query batch, or None when the query side is a real
-    distributed frame (falls back to the vectorized UDF path). Cell
-    values are the same kernels.neighbors_3x3 the UDF computes."""
+    distributed frame (which takes the SQL neighbourhood). Cells come
+    from the scalar port, the same set the SQL path computes."""
     try:
         # optimized (not analyzed) plan: ConvertToLocalRelation folds
         # the Project a `SELECT * FROM VALUES` wraps around the
@@ -152,19 +153,17 @@ def _local_neighborhood_frame(
             return f"'{v}'"
         return None
 
-    lats = np.array([float(r["qlat"]) for r in rows], dtype=np.float64)
-    lngs = np.array([float(r["qlng"]) for r in rows], dtype=np.float64)
-    leaf = kc.from_latlng_degrees(lats, lngs)
-    cells = kc.to_int64(kc.neighbors_3x3(leaf, level)).T  # (n, 9)
     vals = []
-    for r, row9 in zip(rows, cells):
+    for r in rows:
         qid = qid_sql(r[query_id])
-        if qid is None:  # unsupported id type: use the UDF path
+        if qid is None:  # unsupported id type: use the SQL path
             return None
-        for c in dict.fromkeys(int(v) for v in row9):
+        lat, lng = float(r["qlat"]), float(r["qlng"])
+        for c in _neighbors_3x3(cs.from_latlng_degrees(lat, lng), level):
+            c -= (c >> 63) << 64  # raw uint64 bits as a signed long
             vals.append(
-                f"({qid}, CAST('{float(r['qlat'])!r}' AS DOUBLE),"
-                f" CAST('{float(r['qlng'])!r}' AS DOUBLE), {c}L)"
+                f"({qid}, CAST('{lat!r}' AS DOUBLE),"
+                f" CAST('{lng!r}' AS DOUBLE), {c}L)"
             )
     out = spark.sql(
         "SELECT * FROM VALUES " + ", ".join(vals)
@@ -211,14 +210,14 @@ def knn_join(
     # memoized + lineage-truncated: the corpus side must never cross
     # the Arrow boundary — the round-3 bench showed the pandas-UDF
     # encode alone cost ~1.8s of knn's wall at sf0.1 (an extra Python
-    # roundtrip of every point; the 100 TB anti-pattern). The tiny
-    # query side uses the kernels-backed neighborhood UDF — except
-    # when the query frame is a LocalRelation (driver-literal query
-    # batches, the interactive service shape): then the 3x3
-    # neighborhoods are computed DRIVER-side with the same kernels and
-    # inlined as a VALUES frame, removing the per-run Python
-    # evaluation entirely (round 6 — the ArrowEvalPython stage cost
-    # ~0.9s per run for a 5-row query batch at sf0.1).
+    # roundtrip of every point; the 100 TB anti-pattern). The query
+    # side gets its 3x3 neighbourhoods in SQL too
+    # (sqlkernels.with_s2_neighborhood), except when the query frame is
+    # a LocalRelation (driver-literal query batches, the interactive
+    # service shape): then the scalar port computes them on the driver
+    # and they are inlined as a VALUES frame, which skips the SQL
+    # chain's planning (median 0.87 s vs 4.0 s per fresh 4-query
+    # request, 200k points, level 8, on a 4-core host).
     # A hit needs the same live session, level and points-plan
     # semantics, so fresh query batches on one corpus reuse the index.
     # Plan semantics cannot see files rewritten in place: call
@@ -230,10 +229,7 @@ def knn_join(
     )
     q = _local_neighborhood_frame(spark, queries, level, query_id)
     if q is None:
-        q = queries.withColumn(
-            "_cells",
-            _neighborhood_cells(F.col("qlat"), F.col("qlng"), F.lit(level)),
-        ).withColumn("_cell", F.explode("_cells")).drop("_cells")
+        q = sq.with_s2_neighborhood(queries, "qlat", "qlng", level, "_cell")
 
     cand = q.join(pts, "_cell")
     chord2 = F.round(

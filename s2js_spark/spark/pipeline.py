@@ -29,12 +29,16 @@ def extract_geotags(df: DataFrame) -> DataFrame:
     wall). ``decode(html,'UTF-8')`` materialized a java.lang.String —
     a full UTF-16 transcode + copy of every page, twice (String then
     back to UTF8String); ``cast(html as string)`` wraps the bytes as a
-    UTF8String zero-copy (identical for valid UTF-8, which this corpus
-    is by construction — the synth SQL builds html from text).
-    Measured on the x1600 corpus: parse stage 1.2s -> 0.34s (the regex
+    UTF8String zero-copy. Measured on the x1600 corpus: parse stage
+    1.2s -> 0.34s (the regex
     itself is cheap — java.util.regex Boyer-Moores the literal
     ``<meta name=...`` prefix; an explicit locate()+slice variant was
     measured SLOWER and rejected).
+
+    Malformed UTF-8: the cast does not validate. Invalid bytes outside
+    the geotag leave lat/lng unchanged; an invalid byte inside the
+    tag's content fails the pattern and gives null lat/lng. ``text`` is
+    never read or rewritten (tests/test_spark_engine.py pins both).
     """
     page = F.col("html").cast("string")
     # One regex pass for the whole content attribute, then cheap splits

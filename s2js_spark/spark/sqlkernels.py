@@ -1,13 +1,10 @@
 """Pure-Spark-SQL (JVM, whole-stage-codegen) S2 cell kernels.
 
-The round-1 hot path computed leaf cell ids inside an Arrow-batched
-pandas UDF (kernels/cellid.py). A single local JVM's Python runners
-cap out at ~6-7M rows/s regardless of thread count, so the flagship
-pipeline could not demonstrate the north rule's >=0.8 scaling at
-local[8] -> local[32]. This module re-expresses the entire
-(lat,lng) -> face/(u,v) -> (s,t) -> (i,j) -> Hilbert-encode chain
-(reference semantics /root/reference/s2/stuv.ts:158-220 and
-/root/reference/s2/cellid.ts:360-386) as Spark SQL column expressions:
+The executors' only cell arithmetic. Spark SQL column expressions
+carry the whole (lat,lng) -> face/(u,v) -> (s,t) -> (i,j) ->
+Hilbert-encode chain (reference semantics: s2js ``s2/stuv.ts:158-220``
+and ``s2/cellid.ts:360-386``), the cross-face 3x3 cell
+neighbourhood knn fans queries out to, and the hierarchy bit-ops:
 
 - trig + cube-face projection: CASE/arithmetic on doubles;
 - the quadratic (u,v)->(s,t) projection: sqrt/branch;
@@ -16,21 +13,22 @@ local[8] -> local[32]. This module re-expresses the entire
 
 Everything runs inside whole-stage codegen — zero Python in the loop.
 
-Parity with the NumPy kernel (kernels/cellid.py):
+Parity with the scalar port (geometry/cellid_scalar.py):
 
 - every stage downstream of cos/sin (division, sqrt, multiply, floor,
-  all bit logic) is IEEE correctly-rounded or exact in both engines
-  and is bitwise-identical (tests/test_sqlkernels.py proves the
-  (face,i,j)->id stage exhaustively and the full chain on real data);
+  all bit logic) is IEEE correctly-rounded or exact in both and is
+  bitwise-identical (tests/test_sqlkernels.py checks the
+  (face,i,j)->id stage on dense random triples and the full chain on
+  real data);
 - cos/sin themselves may differ by 1 ulp between Java's Math and
-  NumPy/glibc (~0.2% of inputs). A 1-ulp input difference changes the
-  leaf id only when a coordinate lies within ~2^-51 of a leaf-cell
-  boundary (~1e-9 probability per point). The TS reference runs on
-  V8's libm — a third implementation — so bit-for-bit trig parity
-  across engines is unattainable for ANY port; the engine defines the
-  JVM result as canonical for DataFrame cell assignment, and exact
-  geometric refinement (tagjoin.py) makes join answers independent of
-  ulp-level leaf placement.
+  glibc, which Python's ``math`` calls (~0.2% of inputs). A 1-ulp
+  input difference changes the leaf id only when a coordinate lies
+  within ~2^-51 of a leaf-cell boundary (~1e-9 probability per point).
+  The TS reference runs on V8's libm — a third implementation — so
+  bit-for-bit trig parity across engines is unattainable for ANY port;
+  the engine defines the JVM result as canonical for DataFrame cell
+  assignment, and exact geometric refinement (tagjoin.py) makes join
+  answers independent of ulp-level leaf placement.
 
 Intermediate values are lateral column aliases inside ONE
 ``selectExpr`` (single analysis pass — chained withColumn re-analyzes
@@ -139,16 +137,18 @@ def _hilbert_exprs(f: str, i: str, j: str, t: str, out_col: str) -> list[str]:
     return exprs
 
 
-def _latlng_exprs(lat: str, lng: str, t: str) -> list[str]:
-    """(lat,lng) degrees -> (face,i,j) as lateral-alias SQL text,
-    mirroring the kernel op order (stuv.ts:158-220)."""
+def _st_to_ij(s: str) -> str:
+    """(s,t) -> clamped leaf coordinate, as ``cellid_scalar.st_to_ij``."""
+    return (
+        f"least(greatest(cast(floor({float(MAX_SIZE)!r}D * {s}) as bigint), 0L),"
+        f" {MAX_SIZE - 1}L)"
+    )
+
+
+def _face_uv_exprs(t: str) -> list[str]:
+    """({t}x,{t}y,{t}z) -> face {t}f and ({t}u,{t}v) as lateral-alias
+    SQL text (stuv.ts:176-220, reference tie-breaks)."""
     return [
-        f"({lat} * {_D!r}D) AS {t}latr",
-        f"({lng} * {_D!r}D) AS {t}lngr",
-        f"cos({t}latr) AS {t}clat",
-        f"(cos({t}lngr) * {t}clat) AS {t}x",
-        f"(sin({t}lngr) * {t}clat) AS {t}y",
-        f"sin({t}latr) AS {t}z",
         f"abs({t}x) AS {t}ax",
         f"abs({t}y) AS {t}ay",
         f"abs({t}z) AS {t}az",
@@ -170,14 +170,26 @@ def _latlng_exprs(lat: str, lng: str, t: str) -> list[str]:
         f" WHEN {t}f = 3 THEN {t}y / {t}x"
         f" WHEN {t}f = 4 THEN -{t}x / {t}y"
         f" ELSE -{t}x / {t}z END) AS {t}v",
+    ]
+
+
+def _latlng_exprs(lat: str, lng: str, t: str) -> list[str]:
+    """(lat,lng) degrees -> (face,i,j) as lateral-alias SQL text, in
+    the scalar port's op order (stuv.ts:158-220)."""
+    return [
+        f"({lat} * {_D!r}D) AS {t}latr",
+        f"({lng} * {_D!r}D) AS {t}lngr",
+        f"cos({t}latr) AS {t}clat",
+        f"(cos({t}lngr) * {t}clat) AS {t}x",
+        f"(sin({t}lngr) * {t}clat) AS {t}y",
+        f"sin({t}latr) AS {t}z",
+        *_face_uv_exprs(t),
         f"(CASE WHEN {t}u >= 0.0D THEN 0.5D * sqrt(1.0D + 3.0D * {t}u)"
         f" ELSE 1.0D - 0.5D * sqrt(1.0D - 3.0D * {t}u) END) AS {t}s",
         f"(CASE WHEN {t}v >= 0.0D THEN 0.5D * sqrt(1.0D + 3.0D * {t}v)"
         f" ELSE 1.0D - 0.5D * sqrt(1.0D - 3.0D * {t}v) END) AS {t}t",
-        f"least(greatest(cast(floor({float(MAX_SIZE)!r}D * {t}s) as bigint), 0L),"
-        f" {MAX_SIZE - 1}L) AS {t}i",
-        f"least(greatest(cast(floor({float(MAX_SIZE)!r}D * {t}t) as bigint), 0L),"
-        f" {MAX_SIZE - 1}L) AS {t}j",
+        f"{_st_to_ij(f'{t}s')} AS {t}i",
+        f"{_st_to_ij(f'{t}t')} AS {t}j",
     ]
 
 
@@ -221,11 +233,64 @@ def with_s2_cellid_from_face_ij(
 ) -> DataFrame:
     """(face,i,j) -> leaf id: the exact 8-round Hilbert encode
     (cellid.ts:360-386) in pure bitwise SQL. Bit-for-bit equal to
-    kernels/cellid.from_face_ij (proven exhaustively in tests)."""
+    ``geometry.cellid_scalar.from_face_ij`` (tests/test_sqlkernels.py
+    checks random triples and every face corner)."""
     t = "_s2hil_"
     exprs = _hilbert_exprs(f_col, i_col, j_col, t, out_col)
     out = df.withColumn("_lut", _lookup_lit()).selectExpr("*", *exprs)
     return out.select(*df.columns, out_col)
+
+
+def with_s2_neighborhood(
+    df: DataFrame, lat_col: str, lng_col: str, level: int, out_col: str
+) -> DataFrame:
+    """One row per cell of each point's 3x3 neighbourhood at ``level``:
+    the cell holding (lat, lng) and its 7 or 8 neighbours, as
+    ``cellid_scalar.all_neighbors``. Coordinates must be non-null.
+
+    Each (di, dj) offset moves the leaf (i, j) one cell and wraps it as
+    ``cellid_scalar.from_face_ij_wrap`` does, so cells across a face
+    edge are exact and in-face cells come back unchanged. At a cube
+    corner the diagonal whose i and j both leave the face repeats a
+    cell already in the set and is dropped.
+    """
+    t, w = "_s2nb_", "_s2wr_"
+    size = 1 << (MAX_LEVEL - level)
+    limit = math.nextafter(1.0, 2.0)
+    offsets = ", ".join(
+        f"struct({di} AS {w}di, {dj} AS {w}dj)" for di in (-1, 0, 1) for dj in (-1, 0, 1)
+    )
+    clip = lambda c, d: f"greatest(-1L, least({MAX_SIZE}L, {t}{c} + {w}{d} * {size}L))"  # noqa: E731
+    lin = lambda c: (  # noqa: E731
+        f"greatest(-{limit!r}D, least({limit!r}D,"
+        f" {1.0 / MAX_SIZE!r}D * (2L * {w}{c} + {1 - MAX_SIZE}L)))"
+    )
+    xyz = {  # cellid_scalar._face_uv_to_xyz_scalar, faces 0..5
+        "x": ("1.0D", f"-{w}cu", f"-{w}cu", "-1.0D", f"{w}cv", f"{w}cv"),
+        "y": (f"{w}cu", "1.0D", f"-{w}cv", f"-{w}cv", "-1.0D", f"{w}cu"),
+        "z": (f"{w}cv", f"{w}cv", "1.0D", f"-{w}cu", f"-{w}cu", "-1.0D"),
+    }
+    out = (
+        df.selectExpr("*", *_latlng_exprs(lat_col, lng_col, t))
+        .selectExpr("*", f"inline(array({offsets}))")
+        .selectExpr("*", f"{clip('i', 'di')} AS {w}ci", f"{clip('j', 'dj')} AS {w}cj")
+        .filter(f"NOT ({w}ci IN (-1, {MAX_SIZE}) AND {w}cj IN (-1, {MAX_SIZE}))")
+        .selectExpr(
+            "*",
+            f"{lin('ci')} AS {w}cu",
+            f"{lin('cj')} AS {w}cv",
+            *(
+                f"(CASE {t}f WHEN 0 THEN {a} WHEN 1 THEN {b} WHEN 2 THEN {c}"
+                f" WHEN 3 THEN {d} WHEN 4 THEN {e} ELSE {g} END) AS {w}{k}"
+                for k, (a, b, c, d, e, g) in xyz.items()
+            ),
+            *_face_uv_exprs(w),
+            f"{_st_to_ij(f'(0.5D * ({w}u + 1.0D))')} AS {w}i",
+            f"{_st_to_ij(f'(0.5D * ({w}v + 1.0D))')} AS {w}j",
+        )
+    )
+    out = with_s2_cellid_from_face_ij(out, f"{w}f", f"{w}i", f"{w}j", f"{w}leaf")
+    return out.select(*df.columns, s2_parent_sql(f"{w}leaf", level).alias(out_col))
 
 
 # ------------------------------------------------------- hierarchy columns
@@ -253,23 +318,6 @@ def s2_flip_key_sql(cellid: Column | str) -> Column:
     """XOR with 2^63: signed order == unsigned S2 order."""
     c = F.col(cellid) if isinstance(cellid, str) else cellid
     return c.bitwiseXOR(F.lit(-(1 << 63)))
-
-
-def s2_range_min_sql(cellid: Column | str) -> Column:
-    """Minimum contained leaf id (cellid.ts:194-196)."""
-    c = F.col(cellid) if isinstance(cellid, str) else cellid
-    return c - (c.bitwiseAND(-c) - F.lit(1))
-
-
-def s2_range_max_sql(cellid: Column | str) -> Column:
-    """Maximum contained leaf id (cellid.ts:201-203).
-
-    NOTE: compare ranges with flipped keys — raw bit patterns are
-    SIGNED longs in SQL, so unsigned order only holds after
-    ``s2_flip_key_sql``.
-    """
-    c = F.col(cellid) if isinstance(cellid, str) else cellid
-    return c + (c.bitwiseAND(-c) - F.lit(1))
 
 
 def s2_token_sql(cellid: Column | str) -> Column:

@@ -1,7 +1,11 @@
-"""Ported golden/property tests for the vectorized CellID kernels.
+"""Ported golden/property tests for CellID arithmetic.
 
 Vectors ported from /root/reference/s2/cellid_test.ts (themselves
-ported from Go s2). Ids must match exactly as integers.
+ported from Go s2). Each is asserted against the scalar port
+(``geometry.cellid_scalar``) and, where the engine has one, against
+the registered SQL function (``spark.functions.register_all``) or the
+SQL encode (``sqlkernels.with_s2_cellid``). Ids must match exactly as
+integers.
 """
 
 from __future__ import annotations
@@ -11,62 +15,92 @@ import math
 import numpy as np
 import pytest
 
-from s2js_spark.kernels import cellid as c
-from s2js_spark.kernels import stuv
+from s2js_spark.geometry import cellid_scalar as c
 
 MAX_LEVEL = c.MAX_LEVEL
 MAX_SIZE = c.MAX_SIZE
 
 
-def u(x):
-    return np.uint64(x)
+@pytest.fixture(scope="module")
+def spark():
+    from s2js_spark.spark.functions import register_all
+    from s2js_spark.spark.session import get_session
+
+    s = get_session("local[4]", shuffle_partitions=4)
+    s.sparkContext.setLogLevel("ERROR")
+    register_all(s)
+    yield s
+
+
+def lit(ci: int) -> str:
+    """A cell id (python uint64) as a signed SQL bigint literal."""
+    return f"{ci - ((ci >> 63) << 64)}L"
+
+
+def sql(spark, *exprs: str) -> list:
+    """Evaluate SQL expressions in one row; bigints come back as uint64."""
+    row = spark.sql("SELECT " + ", ".join(exprs)).first()
+    return [v & c.MASK64 if isinstance(v, int) and not isinstance(v, bool) else v for v in row]
 
 
 def test_from_face():
     # cellid_test.ts:17-23
     for f in range(6):
-        assert int(c.from_face_pos_level(f, 0, 0)) == int(c.from_face(f))
+        assert c.from_face_pos_level(f, 0, 0) == c.from_face(f)
 
 
-def test_sentinel_range():
+def test_sentinel_range(spark):
     # cellid_test.ts:25-29
     s = c.SENTINEL
-    assert int(c.range_min(s)) == int(s)
-    assert int(c.range_max(s)) == int(s)
+    assert c.range_min(s) == s
+    assert c.range_max(s) == s
+    assert sql(spark, f"s2_range_min({lit(s)})", f"s2_range_max({lit(s)})") == [s, s]
 
 
-def test_parent_child_relationships():
+def test_parent_child_relationships(spark):
     # cellid_test.ts:31-66
     ci = c.from_face_pos_level(3, 0x12345678, MAX_LEVEL - 4)
-    assert bool(c.valid(ci))
-    assert int(c.face(ci)) == 3
-    assert int(c.pos(ci)) == 0x12345700
-    assert int(c.level(ci)) == 26
-    assert not bool(c.is_leaf(ci))
+    assert c.valid(ci)
+    assert c.face(ci) == 3
+    assert c.pos(ci) == 0x12345700
+    assert c.level(ci) == 26
+    assert not c.is_leaf(ci)
 
-    assert int(c.pos(c.child_begin_at_level(ci, int(c.level(ci)) + 2))) == 0x12345610
-    assert int(c.pos(c.child_begin(ci))) == 0x12345640
-    assert int(c.pos(c.children(ci)[0])) == 0x12345640
-    assert int(c.pos(c.immediate_parent(ci))) == 0x12345400
-    assert int(c.pos(c.parent(ci, int(c.level(ci)) - 2))) == 0x12345000
+    assert c.pos(c.child_begin_at_level(ci, c.level(ci) + 2)) == 0x12345610
+    assert c.pos(c.child_begin(ci)) == 0x12345640
+    assert c.pos(c.children(ci)[0]) == 0x12345640
+    assert c.pos(c.immediate_parent(ci)) == 0x12345400
+    assert c.pos(c.parent(ci, c.level(ci) - 2)) == 0x12345000
 
-    assert int(c.child_begin(ci)) < int(ci)
-    assert int(c.child_end(ci)) > int(ci)
+    assert c.child_begin(ci) < ci
+    assert c.child_end(ci) > ci
     child = c.child_begin(ci)
     for _ in range(4):
         child = c.next_cell(child)
-    assert int(c.child_end(ci)) == int(child)
+    assert c.child_end(ci) == child
 
-    assert int(c.range_min(ci)) == int(c.child_begin_at_level(ci, MAX_LEVEL))
-    assert int(c.next_cell(c.range_max(ci))) == int(c.child_end_at_level(ci, MAX_LEVEL))
+    assert c.range_min(ci) == c.child_begin_at_level(ci, MAX_LEVEL)
+    assert c.next_cell(c.range_max(ci)) == c.child_end_at_level(ci, MAX_LEVEL)
+
+    lvl, parent, rmin, rmax = sql(
+        spark,
+        f"s2_level({lit(ci)})",
+        f"s2_parent({lit(ci)}, 24)",
+        f"s2_range_min({lit(ci)})",
+        f"s2_range_max({lit(ci)})",
+    )
+    assert lvl == 26
+    assert c.pos(parent) == 0x12345000
+    assert rmin == c.child_begin_at_level(ci, MAX_LEVEL)
+    assert c.next_cell(rmax) == c.child_end_at_level(ci, MAX_LEVEL)
 
 
-def test_containment():
+def test_containment(spark):
     # cellid_test.ts:68-92 (Pittsburgh cells)
-    a = u(0x80855C0000000000)
-    b = u(0x80855D0000000000)
-    d2 = u(0x80855DC000000000)
-    d = u(0x8085630000000000)
+    a = 0x80855C0000000000
+    b = 0x80855D0000000000
+    d2 = 0x80855DC000000000
+    d = 0x8085630000000000
     cases = [
         (a, a, True, True, True),
         (a, b, True, False, True),
@@ -79,14 +113,24 @@ def test_containment():
         (d2, d, False, False, False),
         (d, d, True, True, True),
     ]
-    for x, y, x_contains_y, y_contains_x, x_intersects_y in cases:
-        assert bool(c.contains(x, y)) == x_contains_y
-        assert bool(c.contains(y, x)) == y_contains_x
-        assert bool(c.intersects(x, y)) == x_intersects_y
+    got = sql(
+        spark,
+        *(
+            f"s2_contains({lit(x)}, {lit(y)}), s2_contains({lit(y)}, {lit(x)})"
+            for x, y, *_ in cases
+        ),
+    )
+    for n, (x, y, x_contains_y, y_contains_x, x_intersects_y) in enumerate(cases):
+        assert c.contains(x, y) == x_contains_y
+        assert c.contains(y, x) == y_contains_x
+        assert c.intersects(x, y) == x_intersects_y
+        assert got[2 * n : 2 * n + 2] == [x_contains_y, y_contains_x]
 
 
-def test_latlng_golden_vectors():
+def test_latlng_golden_vectors(spark):
     # cellid_test.ts:119-143 — exact id round-trip + center within 1e-9 deg
+    from s2js_spark.spark import sqlkernels as sq
+
     cases = [
         (0x47A1CBD595522B39, 49.703498679, 11.770681595),
         (0x46525318B63BE0F9, 55.685376759, 12.588490937),
@@ -103,16 +147,19 @@ def test_latlng_golden_vectors():
         (0x1DCC469991555555, -34.055420593, 18.551140038),
         (0xB112966AAAAAAAAB, -69.219262171, 49.670072392),
     ]
-    ids = np.array([x[0] for x in cases], dtype=np.uint64)
-    lat = np.array([x[1] for x in cases])
-    lng = np.array([x[2] for x in cases])
+    ids = [x[0] for x in cases]
+    assert [c.from_latlng_degrees(la, ln) for _, la, ln in cases] == ids
 
-    got = c.from_latlng_degrees(lat, lng)
-    assert [int(g) for g in got] == [int(i) for i in ids]
+    df = spark.createDataFrame(
+        [(n, la, ln) for n, (_, la, ln) in enumerate(cases)], "n int, lat double, lng double"
+    )
+    got = sq.with_s2_cellid(df).orderBy("n").collect()
+    assert [r.cellid & c.MASK64 for r in got] == ids
 
     # center within ~0.1mm using the reference LatLng.distance formula
-    clat, clng = c.to_latlng(ids)
-    rlat, rlng = np.deg2rad(lat), np.deg2rad(lng)
+    clat, clng = np.array([c.to_latlng(i) for i in ids]).T
+    rlat = np.deg2rad([x[1] for x in cases])
+    rlng = np.deg2rad([x[2] for x in cases])
     dlat = np.sin(0.5 * (clat - rlat))
     dlng = np.sin(0.5 * (clng - rlng))
     x2 = dlat * dlat + dlng * dlng * np.cos(rlat) * np.cos(clat)
@@ -125,29 +172,26 @@ def test_edge_neighbors():
     faces = [5, 3, 2, 0]
     nbrs = c.edge_neighbors(c.parent(c.from_face_ij(1, 0, 0), 0))
     for nbr, f in zip(nbrs, faces):
-        assert bool(c.is_face(nbr))
-        assert int(c.face(nbr)) == f
+        assert c.is_face(nbr)
+        assert c.face(nbr) == f
 
     max_ij = MAX_SIZE - 1
     for lvl in range(1, MAX_LEVEL + 1):
         cid = c.parent(c.from_face_ij(1, 0, 0), lvl)
-        size = int(c.size_ij(lvl))
+        size = c.size_ij(lvl)
         want = [
-            int(c.parent(c.from_face_ij(5, max_ij, max_ij), lvl)),
-            int(c.parent(c.from_face_ij(1, size, 0), lvl)),
-            int(c.parent(c.from_face_ij(1, 0, size), lvl)),
-            int(c.parent(c.from_face_ij(0, max_ij, 0), lvl)),
+            c.parent(c.from_face_ij(5, max_ij, max_ij), lvl),
+            c.parent(c.from_face_ij(1, size, 0), lvl),
+            c.parent(c.from_face_ij(1, 0, size), lvl),
+            c.parent(c.from_face_ij(0, max_ij, 0), lvl),
         ]
-        got = [int(x) for x in c.edge_neighbors(cid)]
-        assert got == want, f"level {lvl}"
+        assert c.edge_neighbors(cid) == want, f"level {lvl}"
 
 
 def test_vertex_neighbors():
     # cellid_test.ts:172-195
-    x, y, z = 0.0, 0.0, 1.0
-    cid = c.from_point(x, y, z)
-    ids, mask = c.vertex_neighbors(cid, 5)
-    got = sorted(int(i) for i, m in zip(np.atleast_1d(ids).ravel(), mask.ravel()) if m)
+    cid = c.from_point(0.0, 0.0, 1.0)
+    got = sorted(c.vertex_neighbors(cid, 5))
     for n, nbr in enumerate(got):
         i = 1 << 29
         j = 1 << 29
@@ -155,17 +199,16 @@ def test_vertex_neighbors():
             i -= 1
         if n in (0, 3):
             j -= 1
-        assert nbr == int(c.parent(c.from_face_ij(2, i, j), 5))
+        assert nbr == c.parent(c.from_face_ij(2, i, j), 5)
 
     cid = c.from_face_pos_level(0, 0, MAX_LEVEL)
-    ids, mask = c.vertex_neighbors(cid, 0)
-    got = sorted(int(i) for i, m in zip(ids.ravel(), mask.ravel()) if m)
+    got = sorted(c.vertex_neighbors(cid, 0))
     assert len(got) == 3
-    assert got[0] == int(c.from_face(0))
-    assert got[1] == int(c.from_face(4))
+    assert got[0] == c.from_face(0)
+    assert got[1] == c.from_face(4)
 
 
-def test_tokens_nominal():
+def test_tokens_nominal(spark):
     # cellid_test.ts:230-271
     cases = [
         ("1", 0x1000000000000000), ("3", 0x3000000000000000),
@@ -185,23 +228,22 @@ def test_tokens_nominal():
         ("aa80a565df5e7fc", 0xAA80A565DF5E7FC0), ("01614b5e968e121", 0x01614B5E968E1210),
         ("aa05238e7bd3ee7c", 0xAA05238E7BD3EE7C), ("48a23db9c2963e5b", 0x48A23DB9C2963E5B),
     ]
-    toks = np.array([t for t, _ in cases], dtype=object)
-    ids = c.from_token(toks)
-    assert [int(i) for i in ids] == [v for _, v in cases]
-    back = c.to_token(ids)
-    assert list(back) == [t for t, _ in cases]
+    assert [c.from_token(t) for t, _ in cases] == [v for _, v in cases]
+    assert [c.to_token(v) for _, v in cases] == [t for t, _ in cases]
+    assert sql(spark, *(f"s2_token({lit(v)})" for _, v in cases)) == [t for t, _ in cases]
 
 
-def test_token_error_cases():
+def test_token_error_cases(spark):
     # cellid_test.ts:273-294
-    assert c.to_token(np.uint64(0)) == "X"
-    assert int(c.from_token("X")) == 0
+    assert c.to_token(0) == "X"
+    assert sql(spark, "s2_token(0L)") == ["X"]
+    assert c.from_token("X") == 0
     sentinel_tok = c.to_token(c.SENTINEL)
-    assert int(c.from_token(sentinel_tok)) == int(c.SENTINEL)
+    assert c.from_token(sentinel_tok) == c.SENTINEL
     face7 = c.to_token(c.from_face(7))
-    assert int(c.from_token(face7)) == int(c.from_face(7))
+    assert c.from_token(face7) == c.from_face(7)
     for bad in ["876b e99", "876bee99\n", "876[ee99", " 876bee99"]:
-        assert int(c.from_token(bad)) == 0, bad
+        assert c.from_token(bad) == 0, bad
 
 
 def test_ij_level_to_bound_uv():
@@ -228,10 +270,9 @@ def test_ij_level_to_bound_uv():
         (max_ij, max_ij, MAX_LEVEL // 2, (0.999918621033430099, 1, 0.999918621033430099, 1)),
         (max_ij, max_ij, MAX_LEVEL, (0.99999999751647306, 1, 0.99999999751647306, 1)),
     ]
-    for i, j, lvl, (ulo, uhi, vlo, vhi) in cases:
-        gu_lo, gu_hi, gv_lo, gv_hi = c.ij_level_to_bound_uv(i, j, lvl)
-        for got, want in [(gu_lo, ulo), (gu_hi, uhi), (gv_lo, vlo), (gv_hi, vhi)]:
-            assert abs(float(got) - want) <= 1e-8, (i, j, lvl)
+    for i, j, lvl, want in cases:
+        for got, w in zip(c.ij_level_to_bound_uv(i, j, lvl), want):
+            assert abs(got - w) <= 1e-8, (i, j, lvl)
 
 
 def test_common_ancestor_level():
@@ -252,18 +293,17 @@ def test_common_ancestor_level():
          c.child_begin_at_level(c.next_cell(c.child_begin_at_level(f0, 2)), 5), 1, True),
     ]
     for ci, other, want, want_ok in cases:
-        lvl, ok = c.common_ancestor_level(ci, other)
-        assert bool(ok) == want_ok and int(lvl) == want
+        assert c.common_ancestor_level(ci, other) == (want, want_ok)
 
 
 def test_distance_from_begin():
     # cellid_test.ts:419-458
-    assert int(c.distance_from_begin(c.child_end_at_level(c.from_face(5), 0))) == 6
-    assert int(c.distance_from_begin(c.child_end_at_level(c.from_face(5), MAX_LEVEL))) == 6 * (
+    assert c.distance_from_begin(c.child_end_at_level(c.from_face(5), 0)) == 6
+    assert c.distance_from_begin(c.child_end_at_level(c.from_face(5), MAX_LEVEL)) == 6 * (
         1 << (2 * MAX_LEVEL)
     )
-    assert int(c.distance_from_begin(c.child_begin_at_level(c.from_face(0), 0))) == 0
-    assert int(c.distance_from_begin(c.child_begin_at_level(c.from_face(0), MAX_LEVEL))) == 0
+    assert c.distance_from_begin(c.child_begin_at_level(c.from_face(0), 0)) == 0
+    assert c.distance_from_begin(c.child_begin_at_level(c.from_face(0), MAX_LEVEL)) == 0
 
 
 def test_face_si_ti():
@@ -274,72 +314,82 @@ def test_face_si_ti():
         want = 1 << lvl
         mask = (1 << (lvl + 1)) - 1
         _, si, ti = c.face_si_ti(c.parent(cid, l))
-        assert int(si) & mask == want
-        assert int(ti) & mask == want
+        assert si & mask == want
+        assert ti & mask == want
 
 
 def test_to_string_from_string():
-    # cellid_test.ts:94-117 via scalar geometry module
-    from s2js_spark.geometry import cellid_scalar as cs
-
-    assert cs.to_string(0xBB04000000000000) == "5/31200"
-    assert cs.to_string((1 << 64) - 1) == "Invalid: ffffffffffffffff"
-    assert cs.from_string("3/") == int(c.from_face(3))
-    assert cs.from_string("0/21") == int(c.children(c.children(c.from_face(0))[2])[1])
-    assert cs.from_string("4/000000000000000000000000000000") == int(
-        c.range_min(c.from_face(4))
-    )
+    # cellid_test.ts:94-117
+    assert c.to_string(0xBB04000000000000) == "5/31200"
+    assert c.to_string((1 << 64) - 1) == "Invalid: ffffffffffffffff"
+    assert c.from_string("3/") == c.from_face(3)
+    assert c.from_string("0/21") == c.children(c.children(c.from_face(0))[2])[1]
+    assert c.from_string("4/000000000000000000000000000000") == c.range_min(c.from_face(4))
     for bad in ["4/0000000000000000000000000000000", "", "7/", " /", "3:0", "3/ 12", "3/1241"]:
-        assert cs.from_string(bad) == 0
+        assert c.from_string(bad) == 0
 
 
-def test_scalar_vs_kernel_equivalence():
-    """Property test: python-int scalar ops == numpy kernels on random cells,
-    including face 4/5 cells with the sign bit set (SURVEY §1.2 risk)."""
-    from s2js_spark.geometry import cellid_scalar as cs
+def test_scalar_vs_kernel_equivalence(spark):
+    """Property test: scalar ops == the engine's SQL kernels on random
+    cells at every level, including face 4/5 cells with the sign bit
+    set (SURVEY §1.2 risk), and decode -> SQL Hilbert encode."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from s2js_spark.spark import sqlkernels as sq
 
     rng = np.random.RandomState(42)
     faces = rng.randint(0, 6, 500)
-    poss = rng.randint(0, 1 << 61, 500, dtype=np.int64).astype(np.uint64)
+    poss = rng.randint(0, 1 << 61, 500, dtype=np.int64)
     lvls = rng.randint(0, 31, 500)
-    ids = c.from_face_pos_level(faces, poss, lvls)
-    for idv, lvl in zip(ids, lvls):
-        i = int(idv)
+    ids = [c.from_face_pos_level(int(f), int(p), int(l)) for f, p, l in zip(faces, poss, lvls)]
+    fij = [c.face_ij_orientation(i) for i in ids]
+    pdf = pd.DataFrame({
+        "n": range(len(ids)),
+        "cid": np.array(ids, dtype=np.uint64).view(np.int64),
+        "f": [x[0] for x in fij], "i": [x[1] for x in fij], "j": [x[2] for x in fij],
+    })
+    df = sq.with_s2_cellid_from_face_ij(spark.createDataFrame(pdf), "f", "i", "j", "enc")
+    cols = [
+        sq.s2_level_sql("cid").alias("level"),
+        F.expr("s2_range_min(cid)").alias("rmin"),
+        F.expr("s2_range_max(cid)").alias("rmax"),
+    ] + [sq.s2_parent_sql("cid", lv).alias(f"p{lv}") for lv in range(31)]
+    got = df.select("n", "enc", *cols).orderBy("n").collect()
+    m = c.MASK64
+    for r, i, lvl, (f, ii, jj, _) in zip(got, ids, lvls, fij):
         lvl = int(lvl)
-        assert cs.level(i) == int(c.level(idv))
-        assert cs.range_min(i) == int(c.range_min(idv))
-        assert cs.range_max(i) == int(c.range_max(idv))
-        assert cs.parent(i, lvl // 2) == int(c.parent(idv, lvl // 2))
-        f, ii, jj, o = cs.face_ij_orientation(i)
-        kf, ki, kj, ko = c.face_ij_orientation(idv)
-        assert (f, ii, jj, o) == (int(kf), int(ki), int(kj), int(ko))
-        assert cs.from_face_ij(f, ii, jj) == int(c.from_face_ij(f, ii, jj))
+        assert r.level == c.level(i) == lvl
+        assert r.rmin & m == c.range_min(i)
+        assert r.rmax & m == c.range_max(i)
+        assert r[f"p{lvl // 2}"] & m == c.parent(i, lvl // 2)
+        assert r.enc & m == c.from_face_ij(f, ii, jj)
+        assert c.parent(c.from_face_ij(f, ii, jj), lvl) == i
 
 
 def test_continuity():
-    # cellid_test.ts:606-633 (vectorized walk at level 8)
+    # cellid_test.ts:606-633 (walk at level 8)
     max_walk_level = 8
     cell_size = 1.0 / (1 << max_walk_level)
     # MaxWidthMetric deriv = 1.704897179199218452 (Metric_constants)
     max_dist = 1.704897179199218452 / (1 << max_walk_level)
 
-    begin = int(c.child_begin_at_level(c.from_face(0), max_walk_level))
+    begin = c.child_begin_at_level(c.from_face(0), max_walk_level)
     n_cells = 6 * (1 << (2 * max_walk_level))
-    step = 2 * int(c.lsb_for_level(max_walk_level))
-    ids = np.arange(n_cells, dtype=np.uint64) * np.uint64(step) + np.uint64(begin)
+    step = 2 * c.lsb_for_level(max_walk_level)
+    pts = np.array([c.raw_point(begin + k * step) for k in range(n_cells)]).T
 
-    x, y, z = c.raw_point(ids)
-    nxt = np.roll(np.stack([x, y, z]), -1, axis=1)
+    nxt = np.roll(pts, -1, axis=1)
     # angle between consecutive raw points
-    cross = np.cross(np.stack([x, y, z]).T, nxt.T)
-    dot = (np.stack([x, y, z]) * nxt).sum(axis=0)
+    cross = np.cross(pts.T, nxt.T)
+    dot = (pts * nxt).sum(axis=0)
     ang = np.arctan2(np.linalg.norm(cross, axis=1), dot)
     assert np.all(ang <= max_dist)
 
     # center alignment to the (s,t) grid
-    f, uu, vv = stuv.xyz_to_face_uv(x, y, z)
-    s = stuv.uv_to_st(uu)
-    t = stuv.uv_to_st(vv)
+    face_uv = [c._xyz_to_face_uv_scalar(*p) for p in pts.T]
+    s = np.array([c._uv_to_st_scalar(u) for _, u, _ in face_uv])
+    t = np.array([c._uv_to_st_scalar(v) for _, _, v in face_uv])
     rs = np.abs(s / (0.5 * cell_size) - np.round(s / (0.5 * cell_size)))
     rt = np.abs(t / (0.5 * cell_size) - np.round(t / (0.5 * cell_size)))
     assert np.all(rs * 0.5 * cell_size < 1e-12)

@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from s2js_spark.spark import functions as s2f
 from s2js_spark.spark.session import get_session
 
 
@@ -22,7 +21,7 @@ def spark():
 
 
 def test_knn_join_matches_brute_force(spark):
-    from s2js_spark.spark.joins import knn_join
+    from s2js_spark.spark.joins import _chord2_sql, knn_join
 
     rng = np.random.RandomState(13)
     pts = [
@@ -37,10 +36,13 @@ def test_knn_join_matches_brute_force(spark):
         ["query_id", "qlat", "qlng"],
     )
 
-    got = knn_join(spark, points, queries, k=5).toPandas()
+    got_df = knn_join(spark, points, queries, k=5)
+    # a distributed query frame gets its neighbourhood in SQL
+    assert "ArrowEvalPython" not in got_df._jdf.queryExecution().executedPlan().toString()
+    got = got_df.toPandas()
 
     brute = points.crossJoin(F.broadcast(queries))
-    chord2 = F.round(s2f.s2_chord2("lat", "lng", "qlat", "qlng"), 12)
+    chord2 = F.round(_chord2_sql("lat", "lng", "qlat", "qlng"), 12)
     w = Window.partitionBy("query_id").orderBy(F.col("chord2"), F.col("id"))
     want = (
         brute.withColumn("chord2", chord2)

@@ -18,10 +18,13 @@ SPARK_DIR = pathlib.Path(__file__).resolve().parent.parent / "s2js_spark" / "spa
 PYTHON_ENTRYPOINTS = ("pandas_udf", "mapInPandas", "applyInPandas", "applyInPandasWithState")
 
 ALLOWLIST = {
-    "functions.*": "SQL surface: registered S2 functions (SURVEY §2.13)",
+    "functions.s2_cover": "GeoJSON covering: the scalar RegionCoverer is the operator",
+    "functions.s2_cell_union_normalize": "CellUnion.normalize of a per-row cell array",
+    "functions.s2_point_in_polygon": "exact polygon containment of the scalar port",
+    "functions.s2_rect_contains": "SQL-callable predicate surface (SURVEY §2.13)",
+    "functions.s2_cap_contains": "SQL-callable predicate surface (SURVEY §2.13)",
     "tagjoin._exact_or_keep": "exact residual over triage-uncertified polygon lanes",
     "polyline_ops.clip_polylines": "exact concave clip for lines the SQL triage cannot decide",
-    "joins._neighborhood_cells": "3x3 cell neighbourhoods of distributed knn query frames",
     "streaming.sessionize_events": "stateful sessionization (GroupState) is the operator",
     "multimodal.synth_real_media": "media container synthesis (PPM/WAV encode)",
     "multimodal.synth_mixed_media": "media container synthesis (PPM/WAV encode)",

@@ -4,7 +4,7 @@ interiors must produce bit-identical results to the original forms.
 - simhash_rows (explode + HashAggregate sums) vs the per-row
   simhash64 HOF expression;
 - knn_join's driver-side LocalRelation neighborhood path vs the
-  pandas-UDF path (same queries through both must match);
+  SQL neighbourhood path (same queries through both must match);
 - minhash signature numeric-min reconstruction vs a direct string-min
   recomputation.
 """
@@ -112,8 +112,8 @@ def test_knn_local_values_path_matches_udf_path(spark):
     points = spark.createDataFrame(pts, ["id", "lat", "lng"])
     # query 3 has no coordinates: no neighbours on either path
     qrows = [(0, 40.0, 7.0), (1, 41.5, 8.5), (2, 39.0, 5.5), (3, None, None)]
-    # UDF path: RDD-backed createDataFrame query frame
-    q_udf = spark.createDataFrame(qrows, "query_id long, qlat double, qlng double")
+    # SQL path: RDD-backed createDataFrame query frame
+    q_sql = spark.createDataFrame(qrows, "query_id long, qlat double, qlng double")
     # local path: inline VALUES (LocalRelation)
     dbl = lambda v: "NULL" if v is None else f"CAST('{v!r}' AS DOUBLE)"  # noqa: E731
     vals = ", ".join(
@@ -126,13 +126,13 @@ def test_knn_local_values_path_matches_udf_path(spark):
         q_local._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
         == "LocalRelation"
     )
-    a_df = knn_join(spark, points, q_udf, k=4, level=8)
+    a_df = knn_join(spark, points, q_sql, k=4, level=8)
     b_df = knn_join(spark, points, q_local, k=4, level=8)
     # the null-coordinate filter keeps the batch a LocalRelation, so it
-    # still takes the driver-side path (no Python node in its plan)
+    # still takes the driver-side path (no SQL neighbourhood fan-out)
     plan = lambda df: df._jdf.queryExecution().optimizedPlan().toString()  # noqa: E731
-    assert "_neighborhood_cells" in plan(a_df)
-    assert "_neighborhood_cells" not in plan(b_df)
+    assert "Generate inline" in plan(a_df)
+    assert "Generate" not in plan(b_df)
     a, b = a_df.collect(), b_df.collect()
     assert {r["query_id"] for r in a} == {r["query_id"] for r in b} == {0, 1, 2}
     key = lambda r: (r["query_id"], r["rank"])  # noqa: E731

@@ -54,15 +54,17 @@ def test_text_byte_identity(spark):
 
 
 def test_udf_kernel_equivalence(spark):
-    """Registered pandas UDFs == NumPy kernels == scalar oracle."""
+    """SQL encode + registered s2_token == scalar oracle."""
     from s2js_spark.geometry import cellid_scalar as cs
-    from s2js_spark.spark import functions as s2f
+    from s2js_spark.spark import sqlkernels as sq
+    from s2js_spark.spark.functions import register_all
 
+    register_all(spark)
     rows = [(float(la), float(ln)) for la in range(-80, 81, 20) for ln in range(-170, 171, 30)]
     df = spark.createDataFrame(rows, ["lat", "lng"])
     got = (
-        df.withColumn("cellid", s2f.s2_cellid("lat", "lng"))
-        .withColumn("token", s2f.s2_token("cellid"))
+        sq.with_s2_cellid(df)
+        .withColumn("token", F.expr("s2_token(cellid)"))
         .toPandas()
     )
     for _, r in got.iterrows():
@@ -212,3 +214,26 @@ def test_streaming_incremental_tiling(spark, tmp_path):
     )
     want = {(r["url"], r["tile_i"]) for r in batch.collect()}
     assert got == want and len(got) > 0
+
+
+def test_extract_geotags_malformed_utf8(spark):
+    """Invalid UTF-8 in html: bytes outside the geotag leave lat/lng
+    unchanged, an invalid byte inside the tag's content gives nulls,
+    and text is carried through byte-identical."""
+    from s2js_spark.spark.pipeline import extract_geotags
+
+    tag = b'<meta name="geo.position" content="%s;8.25">'
+    html = [
+        b"\xff\xfe" + tag % b"47.5" + b"\xc3(",  # invalid lead, bad continuation
+        b"\xed\xa0\x80" + tag % b"47.5",  # lone surrogate
+        tag % b"47.5" + b"\xe2\x82",  # truncated sequence
+        tag % b"4\xff7.5",  # invalid byte inside the content
+    ]
+    texts = ["café ü", "\U0001f600 x", "plain", "€ 5"]
+    df = spark.createDataFrame(
+        [(n, bytearray(h), t) for n, (h, t) in enumerate(zip(html, texts))],
+        "n int, html binary, text string",
+    )
+    got = extract_geotags(df).orderBy("n").collect()
+    assert [(r.lat, r.lng) for r in got] == [(47.5, 8.25)] * 3 + [(None, None)]
+    assert [r.text.encode() for r in got] == [t.encode() for t in texts]

@@ -1,4 +1,4 @@
-"""Parity of the pure-SQL (JVM) S2 kernels vs the NumPy kernels.
+"""Parity of the pure-SQL (JVM) S2 kernels vs the scalar port.
 
 The (face,i,j) -> id Hilbert stage and all hierarchy bit-ops are exact
 integer arithmetic — bitwise equality is asserted on dense random
@@ -16,11 +16,20 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from s2js_spark.kernels import cellid as kc
+from s2js_spark.geometry import cellid_scalar as cs
 from s2js_spark.spark import sqlkernels as sq
 from s2js_spark.spark.session import get_session
 
 SF = "/root/testdata/sf0.001"
+
+
+def as_long(ids) -> np.ndarray:
+    """Scalar-port uint64 ids as the LongType bit pattern."""
+    return np.array(ids, dtype=np.uint64).view(np.int64)
+
+
+def encode(lat, lng) -> np.ndarray:
+    return as_long([cs.from_latlng_degrees(a, b) for a, b in zip(lat, lng)])
 
 
 @pytest.fixture(scope="module")
@@ -47,7 +56,9 @@ def test_hilbert_encode_exhaustive_random(spark):
                 i = np.append(i, ci)
                 j = np.append(j, cj)
 
-    expected = kc.to_int64(kc.from_face_ij(f, i, j))
+    expected = as_long(
+        [cs.from_face_ij(int(a), int(b), int(c)) for a, b, c in zip(f, i, j)]
+    )
 
     pdf = pd.DataFrame({"f": f, "i": i, "j": j})
     df = spark.createDataFrame(pdf)
@@ -64,9 +75,7 @@ def test_latlng_chain_parity_corpus(spark):
     df = extract_geotags(pages(spark, SF)).filter(F.col("lat").isNotNull())
     out = sq.with_s2_cellid(df, out_col="cid_sql").select("lat", "lng", "cid_sql")
     pdf = out.toPandas()
-    expected = kc.to_int64(
-        kc.from_latlng_degrees(pdf["lat"].to_numpy(), pdf["lng"].to_numpy())
-    )
+    expected = encode(pdf["lat"], pdf["lng"])
     assert (pdf["cid_sql"].to_numpy(np.int64) == expected).all()
 
 
@@ -83,9 +92,7 @@ def test_latlng_chain_parity_sample(spark):
     df = spark.createDataFrame(pdf)
     out = sq.with_s2_cellid(df, out_col="cid_sql").select("lat", "lng", "cid_sql")
     res = out.toPandas()
-    expected = kc.to_int64(
-        kc.from_latlng_degrees(res["lat"].to_numpy(), res["lng"].to_numpy())
-    )
+    expected = encode(res["lat"], res["lng"])
     got = res["cid_sql"].to_numpy(np.int64)
     n_mismatch = int((got != expected).sum())
     assert n_mismatch == 0, f"{n_mismatch} / {len(got)} ids differ"
@@ -100,37 +107,41 @@ def test_null_latlng_gives_null(spark):
 
 
 def test_hierarchy_sql_columns(spark):
-    """parent/level/flip/range/token SQL twins vs NumPy kernels."""
+    """parent/level/flip/range/token SQL columns vs the scalar port."""
+    from s2js_spark.spark.functions import register_all
+
+    register_all(spark)
     rng = np.random.default_rng(99)
     lat = rng.uniform(-90, 90, 20_000)
     lng = rng.uniform(-180, 180, 20_000)
-    ids = kc.from_latlng_degrees(lat, lng)
-    pdf = pd.DataFrame({"cid": kc.to_int64(ids)})
+    ids = [cs.from_latlng_degrees(a, b) for a, b in zip(lat, lng)]
+    pdf = pd.DataFrame({"cid": as_long(ids)})
     df = spark.createDataFrame(pdf)
     out = df.select(
         "cid",
         sq.s2_parent_sql("cid", 10).alias("p10"),
         sq.s2_parent_sql("cid", 0).alias("p0"),
         sq.s2_flip_key_sql("cid").alias("fk"),
-        sq.s2_range_min_sql(sq.s2_parent_sql("cid", 12)).alias("rmin"),
-        sq.s2_range_max_sql(sq.s2_parent_sql("cid", 12)).alias("rmax"),
+        F.expr("s2_range_min(s2_parent(cid, 12))").alias("rmin"),
+        F.expr("s2_range_max(s2_parent(cid, 12))").alias("rmax"),
         sq.s2_token_sql("cid").alias("tok"),
         sq.s2_token_sql(sq.s2_parent_sql("cid", 4)).alias("tok4"),
     ).toPandas()
-    assert (out["p10"].to_numpy(np.int64) == kc.to_int64(kc.parent(ids, 10))).all()
-    assert (out["p0"].to_numpy(np.int64) == kc.to_int64(kc.parent(ids, 0))).all()
-    assert (out["fk"].to_numpy(np.int64) == kc.flip_key(ids)).all()
-    p12 = kc.parent(ids, 12)
-    assert (out["rmin"].to_numpy(np.int64) == kc.to_int64(kc.range_min(p12))).all()
-    assert (out["rmax"].to_numpy(np.int64) == kc.to_int64(kc.range_max(p12))).all()
-    assert (out["tok"].to_numpy() == kc.to_token(ids)).all()
-    assert (out["tok4"].to_numpy() == kc.to_token(kc.parent(ids, 4))).all()
+    col = lambda name: out[name].to_numpy(np.int64)  # noqa: E731
+    assert (col("p10") == as_long([cs.parent(i, 10) for i in ids])).all()
+    assert (col("p0") == as_long([cs.parent(i, 0) for i in ids])).all()
+    assert (col("fk") == as_long([i ^ (1 << 63) for i in ids])).all()
+    p12 = [cs.parent(i, 12) for i in ids]
+    assert (col("rmin") == as_long([cs.range_min(i) for i in p12])).all()
+    assert (col("rmax") == as_long([cs.range_max(i) for i in p12])).all()
+    assert out["tok"].tolist() == [cs.to_token(i) for i in ids]
+    assert out["tok4"].tolist() == [cs.to_token(cs.parent(i, 4)) for i in ids]
 
 
 def test_level_sql_all_levels(spark):
-    ids = kc.from_latlng_degrees(np.array([47.5]), np.array([8.5]))
-    all_lv = np.concatenate([kc.parent(ids, lv) for lv in range(31)])
-    df = spark.createDataFrame(pd.DataFrame({"cid": kc.to_int64(all_lv)}))
+    leaf = cs.from_latlng_degrees(47.5, 8.5)
+    all_lv = as_long([cs.parent(leaf, lv) for lv in range(31)])
+    df = spark.createDataFrame(pd.DataFrame({"cid": all_lv}))
     out = df.select(sq.s2_level_sql("cid").alias("lv")).toPandas()
     assert out["lv"].tolist() == list(range(31))
 
@@ -139,3 +150,93 @@ def test_token_sql_zero_is_x(spark):
     df = spark.createDataFrame(pd.DataFrame({"cid": [0]}))
     out = df.select(sq.s2_token_sql("cid").alias("t")).toPandas()
     assert out["t"].tolist() == ["X"]
+
+
+def test_encode_sql_text_is_pinned(spark, monkeypatch):
+    """The expression list with_s2_cellid generates is byte-identical
+    to the one the geotag_bulk benchmark measured: an edit to a helper
+    it shares (the face projection, the st->ij clamp) must not change
+    the encode plan silently."""
+    import hashlib
+
+    df = spark.createDataFrame(pd.DataFrame({"lat": [1.0], "lng": [2.0]}))
+    calls = []
+    cls = type(df)
+    select_expr = cls.selectExpr
+
+    def spy(self, *exprs):
+        calls.append(exprs)
+        return select_expr(self, *exprs)
+
+    monkeypatch.setattr(cls, "selectExpr", spy)
+    sq.with_s2_cellid(df)
+    assert len(calls) == 1 and calls[0][0] == "*"
+    digest = hashlib.sha256("\n".join(calls[0][1:]).encode()).hexdigest()
+    assert digest == "6bdc8d467ed2ad99eb81fcdc322bda330a2bca4239fe3bbd14917d7c2257bd8b"
+
+
+def test_neighborhood_matches_scalar(spark):
+    """The SQL 3x3 neighbourhood is {cell} + all_neighbors(cell) of the
+    scalar port, with no duplicate row, on the eight cube corners, the
+    poles, +-180 and random points, at coarse to leaf levels."""
+    corner = np.degrees(np.arctan(1 / np.sqrt(2)))
+    pts = [(s * corner, lng) for s in (1, -1) for lng in (45.0, 135.0, -45.0, -135.0)]
+    pts += [(90.0, 0.0), (-90.0, 0.0), (0.0, 180.0), (0.0, -180.0),
+            (45.0, 180.0), (-45.0, -180.0), (0.0, 0.0), (0.0, 45.0)]
+    rng = np.random.default_rng(5)
+    pts += list(zip(rng.uniform(-90, 90, 200), rng.uniform(-180, 180, 200)))
+    rows = [(n, float(la), float(ln)) for n, (la, ln) in enumerate(pts)]
+    df = spark.createDataFrame(rows, "query_id long, qlat double, qlng double")
+    for level in (0, 1, 2, 8, 16, 30):
+        out = sq.with_s2_neighborhood(df, "qlat", "qlng", level, "_cell")
+        got = [(r.query_id, r._cell & cs.MASK64) for r in out.collect()]
+        assert len(got) == len(set(got)), level
+        want = set()
+        for n, la, ln in rows:
+            cell = cs.parent(cs.from_latlng_degrees(la, ln), level)
+            want |= {(n, c) for c in [cell, *cs.all_neighbors(cell, level)]}
+        assert set(got) == want, level
+
+
+def test_registered_sql_functions_match_scalar(spark):
+    """The seven SQL-bodied functions register_all creates equal the
+    scalar port on ids at every level 0-30 (faces 4/5 carry the sign
+    bit) plus id 0, and run with no Python node in the plan."""
+    from s2js_spark.spark.functions import register_all
+
+    register_all(spark)
+    rng = np.random.default_rng(11)
+    ids = [0] + [
+        cs.from_face_pos_level(int(f), int(p), lv)
+        for lv in range(31)
+        for f, p in zip(rng.integers(0, 6, 100), rng.integers(0, 1 << 61, 100))
+    ]
+    # b: a's first leaf (contained) on odd rows, another id on even
+    # rows; for a = 0 the unsigned range [1, 2^64-1] holds every b but 0
+    other = [cs.range_min(a) if n % 2 else ids[(n * 7 + 1) % len(ids)] for n, a in enumerate(ids)]
+    lvls = rng.integers(0, 31, len(ids))
+    pdf = pd.DataFrame({
+        "n": range(len(ids)), "a": as_long(ids), "b": as_long(other), "lv": lvls,
+    })
+    spark.createDataFrame(pdf).createOrReplaceTempView("cells")
+    out = spark.sql(
+        """SELECT n, s2_level(a) AS level, s2_parent(a, lv) AS parent,
+                  s2_range_min(a) AS rmin, s2_range_max(a) AS rmax,
+                  s2_contains(a, b) AS contains, s2_flip_key(a) AS fk,
+                  s2_token(a) AS token
+           FROM cells ORDER BY n"""
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    m = cs.MASK64
+    got = out.collect()
+    assert len(got) == len(ids) >= 3000
+    assert sum(r.contains for r in got) > len(ids) // 3
+    for r, a, b, lv in zip(got, ids, other, lvls):
+        assert r.level == cs.level(a)
+        assert r.parent & m == cs.parent(a, int(lv))
+        assert r.rmin & m == cs.range_min(a)
+        assert r.rmax & m == cs.range_max(a)
+        assert r.contains == cs.contains(a, b)
+        assert r.fk & m == a ^ (1 << 63)
+        assert r.token == cs.to_token(a)

@@ -1,5 +1,5 @@
-"""Ported stuv tests (/root/reference/s2/stuv_test.ts) against both the
-vectorized kernels and the scalar cell helpers."""
+"""Ported stuv tests (s2js ``s2/stuv_test.ts``) against the
+scalar port and the remaining array transforms."""
 
 from __future__ import annotations
 
@@ -18,6 +18,7 @@ from s2js_spark.geometry.cell import (
     v_axis,
     v_norm,
 )
+from s2js_spark.geometry import cellid_scalar as cs
 from s2js_spark.geometry.point import Point
 from s2js_spark.kernels import stuv
 
@@ -26,8 +27,9 @@ EPSILON = 1e-14
 
 def test_transformations():
     # stuv_test.ts:33-36
-    assert float(stuv.st_to_uv(stuv.uv_to_st(0.125))) == 0.125
-    assert float(stuv.uv_to_st(stuv.st_to_uv(0.125))) == 0.125
+    assert cs._st_to_uv_scalar(cs._uv_to_st_scalar(0.125)) == 0.125
+    assert cs._uv_to_st_scalar(cs._st_to_uv_scalar(0.125)) == 0.125
+    assert float(stuv.st_to_uv(0.125)) == cs._st_to_uv_scalar(0.125)
 
 
 def test_uv_norms():
@@ -61,14 +63,13 @@ def test_face_uv_to_xyz():
         )
     assert total.approx_equal(Point(2.0, 2.0, 2.0), 1e-14)
 
-    # vectorized kernel agrees with the scalar helpers
-    faces = np.repeat(np.arange(6), 9)
-    us = np.tile(np.linspace(-1, 1, 9), 6)
-    vs = np.tile(np.linspace(1, -1, 9), 6)
-    kx, ky, kz = stuv.face_uv_to_xyz(faces, us, vs)
-    for i in range(len(faces)):
-        want = face_uv_to_xyz(int(faces[i]), float(us[i]), float(vs[i]))
-        assert (kx[i], ky[i], kz[i]) == (want.x, want.y, want.z)
+    # the CellID port's projection agrees with the cell helpers
+    for face in range(6):
+        for u in np.linspace(-1, 1, 9):
+            for v in np.linspace(1, -1, 9):
+                want = face_uv_to_xyz(face, float(u), float(v))
+                got = cs._face_uv_to_xyz_scalar(face, float(u), float(v))
+                assert got == (want.x, want.y, want.z)
 
 
 def test_face_xyz_to_uv():
