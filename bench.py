@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from s2js_spark.spark.pages import pages
 from s2js_spark.spark.pipeline import dedup_latest, extract_geotags
+from s2js_spark.spark.session import PYTHON_DAEMON
 from s2js_spark.spark.storage import ensure_bucketed, no_exchange_before_window
 from s2js_spark.spark.tagjoin import tag_tiles_pairs
 from s2js_spark.spark.tiles import build_tileset
@@ -72,6 +73,7 @@ def session(n_threads: int) -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.local.dir", "/dev/shm/spark-bench")  # tmpfs: no disk-IO variance
         .config("spark.ui.enabled", "false")
+        .config(*PYTHON_DAEMON)
         .getOrCreate()
     )
 

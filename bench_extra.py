@@ -30,6 +30,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from s2js_spark.spark.session import PYTHON_DAEMON
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -49,6 +51,7 @@ def session(n_threads: int = CPUS) -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.local.dir", "/dev/shm/spark-bench")
         .config("spark.ui.enabled", "false")
+        .config(*PYTHON_DAEMON)
         .getOrCreate()
     )
 

@@ -25,6 +25,8 @@ import zipfile
 import pyspark
 from pyspark.sql import SparkSession
 
+from .session import PYTHON_DAEMON
+
 SPARK_HOME = os.path.dirname(pyspark.__file__)
 MASTER_PORT = 7077
 MASTER_URL = f"spark://127.0.0.1:{MASTER_PORT}"
@@ -205,6 +207,8 @@ class StandaloneCluster:
             )
             .config("spark.submit.pyFiles", pyzip)
             .config("spark.executorEnv.PYTHONPATH", pyzip)
+            # executors start the daemon entry from the pyFiles zip
+            .config(*PYTHON_DAEMON)
             .config("spark.sql.shuffle.partitions", str(total * 2))
             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
             .config("spark.sql.adaptive.enabled", "true")

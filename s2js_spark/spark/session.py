@@ -4,6 +4,14 @@ Every knob here is chosen for the 100 TB design point and merely
 harmless locally: AQE with skew-join splitting handles hot cell
 prefixes at runtime, Arrow keeps the Python boundary columnar, and
 shuffle partitions are pinned for deterministic tests.
+
+Python workers start from the engine's daemon entry
+(``PYTHON_DAEMON``, module ``pydaemon``), which stops every Python task
+from re-parsing the unchanged zip archives on the worker's
+``sys.path``. The engine package must therefore be
+importable where Spark starts the daemon: the cwd, ``PYTHONPATH`` or
+pyFiles. ``cluster.StandaloneCluster`` and the bench harnesses set the
+same pair.
 """
 
 from __future__ import annotations
@@ -11,6 +19,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The Spark conf pair that starts Python workers from ``pydaemon``.
+PYTHON_DAEMON = ("spark.python.daemon.module", "s2js_spark.spark.pydaemon")
 
 
 def get_session(
@@ -34,5 +45,6 @@ def get_session(
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
+        .config(*PYTHON_DAEMON)
     )
     return builder.getOrCreate()
