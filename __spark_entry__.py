@@ -874,7 +874,8 @@ def _pip_big_oracle_sql() -> str:
     """DuckDB twin of the engine's certified winding test for the big
     concave tile (tagjoin._winding_agg_sql): the SAME precomputed edge
     normals / origin determinants (identical numpy op order as
-    tagjoin.covering_frames), the SAME +-eps certified sign bands, a
+    tagjoin._edge_planes, which folds the latter to their banded
+    signs), the SAME +-eps certified sign bands, a
     VALUES edge table instead of a broadcast array column. Points far
     from edges (asserted: zero uncertified lanes) make both counts
     identical."""

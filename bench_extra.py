@@ -14,8 +14,17 @@ Phases (select with argv[1], default "queries"):
 - ``micro``    : decomposition probes (pages scan alone, scan+regex,
                  scan+regex+dedup, encode, ...) to attribute the
                  flagship / per-query walls to pipeline stages.
+- ``plancost`` : fixed per-query plan cost of the tag-join frames
+                 (pip_tag, rect_tag, pip_big, tile_raster, flagship):
+                 optimizer and planning ms, executed-plan characters,
+                 the serialized bytes each task deserializes (every
+                 codegen stage's ``references``; the expressions of
+                 operators outside whole-stage codegen), each stage's
+                 largest generated method and the CodegenFallback
+                 expressions in the plan.
 
 Usage: python bench_extra.py [phase] [tag] [only_query ...]
+       python bench_extra.py plancost [only_frame ...]
 """
 
 from __future__ import annotations
@@ -188,6 +197,106 @@ def phase_micro():
     spark.stop()
 
 
+_FALLBACK = "org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback"
+
+
+def plan_cost(spark, build, runs: int = 3) -> dict:
+    """Plan-cost figures of the frame ``build()`` returns, each build a
+    fresh Dataset run once with ``collect``: best optimizer / planning
+    ms (QueryPlanningTracker phases) over ``runs`` builds after a
+    warm-up, and from the last run the executed-plan characters
+    before execution, the serialized bytes of every codegen stage's
+    ``references`` (what each of its tasks deserializes; a
+    HashAggregateExec puts itself, child plan included, there), each
+    stage's largest generated method in bytecode bytes (HotSpot does
+    not JIT-compile a method above 8,000), the serialized expressions
+    of non-leaf operators outside whole-stage codegen (each task
+    generates their projections again) and the simple names of
+    CodegenFallback expressions."""
+    jvm = spark._jvm
+    ser = jvm.org.apache.spark.util.Utils.serialize
+    fallback = jvm.java.lang.Class.forName(_FALLBACK)
+    opt, planning = [], []
+    for i in range(runs + 1):
+        df = build()
+        qe = df._jdf.queryExecution()
+        plan_chars = len(qe.executedPlan().toString())
+        df.collect()
+        phases = qe.tracker().phases()
+        if i:
+            opt.append(phases.get("optimization").get().durationMs())
+            planning.append(phases.get("planning").get().durationMs())
+
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    stages, max_method, outside, classes = {}, {}, {}, set()
+
+    def expr_classes(node):
+        exprs = node.expressions()
+        for k in range(exprs.size()):
+            classes.update(n["class"] for n in json.loads(exprs.apply(k).toJSON()))
+
+    def walk(node, in_stage):
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan(), False)
+        if cls.endswith("QueryStageExec"):
+            return walk(node.plan(), False)
+        if cls.startswith("Reused"):
+            return
+        if cls == "WholeStageCodegenExec":
+            gen, sid = node.doCodeGen(), f"*({node.codegenStageId()})"
+            stages[sid] = len(ser(gen._1().references()))
+            max_method[sid] = codegen.compile(gen._2())._2().maxMethodCodeSize()
+            in_stage = True
+        elif cls == "InputAdapter":
+            in_stage = False
+        elif not in_stage and node.children().nonEmpty() and node.expressions().nonEmpty():
+            key = f"{cls} #{len(outside)}"
+            outside[key] = len(ser(node.expressions()))
+        expr_classes(node)
+        kids = node.children()
+        for k in range(kids.size()):
+            walk(kids.apply(k), in_stage)
+
+    walk(qe.executedPlan(), False)
+    fallbacks = sorted(
+        c.rsplit(".", 1)[-1] for c in classes
+        if fallback.isAssignableFrom(jvm.java.lang.Class.forName(c))
+    )
+    return {
+        "optimize_ms": min(opt), "planning_ms": min(planning),
+        "plan_chars": plan_chars, "codegen_refs_bytes": stages,
+        "max_method_bytecode": max_method,
+        "outside_codegen_bytes": outside, "codegen_fallbacks": fallbacks,
+    }
+
+
+def phase_plancost(only=None):
+    """plan_cost of the tag-join frames. The flagship frame runs over a
+    x1 bucketed corpus: its plan is the x1600 plan, at a size that
+    fits any host."""
+    import __spark_entry__ as e
+    import bench
+
+    spark = session()
+    spark.sparkContext.setLogLevel("ERROR")
+    qs = e.queries()
+    builders = {
+        name: (lambda name=name: qs[name](spark, SF_DIR))
+        for name in ("pip_tag", "rect_tag", "pip_big", "tile_raster")
+    }
+    ts = bench.tileset()
+    builders["flagship"] = lambda: bench.flagship_frames(spark, ts, amplify=1)[1]
+    out = {}
+    for name, build in builders.items():
+        if only and name not in only:
+            continue
+        out[name] = plan_cost(spark, build)
+        print(json.dumps({name: out[name]}), flush=True)
+    print(json.dumps({"phase": "plancost", "sf": SF_DIR, "results": out}))
+    spark.stop()
+
+
 if __name__ == "__main__":
     phase = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if phase == "queries":
@@ -199,5 +308,7 @@ if __name__ == "__main__":
         phase_plans(tag, only=sys.argv[3:] or None)
     elif phase == "micro":
         phase_micro()
+    elif phase == "plancost":
+        phase_plancost(only=sys.argv[2:] or None)
     else:
         raise SystemExit(f"unknown phase {phase}")

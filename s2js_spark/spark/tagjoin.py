@@ -23,23 +23,30 @@ certified path runs with ZERO Python:
       only, so exactly ``Rect.contains_latlng``);
     - cap tiles: chord^2 test, with the operation order of
       ``Point.chord_angle_between`` (so exactly ``Cap.contains_point``);
-    - polygon tiles: winding parity (reference Loop.ts:372-380) as an
-      ``aggregate`` over the tile's edge array (broadcast column),
-      with the triage determinant sign band of predicates.ts:186-191.
-      A determinant's sign is used only when it lies outside the
-      certified error band (|det| <= 1.8274*eps, i.e. the point within
-      ~2.5 nm of an edge plane), so every certified lane has the exact
-      sign. Lanes with any determinant inside the band are counted
-      into the accumulator's high digits and the pair is flagged
-      uncertified.
+    - polygon tiles: winding parity (reference Loop.ts:372-380) with
+      the triage determinant sign band of predicates.ts:186-191.
+      Polygons up to ``MAX_INLINE_EDGES`` edges are unrolled into the
+      plan as one literal branch per tile; bigger ones run an
+      ``aggregate`` over the tile's edge array (broadcast column).
+      Both forms fold each edge's origin determinant to its sign on
+      the driver, so a crossing is three strict comparisons of the
+      point's determinants against the band, and the inlined form
+      writes each vertex determinant three times and each edge
+      normal's twice. A determinant's sign is used only when it lies
+      outside the certified error band (|det| <= 1.8274*eps, i.e. the
+      point within ~2.5 nm of an edge plane), so every certified lane
+      has the exact sign. Lanes with any determinant inside the band
+      are counted into the accumulator's high digits and the pair is
+      flagged uncertified.
 4.  uncertified polygon lanes (statistically never on organic data)
     are exactly resolved by the scalar geometry library in one
     map-side filter over the matched rows when ``exact_residuals=True``
     (the default; graded queries keep it on).
 
-Edge normals and their origin-side determinants are precomputed
-driver-side in NumPy and shipped as round-trip double literals; the
-certified band bounds the rounding error of that evaluation order.
+Edge normals are precomputed driver-side in NumPy and shipped as
+round-trip double literals, and their origin-side determinants are
+folded there to certified signs; the band bounds the rounding error of
+that evaluation order.
 """
 
 from __future__ import annotations
@@ -70,14 +77,16 @@ _UNCERT = 1_000_000  # accumulator stride separating crossing count / flags
 _EDGE_STRUCT = (
     "array<struct<cx:double,cy:double,cz:double,"
     "dx:double,dy:double,dz:double,"
-    "nx:double,ny:double,nz:double,dea:double>>"
+    "nx:double,ny:double,nz:double,s:double>>"
 )
 
 
 def _edge_planes(ts: TileSetStruct, t: int) -> list[tuple[float, ...]]:
-    """Per edge of polygon tile ``t``: (c, d, n = c x d, n . origin) as
-    ten floats. Computed once in NumPy so the inlined and the
-    array-column winding evaluate the same literals."""
+    """Per edge of polygon tile ``t``: (c, d, n = c x d, s) as ten
+    floats, with s the origin's determinant n . origin folded to its
+    certified sign: +1.0 or -1.0 outside the band, 0.0 inside it.
+    Computed once in NumPy so the inlined and the array-column winding
+    evaluate the same literals."""
     e0, e1 = int(ts.edge_off[t]), int(ts.edge_off[t + 1])
     cx, cy, cz = ts.cx[e0:e1], ts.cy[e0:e1], ts.cz[e0:e1]
     dx, dy, dz = ts.dx[e0:e1], ts.dy[e0:e1], ts.dz[e0:e1]
@@ -86,9 +95,13 @@ def _edge_planes(ts: TileSetStruct, t: int) -> list[tuple[float, ...]]:
     nz = cx * dy - cy * dx
     ox, oy, oz = _origin_xyz()
     dea = nx * ox + ny * oy + nz * oz
+    s = np.where(
+        dea > MAX_DETERMINANT_ERROR, 1.0,
+        np.where(dea < -MAX_DETERMINANT_ERROR, -1.0, 0.0),
+    )
     return [
         tuple(float(v) for v in row)
-        for row in zip(cx, cy, cz, dx, dy, dz, nx, ny, nz, dea)
+        for row in zip(cx, cy, cz, dx, dy, dz, nx, ny, nz, s)
     ]
 
 
@@ -144,8 +157,8 @@ def covering_frames(
                 f"'cx', {d(cx)}, 'cy', {d(cy)}, 'cz', {d(cz)},"
                 f" 'dx', {d(dx)}, 'dy', {d(dy)}, 'dz', {d(dz)},"
                 f" 'nx', {d(nx)}, 'ny', {d(ny)}, 'nz', {d(nz)},"
-                f" 'dea', {d(dea)})"
-                for cx, cy, cz, dx, dy, dz, nx, ny, nz, dea in planes
+                f" 's', {d(sg)})"
+                for cx, cy, cz, dx, dy, dz, nx, ny, nz, sg in planes
             ))
         else:
             edges_sql = no_edges
@@ -171,43 +184,33 @@ def covering_frames(
 
 _EPS = repr(MAX_DETERMINANT_ERROR)
 # Tiles up to this many edges get their winding test UNROLLED into the
-# plan with literal edge coordinates — whole-stage codegen, ~µs-free.
-# Bigger tiles (real admin boundaries) fall back to the array-column
-# aggregate, which is interpreted per element (~µs/edge/row).
+# plan with literal edge coordinates, compiled into the refinement
+# Project's generated projection. Bigger tiles (real admin boundaries)
+# fall back to the array-column aggregate, which is interpreted per
+# element (~µs/edge/row).
 MAX_INLINE_EDGES = 96
-
-
-def _sgn(x: str) -> str:
-    return f"(CASE WHEN ({x}) > {_EPS} THEN 1 WHEN ({x}) < -{_EPS} THEN -1 ELSE 0 END)"
 
 
 def _indet(x: str) -> str:
     return f"(abs({x}) <= {_EPS})"
 
 
-def _crossing_terms(
-    det_ab_c: str, det_ab_d: str, det_e_b: str, det_e_a: str
-) -> tuple[str, str]:
-    """(crossing 0/1, indeterminate boolean) for one edge.
+def _crossing_sql(det_ab_c: str, det_ab_d: str, det_n_p: str, s: int) -> str:
+    """Edge c->d properly crosses the arc origin->p, as a boolean.
 
     EdgeCrosser orientation identities: acb=-s(ab.c), bda=s(ab.d),
-    cbd=-s(n.b), dac=s(n.a); proper crossing iff all equal and != 0.
-    A sign inside the certified band marks the lane indeterminate, so
-    a certified crossing count is the exact one.
+    cbd=-s(n.p), dac=s(n.origin); proper crossing iff all equal and
+    != 0. dac is a driver-side constant folded to ``s`` = +-1
+    (_edge_planes), so the test is three strict comparisons against
+    the certified band: for s = +1, ab.c < -eps AND ab.d > eps AND
+    n.p < -eps; s = -1 flips every side. A determinant inside the band
+    fails its comparison, so a band lane never counts a crossing (the
+    caller flags it uncertified).
     """
-    acb = f"(-{_sgn(det_ab_c)})"
-    bda = _sgn(det_ab_d)
-    cbd = f"(-{_sgn(det_e_b)})"
-    dac = _sgn(det_e_a)
-    cross = (
-        f"(CASE WHEN {acb} != 0 AND {acb} = {bda} AND {acb} = {cbd}"
-        f" AND {acb} = {dac} THEN 1L ELSE 0L END)"
-    )
-    uncert = (
-        f"({_indet(det_ab_c)} OR {_indet(det_ab_d)}"
-        f" OR {_indet(det_e_b)} OR {_indet(det_e_a)})"
-    )
-    return cross, uncert
+    neg, pos = f"< -{_EPS}", f"> {_EPS}"
+    if s < 0:
+        neg, pos = pos, neg
+    return f"({det_ab_c} {neg} AND {det_ab_d} {pos} AND {det_n_p} {neg})"
 
 
 def _winding_agg_sql() -> str:
@@ -216,16 +219,23 @@ def _winding_agg_sql() -> str:
 
     acc % _UNCERT   = certified crossing count,
     acc / _UNCERT  >0 = some determinant fell in the triage band.
+
+    The edge's folded sign ``e.s`` multiplies its determinants: a
+    product with +-1.0 is an exact sign flip, and 0.0 (origin
+    determinant in the band) fails every comparison. Every edge's end
+    vertex is another edge's start vertex (closed loops,
+    tiles.build_tileset), so the band test of ab.c over all edges
+    covers every vertex; ab.d is only compared.
     """
-    cross, uncert = _crossing_terms(
-        "(_abx * e.cx + _aby * e.cy + _abz * e.cz)",
-        "(_abx * e.dx + _aby * e.dy + _abz * e.dz)",
-        "(e.nx * _px + e.ny * _py + e.nz * _pz)",
-        "e.dea",
-    )
+    ab_c = "(_abx * e.cx + _aby * e.cy + _abz * e.cz)"
+    ab_d = "(_abx * e.dx + _aby * e.dy + _abz * e.dz)"
+    n_p = "(e.nx * _px + e.ny * _py + e.nz * _pz)"
+    cross = _crossing_sql(f"e.s * {ab_c}", f"e.s * {ab_d}", f"e.s * {n_p}", 1)
     return (
-        f"aggregate(edges, 0L, (acc, e) -> acc + {cross}"
-        f" + (CASE WHEN {uncert} THEN {_UNCERT}L ELSE 0L END))"
+        f"aggregate(edges, 0L, (acc, e) -> acc"
+        f" + (CASE WHEN {cross} THEN 1L ELSE 0L END)"
+        f" + (CASE WHEN e.s = 0.0 OR {_indet(ab_c)} OR {_indet(n_p)}"
+        f" THEN {_UNCERT}L ELSE 0L END))"
     )
 
 
@@ -233,12 +243,15 @@ def _winding_inline_sql(ts: TileSetStruct) -> str:
     """Winding accumulator with the tile set inlined as literals.
 
     The tile set is a plan-time constant, so each (small) polygon's
-    edge loop unrolls into whole-stage codegen — one branch of an
-    if-chain per tile, only the matching branch evaluated per row.
-    This is 10-30x faster than the interpreted higher-order-function
-    aggregate and is the difference between the winding refinement
-    dominating the flagship and it being noise. Edge normals and
-    origin determinants are precomputed driver-side (_edge_planes).
+    edge loop unrolls into one branch of an if-chain per tile; only
+    the matching branch is evaluated per row. This is 10-30x faster
+    than the interpreted higher-order-function aggregate. Each vertex
+    determinant ab.v is written three times (as one edge's start, the
+    previous edge's end, and once in the band test) and each edge
+    normal's n.p twice; the origin's determinants are folded to signs
+    on the driver (_edge_planes) and appear as no literal. A tile with
+    an origin determinant inside the band is uncertified on every
+    lane.
     """
     branches = []
     for t in range(len(ts.tile_ids)):
@@ -247,31 +260,41 @@ def _winding_inline_sql(ts: TileSetStruct) -> str:
         planes = _edge_planes(ts, t)
         if not planes or len(planes) > MAX_INLINE_EDGES:
             continue
-        crosses, uncerts = [], []
-        for cx, cy, cz, dx, dy, dz, nx, ny, nz, dea in planes:
-            cross, uncert = _crossing_terms(
-                f"(_abx * {cx!r}D + _aby * {cy!r}D + _abz * {cz!r}D)",
-                f"(_abx * {dx!r}D + _aby * {dy!r}D + _abz * {dz!r}D)",
-                f"({nx!r}D * _px + {ny!r}D * _py + {nz!r}D * _pz)",
-                f"{dea!r}D",
-            )
-            crosses.append(cross)
-            uncerts.append(uncert)
+        if any(sg == 0.0 for *_, sg in planes):
+            branches.append(f"WHEN tile_i = {t} THEN {_UNCERT}L")
+            continue
+        crosses, dets = [], {}
+        for cx, cy, cz, dx, dy, dz, nx, ny, nz, sg in planes:
+            ab_c = f"(_abx * {cx!r}D + _aby * {cy!r}D + _abz * {cz!r}D)"
+            ab_d = f"(_abx * {dx!r}D + _aby * {dy!r}D + _abz * {dz!r}D)"
+            n_p = f"({nx!r}D * _px + {ny!r}D * _py + {nz!r}D * _pz)"
+            cross = _crossing_sql(ab_c, ab_d, n_p, int(sg))
+            crosses.append(f"(CASE WHEN {cross} THEN 1L ELSE 0L END)")
+            dets.update(dict.fromkeys((ab_c, ab_d, n_p)))
+        uncert = " OR ".join(_indet(x) for x in dets)
         body = (
             f"(({' + '.join(crosses)})"
-            f" + (CASE WHEN {' OR '.join(uncerts)} THEN {_UNCERT}L ELSE 0L END))"
+            f" + (CASE WHEN {uncert} THEN {_UNCERT}L ELSE 0L END))"
         )
         branches.append(f"WHEN tile_i = {t} THEN {body}")
-    # The ELSE arm must STAY the aggregate form even when every
-    # polygon tile is inlined (making it unreachable): a round-6
-    # experiment replaced it with a plain `0L` for inline-only tile
-    # sets and the flagship ran 3.5x SLOWER (interleaved A/B, 13.6s vs
-    # 3.9s at x1600) — without the higher-order aggregate() the _wind
-    # CASE counts as collapsible, CollapseProject inlines it into its
-    # multiple consumers (_uncert, _poly_parity -> _keep_sql), and the
-    # whole winding unroll is re-evaluated per consumer per row. The
-    # `edges` column the fallback references is always present
-    # (covering_frames ships typed empty arrays for inline tiles).
+    # The ELSE arm STAYS the aggregate form even when every polygon
+    # tile is inlined (making it unreachable). aggregate() is a
+    # CodegenFallback, so it keeps this refinement Project out of
+    # whole-stage codegen. Without it (ELSE 0L) the refinement fuses
+    # into the scan/join stage, whose largest generated method is then
+    # 12,925 bytes of bytecode for the flagship plan (6,655 with the
+    # arm; `bench_extra.py plancost`), above HotSpot's 8,000-byte
+    # huge-method limit: that method is never JIT-compiled and every
+    # row runs through it interpreted. The fixed per-task cost it saves
+    # is smaller than that per-row cost beyond a few hundred thousand
+    # rows. Best `bench_extra.py flagship` pass at local[4] on a 4-core
+    # host: x256 (1.28M pages) 8.45 s without the arm vs 5.83 s with
+    # it; x32 3.78 vs 4.16 s. With -XX:-DontCompileHugeMethods the
+    # order flips at x256 (4.85 vs 5.93 s), so the slowdown round 6
+    # measured at x1600 is this JIT limit, not CollapseProject
+    # re-evaluating the winding per consumer. The `edges` column the
+    # fallback references is always present (covering_frames ships
+    # typed empty arrays for inline tiles).
     fallback = _winding_agg_sql()
     if not branches:
         return fallback

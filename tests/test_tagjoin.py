@@ -125,12 +125,90 @@ def test_big_polygon_aggregate_path_matches_kernel(spark):
     assert cand.filter(F.col("_uncert_poly")).count() == 0
 
 
+def _adversarial_rows(tiles) -> list[tuple[str, float, float]]:
+    """Points on and 1e-14 / 1e-12 degrees off every ring vertex, and
+    1/4, 1/3 and 1/2 of the way along every edge (in degrees)."""
+    offs = (0.0, 1e-14, -1e-14, 1e-12, -1e-12)
+    rows = []
+    for _, geom in tiles:
+        ring = geom["coordinates"][0]
+        for lng, lat in ring[:-1]:
+            for dlat in offs:
+                for dlng in offs:
+                    rows.append((f"v{len(rows)}", lat + dlat, lng + dlng))
+        for (lng0, lat0), (lng1, lat1) in zip(ring, ring[1:]):
+            for f in (0.25, 1 / 3, 0.5):
+                rows.append(
+                    (f"e{len(rows)}", lat0 + f * (lat1 - lat0), lng0 + f * (lng1 - lng0))
+                )
+    return rows
+
+
+@pytest.mark.parametrize("tiles_name", ["PIP_TILES", "BIG_PIP_TILES"])
+def test_inline_and_aggregate_winding_decide_alike(spark, monkeypatch, tiles_name):
+    """The inlined per-tile winding and the array-aggregate winding make
+    the same decision and flag the same lanes on adversarial vertex and
+    edge points, each path forced through MAX_INLINE_EDGES; their
+    certified lanes agree with the scalar port."""
+    import __spark_entry__ as e
+    from s2js_spark.geometry.point import Point
+    from s2js_spark.spark import tagjoin
+
+    tiles = getattr(e, tiles_name)
+    ts = build_tileset(tiles, max_cells=64)
+    df = spark.createDataFrame(
+        pd.DataFrame(_adversarial_rows(tiles), columns=["url", "lat", "lng"])
+    )
+    got = {}
+    for limit, head in ((0, "aggregate("), (10**6, "CASE ")):
+        monkeypatch.setattr(tagjoin, "MAX_INLINE_EDGES", limit)
+        assert tagjoin._winding_inline_sql(ts).startswith(head)
+        cand = tag_candidates(spark, df, ts).select(
+            "url", "lat", "lng", "tile_i", "_keep_sql", "_uncert_poly"
+        )
+        got[limit] = sorted(tuple(r) for r in cand.collect())
+    assert got[0] == got[10**6]
+    assert any(r[5] for r in got[0])  # some lanes are uncertified
+    d = math.pi / 180.0
+    certified = [r for r in got[0] if not r[5]]
+    assert certified
+    for _, lat, lng, t, keep, _ in certified:
+        p = Point.from_latlng_radians(lat * d, lng * d)
+        assert keep == ts.shapes[t].contains_point(p)
+
+
+def test_inline_winding_writes_each_determinant_once(monkeypatch):
+    """Guard against the winding SQL regrowing: each vertex's
+    determinant ab.v appears at most 3 times (start of one edge, end of
+    the previous one, the band test), each edge normal's n.p at most
+    twice, and no origin determinant is left as a literal."""
+    import __spark_entry__ as e
+    from s2js_spark.spark import tagjoin
+    from s2js_spark.spark.tiles import _origin_xyz
+
+    monkeypatch.setattr(tagjoin, "MAX_INLINE_EDGES", 10**6)
+    ts = build_tileset(e.PIP_TILES + e.BIG_PIP_TILES, max_cells=16)
+    sql = tagjoin._winding_inline_sql(ts)
+    ox, oy, oz = _origin_xyz()
+    n_vertex = 0
+    for t in range(len(ts.tile_ids)):
+        for cx, cy, cz, dx, dy, dz, nx, ny, nz, _ in tagjoin._edge_planes(ts, t):
+            vertex = f"_abx * {cx!r}D + _aby * {cy!r}D + _abz * {cz!r}D"
+            assert 1 <= sql.count(vertex) <= 3
+            assert 1 <= sql.count(f"{nx!r}D * _px + {ny!r}D * _py + {nz!r}D * _pz") <= 2
+            assert repr(nx * ox + ny * oy + nz * oz) not in sql
+            n_vertex += 1
+    assert n_vertex == int(ts.edge_off[-1]) > 240
+
+
 def test_pairs_plan_stays_compact(spark):
     """Regression guard for the round-3 barrier fix: the refinement
     stack must appear ONCE in the executed plan (attribute references
     in the decision filter / residual UDF), not alias-substituted into
     the covering-join condition — that blow-up measured 530 KB of plan
-    and ~2s of fixed per-execution cost."""
+    and ~2s of fixed per-execution cost. The length bound also guards
+    the compact winding: 84,185 characters with the per-edge sign CASE
+    form it replaced, 70,810 with it."""
     from s2js_spark.spark.pages import pages
     from s2js_spark.spark.pipeline import extract_geotags
 
@@ -138,7 +216,7 @@ def test_pairs_plan_stays_compact(spark):
     geo = extract_geotags(pages(spark, SF)).filter(F.col("lat").isNotNull())
     pairs = tag_tiles_pairs(spark, geo.select("url", "lat", "lng"), ts)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
-    assert len(plan) < 200_000
+    assert len(plan) < 80_000
     # decision inputs reach the residual UDF as attributes, not
     # re-inlined expressions
     udf_line = next(l for l in plan.splitlines() if "ArrowEvalPython" in l)
