@@ -692,9 +692,7 @@ def _q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 10-minute windows per event type (batch form of the
-    streaming aggregation; see tests/test_streaming_ops.py and
-    tests/test_spark_engine.py for the Structured Streaming variant)."""
+    """Tumbling 10-minute windows per event type."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     win = (F.unix_timestamp("ts").cast("long") / 600).cast("long") * 600
     return (

@@ -14,8 +14,9 @@ Layers
   reference the tests compare against.
 - ``s2js_spark.spark``     the Spark surface: cell arithmetic as SQL
   expressions (``sqlkernels``) and registered SQL functions,
-  deterministic pages-table synthesis, spatial joins, dedup/text/
-  similarity pipeline operators.
+  deterministic pages-table synthesis, the url-bucketed pages layout
+  and its one resumable writer (``storage``), the broadcast tag join,
+  kNN and buffer joins, dedup/text/similarity pipeline operators.
 """
 
 __version__ = "0.1.0"

@@ -9,10 +9,6 @@ AQE handles skew), and a window takes the top-k by chord^2. Queries
 whose k-th neighbor cannot be certified inside the neighborhood
 (k-th distance > the level's minimum cell width) are re-run brute
 force — an escalation that is empty for well-chosen levels.
-
-``polygon_pair_join`` joins two tile sets on covering-range overlap
-(interval join on the Hilbert line) and refines with exact
-polygon-polygon intersection.
 """
 
 from __future__ import annotations
@@ -284,135 +280,3 @@ def knn_join(
     )
     good = topk.join(F.broadcast(certified), query_id, "left_semi")
     return good.unionByName(brute_topk)
-
-
-def polygon_pair_join(
-    spark: SparkSession, ts_a, ts_b
-) -> list[tuple[object, object]]:
-    """Candidate + exact pairs between two driver-side tile sets.
-
-    Candidates via covering-range overlap on the Hilbert line (the
-    reference's RangeIterator dual sweep, SURVEY §2.5), refined with
-    exact polygon intersection. Tile sets are driver-sized objects; the
-    sweep is O(cells log cells).
-    """
-    events = []  # (range_min, range_max, side, tile)
-    for side, ts in ((0, ts_a), (1, ts_b)):
-        for c, tile in zip(ts.cov_cell, ts.cov_tile):
-            c = int(c)
-            events.append((cs.range_min(c), cs.range_max(c), side, int(tile)))
-    events.sort()
-    # sweep: active intervals per side
-    candidates = set()
-    active: list[tuple[int, int, int]] = []  # (end, side, tile)
-    for start, end, side, tile in events:
-        active = [a for a in active if a[0] >= start]
-        for a_end, a_side, a_tile in active:
-            if a_side != side:
-                pair = (a_tile, tile) if side == 1 else (tile, a_tile)
-                candidates.add(pair)
-        active.append((end, side, tile))
-
-    out = []
-    for ia, ib in sorted(candidates):
-        sa = ts_a.shapes[ia]
-        sb = ts_b.shapes[ib]
-        if _shapes_intersect(sa, sb):
-            out.append((ts_a.tile_ids[ia], ts_b.tile_ids[ib]))
-    return out
-
-
-def rect_intersects_polygon(rect, poly) -> bool:
-    """EXACT rect/polygon intersection, the same recipe as the
-    reference's Rect.intersects(Cell) (Rect.ts:399-447) generalized to
-    polygon loops: vertex containment both ways, then boundary
-    crossings of every polygon edge against the rect's two meridian
-    edges (geodesics, intersects_lng_edge) and two latitude edges
-    (small circles — curved relative to geodesics,
-    intersects_lat_edge)."""
-    from ..geometry.interval import S1Interval
-    from ..geometry.latlng import LatLng
-    from ..geometry.rect import intersects_lat_edge, intersects_lng_edge
-
-    if rect.is_empty():
-        return False
-    for loop in poly.loops:
-        for v in loop.vertices:
-            if rect.contains_latlng(LatLng.from_point(v)):
-                return True
-    for i in range(4):
-        if poly.contains_point(rect.vertex(i).to_point()):
-            return True
-    if not rect.intersects(poly.rect_bound()):
-        return False
-    for loop in poly.loops:
-        n = len(loop.vertices)
-        for i in range(n):
-            a = loop.vertices[i]
-            b = loop.vertices[(i + 1) % n]
-            lla = LatLng.from_point(a)
-            llb = LatLng.from_point(b)
-            edge_lng = S1Interval.from_endpoints(lla.lng, llb.lng)
-            if not rect.lng.intersects(edge_lng):
-                continue
-            if edge_lng.contains(rect.lng.lo) and intersects_lng_edge(
-                a, b, rect.lat, rect.lng.lo
-            ):
-                return True
-            if edge_lng.contains(rect.lng.hi) and intersects_lng_edge(
-                a, b, rect.lat, rect.lng.hi
-            ):
-                return True
-            if intersects_lat_edge(a, b, rect.lat.lo, rect.lng):
-                return True
-            if intersects_lat_edge(a, b, rect.lat.hi, rect.lng):
-                return True
-    return False
-
-
-def cap_intersects_polygon(cap, poly) -> bool:
-    """EXACT cap/polygon intersection: center containment or any
-    boundary edge within the cap's angular radius
-    (edge_distances.distance_from_segment)."""
-    from ..geometry.edge_distances import distance_from_segment
-
-    if poly.contains_point(cap.center):
-        return True
-    r = cap.radius()
-    for loop in poly.loops:
-        n = len(loop.vertices)
-        for i in range(n):
-            if (
-                distance_from_segment(
-                    cap.center, loop.vertices[i], loop.vertices[(i + 1) % n]
-                )
-                <= r
-            ):
-                return True
-    return False
-
-
-def _shapes_intersect(a, b) -> bool:
-    from ..geometry.cap import Cap
-    from ..geometry.polygon import Polygon
-    from ..geometry.rect import Rect
-
-    if isinstance(a, Polygon) and isinstance(b, Polygon):
-        return a.intersects(b)
-    if isinstance(a, Rect) and isinstance(b, Rect):
-        return a.intersects(b)
-    if isinstance(a, Cap) and isinstance(b, Cap):
-        return a.intersects(b)
-    for x, y in ((a, b), (b, a)):
-        if isinstance(x, Rect) and isinstance(y, Polygon):
-            return rect_intersects_polygon(x, y)
-        if isinstance(x, Cap) and isinstance(y, Polygon):
-            return cap_intersects_polygon(x, y)
-    # cap x rect: conservative bound check (APPROXIMATE — may report
-    # touching bounds as intersecting; no exact cap/rect predicate in
-    # the reference either)
-    ra = a.rect_bound() if hasattr(a, "rect_bound") else None
-    rb = b.rect_bound() if hasattr(b, "rect_bound") else None
-    if ra is not None and rb is not None and not ra.intersects(rb):
-        return False
-    return True

@@ -8,9 +8,9 @@ Two decode tiers:
   sample decode (``decode_ppm``/``decode_wav``), features = mean
   pixel value / RMS amplitude, hash-verified against a DuckDB oracle
   (the ``media_decode`` query).
-- FAKE (``FAKE_DECODE``): the heavyweight codecs (JPEG/MP3/video) are
-  not available in this container, so that decode step is a clearly
-  marked deterministic fake; swap in PIL/ffmpeg/librosa in
+- FAKE (``_decode_feature``): the heavyweight codecs (JPEG/MP3/video)
+  are not available, so that decode step is a clearly marked
+  deterministic digest fake; swap in PIL/ffmpeg/librosa in
   production. The Spark-side plumbing — schema, Arrow batch shape,
   partition-stable iteration — is identical to the real tier.
 """
@@ -23,8 +23,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -60,39 +59,14 @@ FEATURE_SCHEMA = StructType(
     ]
 )
 
-FAKE_DECODE = True  # no codec libs in this container
-
-
-def synth_media(spark: SparkSession, df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Derive a deterministic media table from any id column: payload
-    bytes are a seeded function of the id (stands in for real blobs)."""
-    kind = (
-        F.when(F.col(id_col) % 3 == 0, "image")
-        .when(F.col(id_col) % 3 == 1, "audio")
-        .otherwise("video")
-    )
-    payload = F.encode(
-        F.concat(F.lit("BLOB:"), F.md5(F.col(id_col).cast("string"))), "UTF-8"
-    )
-    return df.select(
-        F.col(id_col).alias("media_id"),
-        kind.alias("kind"),
-        payload.alias("payload"),
-        (F.col(id_col) % 1920 + 16).cast("int").alias("width"),
-        (F.col(id_col) % 1080 + 16).cast("int").alias("height"),
-        (F.col(id_col) % 60000).cast("int").alias("duration_ms"),
-    )
-
 
 def _decode_feature(payload: bytes, kind: str, dim: int = 8) -> np.ndarray:
     """STUB decode: a deterministic fake feature vector.
 
     Production would decode the payload (PIL / ffmpeg / librosa) and
-    extract real features; the container has no codecs, so we derive a
+    extract real features; without codec libraries we derive a
     stable pseudo-feature from the payload digest instead.
     """
-    if not FAKE_DECODE:  # pragma: no cover
-        raise NotImplementedError("real codecs not available in this container")
     digest = hashlib.sha256(payload + kind.encode()).digest()
     vals = struct.unpack("<8I", digest[:32])
     return (np.array(vals, dtype=np.float64) / 2**32).astype(np.float32)[:dim]
@@ -104,8 +78,8 @@ def _decode_feature(payload: bytes, kind: str, dim: int = 8) -> np.ndarray:
 # NumPy/struct. Payloads are genuine container bytes (header + raw
 # data); the decoder parses the header for real (a corrupted magic or
 # truncated chunk raises), so the hash-verified feature certifies the
-# encode -> decode -> feature chain, not a digest fake. FAKE_DECODE
-# remains for the codec-less kinds (JPEG/MP3/video).
+# encode -> decode -> feature chain, not a digest fake. The digest
+# fake remains for the codec-less kinds (JPEG/MP3/video).
 # ---------------------------------------------------------------------------
 
 DECODED_SCHEMA = StructType(
@@ -255,11 +229,11 @@ def extract_decoded_features(df: DataFrame) -> DataFrame:
 
 def synth_mixed_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Media table with REAL container payloads for the decodable
-    modalities (round-4 verdict #7): kind by id % 3 exactly as
-    synth_media, but image payloads are genuine P6 PPM bytes and audio
-    payloads genuine PCM16 WAV bytes (_ppm_bytes/_wav_bytes); only
-    video keeps the digest-fake blob (no video codec in this
-    container). Metadata columns match synth_media."""
+    modalities (round-4 verdict #7): kind by id % 3, image payloads
+    are genuine P6 PPM bytes and audio payloads genuine PCM16 WAV
+    bytes (_ppm_bytes/_wav_bytes); only video keeps a digest-fake
+    blob (no video codec). Metadata columns are seeded functions of
+    the id."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -317,7 +291,7 @@ def _feature_vector(payload: bytes, kind: str, dim: int = 8) -> list[float]:
     return [float(v) for v in _decode_feature(buf, kind, dim)]
 
 
-def extract_features(df: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over Arrow batches. Payloads
     carrying a real container (P6 PPM / RIFF WAVE) get genuinely
     decoded features; anything else falls back to the documented

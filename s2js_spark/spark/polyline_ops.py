@@ -28,7 +28,6 @@ import math
 import numpy as np
 from pyspark.sql import DataFrame
 
-from .tiles import MAX_DETERMINANT_ERROR
 
 _D = math.pi / 180.0
 
@@ -204,203 +203,3 @@ def clip_oracle_exprs(
     bx, by, bz = _xyz_exprs(blat, blng, lit)
     keep, lo, hi = clip_interval_exprs(planes, ax, ay, az, bx, by, bz, lit)
     return keep, f"round({lo}, 6)", f"round({hi}, 6)"
-
-
-def _polygon_clip_arrays(polygon):
-    """Flat NumPy edge arrays (cx..dz) over ALL loops of ``polygon``
-    plus the polygon's origin parity — cached on the polygon instance
-    so each executor builds them once per broadcast value."""
-    arr = getattr(polygon, "_clip_vec_arrays", None)
-    if arr is None:
-        rows = []
-        origin_parity = False
-        for loop in polygon.loops:
-            n = len(loop.vertices)
-            origin_parity ^= bool(loop.origin_inside)
-            for i in range(n):
-                a, b = loop.vertex(i), loop.vertex(i + 1)
-                rows.append((a.x, a.y, a.z, b.x, b.y, b.z))
-        e = np.array(rows, dtype=np.float64).reshape(-1, 6)
-        arr = (e[:, 0], e[:, 1], e[:, 2], e[:, 3], e[:, 4], e[:, 5],
-               origin_parity)
-        try:
-            polygon._clip_vec_arrays = arr
-        except AttributeError:  # pragma: no cover - frozen shapes
-            pass
-    return arr
-
-
-def _sign_band(det: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(sign in {-1,0,1}, indeterminate mask) with the certified band."""
-    s = np.where(det > MAX_DETERMINANT_ERROR, 1, np.where(det < -MAX_DETERMINANT_ERROR, -1, 0))
-    return s.astype(np.int8), np.abs(det) <= MAX_DETERMINANT_ERROR
-
-
-def _crossing_triage(ax_, ay_, az_, bx_, by_, bz_, cx, cy, cz, dx, dy, dz):
-    """Vectorized EdgeCrosser triage over segments x edges: (proper
-    crossing, indeterminate) masks of shape (S, E). A lane's sign is
-    used only outside the certified determinant band, so a crossing
-    reported here is a crossing of the exact predicate, and every lane
-    whose sign the band cannot certify is flagged indeterminate for
-    the exact per-row path. The orientation identities and the band
-    are the ones tagjoin's SQL winding test uses."""
-    abx = ay_ * bz_ - az_ * by_
-    aby = az_ * bx_ - ax_ * bz_
-    abz = ax_ * by_ - ay_ * bx_
-    det_ab_c = abx[:, None] * cx + aby[:, None] * cy + abz[:, None] * cz
-    det_ab_d = abx[:, None] * dx + aby[:, None] * dy + abz[:, None] * dz
-    nx = cy * dz - cz * dy
-    ny = cz * dx - cx * dz
-    nz = cx * dy - cy * dx
-    det_e_a = nx * ax_[:, None] + ny * ay_[:, None] + nz * az_[:, None]
-    det_e_b = nx * bx_[:, None] + ny * by_[:, None] + nz * bz_[:, None]
-    s_ab_c, i1 = _sign_band(det_ab_c)
-    s_ab_d, i2 = _sign_band(det_ab_d)
-    s_e_a, i3 = _sign_band(det_e_a)
-    s_e_b, i4 = _sign_band(det_e_b)
-    acb = -s_ab_c
-    cross = (
-        (acb == s_ab_d) & (-s_e_b == acb) & (s_e_a == acb) & (acb != 0)
-    )
-    return cross, i1 | i2 | i3 | i4
-
-
-def _clip_batch(poly, line_ids, lats_list, lngs_list):
-    """One Arrow batch of the general clip, vectorized.
-
-    Triage (NumPy, lines x edges): a polyline whose segments have NO
-    certain boundary crossing and NO indeterminate sign lane lies
-    entirely on one side of the polygon; its side is decided by the
-    winding parity of origin -> first-vertex (again triaged). Only
-    lines that cross the boundary — or land in the certified error
-    band — run the exact per-row geometry
-    (clip_polyline_to_polygon, the parity oracle). Real corpora are
-    dominated by non-crossing lines, so the Python lane is the rare
-    exception, not the throughput cap (round-3 verdict #3).
-
-    Returns (rows, n_exact_lines).
-    """
-    from ..geometry.latlng import LatLng
-    from ..geometry.point import Point
-    from ..geometry.polyline import Polyline
-    from ..geometry.polyline_clip import clip_polyline_to_polygon
-
-    cx, cy, cz, dx, dy, dz, origin_parity = _polygon_clip_arrays(poly)
-    d = _D
-    nlines = len(line_ids)
-    lens = np.array([len(x) for x in lats_list], dtype=np.int64)
-    off = np.concatenate(([0], np.cumsum(lens)))
-    total = int(off[-1])
-    if total == 0 or len(cx) == 0:
-        return [], 0
-    flat_lat = np.concatenate(
-        [np.asarray(x, dtype=np.float64) for x in lats_list]
-    )
-    flat_lng = np.concatenate(
-        [np.asarray(x, dtype=np.float64) for x in lngs_list]
-    )
-    latr = flat_lat * d
-    lngr = flat_lng * d
-    coslat = np.cos(latr)
-    # same op order as Point.from_latlng_radians
-    X = np.cos(lngr) * coslat
-    Y = np.sin(lngr) * coslat
-    Z = np.sin(latr)
-
-    is_last = np.zeros(total, dtype=bool)
-    is_last[off[1:] - 1] = True
-    seg_a = np.flatnonzero(~is_last)
-    seg_line = np.repeat(np.arange(nlines), np.maximum(lens - 1, 0))
-
-    needs_exact = np.zeros(nlines, dtype=bool)
-    if len(seg_a):
-        cross, indet = _crossing_triage(
-            X[seg_a], Y[seg_a], Z[seg_a],
-            X[seg_a + 1], Y[seg_a + 1], Z[seg_a + 1],
-            cx, cy, cz, dx, dy, dz,
-        )
-        seg_flag = (cross | indet).any(axis=1)
-        np.logical_or.at(needs_exact, seg_line, seg_flag)
-
-    # side of each non-crossing line = parity of origin -> v0 chain
-    o = Point.origin_point()
-    has_v = lens > 0
-    v0 = off[:-1][has_v]
-    ox = np.full(len(v0), o.x)
-    oy = np.full(len(v0), o.y)
-    oz = np.full(len(v0), o.z)
-    cross0, indet0 = _crossing_triage(
-        ox, oy, oz, X[v0], Y[v0], Z[v0], cx, cy, cz, dx, dy, dz
-    )
-    inside = np.zeros(nlines, dtype=bool)
-    inside[has_v] = ((cross0.sum(axis=1) & 1) != 0) ^ origin_parity
-    needs_exact[has_v] |= indet0.any(axis=1)
-
-    rows = []
-    out_lat = np.arctan2(Z, np.sqrt(X * X + Y * Y)) / d
-    out_lng = np.arctan2(Y, X) / d
-    fast_in = np.flatnonzero(inside & ~needs_exact & (lens >= 2))
-    for i in fast_in:
-        a, b = int(off[i]), int(off[i + 1])
-        rows.append(
-            (int(line_ids[i]), 0, out_lat[a:b].tolist(), out_lng[a:b].tolist())
-        )
-
-    exact_idx = np.flatnonzero(needs_exact)
-    for i in exact_idx:
-        a, b = int(off[i]), int(off[i + 1])
-        line = Polyline(
-            [
-                Point.from_latlng_radians(float(la) * d, float(ln) * d)
-                for la, ln in zip(flat_lat[a:b], flat_lng[a:b])
-            ]
-        )
-        for k, piece in enumerate(clip_polyline_to_polygon(line, poly)):
-            lls = [LatLng.from_point(p) for p in piece.points]
-            rows.append(
-                (
-                    int(line_ids[i]), k,
-                    [ll.lat / d for ll in lls],
-                    [ll.lng / d for ll in lls],
-                )
-            )
-    return rows, int(len(exact_idx))
-
-
-def clip_polylines(
-    df: DataFrame,
-    polygon,
-    line_id: str = "line_id",
-    lats_col: str = "lats",
-    lngs_col: str = "lngs",
-) -> DataFrame:
-    """Distributed GENERAL polyline clipping (concave polygons, holes):
-    each row is a polyline (degree arrays); the polygon ships once per
-    executor via broadcast. The batch interior is VECTORIZED
-    (_clip_batch): NumPy sign triage classifies every line, and only
-    boundary-crossing / error-band lines run the per-row exact
-    geometry — the round-2/3 per-row Python loop survives solely as
-    that rare exact lane. Output: one row per clipped piece
-    (line_id, piece, plats, plngs). Map-only — no shuffle."""
-    import pandas as pd
-
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast(polygon)
-    out_schema = (
-        f"{line_id} long, piece int, plats array<double>, plngs array<double>"
-    )
-
-    def run(batches):
-        poly = bc.value
-        for pdf in batches:
-            rows, _ = _clip_batch(
-                poly,
-                pdf[line_id].to_numpy(),
-                list(pdf[lats_col]),
-                list(pdf[lngs_col]),
-            )
-            yield pd.DataFrame(
-                rows, columns=[line_id, "piece", "plats", "plngs"]
-            )
-
-    return df.select(line_id, lats_col, lngs_col).mapInPandas(run, out_schema)

@@ -140,56 +140,6 @@ def test_random_segments_agree_with_interval_clip(seed):
         assert pieces[0].points[-1].distance(_interp(a, b, hi)) < 1e-11
 
 
-def test_distributed_clip_matches_driver(tmp_path):
-    """mapInPandas general clip == driver-side geometry clip, row for
-    row, on a concave star polygon."""
-    from s2js_spark.spark.polyline_ops import clip_polylines
-    from s2js_spark.spark.session import get_session
-
-    ring = []
-    n = 12
-    for k in range(n):
-        th = 2.0 * math.pi * k / n
-        r = 1.0 + 0.5 * math.cos(3 * th)
-        ring.append([8.0 + r * math.cos(th), 1.0 + r * math.sin(th)])
-    ring.append(list(ring[0]))
-    poly = _poly_from_ring(ring)
-
-    rng = np.random.RandomState(4)
-    lines = []
-    for i in range(30):
-        npts = rng.randint(2, 5)
-        lats = [float(rng.uniform(-1, 3)) for _ in range(npts)]
-        lngs = [float(rng.uniform(5.5, 10.5)) for _ in range(npts)]
-        lines.append((i, lats, lngs))
-
-    spark = get_session("local[4]", shuffle_partitions=4)
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        df = spark.createDataFrame(
-            lines, "line_id long, lats array<double>, lngs array<double>"
-        )
-        got = {}
-        for r in clip_polylines(df, poly).collect():
-            got.setdefault(r.line_id, []).append((r.piece, r.plats, r.plngs))
-
-        n_pieces_total = 0
-        for i, lats, lngs in lines:
-            line = _line(list(zip(lats, lngs)))
-            want = clip_polyline_to_polygon(line, poly)
-            have = sorted(got.get(i, []))
-            assert len(have) == len(want)
-            for (_, plats, plngs), piece in zip(have, want):
-                assert len(plats) == len(piece.points)
-                for la, ln, p in zip(plats, plngs, piece.points):
-                    q = _pt(la, ln)
-                    assert p.distance(q) < 1e-12
-            n_pieces_total += len(want)
-        assert n_pieces_total > 5  # the fixture actually exercises clipping
-    finally:
-        spark.stop()
-
-
 def test_sql_exprs_match_numpy_fold():
     """The generated SQL text (DuckDB dialect) reproduces the numpy
     fold bit-for-bit on concrete endpoints."""
@@ -244,66 +194,6 @@ def test_sql_exprs_match_numpy_fold():
             # vs the separately-rounded chain; the operator rounds its
             # public t0/t1 to 1e-6 precisely so this can't flip hashes
             assert abs(lo_v - ref[0]) < 1e-12 and abs(hi_v - ref[1]) < 1e-12
-
-
-def _star_poly():
-    ring = []
-    n = 12
-    for k in range(n):
-        th = 2.0 * math.pi * k / n
-        r = 1.0 + 0.5 * math.cos(3 * th)
-        ring.append([8.0 + r * math.cos(th), 1.0 + r * math.sin(th)])
-    ring.append(list(ring[0]))
-    return _poly_from_ring(ring)
-
-
-def test_clip_batch_vectorized_classification_and_parity():
-    """Round-4: the vectorized batch interior (_clip_batch) sends ONLY
-    boundary-crossing / error-band lines to the exact Python lane and
-    matches the driver path row for row on a mixed corpus."""
-    from s2js_spark.spark.polyline_ops import _clip_batch
-
-    poly = _star_poly()
-    rng = np.random.RandomState(7)
-    ids, lats, lngs = [], [], []
-    # 60 tiny lines deep inside, 60 far outside, 60 random (some cross)
-    for i in range(60):
-        la, ln = rng.uniform(0.9, 1.1), rng.uniform(7.9, 8.1)
-        ids.append(i)
-        lats.append([la, la + 0.02, la + 0.04])
-        lngs.append([ln, ln + 0.02, ln - 0.02])
-    for i in range(60, 120):
-        la, ln = rng.uniform(30, 40), rng.uniform(60, 80)
-        ids.append(i)
-        lats.append([la, la + 0.5])
-        lngs.append([ln, ln + 0.5])
-    for i in range(120, 180):
-        npts = rng.randint(2, 5)
-        ids.append(i)
-        lats.append([float(rng.uniform(-1, 3)) for _ in range(npts)])
-        lngs.append([float(rng.uniform(5.5, 10.5)) for _ in range(npts)])
-
-    rows, n_exact = _clip_batch(poly, np.array(ids), lats, lngs)
-    # classification: the 120 clearly-inside/outside lines never hit
-    # the Python lane
-    assert n_exact <= 60
-
-    got = {}
-    for lid, piece, plats, plngs in rows:
-        got.setdefault(lid, []).append((piece, plats, plngs))
-    n_pieces = 0
-    for i, la_arr, ln_arr in zip(ids, lats, lngs):
-        want = clip_polyline_to_polygon(
-            _line(list(zip(la_arr, ln_arr))), poly
-        )
-        have = sorted(got.get(i, []))
-        assert len(have) == len(want), f"line {i}"
-        for (_, plats, plngs), piece in zip(have, want):
-            assert len(plats) == len(piece.points)
-            for la, ln, p in zip(plats, plngs, piece.points):
-                assert p.distance(_pt(la, ln)) < 1e-12
-        n_pieces += len(want)
-    assert n_pieces >= 70  # inside lines emit; some crossers too
 
 
 def test_convex_clip_codegen_compiles(tmp_path):

@@ -24,8 +24,6 @@ ALLOWLIST = {
     "functions.s2_rect_contains": "SQL-callable predicate surface (SURVEY §2.13)",
     "functions.s2_cap_contains": "SQL-callable predicate surface (SURVEY §2.13)",
     "tagjoin._exact_or_keep": "exact residual over triage-uncertified polygon lanes",
-    "polyline_ops.clip_polylines": "exact concave clip for lines the SQL triage cannot decide",
-    "streaming.sessionize_events": "stateful sessionization (GroupState) is the operator",
     "multimodal.synth_real_media": "media container synthesis (PPM/WAV encode)",
     "multimodal.synth_mixed_media": "media container synthesis (PPM/WAV encode)",
     "multimodal.extract_features": "media decode + feature extraction",

@@ -10,6 +10,8 @@ re-attachment from a fresh catalog (the multi-session scaling phase).
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 
 import pytest
@@ -18,7 +20,10 @@ from pyspark.sql import functions as F
 from s2js_spark.spark.pipeline import dedup_latest, extract_geotags
 from s2js_spark.spark.session import get_session
 from s2js_spark.spark.storage import (
+    MANIFEST,
+    _bucket_files,
     ensure_bucketed,
+    manifest,
     no_exchange_before_window,
     write_bucketed,
 )
@@ -130,7 +135,6 @@ def test_write_bucketed_one_file_per_bucket(spark, tmp_path):
     path = str(tmp_path / "pg")
     write_bucketed(_pages_df(spark), path, "pages_bucket_files_test", "url", 8)
     import glob
-    import os
 
     files = [
         f
@@ -141,55 +145,54 @@ def test_write_bucketed_one_file_per_bucket(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS pages_bucket_files_test")
 
 
-def test_resumable_bucketed_write_crash_resume(spark, tmp_path):
-    """Round-4: the resumable sink and the bucketed layout are ONE
-    mechanism — crash-injected write into a hash-clustered table,
-    resume skips committed buckets and cleans uncommitted leftovers,
-    and the re-attached table serves the dedup window with zero
-    Exchange (HashPartitioning from the scan)."""
-    from s2js_spark.spark.checkpoint import (
-        attach_stage_bucketed,
-        completed_buckets,
-        manifest,
-        resumable_write_bucketed,
-    )
-    from s2js_spark.spark.storage import _schema_ddl
+def _crash_after_bucket(path, k, torn=False):
+    """Leave the state a writer that died between its data commit and
+    its bookkeeping leaves: every bucket's files on disk, the log only
+    up to bucket ``k`` (and, with ``torn``, a half-written next line)."""
+    kept = [m for m in manifest(path) if m["bucket"] <= k]
+    with open(os.path.join(path, MANIFEST), "w") as fh:
+        fh.writelines(json.dumps(m) + "\n" for m in kept)
+        if torn:
+            fh.write('{"key": "url", "n_buck')
 
+
+def test_resumable_bucketed_write_crash_resume(spark, tmp_path):
+    """The resumable writer and the bucketed layout are ONE mechanism:
+    after a crash between data commit and bookkeeping, resume keeps the
+    committed buckets, replaces the uncommitted leftovers, and the
+    re-attached table serves the dedup window with zero Exchange
+    (HashPartitioning from the scan)."""
     df = _pages_df(spark)
     path = str(tmp_path / "stage_bucketed")
     tbl = "stage_bucketed_test"
     try:
-        with pytest.raises(RuntimeError, match="injected failure"):
-            resumable_write_bucketed(
-                df, path, tbl, "stageX", "fp1", key_col="url",
-                n_buckets=8, fail_after_bucket=3,
-            )
-        done = completed_buckets(path, "stageX", "fp1")
-        assert done == {0, 1, 2, 3}
+        ensure_bucketed(spark, lambda: df, path, tbl, "url", 8)
+        _crash_after_bucket(path, 3)
+        assert {m["bucket"] for m in manifest(path)} == {0, 1, 2, 3}
+        before = _bucket_files(path)
 
-        rep = resumable_write_bucketed(
-            df, path, tbl, "stageX", "fp1", key_col="url", n_buckets=8
-        )
-        assert rep.buckets_skipped == [0, 1, 2, 3]
-        assert rep.buckets_written == [4, 5, 6, 7]
+        # the log's schema is part of its identity: another input raises
+        # before any leftover is deleted
+        with pytest.raises(ValueError, match="was written CLUSTERED BY"):
+            ensure_bucketed(spark, lambda: df.drop("lang"), path, tbl, "url", 8)
+        assert _bucket_files(path) == before
 
-        # manifest row counts reflect exactly the persisted files
-        per_bucket = {
-            m["bucket"]: m["row_count"]
-            for m in manifest(path)
-            if m["stage"] == "stageX"
-        }
-        assert sum(per_bucket.values()) == 2000
+        ensure_bucketed(spark, lambda: df, path, tbl, "url", 8)
+        log = manifest(path)
+        assert [m["bucket"] for m in log] == list(range(8))
+        after = _bucket_files(path)
+        # only the pending buckets were written
+        assert all(after[b] == before[b] for b in range(4))
+        assert all(after[b] != before[b] for b in range(4, 8))
+        # the log's row counts reflect exactly the persisted files
+        assert sum(m["row_count"] for m in log) == 2000
 
-        # idempotent: a third call writes nothing
-        rep2 = resumable_write_bucketed(
-            df, path, tbl, "stageX", "fp1", key_col="url", n_buckets=8
-        )
-        assert rep2.buckets_written == []
+        # idempotent: a third call writes nothing (nor builds its input)
+        ensure_bucketed(spark, lambda: 1 / 0, path, tbl, "url", 8)
+        assert manifest(path) == log and _bucket_files(path) == after
 
-        attached = attach_stage_bucketed(
-            spark, path, tbl, _schema_ddl(df), key_col="url", n_buckets=8
-        )
+        spark.sql(f"DROP TABLE {tbl}")  # a fresh session re-attaches
+        attached = ensure_bucketed(spark, lambda: 1 / 0, path, tbl, "url", 8)
         assert attached.count() == 2000  # no dups from the crashed attempt
         dd = dedup_latest(attached)
         assert no_exchange_before_window(dd)
@@ -207,34 +210,43 @@ def test_resumable_bucketed_write_crash_resume(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
+def test_resume_after_torn_manifest_line(spark, tmp_path):
+    """A resume after a torn trailing log line leaves a log that reads
+    back whole: the writer replaces the log, it does not append to the
+    torn line."""
+    df = _pages_df(spark)
+    path = str(tmp_path / "torn_resume")
+    tbl = "torn_resume_test"
+    try:
+        write_bucketed(df, path, tbl, "url", 8)
+        _crash_after_bucket(path, 5, torn=True)
+        ensure_bucketed(spark, lambda: df, path, tbl, "url", 8)
+        log = manifest(path)
+        assert [m["bucket"] for m in log] == list(range(8))
+        assert sum(m["row_count"] for m in log) == 2000
+        with open(os.path.join(path, MANIFEST)) as fh:
+            assert all(json.loads(line) for line in fh)
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
 def test_resumable_bucketed_filter_matches_writer_spec(spark, tmp_path):
     """The resume filter pmod(hash(key), n) must equal the bucket id
     Spark's bucketed writer stamps into file names — otherwise resume
     would mix committed and uncommitted rows in one file bucket."""
-    import os
-
-    from s2js_spark.spark.checkpoint import (
-        _file_bucket,
-        resumable_write_bucketed,
-    )
-
     df = _pages_df(spark)
     path = str(tmp_path / "spec_check")
     tbl = "spec_check_test"
     try:
-        resumable_write_bucketed(
-            df, path, tbl, "s", "fp", key_col="url", n_buckets=8
-        )
+        write_bucketed(df, path, tbl, "url", 8)
         checked = 0
-        for fn in os.listdir(path):
-            if not fn.endswith(".parquet"):
-                continue
-            b = _file_bucket(fn)
-            rows = spark.read.parquet(os.path.join(path, fn)).select(
-                F.pmod(F.hash(F.col("url")), F.lit(8)).alias("calc")
-            ).distinct().collect()
-            assert [r["calc"] for r in rows] == [b], fn
-            checked += 1
+        for b, fns in _bucket_files(path).items():
+            for fn in fns:
+                rows = spark.read.parquet(os.path.join(path, fn)).select(
+                    F.pmod(F.hash(F.col("url")), F.lit(8)).alias("calc")
+                ).distinct().collect()
+                assert [r["calc"] for r in rows] == [b], fn
+                checked += 1
         assert checked >= 4
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -244,23 +256,17 @@ def test_manifest_tolerates_torn_trailing_line(tmp_path):
     """A crash mid-append can tear the FINAL manifest line; resume
     must self-heal (the torn bucket was never committed). A malformed
     line anywhere else is real corruption and still raises."""
-    import json
-
-    import pytest
-
-    from s2js_spark.spark.checkpoint import MANIFEST, manifest
-
     path = str(tmp_path / "torn")
     (tmp_path / "torn").mkdir()
-    good = {"stage": "s", "input_fingerprint": "fp", "bucket": 0,
-            "row_count": 10, "wall_sec": 0.1, "written_at": "t"}
+    good = {"key": "url", "n_buckets": 8, "schema": "`url` string",
+            "bucket": 0, "row_count": 10, "wall_sec": 0.1, "written_at": "t"}
     mp = tmp_path / "torn" / MANIFEST
-    mp.write_text(json.dumps(good) + "\n" + '{"stage": "s", "bu')
+    mp.write_text(json.dumps(good) + "\n" + '{"key": "url", "bu')
     rows = manifest(path)
     assert rows == [good]
 
     # torn line NOT at the end -> raise
-    mp.write_text('{"stage": "s", "bu\n' + json.dumps(good) + "\n")
+    mp.write_text('{"key": "url", "bu\n' + json.dumps(good) + "\n")
     with pytest.raises(json.JSONDecodeError):
         manifest(path)
 
@@ -269,23 +275,13 @@ def test_resumable_bucketed_table_spec_mismatch_raises(spark, tmp_path):
     """CREATE TABLE IF NOT EXISTS silently reuses a pre-existing
     catalog table; if its LOCATION or bucket spec differs from the
     requested one, the write must fail loudly instead of landing data
-    outside the manifested location."""
-    import pytest
-
-    from s2js_spark.spark.checkpoint import resumable_write_bucketed
-
+    outside the logged location."""
     df = _pages_df(spark)
     tbl = "spec_mismatch_test"
     try:
-        resumable_write_bucketed(
-            df, str(tmp_path / "a"), tbl, "s", "fp", key_col="url",
-            n_buckets=8,
-        )
+        ensure_bucketed(spark, lambda: df, str(tmp_path / "a"), tbl, "url", 8)
         with pytest.raises(ValueError, match="LOCATION"):
-            resumable_write_bucketed(
-                df, str(tmp_path / "b"), tbl, "s", "fp", key_col="url",
-                n_buckets=8,
-            )
+            ensure_bucketed(spark, lambda: df, str(tmp_path / "b"), tbl, "url", 8)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
@@ -294,10 +290,6 @@ def test_resumable_bucketed_foreign_file_raises(spark, tmp_path):
     """A parquet data file with no parseable bucket id in its name
     (foreign committer) must abort the resumable write before any
     cleanup or data movement."""
-    import pytest
-
-    from s2js_spark.spark.checkpoint import resumable_write_bucketed
-
     df = _pages_df(spark)
     path = tmp_path / "foreign"
     path.mkdir()
@@ -306,9 +298,51 @@ def test_resumable_bucketed_foreign_file_raises(spark, tmp_path):
     tbl = "foreign_file_test"
     try:
         with pytest.raises(ValueError, match="bucket id"):
-            resumable_write_bucketed(
-                df, str(path), tbl, "s", "fp", key_col="url", n_buckets=8
-            )
+            ensure_bucketed(spark, lambda: df, str(path), tbl, "url", 8)
         assert rogue.exists()  # nothing deleted before the abort
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def test_bucket_count_mismatch_raises(spark, tmp_path):
+    """A layout written into 8 buckets must not be re-attached as 4:
+    Spark trusts the declared bucketing and plans no Exchange, so the
+    per-url count over the mis-declared table would read fewer than
+    700 urls (363 in this module's local[4] session).
+    The log's spec is checked first and the error names both specs."""
+    df = _pages_df(spark)
+    path = str(tmp_path / "n_mismatch")
+    tbl = "n_mismatch_test"
+    try:
+        ensure_bucketed(spark, lambda: df, path, tbl, "url", 8)
+        before = _bucket_files(path)
+        with pytest.raises(ValueError, match="INTO 8 BUCKETS.*INTO 4 BUCKETS"):
+            ensure_bucketed(spark, lambda: df, path, tbl, "url", 4)
+        assert _bucket_files(path) == before
+        again = ensure_bucketed(spark, lambda: 1 / 0, path, tbl, "url", 8)
+        assert again.groupBy("url").count().count() == 700
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def test_rewrite_drops_memoized_plans(spark, tmp_path):
+    """A plan memoized over the table has the same semantics after a
+    rewrite in place, so the writer drops the session's memo: the next
+    call answers from the new files, not the old listing."""
+    from s2js_spark.spark import memo
+
+    path = str(tmp_path / "memo_rewrite")
+    tbl = "memo_rewrite_test"
+
+    def count():
+        t = spark.table(tbl)
+        return memo.cached(spark, "storage-test", lambda: t.groupBy().count(),
+                           plan=t).collect()[0][0]
+
+    try:
+        write_bucketed(_pages_df(spark), path, tbl, "url", 8)
+        assert count() == 2000
+        write_bucketed(_pages_df(spark).limit(300), path, tbl, "url", 8)
+        assert count() == 300
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
