@@ -348,18 +348,17 @@ def _q_buffer_tag_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _VECTORIZE_LEVEL = 10
-_VEC_PREV_SUB = None  # last persisted vectorize intermediate (see below)
 
 
 def _q_cell_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """VECTORIZE (grid -> vector): per-language NORMALIZED cell union
     of the level-10 cells its pages occupy — complete sibling quads
     merge into parents recursively, the canonical raster->vector
-    direction. Distributed per region key via applyInPandas (each
-    region's cell set is small; regions fan out across the cluster);
-    the per-group interior reuses the bit-exact geometry
-    CellUnion.normalize. Oracle: 10 chained quad-merge stages in
-    DuckDB over the same encode."""
+    direction. On a same-level input, normalize keeps each maximal
+    ancestor whose level-10 descendants are all present, so the union
+    is an ancestor count in one JVM plan
+    (sqlkernels.cell_union_normalize). Oracle: 10 chained quad-merge
+    stages in DuckDB over the same encode."""
     from s2js_spark.spark import sqlkernels as sq
 
     df = encode_cells(
@@ -368,67 +367,10 @@ def _q_cell_vectorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = df.select(
         "lang",
         sq.s2_parent_sql("cellid", _VECTORIZE_LEVEL).alias("cell"),
-    ).distinct()
-
-    # Fan-out (round-4 verdict #5): sub-key by the level-4 ancestor.
-    # Every sibling-quad merge at levels >4 is confined to one
-    # (lang, prefix) group — a level-5+ cell's parent lies inside the
-    # same level-4 cell — so subgroups normalize independently and the
-    # applyInPandas stage parallelism is langs x occupied level-4
-    # cells instead of langs (5 serial tasks at 100 TB). Only a prefix
-    # that collapsed COMPLETELY (subgroup output at exactly level 4)
-    # can merge further with sibling prefixes; those rows are KBs and
-    # go through a second, per-lang normalize stage. The union is the
-    # same fixpoint as the single-group normalize: quad merges are
-    # confluent and a level-<=4 merge requires all four level-4
-    # subtrees to be complete.
-    pre = cells.withColumn("_pre4", sq.s2_parent_sql("cell", 4))
-
-    def norm_sub(key, pdf):
-        import numpy as np
-        import pandas as pd
-
-        from s2js_spark.geometry.cellunion import CellUnion
-
-        cu = CellUnion(int(v) & 0xFFFFFFFFFFFFFFFF for v in pdf["cell"])
-        cu.normalize()
-        return pd.DataFrame(
-            {
-                "lang": key[0],
-                "cell": np.array([c for c in cu], dtype=np.uint64).astype(
-                    np.int64
-                ),
-            }
-        )
-
-    sub = pre.groupBy("lang", "_pre4").applyInPandas(
-        norm_sub, "lang string, cell long"
     )
-    # both stage-2 branches read ``sub``; without a persist each branch
-    # re-runs the whole upstream scan+encode+distinct (a second full
-    # pass over the corpus at 100 TB). The persisted set is the
-    # normalized unions — KBs, spill-capable. Each call unpersists the
-    # previous call's intermediate (round-5 verdict nit: repeated
-    # bench trials accumulated one cached KB-table per run).
-    from pyspark import StorageLevel
-
-    global _VEC_PREV_SUB
-    try:
-        if _VEC_PREV_SUB is not None:
-            _VEC_PREV_SUB.unpersist()
-    except Exception:
-        pass
-    sub = sub.persist(StorageLevel.MEMORY_AND_DISK)
-    _VEC_PREV_SUB = sub
-    lvl = sq.s2_level_sql("cell")
-    deep = sub.filter(lvl > 4)
-    coarse = sub.filter(lvl <= 4).groupBy("lang").applyInPandas(
-        norm_sub, "lang string, cell long"
-    )
-    return (
-        deep.unionByName(coarse)
-        .select("lang", sq.s2_token_sql("cell").alias("token"))
-    )
+    return sq.cell_union_normalize(
+        cells, "lang", "cell", _VECTORIZE_LEVEL
+    ).select("lang", sq.s2_token_sql("cell").alias("token"))
 
 
 def _knn_queries_df(spark: SparkSession) -> DataFrame:
@@ -677,18 +619,19 @@ def _q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (P6 PPM images / PCM16 WAV audio) per document, then parse the
     headers and decode the raster/samples with the dependency-free
     NumPy codecs (multimodal.decode_ppm/decode_wav) and extract mean
-    pixel value / RMS amplitude. The DuckDB oracle recomputes the same
+    pixel value / RMS amplitude: the first entry of the
+    extract_features vector media_features reads too, with the decoded
+    sample count. The DuckDB oracle recomputes the same
     features from the closed-form sample generators, so a hash match
     certifies the whole encode -> decode -> feature chain — any header
     or offset bug shifts every byte and breaks it."""
-    from s2js_spark.spark.multimodal import (
-        extract_decoded_features,
-        synth_real_media,
-    )
+    from s2js_spark.spark.multimodal import extract_features, synth_real_media
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    feats = extract_decoded_features(synth_real_media(docs))
-    return feats.select("media_id", "kind", "n_samp", "feature")
+    feats = extract_features(synth_real_media(docs))
+    return feats.select(
+        "media_id", "kind", "n_samp", F.element_at("feature", 1).alias("feature")
+    )
 
 
 def _q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,16 +666,15 @@ def _q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Queries whose BUILD has side effects that would make re-serving the
 # same DataFrame object equivalent to serving stored results: the
 # label-propagation queries execute + localCheckpoint during
-# construction (their fixed point IS the result), and cell_vectorize
-# persists its normalized-union intermediate. Every other query is a
-# pure lazy plan: handing back the identical DataFrame re-executes the
+# construction (their fixed point IS the result). Every other query is
+# a pure lazy plan: handing back the identical DataFrame re-executes the
 # whole computation from the parquet inputs on every action, while
 # skipping seconds of per-call Catalyst re-analysis of the 14-layer
 # encode / refinement chains (measured: rebuild-vs-reuse delta 0.3s
 # for rect_tag up to 2.0s for buffer_tag_multi at sf0.1) — the same
 # prepared-statement pattern as tag_tiles_pairs' memo, extended to the
 # declared query surface: a hit needs the same live session and sf_dir.
-_NO_PLAN_MEMO = {"minhash_dedup", "semantic_dedup", "cell_vectorize"}
+_NO_PLAN_MEMO = {"minhash_dedup", "semantic_dedup"}
 
 
 def _memoized(name: str, fn):

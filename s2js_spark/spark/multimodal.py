@@ -28,7 +28,6 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -52,6 +51,9 @@ FEATURE_SCHEMA = StructType(
         StructField("media_id", LongType()),
         StructField("kind", StringType()),
         StructField("n_bytes", IntegerType()),
+        # decoded samples (raster bytes / PCM samples); null for the
+        # digest fake
+        StructField("n_samp", LongType()),
         # double, not float: the REAL image/audio features are exact
         # float64 integer means (oracle-hashable); the video digest
         # fake is float32-valued and representable exactly either way
@@ -81,16 +83,6 @@ def _decode_feature(payload: bytes, kind: str, dim: int = 8) -> np.ndarray:
 # encode -> decode -> feature chain, not a digest fake. The digest
 # fake remains for the codec-less kinds (JPEG/MP3/video).
 # ---------------------------------------------------------------------------
-
-DECODED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("n_samp", LongType()),
-        StructField("feature", DoubleType()),
-    ]
-)
-
 
 def _ppm_bytes(m: int) -> bytes:
     """Deterministic P6 PPM payload for media id ``m``: 8+m%5 x 6+m%3
@@ -195,38 +187,6 @@ def synth_real_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def extract_decoded_features(df: DataFrame) -> DataFrame:
-    """REAL decode + feature per payload: mean pixel value for PPM
-    images, RMS amplitude for WAV audio. All sums are exact in float64
-    (integer-valued, < 2^53), so the feature is bit-reproducible by
-    any engine that evaluates the same closed form — the DuckDB oracle
-    for the ``media_decode`` query does exactly that."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_samp, feats = [], []
-            for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                buf = bytes(payload)
-                if kind == "image":
-                    px = decode_ppm(buf)
-                    n_samp.append(px.size)
-                    feats.append(float(np.mean(px.astype(np.float64))))
-                else:
-                    s = decode_wav(buf).astype(np.float64)
-                    n_samp.append(s.size)
-                    feats.append(float(np.sqrt(np.mean(s * s))))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"].astype("int64"),
-                    "kind": pdf["kind"],
-                    "n_samp": np.asarray(n_samp, dtype=np.int64),
-                    "feature": np.asarray(feats, dtype=np.float64),
-                }
-            )
-
-    return df.mapInPandas(run, DECODED_SCHEMA)
-
-
 def synth_mixed_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Media table with REAL container payloads for the decodable
     modalities (round-4 verdict #7): kind by id % 3, image payloads
@@ -267,28 +227,31 @@ def synth_mixed_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(id_col).mapInPandas(run, MEDIA_SCHEMA)
 
 
-def _feature_vector(payload: bytes, kind: str, dim: int = 8) -> list[float]:
-    """8-dim feature per payload: REAL decode for the container kinds
-    (image: mean + per-channel means + dims + min/max over the decoded
-    raster; audio: RMS + mean/min/max + sample count + rate), digest
-    fake only for video. All real entries are float64 results of exact
-    integer sums (< 2^53), so feature[0] is oracle-hashable."""
+def _feature_vector(
+    payload: bytes, kind: str, dim: int = 8
+) -> tuple[int | None, list[float]]:
+    """(decoded sample count, 8-dim feature) per payload: REAL decode
+    for the container kinds (image: mean + per-channel means + dims +
+    min/max over the decoded raster; audio: RMS + mean/min/max +
+    sample count + rate), digest fake only for video (count None). All
+    real entries are float64 results of exact integer sums (< 2^53),
+    so feature[0] is oracle-hashable."""
     buf = bytes(payload)
     if kind == "image" and buf[:2] == b"P6":
         px = decode_ppm(buf).astype(np.float64)
         h, w, _ = px.shape
         ch = px.reshape(-1, 3).mean(axis=0)
-        return [
+        return px.size, [
             float(px.mean()), float(ch[0]), float(ch[1]), float(ch[2]),
             float(w), float(h), float(px.min()), float(px.max()),
         ][:dim]
     if kind == "audio" and buf[:4] == b"RIFF":
         s = decode_wav(buf).astype(np.float64)
-        return [
+        return s.size, [
             float(np.sqrt(np.mean(s * s))), float(s.mean()),
             float(s.min()), float(s.max()), float(s.size), 8000.0, 0.0, 0.0,
         ][:dim]
-    return [float(v) for v in _decode_feature(buf, kind, dim)]
+    return None, [float(v) for v in _decode_feature(buf, kind, dim)]
 
 
 def extract_features(df: DataFrame) -> DataFrame:
@@ -299,7 +262,7 @@ def extract_features(df: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [
+            out = [
                 _feature_vector(p, k)
                 for p, k in zip(pdf["payload"], pdf["kind"])
             ]
@@ -308,7 +271,8 @@ def extract_features(df: DataFrame) -> DataFrame:
                     "media_id": pdf["media_id"],
                     "kind": pdf["kind"],
                     "n_bytes": pdf["payload"].map(len).astype("int32"),
-                    "feature": feats,
+                    "n_samp": pd.array([n for n, _ in out], dtype="Int64"),
+                    "feature": [f for _, f in out],
                 }
             )
 

@@ -4,7 +4,9 @@ The executors' only cell arithmetic. Spark SQL column expressions
 carry the whole (lat,lng) -> face/(u,v) -> (s,t) -> (i,j) ->
 Hilbert-encode chain (reference semantics: s2js ``s2/stuv.ts:158-220``
 and ``s2/cellid.ts:360-386``), the cross-face 3x3 cell
-neighbourhood knn fans queries out to, and the hierarchy bit-ops:
+neighbourhood knn fans queries out to, the hierarchy bit-ops, and
+the normalize of a same-level cell union (an ancestor count). The
+encode chain is:
 
 - trig + cube-face projection: CASE/arithmetic on doubles;
 - the quadratic (u,v)->(s,t) projection: sqrt/branch;
@@ -43,7 +45,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..kernels.hilbert import LOOKUP_BITS, LOOKUP_POS
@@ -312,6 +314,44 @@ def s2_level_sql(cellid: Column | str) -> Column:
     lsb = c.bitwiseAND(-c)
     ctz = F.bit_count(lsb - F.lit(1)).cast("int")
     return (F.lit(MAX_LEVEL) - F.shiftrightunsigned(ctz, 1)).cast("int")
+
+
+def cell_union_normalize(df: DataFrame, key: str, cell: str, level: int) -> DataFrame:
+    """``CellUnion.normalize`` per ``key`` of cells that are all at
+    ``level``: distinct ``(key, cell)`` rows of the normalized unions.
+
+    On a same-level input, normalize keeps exactly each maximal
+    ancestor whose 4^(level-L) descendants at ``level`` are all
+    present. Each distinct cell is exploded into its ancestors at
+    levels 0..level-1, a window counts the cells under each
+    ``(key, ancestor)``, and each cell keeps its coarsest complete
+    ancestor, or itself when none is complete. One JVM plan, no
+    Python; the largest window partition is one (key, face) at level
+    0, at most 4^level rows whatever the input size.
+    """
+    cells = df.select(key, cell).distinct()
+    anc = F.inline(
+        F.array(
+            *(
+                F.struct(
+                    F.lit(lv).alias("_lvl"),
+                    s2_parent_sql(cell, lv).alias("_anc"),
+                    F.lit(4 ** (level - lv)).cast("long").alias("_need"),
+                )
+                for lv in range(level)
+            )
+        )
+    )
+    n = F.count(F.lit(1)).over(Window.partitionBy(key, "_anc"))
+    complete = F.when(n == F.col("_need"), F.struct("_lvl", "_anc"))
+    return (
+        cells.select(key, cell, anc)
+        .select(key, cell, complete.alias("_c"))
+        .groupBy(key, cell)
+        .agg(F.min("_c").alias("_top"))
+        .select(key, F.coalesce(F.col("_top._anc"), F.col(cell)).alias(cell))
+        .distinct()
+    )
 
 
 def s2_flip_key_sql(cellid: Column | str) -> Column:

@@ -20,7 +20,6 @@ EMPTY_FACTORIES = ("dict", "set", "list", "OrderedDict")
 ALLOWLIST = {
     "memo._table": "the one plan memo (locked, LRU-bounded)",
     "__spark_entry__._TS_CACHE": "five constant tile sets; session-independent",
-    "__spark_entry__._VEC_PREV_SUB": "one-slot persisted cell_vectorize intermediate",
 }
 
 

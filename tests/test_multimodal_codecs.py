@@ -86,16 +86,19 @@ def test_feature_vector_real_for_container_kinds():
     )
 
     m = 6
-    img = _feature_vector(_ppm_bytes(m), "image")
+    n, img = _feature_vector(_ppm_bytes(m), "image")
     px = decode_ppm(_ppm_bytes(m)).astype(np.float64)
+    assert n == px.size
     assert img[0] == px.mean() and img[4] == px.shape[1] and img[5] == px.shape[0]
     assert img[6] == px.min() and img[7] == px.max()
 
     m = 7
-    aud = _feature_vector(_wav_bytes(m), "audio")
+    n, aud = _feature_vector(_wav_bytes(m), "audio")
     s = decode_wav(_wav_bytes(m)).astype(np.float64)
+    assert n == s.size
     assert aud[0] == float(np.sqrt(np.mean(s * s))) and aud[4] == s.size
 
     blob = b"BLOB:deadbeef"
-    vid = _feature_vector(blob, "video")
+    n, vid = _feature_vector(blob, "video")
+    assert n is None
     assert vid == [float(v) for v in _decode_feature(blob, "video")]

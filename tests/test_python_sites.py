@@ -1,10 +1,10 @@
 """Python runs in the engine only where the Python work is the operator.
 
 Every pandas_udf / mapInPandas / applyInPandas / applyInPandasWithState
-site under s2js_spark/spark/ is listed here by module and enclosing (or
-decorated) function, with the reason it is Python. A new site — say a
-Python twin of a SQL path — fails this test until it is added to the
-allowlist with its reason.
+site under s2js_spark/spark/ and in __spark_entry__.py is listed here
+by module and enclosing (or decorated) function, with the reason it is
+Python. A new site — say a Python twin of a SQL path — fails this test
+until it is added to the allowlist with its reason.
 """
 
 from __future__ import annotations
@@ -13,7 +13,8 @@ import ast
 import fnmatch
 import pathlib
 
-SPARK_DIR = pathlib.Path(__file__).resolve().parent.parent / "s2js_spark" / "spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+SOURCES = sorted((ROOT / "s2js_spark" / "spark").glob("*.py")) + [ROOT / "__spark_entry__.py"]
 
 PYTHON_ENTRYPOINTS = ("pandas_udf", "mapInPandas", "applyInPandas", "applyInPandasWithState")
 
@@ -27,7 +28,6 @@ ALLOWLIST = {
     "multimodal.synth_real_media": "media container synthesis (PPM/WAV encode)",
     "multimodal.synth_mixed_media": "media container synthesis (PPM/WAV encode)",
     "multimodal.extract_features": "media decode + feature extraction",
-    "multimodal.extract_decoded_features": "media decode + feature extraction",
 }
 
 
@@ -63,7 +63,7 @@ def _sites(tree: ast.AST, module: str) -> set[str]:
 
 def python_sites() -> set[str]:
     found: set[str] = set()
-    for path in sorted(SPARK_DIR.glob("*.py")):
+    for path in SOURCES:
         found |= _sites(ast.parse(path.read_text()), path.stem)
     return found
 

@@ -77,11 +77,27 @@ def test_media_feature_plumbing(spark):
     feats = extract_features(synth_mixed_media(docs)).toPandas()
     assert len(feats) == 50
     assert feats["feature"].map(len).eq(8).all()
+    # decoded sample count: null exactly for the digest-fake video
+    assert feats["n_samp"].isna().eq(feats["kind"] == "video").all()
     # deterministic: same id -> same feature
     f2 = extract_features(synth_mixed_media(docs)).toPandas()
     a = [list(v) for v in feats.sort_values("media_id")["feature"]]
     b = [list(v) for v in f2.sort_values("media_id")["feature"]]
     assert a == b
+
+
+def test_cell_vectorize_is_one_lazy_jvm_plan(spark):
+    """cell_vectorize runs no Python node and caches nothing, so the
+    plan memo serves it like the other spatial queries."""
+    import __spark_entry__ as e
+
+    q = e.queries()["cell_vectorize"]
+    df = q(spark, SF)
+    assert q(spark, SF) is df
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for node in ("FlatMapGroupsInPandas", "ArrowEvalPython", "InMemoryRelation"):
+        assert node not in plan, node
 
 
 def test_extract_geotags_malformed_utf8(spark):

@@ -240,3 +240,58 @@ def test_registered_sql_functions_match_scalar(spark):
         assert r.contains == cs.contains(a, b)
         assert r.fk & m == a ^ (1 << 63)
         assert r.token == cs.to_token(a)
+
+
+def _level10(cell: int) -> list[int]:
+    """Every level-10 descendant of ``cell``, in order."""
+    c, end = cs.child_begin_at_level(cell, 10), cs.child_end_at_level(cell, 10)
+    out = []
+    while c != end:
+        out.append(c)
+        c = cs.next_cell(c)
+    return out
+
+
+def test_cell_union_normalize_matches_scalar(spark):
+    """The SQL ancestor-count normalize equals CellUnion.normalize per
+    key on a fixture whose merges stop at every level 5-9: a level-4
+    subtree less one cell (on face 5, where ids carry the sign bit), a
+    complete level-7 subtree and an incomplete quad in "a"; a complete
+    level-5 subtree inside the same level-4 cell in "b"; a seeded
+    3,000-of-4,096 sample of a level-4 subtree in "c". An empty input
+    gives zero rows with the same columns."""
+    from s2js_spark.geometry.cellunion import CellUnion
+
+    t4 = cs.from_face_pos_level(5, 0x0A5 << 53, 4)
+    sub4 = _level10(t4)
+    gone = sub4[1000]
+    t5 = cs.parent(gone, 5)
+    q9 = cs.from_face_pos_level(2, 0x1234567 << 37, 9)
+    rng = np.random.default_rng(3)
+    sample = _level10(cs.from_face_pos_level(0, 0x3C << 55, 4))
+    cells = {
+        "a": [c for c in sub4 if c != gone]
+        + _level10(cs.from_face_pos_level(1, 0x2B << 47, 7))
+        + cs.children(q9)[:3],
+        "b": _level10(t5),
+        "c": [sample[k] for k in rng.choice(len(sample), 3000, replace=False)],
+    }
+    rows = [(k, int(v)) for k, vs in cells.items() for v in as_long(vs)]
+    df = spark.createDataFrame(rows, "lang string, cell long")
+
+    out = sq.cell_union_normalize(df, "lang", "cell", 10)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in plan and "InMemoryRelation" not in plan
+    got = {}
+    for r in out.collect():
+        got.setdefault(r.lang, []).append(r.cell & cs.MASK64)
+    for lang, vs in cells.items():
+        cu = CellUnion(vs)
+        cu.normalize()
+        assert sorted(got[lang]) == list(cu), lang
+    assert {cs.level(c) for c in got["a"]} == {5, 6, 7, 8, 9, 10}
+    assert got["b"] == [t5]
+    assert {cs.level(c) for c in got["c"]} >= {8, 9, 10}
+
+    empty = sq.cell_union_normalize(df.limit(0), "lang", "cell", 10)
+    assert empty.columns == ["lang", "cell"] and empty.count() == 0
