@@ -5,15 +5,14 @@ library (missinglink/s2js, read-only snapshot at /root/reference).
 
 Layers
 ------
-- ``s2js_spark.kernels``   Hilbert lookup tables and NumPy (s,t)/(u,v)
-  transforms shared by the layers below.
-- ``s2js_spark.geometry``  the scalar S2 port: CellID arithmetic
-  (``cellid_scalar``) and geometry objects (Cap, Rect, Loop, Polygon,
-  CellUnion, RegionCoverer, GeoJSON bridge). Runs on the driver to
-  build broadcast tile structures, never per document, and is the
-  reference the tests compare against.
-- ``s2js_spark.spark``     the Spark surface: cell arithmetic as SQL
-  expressions (``sqlkernels``) and registered SQL functions,
+- ``s2js_spark.geometry``  the scalar S2 port: CellID arithmetic and
+  the Hilbert lookup tables (``cellid_scalar``) and geometry objects
+  (Cap, Rect, Loop, Polygon, CellUnion, RegionCoverer, GeoJSON
+  bridge). Runs on the driver to build broadcast tile structures,
+  never per document, and is the reference the tests compare against.
+- ``s2js_spark.spark``     the Spark surface: cell arithmetic and point
+  geometry as SQL expressions (``sqlkernels``) and registered SQL
+  functions,
   deterministic pages-table synthesis, the url-bucketed pages layout
   and its one resumable writer (``storage``), the broadcast tag join,
   kNN and buffer joins, dedup/text/similarity pipeline operators.

@@ -26,7 +26,6 @@ from .point import Point
 from .predicates import DBL_EPSILON
 from .r2 import R2Point, R2Rect
 from .rect import Rect
-from ..kernels.hilbert import POS_TO_IJ, POS_TO_ORIENTATION
 
 POLE_MIN_LAT = math.asin(math.sqrt(1.0 / 3)) - 0.5 * DBL_EPSILON
 
@@ -202,11 +201,11 @@ class Cell:
             return []
         children = []
         _, si, ti = cs.face_si_ti(self.id)
-        uv_mid_x = cs._st_to_uv_scalar(1.0 if si > 2 * cs.MAX_SIZE else si / (2 * cs.MAX_SIZE))
-        uv_mid_y = cs._st_to_uv_scalar(1.0 if ti > 2 * cs.MAX_SIZE else ti / (2 * cs.MAX_SIZE))
+        uv_mid_x = cs._st_to_uv_scalar(cs.si_ti_to_st(si))
+        uv_mid_y = cs._st_to_uv_scalar(cs.si_ti_to_st(ti))
         cid = cs.child_begin(self.id)
         for pos in range(4):
-            ij = int(POS_TO_IJ[self.orientation][pos])
+            ij = cs.POS_TO_IJ[self.orientation][pos]
             i = ij >> 1
             j = ij & 1
             if i == 1:
@@ -221,7 +220,7 @@ class Cell:
                 Cell(
                     self.face,
                     self.level + 1,
-                    self.orientation ^ int(POS_TO_ORIENTATION[pos]),
+                    self.orientation ^ cs.POS_TO_ORIENTATION[pos],
                     cid,
                     R2Rect(xiv, yiv),
                 )

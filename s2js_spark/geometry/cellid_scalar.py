@@ -7,20 +7,14 @@ carriers; every function masks to 64 bits. Semantics match the
 reference s2js ``s2/cellid.ts`` (citations inline): the ported
 ``cellid_test.ts`` vectors are asserted against this module, and the
 engine's SQL cell arithmetic (``spark.sqlkernels``, the registered SQL
-functions) is tested for bit-equality with it.
+functions) is tested for bit-equality with it. It also holds the
+Hilbert lookup tables and the (s,t)/(u,v)/(si,ti) transforms of
+``s2/stuv.ts``.
 """
 
 from __future__ import annotations
 
 import math
-
-from ..kernels.hilbert import (
-    INVERT_MASK,
-    LOOKUP_BITS,
-    LOOKUP_IJ,
-    LOOKUP_POS,
-    SWAP_MASK,
-)
 
 FACE_BITS = 3
 NUM_FACES = 6
@@ -30,9 +24,43 @@ MAX_SIZE = 1 << MAX_LEVEL
 MASK64 = (1 << 64) - 1
 SENTINEL = MASK64
 WRAP_OFFSET = NUM_FACES << POS_BITS
+MAX_SITI = MAX_SIZE << 1  # 2**31, max si/ti coordinate
 
-_LOOKUP_POS = [int(x) for x in LOOKUP_POS]
-_LOOKUP_IJ = [int(x) for x in LOOKUP_IJ]
+# Hilbert-curve lookup tables (lookupIJ.ts:1-53): LOOKUP_POS maps a
+# 10-bit key "iiiijjjjoo" (4 leaf-grid bits each of i and j, 2-bit
+# orientation) to "ppppppppoo" (8 Hilbert position bits), LOOKUP_IJ is
+# its inverse. The SQL encode (``spark.sqlkernels``) and the DuckDB
+# oracle ship LOOKUP_POS as a literal table.
+LOOKUP_BITS = 4
+SWAP_MASK = 0x01
+INVERT_MASK = 0x02
+# Canonical Hilbert sub-cell orderings (lookupIJ.ts:5-17): canonical,
+# axes swapped, bits inverted, swapped and inverted
+POS_TO_IJ = ((0, 1, 3, 2), (0, 2, 3, 1), (3, 2, 0, 1), (3, 1, 0, 2))
+POS_TO_ORIENTATION = (SWAP_MASK, 0, 0, INVERT_MASK | SWAP_MASK)
+
+
+def _build_lookup() -> tuple[list[int], list[int]]:
+    """Iterative form of the recursive table init (lookupIJ.ts:27-51)."""
+    lookup_pos = [0] * (1 << (2 * LOOKUP_BITS + 2))
+    lookup_ij = [0] * (1 << (2 * LOOKUP_BITS + 2))
+    stack = [(0, 0, 0, o, 0, o) for o in range(4)]
+    while stack:
+        lvl, i, j, orig, p, orient = stack.pop()
+        if lvl == LOOKUP_BITS:
+            ij = (i << LOOKUP_BITS) + j
+            lookup_pos[(ij << 2) + orig] = (p << 2) + orient
+            lookup_ij[(p << 2) + orig] = (ij << 2) + orient
+            continue
+        for sub, r in enumerate(POS_TO_IJ[orient]):
+            stack.append((
+                lvl + 1, (i << 1) + (r >> 1), (j << 1) + (r & 1), orig,
+                (p << 2) + sub, orient ^ POS_TO_ORIENTATION[sub],
+            ))
+    return lookup_pos, lookup_ij
+
+
+LOOKUP_POS, LOOKUP_IJ = _build_lookup()
 
 
 def lsb(ci: int) -> int:
@@ -242,7 +270,7 @@ def from_face_ij(f: int, i: int, j: int) -> int:
     for k in range(7, -1, -1):
         bits += ((i >> (k * LOOKUP_BITS)) & mask) << (LOOKUP_BITS + 2)
         bits += ((j >> (k * LOOKUP_BITS)) & mask) << 2
-        bits = _LOOKUP_POS[bits]
+        bits = LOOKUP_POS[bits]
         n |= (bits >> 2) << (k * 2 * LOOKUP_BITS)
         bits &= SWAP_MASK | INVERT_MASK
     return (n * 2 + 1) & MASK64
@@ -257,7 +285,7 @@ def face_ij_orientation(ci: int) -> tuple[int, int, int, int]:
     j = 0
     for k in range(7, -1, -1):
         orientation += (((ci >> (k * 2 * LOOKUP_BITS + 1)) & ((1 << (2 * nbits)) - 1)) << 2)
-        orientation = _LOOKUP_IJ[orientation]
+        orientation = LOOKUP_IJ[orientation]
         i += (orientation >> (LOOKUP_BITS + 2)) << (k * LOOKUP_BITS)
         j += ((orientation >> 2) & ((1 << LOOKUP_BITS) - 1)) << (k * LOOKUP_BITS)
         orientation &= SWAP_MASK | INVERT_MASK
@@ -321,6 +349,16 @@ def _st_to_uv_scalar(s: float) -> float:
     if s >= 0.5:
         return (1.0 / 3.0) * (4 * s * s - 1)
     return (1.0 / 3.0) * (1 - 4 * (1 - s) * (1 - s))
+
+
+def si_ti_to_st(si: int) -> float:
+    """(si,ti) -> (s,t), capped at 1.0 (stuv.ts:138-141)."""
+    return 1.0 if si > MAX_SITI else si / MAX_SITI
+
+
+def st_to_si_ti(s: float) -> int:
+    """(s,t) -> nearest (si,ti) (stuv.ts:147-150)."""
+    return math.floor(s * MAX_SITI - 0.5) if s < 0 else math.floor(s * MAX_SITI + 0.5)
 
 
 def _largest_component(x: float, y: float, z: float) -> int:
@@ -391,9 +429,9 @@ def face_si_ti(ci: int) -> tuple[int, int, int]:
 
 def raw_point(ci: int) -> tuple[float, float, float]:
     f, si, ti = face_si_ti(ci)
-    s = 1.0 if si > 2 * MAX_SIZE else si / (2 * MAX_SIZE)
-    t = 1.0 if ti > 2 * MAX_SIZE else ti / (2 * MAX_SIZE)
-    return _face_uv_to_xyz_scalar(f, _st_to_uv_scalar(s), _st_to_uv_scalar(t))
+    return _face_uv_to_xyz_scalar(
+        f, _st_to_uv_scalar(si_ti_to_st(si)), _st_to_uv_scalar(si_ti_to_st(ti))
+    )
 
 
 def to_point(ci: int) -> tuple[float, float, float]:

@@ -22,7 +22,6 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-from ..kernels import stuv
 from . import cellid_scalar as cs
 from .edge_clipping import edge_intersects_rect, face_segments
 from .interval import R1Interval
@@ -39,7 +38,7 @@ _UV_MARGIN = 1e-10
 
 
 def _ij_to_uv(x: int) -> float:
-    return float(stuv.st_to_uv(x / MAX_SIZE))
+    return cs._st_to_uv_scalar(x / MAX_SIZE)
 
 
 def _edge_cells_on_face(

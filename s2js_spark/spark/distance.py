@@ -27,8 +27,10 @@ import math
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from .polyline_ops import _xyz_exprs, convex_planes
+from . import sqlkernels as sq
+from .polyline_ops import convex_planes
 
 _D = math.pi / 180.0
 
@@ -47,7 +49,7 @@ def _ring_xyz(ring: list[list[float]]) -> np.ndarray:
 
 
 def segment_chord2_exprs(
-    ring: list[list[float]], px: str, py: str, pz: str, lit=lambda v: f"{v!r}"
+    ring: list[list[float]], px: str, py: str, pz: str, lit=sq.spark_lit
 ) -> list[str]:
     """Per-edge chord^2 distance expressions from point columns
     (px, py, pz) to each boundary segment of the closed CCW ring."""
@@ -99,7 +101,7 @@ def buffer_exprs(
     ring: list[list[float]],
     lat: str,
     lng: str,
-    lit=lambda v: f"{v!r}",
+    lit=sq.spark_lit,
     px: str | None = None,
     py: str | None = None,
     pz: str | None = None,
@@ -107,7 +109,7 @@ def buffer_exprs(
     """(inside_predicate, boundary_chord2) over degree columns (or
     pre-spelled unit-vector component expressions px/py/pz)."""
     if px is None:
-        px, py, pz = _xyz_exprs(lat, lng, lit)
+        px, py, pz = sq.xyz_sql(lat, lng, lit)
     planes = convex_planes(ring)
     inside = " AND ".join(
         f"({lit(float(nx))} * {px} + {lit(float(ny))} * {py}"
@@ -237,10 +239,6 @@ def tag_within_distance_multi(
     exact inside-or-within-distance refinement. Output: df columns +
     (tile_i, ``dist_col``). All JVM; the only non-map stage is the
     broadcast of the covering index (O(tiles x cells))."""
-    from pyspark.sql import functions as F
-
-    from . import sqlkernels as sq
-
     spark = df.sparkSession
     cov_rows, levels = buffered_covering(rings, radius_deg)
     cov = sq.values_frame(
@@ -269,8 +267,7 @@ def tag_within_distance_multi(
     # interpreted HOF) or ONE aggregate over broadcast per-tile edge
     # frames (O(1) expression width — plan size no longer grows with
     # the tile set, so a 10^4-tile buffer join compiles).
-    lit = lambda v: f"{v!r}D"  # noqa: E731
-    ax, ay, az = _xyz_exprs(lat_col, lng_col, lit)
+    ax, ay, az = sq.xyz_sql(lat_col, lng_col)
     staged = cand.selectExpr(
         "*", f"{ax} AS _bpx", f"{ay} AS _bpy", f"{az} AS _bpz"
     )
@@ -280,13 +277,13 @@ def tag_within_distance_multi(
         tile_cols = []
         for k, (_tid, ring) in enumerate(rings):
             inside, dist = buffer_exprs(
-                ring, lat_col, lng_col, lit, px="_bpx", py="_bpy", pz="_bpz"
+                ring, lat_col, lng_col, px="_bpx", py="_bpy", pz="_bpz"
             )
             tile_cols.append(f"{inside} AS _bin{k}")
             tile_cols.append(f"{dist} AS _bd{k}")
         staged = staged.selectExpr("*", *tile_cols)
         keep = " ".join(
-            f"WHEN {k} THEN (_bin{k} OR _bd{k} <= {lit(limit)})"
+            f"WHEN {k} THEN (_bin{k} OR _bd{k} <= {sq.spark_lit(limit)})"
             for k in range(len(rings))
         )
         dist_case = " ".join(
@@ -338,7 +335,7 @@ def tag_within_distance_multi(
         "_bres", F.expr(_buffer_agg_sql("_bpx", "_bpy", "_bpz"))
     )
     out = staged.filter(
-        F.expr(f"_bres.ins OR _bres.d <= {lit(limit)}")
+        F.expr(f"_bres.ins OR _bres.d <= {sq.spark_lit(limit)}")
         & sq.barrier_guard("_bufm_b2")
     ).withColumn(dist_col, F.expr("round(_bres.d, 9)"))
     return out.drop(
@@ -360,18 +357,13 @@ def tag_within_distance(
     chord^2 rounded to 1e-9 (cross-engine FMA drift ~ulp; see
     polyline_ops). Map-only, zero shuffle; staged behind pushdown
     barriers so whole-stage codegen always compiles."""
-    from pyspark.sql import functions as F
-
-    from . import sqlkernels as sq
-
-    lit = lambda v: f"{v!r}D"  # noqa: E731 - Spark double literal
-    ax, ay, az = _xyz_exprs(lat_col, lng_col, lit)
+    ax, ay, az = sq.xyz_sql(lat_col, lng_col)
     base = df.selectExpr(
         "*", f"{ax} AS _bpx", f"{ay} AS _bpy", f"{az} AS _bpz"
     )
     base = sq.pushdown_barrier(base, "_buf_b1")
     inside, dist = buffer_exprs(
-        ring, lat_col, lng_col, lit, px="_bpx", py="_bpy", pz="_bpz"
+        ring, lat_col, lng_col, px="_bpx", py="_bpy", pz="_bpz"
     )
     staged = base.selectExpr(
         "*", f"{inside} AS _binside", f"{dist} AS _bdist"

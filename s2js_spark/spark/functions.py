@@ -1,15 +1,19 @@
 """The S2 functions registered for SQL.
 
-Cell arithmetic is SQL-bodied session functions, the bit operations of
-the ``sqlkernels`` column helpers: Catalyst inlines each body into the
-calling plan, with no Python node. Cell ids travel in LongType as the
-raw uint64 bit pattern; ``s2_flip_key`` gives the order-preserving
-signed key. There is no registered encode: ``sqlkernels.with_s2_cellid``,
-a chain of lateral aliases, is the engine's.
+Cell arithmetic and the rect and cap predicates are SQL-bodied session
+functions: Catalyst inlines each body into the calling plan, with no
+Python node. The cell functions are the bit operations of the
+``sqlkernels`` column helpers; ``s2_rect_contains`` and
+``s2_cap_contains`` are the texts the tag join's refinement decides
+with (``sqlkernels.rect_contains_sql`` / ``cap_contains_sql``), on
+degree arguments, and give NULL when any argument is NULL. Cell ids
+travel in LongType as the raw uint64 bit pattern; ``s2_flip_key``
+gives the order-preserving signed key. There is no registered encode:
+``sqlkernels.with_s2_cellid``, a chain of lateral aliases, is the
+engine's.
 
-Coverings, cell-union normalization and the geometry predicates are
-pandas UDFs: there the scalar ``geometry/`` port's Python is the
-operator.
+Coverings, cell-union normalization and point-in-polygon are pandas
+UDFs: there the scalar ``geometry/`` port's Python is the operator.
 """
 
 from __future__ import annotations
@@ -26,12 +30,26 @@ from pyspark.sql.types import ArrayType, BooleanType, LongType
 from ..geometry.cellunion import CellUnion
 from ..geometry.geojson import GeoJSONRegionCoverer, from_geojson
 from ..geometry.point import Point
-from ..kernels import stuv
+from . import sqlkernels as sq
 
 _FLIP = "shiftleft(1L, 63)"  # XOR with 2^63: signed order == unsigned S2 order
 _PARENT_LSB = "shiftleft(1L, 60 - 2 * level)"
+_RECT_ARGS = ("lat", "lng", "lat_lo", "lat_hi", "lng_lo", "lng_hi")
+_CAP_ARGS = ("lat", "lng", "clat", "clng", "radius_deg")
 
-# One declaration each, with the cellid.ts lines it ports
+
+def _predicate(name: str, args: tuple[str, ...], body: str) -> str:
+    """A BOOLEAN function of DOUBLE ``args`` that is NULL when any
+    argument is (a bare AND can answer false past a NULL)."""
+    nulls = " OR ".join(f"{a} IS NULL" for a in args)
+    return (
+        f"{name}({', '.join(f'{a} DOUBLE' for a in args)}) RETURNS BOOLEAN"
+        f" RETURN CASE WHEN {nulls} THEN NULL ELSE {body} END"
+    )
+
+
+# One declaration each, with the cellid.ts lines (or the scalar
+# expression) it ports
 _SQL_FUNCTIONS = [
     # 30 - ctz/2 (67-69); -2 for id 0, as the scalar port
     "s2_level(id BIGINT) RETURNS INT"
@@ -50,6 +68,24 @@ _SQL_FUNCTIONS = [
     # hex, trailing zeros stripped, 'X' for 0 (224-228)
     "s2_token(id BIGINT) RETURNS STRING RETURN CASE WHEN id = 0 THEN 'X'"
     " ELSE regexp_replace(lower(lpad(hex(id), 16, '0')), '0+$', '') END",
+    # Rect(R1Interval(lat_lo, lat_hi), S1Interval(lng_lo, lng_hi))
+    # .contains_latlng(LatLng(lat, lng)), every argument in degrees. An
+    # interval with a NaN end contains nothing there, while Spark
+    # orders NaN above every double (lat <= NaN holds).
+    _predicate(
+        "s2_rect_contains", _RECT_ARGS,
+        "NOT (isnan(lat_lo) OR isnan(lat_hi) OR isnan(lng_lo) OR isnan(lng_hi)) AND "
+        + sq.rect_contains_sql(*(sq.radians_sql(a) for a in _RECT_ARGS)),
+    ),
+    # Cap.from_center_angle(Point.from_latlng_degrees(clat, clng),
+    # radius_deg * pi/180).contains_point(Point.from_latlng_degrees(lat, lng))
+    _predicate(
+        "s2_cap_contains", _CAP_ARGS,
+        sq.cap_contains_sql(
+            sq.xyz_sql("lat", "lng"), sq.xyz_sql("clat", "clng"),
+            sq.chord_from_angle_sql(sq.radians_sql("radius_deg")),
+        ),
+    ),
 ]
 
 
@@ -92,11 +128,9 @@ def s2_cell_union_normalize(cells: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-# Standalone geometry predicates (SURVEY §2.13). The fused tag kernels
-# (tagjoin/tiles) are the hot path; these are the per-row SQL API
-# surface. Geometry params arrive as plain columns so the functions
-# compose in any SQL expression; the polygon variant parses GeoJSON
-# once per distinct string per batch.
+# Point-in-polygon for the per-row SQL API surface (SURVEY §2.13): the
+# polygon arrives as a GeoJSON column, parsed once per distinct string
+# per batch.
 _D = math.pi / 180.0
 
 
@@ -114,50 +148,10 @@ def s2_point_in_polygon(lat: pd.Series, lng: pd.Series, geojson: pd.Series) -> p
     return pd.Series(out)
 
 
-@F.pandas_udf(BooleanType())
-def s2_rect_contains(
-    lat: pd.Series, lng: pd.Series,
-    lat_lo: pd.Series, lat_hi: pd.Series,
-    lng_lo: pd.Series, lng_hi: pd.Series,
-) -> pd.Series:
-    la = lat.to_numpy(np.float64) * _D
-    ln = lng.to_numpy(np.float64) * _D
-    lo = lat_lo.to_numpy(np.float64) * _D
-    hi = lat_hi.to_numpy(np.float64) * _D
-    glo = lng_lo.to_numpy(np.float64) * _D
-    ghi = lng_hi.to_numpy(np.float64) * _D
-    ok_lat = (la >= lo) & (la <= hi)
-    l = np.where(ln == -np.pi, np.pi, ln)
-    inverted = glo > ghi
-    ok_lng = np.where(
-        inverted, (l >= glo) | (l <= ghi), (l >= glo) & (l <= ghi)
-    )
-    return pd.Series(ok_lat & ok_lng)
-
-
-@F.pandas_udf(BooleanType())
-def s2_cap_contains(
-    lat: pd.Series, lng: pd.Series,
-    clat: pd.Series, clng: pd.Series, radius_deg: pd.Series,
-) -> pd.Series:
-    px, py, pz = stuv.latlng_to_xyz(
-        lat.to_numpy(np.float64) * _D, lng.to_numpy(np.float64) * _D
-    )
-    cx, cy, cz = stuv.latlng_to_xyz(
-        clat.to_numpy(np.float64) * _D, clng.to_numpy(np.float64) * _D
-    )
-    dx, dy, dz = px - cx, py - cy, pz - cz
-    chord2 = np.minimum(4.0, dx * dx + dy * dy + dz * dz)
-    r2 = (2 * np.sin(np.minimum(np.pi, radius_deg.to_numpy(np.float64) * _D) / 2)) ** 2
-    return pd.Series(chord2 <= r2)
-
-
 _UDFS = {
     "s2_cover": s2_cover,
     "s2_cell_union_normalize": s2_cell_union_normalize,
     "s2_point_in_polygon": s2_point_in_polygon,
-    "s2_rect_contains": s2_rect_contains,
-    "s2_cap_contains": s2_cap_contains,
 }
 
 

@@ -75,27 +75,13 @@ def _cell_keyed_points(points: DataFrame, level: int) -> DataFrame:
 
 
 def _chord2_sql(lat1: str, lng1: str, lat2: str, lng2: str) -> F.Column:
-    """Squared chord distance as a pure-SQL column (round 6): the
-    pandas-UDF form (functions.s2_chord2) shipped EVERY candidate row
-    through an ArrowEvalPython stage — the 100 TB anti-pattern this
-    module's own docstring warns about, and ~0.3s of fixed Python
-    stage cost per run locally. Same operation order as
-    kernels.stuv.latlng_to_xyz + the minimum clamp
-    (cos(lng)*cos(lat), sin(lng)*cos(lat), sin(lat); min(4, |d|^2));
-    every post-trig op is IEEE correctly-rounded in both forms, and
-    the JVM's trig is the engine's canonical choice for DataFrame
-    geometry (sqlkernels' encode chain made the same call)."""
-    d = math.pi / 180.0
-    la1, ln1 = F.col(lat1) * d, F.col(lng1) * d
-    la2, ln2 = F.col(lat2) * d, F.col(lng2) * d
-    x1 = F.cos(ln1) * F.cos(la1)
-    y1 = F.sin(ln1) * F.cos(la1)
-    z1 = F.sin(la1)
-    x2 = F.cos(ln2) * F.cos(la2)
-    y2 = F.sin(ln2) * F.cos(la2)
-    z2 = F.sin(la2)
-    dx, dy, dz = x1 - x2, y1 - y2, z1 - z2
-    return F.least(F.lit(4.0), dx * dx + dy * dy + dz * dz)
+    """Squared chord distance between two degree column pairs, all JVM:
+    ``sqlkernels.chord2_sql`` of the two ``sqlkernels.xyz_sql`` unit
+    vectors, Point.chord_angle_between in the scalar port's op order.
+    Every op after cos/sin is IEEE correctly rounded in both, and the
+    JVM's trig is the engine's canonical choice for DataFrame geometry
+    (sqlkernels' encode chain made the same call)."""
+    return F.expr(sq.chord2_sql(sq.xyz_sql(lat1, lng1), sq.xyz_sql(lat2, lng2)))
 
 
 def _neighbors_3x3(leaf: int, level: int) -> list[int]:

@@ -27,7 +27,9 @@ import math
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from . import sqlkernels as sq
 
 _D = math.pi / 180.0
 
@@ -50,7 +52,7 @@ def clip_interval_exprs(
     planes: np.ndarray,
     ax: str, ay: str, az: str,
     bx: str, by: str, bz: str,
-    lit=lambda v: f"{v!r}",
+    lit=sq.spark_lit,
 ) -> tuple[str, str, str]:
     """(keep_predicate, t0, t1) SQL text for the chord-interval clip.
 
@@ -71,7 +73,7 @@ def plane_value_exprs(
     planes: np.ndarray,
     ax: str, ay: str, az: str,
     bx: str, by: str, bz: str,
-    lit=lambda v: f"{v!r}",
+    lit=sq.spark_lit,
 ) -> tuple[list[str], list[str]]:
     """Per-plane signed values (n_k . A, n_k . B) as SQL text."""
     fas, fbs = [], []
@@ -83,7 +85,7 @@ def plane_value_exprs(
 
 
 def clip_interval_terms(
-    fas: list[str], fbs: list[str], lit=lambda v: f"{v!r}"
+    fas: list[str], fbs: list[str], lit=sq.spark_lit
 ) -> tuple[str, str, str]:
     """(keep, lo, hi) over already-spelled per-plane value expressions
     — the expression STRUCTURE (fold order, op order) is identical
@@ -108,18 +110,6 @@ def clip_interval_terms(
     return keep, lo, hi
 
 
-def _xyz_exprs(lat: str, lng: str, lit) -> tuple[str, str, str]:
-    """Unit vector from degree columns, engine op order
-    (tagjoin.refine_exprs: px = cos(lngr)*cos(latr), ...)."""
-    latr = f"({lat} * {lit(_D)})"
-    lngr = f"({lng} * {lit(_D)})"
-    return (
-        f"(cos({lngr}) * cos({latr}))",
-        f"(sin({lngr}) * cos({latr}))",
-        f"sin({latr})",
-    )
-
-
 def clip_segments_convex(
     seg: DataFrame,
     ring: list[list[float]],
@@ -141,14 +131,9 @@ def clip_segments_convex(
     verdict #2). The float chain is unchanged: each value is computed
     once, exactly as spelled, same op order as the DuckDB oracle.
     """
-    from pyspark.sql import functions as F
-
-    from . import sqlkernels as sq
-
     planes = convex_planes(ring)
-    lit = lambda v: f"{v!r}D"  # noqa: E731 - Spark double literal
-    ax, ay, az = _xyz_exprs(alat, alng, lit)
-    bx, by, bz = _xyz_exprs(blat, blng, lit)
+    ax, ay, az = sq.xyz_sql(alat, alng)
+    bx, by, bz = sq.xyz_sql(blat, blng)
     base = seg.selectExpr(
         "*",
         f"{ax} AS _cax", f"{ay} AS _cay", f"{az} AS _caz",
@@ -156,7 +141,7 @@ def clip_segments_convex(
     )
     base = sq.pushdown_barrier(base, "_clip_b1")
     fa_cols, fb_cols = plane_value_exprs(
-        planes, "_cax", "_cay", "_caz", "_cbx", "_cby", "_cbz", lit
+        planes, "_cax", "_cay", "_caz", "_cbx", "_cby", "_cbz"
     )
     n = planes.shape[0]
     staged = base.selectExpr(
@@ -170,7 +155,7 @@ def clip_segments_convex(
     # caveat).
     staged = staged.withColumn("_clip_b2", F.col("_clip_b1") + F.rand())
     keep, lo, hi = clip_interval_terms(
-        [f"_fa{k}" for k in range(n)], [f"_fb{k}" for k in range(n)], lit
+        [f"_fa{k}" for k in range(n)], [f"_fb{k}" for k in range(n)]
     )
     out = staged.selectExpr(
         "*", f"{keep} AS _keep", f"round({lo}, 6) AS t0", f"round({hi}, 6) AS t1"
@@ -199,7 +184,7 @@ def clip_oracle_exprs(
     (keep_predicate, round(t0,6), round(t1,6))."""
     planes = convex_planes(ring)
     lit = duckdb_lit
-    ax, ay, az = _xyz_exprs(alat, alng, lit)
-    bx, by, bz = _xyz_exprs(blat, blng, lit)
+    ax, ay, az = sq.xyz_sql(alat, alng, lit)
+    bx, by, bz = sq.xyz_sql(blat, blng, lit)
     keep, lo, hi = clip_interval_exprs(planes, ax, ay, az, bx, by, bz, lit)
     return keep, f"round({lo}, 6)", f"round({hi}, 6)"

@@ -1,6 +1,8 @@
 """Pure-Spark-SQL (JVM, whole-stage-codegen) S2 cell kernels.
 
-The executors' only cell arithmetic. Spark SQL column expressions
+The executors' only cell arithmetic, and the one SQL spelling of point
+geometry (degrees -> unit vector, chord^2, rect and cap containment;
+see "point geometry" below). Spark SQL column expressions
 carry the whole (lat,lng) -> face/(u,v) -> (s,t) -> (i,j) ->
 Hilbert-encode chain (reference semantics: s2js ``s2/stuv.ts:158-220``
 and ``s2/cellid.ts:360-386``), the cross-face 3x3 cell
@@ -48,21 +50,18 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..kernels.hilbert import LOOKUP_BITS, LOOKUP_POS
+from ..geometry.cellid_scalar import LOOKUP_BITS, LOOKUP_POS
 
 MAX_LEVEL = 30
 MAX_SIZE = 1 << MAX_LEVEL
 POS_BITS = 2 * MAX_LEVEL + 1  # 61
 _D = math.pi / 180.0
 
-# The 1024-entry Hilbert lookup table as a plain int list -> shipped to
-# executors once as an array literal (element_at is O(1) on literal
-# array data).
-_LOOKUP_POS_LIST = [int(v) for v in LOOKUP_POS]
-
 
 def _lookup_lit() -> Column:
-    return F.lit(_LOOKUP_POS_LIST)
+    """The 1024-entry Hilbert lookup table, shipped to executors once
+    as an array literal (element_at is O(1) on literal array data)."""
+    return F.lit(LOOKUP_POS)
 
 
 def values_frame(spark, rows: list[str], empty_row: str, alias: str) -> DataFrame:
@@ -72,6 +71,79 @@ def values_frame(spark, rows: list[str], empty_row: str, alias: str) -> DataFram
     if not rows:
         return spark.sql(f"SELECT * FROM VALUES {empty_row} AS {alias} WHERE false")
     return spark.sql(f"SELECT * FROM VALUES {', '.join(rows)} AS {alias}")
+
+
+# --------------------------------------------------------- point geometry
+#
+# The one SQL spelling of point geometry. The tag join's refinement,
+# the knn chord^2, the convex clip, the buffer join and the registered
+# s2_rect_contains / s2_cap_contains are built from these texts. Each
+# keeps the scalar port's op order, so every op after cos/sin is
+# correctly rounded alike in both. ``lit`` spells a double literal for
+# the target dialect: the clip and buffer texts also run in DuckDB
+# (polyline_ops.duckdb_lit), the oracle's spelling.
+
+
+def spark_lit(v: float) -> str:
+    """Spark SQL double literal: the shortest round-trip repr."""
+    return f"{float(v)!r}D"
+
+
+def radians_sql(deg: str, lit=spark_lit) -> str:
+    """Degrees -> radians as ``deg * (pi / 180)``, LatLng.from_degrees."""
+    return f"({deg} * {lit(_D)})"
+
+
+def xyz_sql(lat: str, lng: str, lit=spark_lit) -> tuple[str, str, str]:
+    """Degree expressions -> unit vector (x, y, z):
+    Point.from_latlng_degrees, cos(lng)*cos(lat), sin(lng)*cos(lat),
+    sin(lat) on the radians."""
+    latr, lngr = radians_sql(lat, lit), radians_sql(lng, lit)
+    return (
+        f"(cos({lngr}) * cos({latr}))",
+        f"(sin({lngr}) * cos({latr}))",
+        f"sin({latr})",
+    )
+
+
+def chord2_sql(p: tuple[str, str, str], q: tuple[str, str, str]) -> str:
+    """Point.chord_angle_between: min(4, |p - q|^2) of two (x, y, z)
+    expression triples."""
+    d = [f"({a} - {b})" for a, b in zip(p, q)]
+    return "least(4.0D, " + " + ".join(f"{e} * {e}" for e in d) + ")"
+
+
+def chord_from_angle_sql(angle: str) -> str:
+    """s1.chord_from_angle of a radians expression: -1 for a negative
+    angle, else l * l with l = 2 sin(0.5 min(pi, angle)). An infinite
+    angle gives 4, not infinity: no chord^2 exceeds either."""
+    l = f"(2.0D * sin(0.5D * least({math.pi!r}D, {angle})))"
+    return f"(CASE WHEN {angle} < 0.0D THEN -1.0D ELSE {l} * {l} END)"
+
+
+def cap_contains_sql(p: tuple[str, str, str], center: tuple[str, str, str], r2: str) -> str:
+    """Cap.contains_point: the chord^2 between ``p`` and the cap's
+    center is at most the cap's chord radius ``r2``."""
+    return f"({chord2_sql(p, center)} <= {r2})"
+
+
+def rect_contains_sql(
+    lat: str, lng: str, lat_lo: str, lat_hi: str, lng_lo: str, lng_hi: str
+) -> str:
+    """Rect.contains_latlng on radian expressions: LatLng.is_valid, the
+    R1 latitude interval, and S1Interval.contains with its -pi -> pi
+    remap, the inverted (wrapping) case and the empty (pi, -pi)
+    interval."""
+    pi = f"{math.pi!r}D"
+    l = f"(CASE WHEN {lng} = -{pi} THEN {pi} ELSE {lng} END)"
+    return (
+        f"(abs({lat}) <= {math.pi / 2!r}D AND abs({lng}) <= {pi}"
+        f" AND {lat} >= {lat_lo} AND {lat} <= {lat_hi}"
+        f" AND CASE WHEN {lng_lo} > {lng_hi}"
+        f" THEN ({l} >= {lng_lo} OR {l} <= {lng_hi})"
+        f" AND NOT ({lng_lo} = {pi} AND {lng_hi} = -{pi})"
+        f" ELSE {l} >= {lng_lo} AND {l} <= {lng_hi} END)"
+    )
 
 
 # ----------------------------------------------------------- encode chain
@@ -179,8 +251,8 @@ def _latlng_exprs(lat: str, lng: str, t: str) -> list[str]:
     """(lat,lng) degrees -> (face,i,j) as lateral-alias SQL text, in
     the scalar port's op order (stuv.ts:158-220)."""
     return [
-        f"({lat} * {_D!r}D) AS {t}latr",
-        f"({lng} * {_D!r}D) AS {t}lngr",
+        f"{radians_sql(lat)} AS {t}latr",
+        f"{radians_sql(lng)} AS {t}lngr",
         f"cos({t}latr) AS {t}clat",
         f"(cos({t}lngr) * {t}clat) AS {t}x",
         f"(sin({t}lngr) * {t}clat) AS {t}y",

@@ -16,13 +16,17 @@ certified path runs with ZERO Python:
     needed. This is the canonical S2 spatial join shape at 100 TB:
     map-side broadcast, no shuffle, skew-immune (hot cells fan out
     across whatever partitioning the input already has).
-3.  refinement entirely in SQL:
-    - interior covering cells: candidate is in by construction
-      (the reference's locateCellID INDEXED/interior trichotomy);
-    - rect tiles: interval comparisons on radians (multiply/compare
-      only, so exactly ``Rect.contains_latlng``);
-    - cap tiles: chord^2 test, with the operation order of
-      ``Point.chord_angle_between`` (so exactly ``Cap.contains_point``);
+3.  refinement entirely in SQL, from the point-geometry texts of
+    ``sqlkernels``:
+    - rect tiles: ``sqlkernels.rect_contains_sql`` on the radians
+      (multiply/compare only, so exactly ``Rect.contains_latlng``,
+      whose invalid-LatLng answer is no);
+    - interior covering cells of caps and polygons: candidate is in by
+      construction (the reference's locateCellID INDEXED/interior
+      trichotomy);
+    - cap tiles: ``sqlkernels.cap_contains_sql``, the chord^2 test in
+      the operation order of ``Point.chord_angle_between`` (so exactly
+      ``Cap.contains_point``);
     - polygon tiles: winding parity (reference Loop.ts:372-380) with
       the triage determinant sign band of predicates.ts:186-191.
       Polygons up to ``MAX_INLINE_EDGES`` edges are unrolled into the
@@ -71,7 +75,6 @@ from .tiles import (
     _origin_xyz,
 )
 
-_D = math.pi / 180.0
 _UNCERT = 1_000_000  # accumulator stride separating crossing count / flags
 
 _EDGE_STRUCT = (
@@ -343,49 +346,41 @@ def tag_candidates(
     )
 
     ox, oy, oz = _origin_xyz()
-    pi = repr(math.pi)
+    px, py, pz = sq.xyz_sql(lat_col, lng_col)
     # One selectExpr of lateral aliases (single analysis pass; nested
     # Projects at runtime — see sqlkernels.with_s2_cellid). The point
     # must be exactly Point.from_latlng_radians(lat * d, lng * d): the
     # one the exact residual and the scalar reference decide on.
+    # Polygons and caps decide on that point; rects decide on the
+    # radians, and an invalid LatLng (|lat| > 90 or |lng| > 180) is in
+    # no rect, interior covering cell or not, as Rect.contains_latlng.
     refine_exprs = [
-        f"({lat_col} * {_D!r}D) AS _latr",
-        f"({lng_col} * {_D!r}D) AS _lngr",
-        "cos(_latr) AS _clat",
-        "(cos(_lngr) * _clat) AS _px",
-        "(sin(_lngr) * _clat) AS _py",
-        "sin(_latr) AS _pz",
+        f"{px} AS _px",
+        f"{py} AS _py",
+        f"{pz} AS _pz",
         f"({oy!r}D * _pz - {oz!r}D * _py) AS _abx",
         f"({oz!r}D * _px - {ox!r}D * _pz) AS _aby",
         f"({ox!r}D * _py - {oy!r}D * _px) AS _abz",
-        # rect: Rect.containsLatLng with the S1 -pi -> pi remap
-        f"(CASE WHEN _lngr = -{pi}D THEN {pi}D ELSE _lngr END) AS _l",
-        "(_latr >= lat_lo AND _latr <= lat_hi) AS _rect_lat",
-        f"(CASE WHEN lng_lo > lng_hi THEN"
-        f" (_l >= lng_lo OR _l <= lng_hi)"
-        f" AND NOT (lng_lo = {pi}D AND lng_hi = -{pi}D)"
-        f" ELSE _l >= lng_lo AND _l <= lng_hi END) AS _rect_lng",
-        "(_rect_lat AND _rect_lng) AS _rect_ok",
-        # cap: Cap.contains_point, i.e. Point.chord_angle_between's
-        # min(4, dx*dx + dy*dy + dz*dz) <= rad in that op order
-        "least(4.0D, (_px - ccx) * (_px - ccx) + (_py - ccy) * (_py - ccy)"
-        " + (_pz - ccz) * (_pz - ccz)) AS _chord2",
-        "(_chord2 <= cr2) AS _cap_ok",
+        f"{sq.radians_sql(lat_col)} AS _latr",
+        f"{sq.radians_sql(lng_col)} AS _lngr",
+        f"{sq.rect_contains_sql('_latr', '_lngr', 'lat_lo', 'lat_hi', 'lng_lo', 'lng_hi')}"
+        " AS _rect_ok",
+        f"{sq.cap_contains_sql(('_px', '_py', '_pz'), ('ccx', 'ccy', 'ccz'), 'cr2')}"
+        " AS _cap_ok",
         # polygon: winding, inlined per tile (lazy CASE skips off-poly
         # lanes; only the matching tile's unrolled branch evaluates)
         f"(CASE WHEN kind = {KIND_POLYGON} AND NOT interior"
         f" THEN ({_winding_inline_sql(ts)}) ELSE 0L END) AS _wind",
         f"(_wind >= {_UNCERT}L) AS _uncert",
         f"(((_wind % {_UNCERT}L) % 2 = 1) != origin_parity) AS _poly_parity",
-        f"(interior OR CASE WHEN kind = {KIND_RECT} THEN _rect_ok"
+        f"(CASE WHEN kind = {KIND_RECT} THEN _rect_ok WHEN interior THEN true"
         f" WHEN kind = {KIND_CAP} THEN _cap_ok"
         f" ELSE (NOT _uncert) AND _poly_parity END) AS _keep_sql",
         f"(kind = {KIND_POLYGON} AND NOT interior AND _uncert) AS _uncert_poly",
     ]
     cand = cand.selectExpr("*", *refine_exprs).drop(
-        "_latr", "_lngr", "_clat", "_px", "_py", "_pz",
-        "_abx", "_aby", "_abz", "_l", "_rect_lat", "_rect_lng",
-        "_rect_ok", "_chord2", "_cap_ok", "_wind", "_uncert", "_poly_parity",
+        "_px", "_py", "_pz", "_abx", "_aby", "_abz", "_latr", "_lngr",
+        "_rect_ok", "_cap_ok", "_wind", "_uncert", "_poly_parity",
     )
     # barrier 2: keeps the _keep_sql / _uncert_poly filters as cheap
     # attribute references instead of letting pushdown re-inline the

@@ -1,10 +1,16 @@
-"""Python runs in the engine only where the Python work is the operator.
+"""Python runs in the engine only where the Python work is the operator,
+and point geometry has one SQL spelling.
 
 Every pandas_udf / mapInPandas / applyInPandas / applyInPandasWithState
 site under s2js_spark/spark/ and in __spark_entry__.py is listed here
 by module and enclosing (or decorated) function, with the reason it is
 Python. A new site — say a Python twin of a SQL path — fails this test
 until it is added to the allowlist with its reason.
+
+Under s2js_spark/spark/, only ``sqlkernels`` spells ``cos(`` / ``sin(``
+in an SQL string or calls ``F.cos`` / ``F.sin``: every lat/lng -> xyz
+goes through its helpers. The DuckDB oracle texts of __spark_entry__.py
+stay independent of the engine's and are not scanned.
 """
 
 from __future__ import annotations
@@ -12,6 +18,7 @@ from __future__ import annotations
 import ast
 import fnmatch
 import pathlib
+import re
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 SOURCES = sorted((ROOT / "s2js_spark" / "spark").glob("*.py")) + [ROOT / "__spark_entry__.py"]
@@ -22,8 +29,6 @@ ALLOWLIST = {
     "functions.s2_cover": "GeoJSON covering: the scalar RegionCoverer is the operator",
     "functions.s2_cell_union_normalize": "CellUnion.normalize of a per-row cell array",
     "functions.s2_point_in_polygon": "exact polygon containment of the scalar port",
-    "functions.s2_rect_contains": "SQL-callable predicate surface (SURVEY §2.13)",
-    "functions.s2_cap_contains": "SQL-callable predicate surface (SURVEY §2.13)",
     "tagjoin._exact_or_keep": "exact residual over triage-uncertified polygon lanes",
     "multimodal.synth_real_media": "media container synthesis (PPM/WAV encode)",
     "multimodal.synth_mixed_media": "media container synthesis (PPM/WAV encode)",
@@ -100,3 +105,61 @@ def test_site_scanner_sees_every_form():
     assert _sites(ast.parse(src), "m") == {
         "m.deco", "m.inline", "m.grouped", "m.stateful",
     }
+
+
+_TRIG_SQL = re.compile(r"\b(cos|sin)\(")
+
+
+def _trig_sites(tree: ast.AST, module: str) -> set[str]:
+    """``module:line`` of every string constant (docstrings aside) that
+    spells cos( or sin(, and of every call to an attribute cos / sin
+    of ``F`` or ``functions``."""
+    docs = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    found = set()
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docs
+            and _TRIG_SQL.search(node.value)
+        ) or (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("cos", "sin")
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id in ("F", "functions")
+        ):
+            found.add(f"{module}:{node.lineno}")
+    return found
+
+
+def test_only_sqlkernels_spells_point_trig():
+    sites = set()
+    for path in sorted((ROOT / "s2js_spark" / "spark").glob("*.py")):
+        if path.stem != "sqlkernels":
+            sites |= _trig_sites(ast.parse(path.read_text()), path.stem)
+    assert not sites, f"cos/sin spelled outside sqlkernels: {sorted(sites)}"
+
+
+def test_trig_scanner_sees_every_form():
+    """f-string parts, plain strings and F.cos / F.sin calls are found;
+    docstrings, NumPy / math calls and words like isin( are not."""
+    src = (
+        '"""Module doc: cos(lat)."""\n'
+        "def f(lat):\n"
+        '    """cos(lng) * cos(lat) in the docstring."""\n'
+        '    a = f"(cos({lat}) * 2)"\n'
+        '    b = "sin(_latr) AS _pz"\n'
+        "    c = F.cos(F.col(lat))\n"
+        "    d = np.sin(lat) + math.cos(lat)\n"
+        '    e = "x.isin(y) AND asin(z)"\n'
+        "    return a, b, c, d, e\n"
+    )
+    assert _trig_sites(ast.parse(src), "m") == {"m:4", "m:5", "m:6"}

@@ -274,11 +274,76 @@ def test_empty_tileset_gives_zero_pairs(spark):
         assert out.dtypes == full.dtypes
 
 
+# (lat, lng, lat_lo, lat_hi, lng_lo, lng_hi), degrees
+_RECT_ROWS = [
+    *((lat, lng, -27.4, -26.6, -76.8, -75.2)
+      for lat, lng in ((1.0, 8.0), (1.69, 8.0), (50.0, 50.0), (-27.0, -76.0), (29.0, 92.0))),
+    # the empty longitude interval (pi, -pi), at lng = ±180
+    (0.0, 180.0, -10.0, 10.0, 180.0, -180.0),
+    (0.0, -180.0, -10.0, 10.0, 180.0, -180.0),
+    # a rect wrapping the antimeridian: invalid lng ±540, ±200; lng ±180
+    (10.0, 540.0, 0.0, 20.0, 170.0, -170.0),
+    (10.0, -540.0, 0.0, 20.0, 170.0, -170.0),
+    (10.0, 200.0, 0.0, 20.0, 170.0, -170.0),
+    (10.0, -200.0, 0.0, 20.0, 170.0, -170.0),
+    (10.0, 180.0, 0.0, 20.0, 170.0, -170.0),
+    (10.0, -180.0, 0.0, 20.0, 170.0, -170.0),
+    (10.0, 165.0, 0.0, 20.0, 170.0, -170.0),
+    # an invalid lat inside the rect's own latitude bounds
+    (95.0, 0.0, -90.0, 100.0, -10.0, 10.0),
+    (90.0, 0.0, -90.0, 100.0, -10.0, 10.0),
+    # NaN: an interval with a NaN end contains nothing; NaN is no LatLng
+    (0.0, 0.0, -10.0, math.nan, -10.0, 10.0),
+    (0.0, 0.0, -10.0, 10.0, -10.0, math.nan),
+    (math.nan, 0.0, -10.0, 10.0, -10.0, 10.0),
+    (None, 0.0, -10.0, 10.0, -10.0, 10.0),
+    (0.0, 0.0, -10.0, 10.0, None, 10.0),
+]
+# (lat, lng, clat, clng, radius_deg)
+_CAP_ROWS = [
+    *((lat, lng, 29.0, 92.0, 0.8)
+      for lat, lng in ((1.0, 8.0), (1.69, 8.0), (50.0, 50.0), (-27.0, -76.0), (29.0, 92.0))),
+    (29.0, 92.0, 29.0, 92.0, 0.0),
+    # a negative radius is the empty cap (chord -1), even at its centre
+    (29.0, 92.0, 29.0, 92.0, -1.0),
+    # radius >= 180 degrees holds the antipode
+    (-29.0, -88.0, 29.0, 92.0, 180.0),
+    (-29.0, -88.0, 29.0, 92.0, 250.0),
+    (-29.0, -88.0, 29.0, 92.0, 179.0),
+    (None, 92.0, 29.0, 92.0, 0.8),
+    (29.0, 92.0, 29.0, 92.0, None),
+]
+
+
+def _rect_ref(lat, lng, lat_lo, lat_hi, lng_lo, lng_hi):
+    from s2js_spark.geometry.interval import R1Interval, S1Interval
+    from s2js_spark.geometry.latlng import LatLng
+    from s2js_spark.geometry.rect import Rect
+
+    if None in (lat, lng, lat_lo, lat_hi, lng_lo, lng_hi):
+        return None
+    d = math.pi / 180
+    rect = Rect(R1Interval(lat_lo * d, lat_hi * d), S1Interval(lng_lo * d, lng_hi * d))
+    return rect.contains_latlng(LatLng(lat * d, lng * d))
+
+
+def _cap_ref(lat, lng, clat, clng, radius_deg):
+    from s2js_spark.geometry.cap import Cap
+    from s2js_spark.geometry.point import Point
+
+    if None in (lat, lng, clat, clng, radius_deg):
+        return None
+    cap = Cap.from_center_angle(Point.from_latlng_degrees(clat, clng), radius_deg * math.pi / 180)
+    return cap.contains_point(Point.from_latlng_degrees(lat, lng))
+
+
 def test_registered_predicate_functions(spark):
-    """SQL-callable s2_point_in_polygon / s2_rect_contains /
-    s2_cap_contains agree with the tag-join decisions."""
+    """SQL-callable s2_point_in_polygon agrees with the tag-join
+    decisions; the SQL-bodied s2_rect_contains / s2_cap_contains equal
+    the scalar port's Rect.contains_latlng / Cap.contains_point on
+    edge inputs, give NULL for a NULL argument, and run with no Python
+    node in the plan."""
     import json
-    import pandas as pd
     from s2js_spark.spark.functions import register_all
     import __spark_entry__ as e
 
@@ -288,23 +353,27 @@ def test_registered_predicate_functions(spark):
         pd.DataFrame({"lat": [1.0, 1.69, 50.0], "lng": [8.0, 8.0, 50.0]})
     )
     df.createOrReplaceTempView("pts")
-    got = spark.sql(
-        f"""SELECT
-          s2_point_in_polygon(lat, lng, '{gj}') AS pip,
-          s2_rect_contains(lat, lng, -27.4D, -26.6D, -76.8D, -75.2D) AS rc,
-          s2_cap_contains(lat, lng, 29.0D, 92.0D, 0.8D) AS cc
-        FROM pts"""
-    ).collect()
+    got = spark.sql(f"SELECT s2_point_in_polygon(lat, lng, '{gj}') AS pip FROM pts").collect()
     assert [r.pip for r in got] == [True, True, False]
-    assert [r.rc for r in got] == [False, False, False]
-    assert [r.cc for r in got] == [False, False, False]
-    df2 = spark.createDataFrame(
-        pd.DataFrame({"lat": [-27.0, 29.0], "lng": [-76.0, 92.0]})
+
+    spark.createDataFrame(
+        _RECT_ROWS, "lat double, lng double, lat_lo double, lat_hi double,"
+        " lng_lo double, lng_hi double",
+    ).createOrReplaceTempView("rects")
+    spark.createDataFrame(
+        _CAP_ROWS, "lat double, lng double, clat double, clng double, radius_deg double"
+    ).createOrReplaceTempView("caps")
+    rects = spark.sql(
+        "SELECT s2_rect_contains(lat, lng, lat_lo, lat_hi, lng_lo, lng_hi) AS rc FROM rects"
     )
-    df2.createOrReplaceTempView("pts2")
-    got2 = spark.sql(
-        """SELECT s2_rect_contains(lat, lng, -27.4D, -26.6D, -76.8D, -75.2D) AS rc,
-                  s2_cap_contains(lat, lng, 29.0D, 92.0D, 0.8D) AS cc FROM pts2"""
-    ).collect()
-    assert [r.rc for r in got2] == [True, False]
-    assert [r.cc for r in got2] == [False, True]
+    caps = spark.sql(
+        "SELECT s2_cap_contains(lat, lng, clat, clng, radius_deg) AS cc FROM caps"
+    )
+    for out in (rects, caps):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert [r.rc for r in rects.collect()] == [_rect_ref(*row) for row in _RECT_ROWS]
+    assert [r.cc for r in caps.collect()] == [_cap_ref(*row) for row in _CAP_ROWS]
+    # the inputs decide both ways
+    assert {_rect_ref(*row) for row in _RECT_ROWS} == {True, False, None}
+    assert {_cap_ref(*row) for row in _CAP_ROWS} == {True, False, None}

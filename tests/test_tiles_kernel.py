@@ -132,7 +132,11 @@ def test_antimeridian_rect(spark):
 
 def test_poles_and_antimeridian_edges(spark):
     """lng = ±180 exactly (the SQL -pi -> pi remap) and lat = ±90
-    against shapes that contain a pole, on the one tag path."""
+    against shapes that contain a pole, on the one tag path; and
+    out-of-range degrees (|lat| > 90, |lng| > 180), which the geotag
+    pattern accepts: no rect contains an invalid LatLng, even where the
+    wrapped point lies in the rect's (interior) covering, while caps
+    decide on the wrapped point."""
     tiles = [
         (  # wraps the antimeridian
             "fiji",
@@ -152,6 +156,10 @@ def test_poles_and_antimeridian_edges(spark):
         ("north_cap", Cap.from_center_angle(Point.from_latlng_degrees(88.0, 30.0), 0.1)),
         ("south_rect", Rect(R1Interval(-90 * D, -80 * D), S1Interval.full())),
         ("south_cap", Cap.from_center_angle(Point.from_latlng_degrees(-90.0, 0.0), 0.05)),
+        (  # wraps; (10, ±540) wraps onto its lng = 180 line
+            "wrap_10",
+            Rect(R1Interval(0 * D, 20 * D), S1Interval.from_endpoints(170 * D, -170 * D)),
+        ),
     ]
     ts = build_tileset(tiles, max_cells=32)
     rows = []
@@ -161,6 +169,14 @@ def test_poles_and_antimeridian_edges(spark):
     for lat in (90.0, -90.0, 89.999, -89.999, 85.0, -85.0):
         for lng in (0.0, 45.0, -180.0, 180.0, -90.0):
             rows.append((f"pole{len(rows)}", lat, lng))
+    invalid = [
+        (10.0, 540.0), (10.0, -540.0), (10.0, 200.0), (10.0, -200.0),
+        (95.0, 0.0), (-95.0, 0.0), (100.0, 180.0), (-100.0, 180.0),
+        # wraps to (-86.5, 45), in an interior covering cell of south_rect
+        (-93.5, -135.0),
+    ]
+    for lat, lng in invalid + [(10.0, 180.0), (-80.0, 0.0)]:
+        rows.append((f"bad{len(rows)}", lat, lng))
 
     got = engine_pairs(spark, ts, rows)
     want = scalar_pairs(ts, rows)
@@ -173,3 +189,9 @@ def test_poles_and_antimeridian_edges(spark):
     south = {k for k, lat, _ in rows if lat == -90.0}
     assert north <= by_tile[3]
     assert south <= by_tile[4] and south <= by_tile[5]
+    # the valid points the invalid ones wrap onto are in the rects ...
+    wrapped = {k for k, lat, lng in rows if (lat, lng) in {(10.0, 180.0), (-85.0, 180.0)}}
+    assert len(wrapped) == 2 and wrapped <= by_tile[4] | by_tile[6]
+    # ... and no rect holds an invalid LatLng
+    bad = {k for k, lat, lng in rows if (lat, lng) in invalid}
+    assert not bad & (by_tile[0] | by_tile[1] | by_tile[2] | by_tile[4] | by_tile[6])

@@ -17,13 +17,13 @@ in DuckDB dialect so the driver's oracle can verify `s2_encode` and
 
 from __future__ import annotations
 
-from s2js_spark.kernels.hilbert import LOOKUP_POS
+from s2js_spark.geometry.cellid_scalar import LOOKUP_POS
 
 MAX_SIZE = 1 << 30
 
 
 def lut_values_sql() -> str:
-    rows = ", ".join(f"({k},{int(v)})" for k, v in enumerate(LOOKUP_POS))
+    rows = ", ".join(f"({k},{v})" for k, v in enumerate(LOOKUP_POS))
     return f"(VALUES {rows})"
 
 
