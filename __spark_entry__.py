@@ -37,7 +37,7 @@ from s2js_spark.spark.pipeline import (
 )
 from s2js_spark.spark.similarity import brute_force_topk, lsh_topk
 from s2js_spark.spark.tagjoin import tag_tiles_pairs
-from s2js_spark.spark.tiles import build_tileset
+from s2js_spark.spark.tiles import build_tileset, tile_id_col
 
 D = math.pi / 180.0
 
@@ -121,21 +121,6 @@ def _tileset(name: str, tiles, max_cells: int):
     return _TS_CACHE[key]
 
 
-def _tile_name_col(ts) -> "F.Column":
-    """tile_i -> tile_id as a foldable literal-map lookup (round 6):
-    the previous broadcast-join against a createDataFrame names frame
-    cost one RDD-backed broadcast job per run for a handful of
-    constant pairs."""
-    m = F.create_map(
-        *[
-            x
-            for i, t in enumerate(ts.tile_ids)
-            for x in (F.lit(i), F.lit(str(t)))
-        ]
-    )
-    return F.element_at(m, F.col("tile_i"))
-
-
 # Input DataFrames and declared query plans go through the engine's one
 # plan memo (s2js_spark.spark.memo): a call hits when it has the same
 # live session and the same key. Handing back the IDENTICAL object also
@@ -190,14 +175,14 @@ def _q_rect_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _geo_pages(spark, sf_dir).select("url", "lat", "lng")
     ts = _tileset("rect", RECT_TILES, 32)
     pairs = tag_tiles_pairs(spark, df, ts)
-    return pairs.select("url", _tile_name_col(ts).alias("tile_id"))
+    return pairs.select("url", tile_id_col(ts.tile_ids).alias("tile_id"))
 
 
 def _q_pip_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _geo_pages(spark, sf_dir).select("url", "lat", "lng")
     ts = _tileset("pip", PIP_TILES, 64)
     pairs = tag_tiles_pairs(spark, df, ts)
-    return pairs.select("url", _tile_name_col(ts).alias("tile_id"))
+    return pairs.select("url", tile_id_col(ts.tile_ids).alias("tile_id"))
 
 
 def _q_pip_big(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -291,7 +276,7 @@ def _q_tile_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts = _tileset("pip", PIP_TILES, 64)
     pairs = tag_tiles_pairs(spark, df, ts, cellid_col="cellid")
     return (
-        pairs.withColumn("tile_id", _tile_name_col(ts))
+        pairs.withColumn("tile_id", tile_id_col(ts.tile_ids))
         .withColumn("cell_l8", sq.s2_token_sql(sq.s2_parent_sql("cellid", 8)))
         .groupBy("tile_id", "cell_l8")
         .agg(F.count("*").cast("long").alias("n_pages"))
@@ -335,15 +320,8 @@ def _q_buffer_tag_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("url", "lat", "lng")
     )
     out = tag_within_distance_multi(df, rings, BUFFER_RADIUS_DEG)
-    m = F.create_map(
-        *[
-            x
-            for k, (tid, _) in enumerate(rings)
-            for x in (F.lit(k), F.lit(tid))
-        ]
-    )
     return out.select(
-        "url", F.element_at(m, F.col("tile_i")).alias("tile_id"), "bdist"
+        "url", tile_id_col([tid for tid, _ in rings]).alias("tile_id"), "bdist"
     )
 
 
@@ -377,9 +355,10 @@ def _knn_queries_df(spark: SparkSession) -> DataFrame:
     """The query batch as inline VALUES (LocalRelation): lets knn_join
     compute the 3x3 neighborhoods driver-side instead of spending a
     per-run Python-UDF evaluation on 5 rows (round 6)."""
+    from s2js_spark.spark.sqlkernels import cast_lit
+
     vals = ", ".join(
-        f"({qid}, CAST('{qlat!r}' AS DOUBLE), CAST('{qlng!r}' AS DOUBLE))"
-        for qid, qlat, qlng in KNN_QUERIES
+        f"({qid}, {cast_lit(qlat)}, {cast_lit(qlng)})" for qid, qlat, qlng in KNN_QUERIES
     )
     return spark.sql(
         f"SELECT * FROM VALUES {vals} AS q(query_id, qlat, qlng)"
@@ -812,32 +791,29 @@ def _polyline_clip_oracle_sql() -> str:
 
 def _pip_big_oracle_sql() -> str:
     """DuckDB twin of the engine's certified winding test for the big
-    concave tile (tagjoin._winding_agg_sql): the SAME precomputed edge
-    normals / origin determinants (identical numpy op order as
-    tagjoin._edge_planes, which folds the latter to their banded
-    signs), the SAME +-eps certified sign bands, a
-    VALUES edge table instead of a broadcast array column. Points far
-    from edges (asserted: zero uncertified lanes) make both counts
-    identical."""
-    import numpy as np
-
+    concave tile (tagjoin._winding_agg_sql): the SAME edge normals and
+    origin determinants, computed from the tile's loop vertices in the
+    scalar port's op order (Point.cross, Point.dot; tagjoin._edge_planes
+    folds the latter to their banded signs), the SAME +-eps certified
+    sign bands, a VALUES edge table instead of a broadcast array
+    column. Points far from edges (asserted: zero uncertified lanes)
+    make both counts identical."""
     from s2js_spark.spark.tagjoin import MAX_DETERMINANT_ERROR
-    from s2js_spark.spark.tiles import _origin_xyz
 
-    ts = _tileset("pip_big", BIG_PIP_TILES, 64)
-    ox, oy, oz = _origin_xyz()
-    e0, e1 = int(ts.edge_off[0]), int(ts.edge_off[1])
-    cx, cy, cz = ts.cx[e0:e1], ts.cy[e0:e1], ts.cz[e0:e1]
-    dx, dy, dz = ts.dx[e0:e1], ts.dy[e0:e1], ts.dz[e0:e1]
-    nx = cy * dz - cz * dy
-    ny = cz * dx - cx * dz
-    nz = cx * dy - cy * dx
-    dea = nx * ox + ny * oy + nz * oz
-    rows = ", ".join(
-        f"({cx[k]!r}, {cy[k]!r}, {cz[k]!r}, {dx[k]!r}, {dy[k]!r}, {dz[k]!r},"
-        f" {nx[k]!r}, {ny[k]!r}, {nz[k]!r}, {dea[k]!r})"
-        for k in range(e1 - e0)
-    )
+    poly = _tileset("pip_big", BIG_PIP_TILES, 64).shapes[0]
+    o = Point.origin_point()
+    ox, oy, oz = o.x, o.y, o.z
+    rows, parity = [], False
+    for loop in poly.loops:
+        parity ^= loop.origin_inside
+        v = loop.vertices
+        for c, d in zip(v, v[1:] + v[:1]):
+            n = c.cross(d)
+            rows.append(
+                f"({c.x!r}, {c.y!r}, {c.z!r}, {d.x!r}, {d.y!r}, {d.z!r},"
+                f" {n.x!r}, {n.y!r}, {n.z!r}, {n.dot(o)!r})"
+            )
+    rows = ", ".join(rows)
     eps = repr(MAX_DETERMINANT_ERROR)
 
     def sgn(x: str) -> str:
@@ -847,7 +823,7 @@ def _pip_big_oracle_sql() -> str:
     bda = sgn("abx * e.dx + aby * e.dy + abz * e.dz")
     cbd = f"(-{sgn('e.nx * px + e.ny * py + e.nz * pz')})"
     dac = sgn("e.dea")
-    parity = "TRUE" if bool(ts.origin_parity[0]) else "FALSE"
+    parity = "TRUE" if parity else "FALSE"
     d = repr(D)
     return f"""{_PAGES_CTE},
         pts AS (

@@ -4,7 +4,11 @@ convex polygon (inside it, or within d of its boundary) — pure SQL.
 The per-edge point-to-segment distance is the reference's
 interiorDist/updateMinDistance semantics
 (/root/reference/s2/edge_distances.ts:239-333, ported in
-geometry/edge_distances.py) specialised to plan-time edge literals:
+geometry/edge_distances.py) specialised to plan-time edge literals.
+The literals are the scalar port's: ``polyline_ops.ring_edges`` gives
+each edge's ``Point`` endpoints, its ``Point.cross`` normal C and
+``Point.norm2`` |C|^2, and one edge-term text (``_edge_terms``) serves
+both the inlined literals and the broadcast edge-array aggregate:
 
 - closest point interior to arc AB iff (A-X).(CxX) < 0 < (B-X).(CxX)
   with C = A x B (plain cross: the reference's robust point_cross is
@@ -29,72 +33,66 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..geometry.angle import chord_from_angle
 from . import sqlkernels as sq
-from .polyline_ops import convex_planes
+from .polyline_ops import ring_edges
 
 _D = math.pi / 180.0
 
 
-def _ring_xyz(ring: list[list[float]]) -> np.ndarray:
-    lngs = np.array([v[0] for v in ring[:-1]], dtype=np.float64) * _D
-    lats = np.array([v[1] for v in ring[:-1]], dtype=np.float64) * _D
-    return np.stack(
-        [
-            np.cos(lats) * np.cos(lngs),
-            np.cos(lats) * np.sin(lngs),
-            np.sin(lats),
-        ],
-        axis=1,
+# One boundary edge as ten doubles: endpoints A/B, plane normal
+# C = A x B and |C|^2 (the fields of the broadcast edge struct).
+_EDGE_FIELDS = ("ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz", "c2")
+
+
+def _edge_values(ring: list[list[float]]) -> list[tuple[float, ...]]:
+    """Per edge of the closed ring, its _EDGE_FIELDS values, all from
+    the scalar port (polyline_ops.ring_edges)."""
+    return [
+        (a.x, a.y, a.z, b.x, b.y, b.z, c.x, c.y, c.z, c2)
+        for a, b, c, c2 in ring_edges(ring)
+    ]
+
+
+def _edge_terms(
+    p: tuple[str, str, str], e: list[str], lit=sq.spark_lit
+) -> tuple[str, str]:
+    """(X.C, chord^2 from X to arc AB) as SQL text, for point X = ``p``
+    and an edge spelled by its _EDGE_FIELDS operands ``e`` (literals,
+    or the fields of a broadcast edge struct). ``lit`` spells the
+    constants 0 and 1."""
+    px, py, pz = p
+    ax, ay, az, bx, by, bz, cx, cy, cz, c2 = e
+    xa2 = (
+        f"(({px} - {ax}) * ({px} - {ax})"
+        f" + ({py} - {ay}) * ({py} - {ay})"
+        f" + ({pz} - {az}) * ({pz} - {az}))"
     )
-
-
-def segment_chord2_exprs(
-    ring: list[list[float]], px: str, py: str, pz: str, lit=sq.spark_lit
-) -> list[str]:
-    """Per-edge chord^2 distance expressions from point columns
-    (px, py, pz) to each boundary segment of the closed CCW ring."""
-    v = _ring_xyz(ring)
-    out = []
-    n = v.shape[0]
-    for k in range(n):
-        a = v[k]
-        b = v[(k + 1) % n]
-        c = np.cross(a, b)
-        c2 = float(c @ c)
-        ax, ay, az = (float(t) for t in a)
-        bx, by, bz = (float(t) for t in b)
-        cx_, cy_, cz_ = (float(t) for t in c)
-        xa2 = (
-            f"(({px} - {lit(ax)}) * ({px} - {lit(ax)})"
-            f" + ({py} - {lit(ay)}) * ({py} - {lit(ay)})"
-            f" + ({pz} - {lit(az)}) * ({pz} - {lit(az)}))"
-        )
-        xb2 = (
-            f"(({px} - {lit(bx)}) * ({px} - {lit(bx)})"
-            f" + ({py} - {lit(by)}) * ({py} - {lit(by)})"
-            f" + ({pz} - {lit(bz)}) * ({pz} - {lit(bz)}))"
-        )
-        xc = f"({lit(cx_)} * {px} + {lit(cy_)} * {py} + {lit(cz_)} * {pz})"
-        # CX = C x X
-        cxx = f"({lit(cy_)} * {pz} - {lit(cz_)} * {py})"
-        cxy = f"({lit(cz_)} * {px} - {lit(cx_)} * {pz})"
-        cxz = f"({lit(cx_)} * {py} - {lit(cy_)} * {px})"
-        ia = (
-            f"(({lit(ax)} - {px}) * {cxx} + ({lit(ay)} - {py}) * {cxy}"
-            f" + ({lit(az)} - {pz}) * {cxz}) < {lit(0.0)}"
-        )
-        ib = (
-            f"(({lit(bx)} - {px}) * {cxx} + ({lit(by)} - {py}) * {cxy}"
-            f" + ({lit(bz)} - {pz}) * {cxz}) > {lit(0.0)}"
-        )
-        cx2 = f"({cxx} * {cxx} + {cxy} * {cxy} + {cxz} * {cxz})"
-        qr = f"({lit(1.0)} - sqrt({cx2} / {lit(c2)}))"
-        d_int = f"(({xc} * {xc}) / {lit(c2)} + {qr} * {qr})"
-        out.append(
-            f"(CASE WHEN {ia} AND {ib} THEN {d_int}"
-            f" ELSE least({xa2}, {xb2}) END)"
-        )
-    return out
+    xb2 = (
+        f"(({px} - {bx}) * ({px} - {bx})"
+        f" + ({py} - {by}) * ({py} - {by})"
+        f" + ({pz} - {bz}) * ({pz} - {bz}))"
+    )
+    xc = f"({cx} * {px} + {cy} * {py} + {cz} * {pz})"
+    # CX = C x X
+    cxx = f"({cy} * {pz} - {cz} * {py})"
+    cxy = f"({cz} * {px} - {cx} * {pz})"
+    cxz = f"({cx} * {py} - {cy} * {px})"
+    ia = (
+        f"(({ax} - {px}) * {cxx} + ({ay} - {py}) * {cxy}"
+        f" + ({az} - {pz}) * {cxz}) < {lit(0.0)}"
+    )
+    ib = (
+        f"(({bx} - {px}) * {cxx} + ({by} - {py}) * {cxy}"
+        f" + ({bz} - {pz}) * {cxz}) > {lit(0.0)}"
+    )
+    cx2 = f"({cxx} * {cxx} + {cxy} * {cxy} + {cxz} * {cxz})"
+    qr = f"({lit(1.0)} - sqrt({cx2} / {c2}))"
+    d_int = f"(({xc} * {xc}) / {c2} + {qr} * {qr})"
+    return xc, (
+        f"(CASE WHEN {ia} AND {ib} THEN {d_int}"
+        f" ELSE least({xa2}, {xb2}) END)"
+    )
 
 
 def buffer_exprs(
@@ -107,22 +105,23 @@ def buffer_exprs(
     pz: str | None = None,
 ) -> tuple[str, str]:
     """(inside_predicate, boundary_chord2) over degree columns (or
-    pre-spelled unit-vector component expressions px/py/pz)."""
+    pre-spelled unit-vector component expressions px/py/pz), for the
+    closed convex CCW ring: inside all edge planes, and the least
+    per-edge chord^2 to the boundary."""
     if px is None:
         px, py, pz = sq.xyz_sql(lat, lng, lit)
-    planes = convex_planes(ring)
-    inside = " AND ".join(
-        f"({lit(float(nx))} * {px} + {lit(float(ny))} * {py}"
-        f" + {lit(float(nz))} * {pz}) > {lit(0.0)}"
-        for nx, ny, nz in planes
-    )
-    dists = segment_chord2_exprs(ring, px, py, pz, lit)
-    return f"({inside})", f"least({', '.join(dists)})"
+    terms = [
+        _edge_terms((px, py, pz), [lit(v) for v in e], lit)
+        for e in _edge_values(ring)
+    ]
+    inside = " AND ".join(f"{xc} > {lit(0.0)}" for xc, _ in terms)
+    return f"({inside})", f"least({', '.join(d for _, d in terms)})"
 
 
 def chord2_limit(radius_deg: float) -> float:
-    """chord^2 of an angular radius in degrees."""
-    return (2.0 * math.sin(radius_deg * _D / 2.0)) ** 2
+    """chord^2 of an angular radius in degrees: s1.chord_from_angle
+    (4 from 180 degrees on, -1 for a negative radius)."""
+    return chord_from_angle(radius_deg * _D)
 
 
 def buffered_covering(
@@ -165,55 +164,19 @@ MAX_INLINE_RINGS = 16
 
 # type of the broadcast geometry frame's per-tile ``edges`` column
 _EDGE_SCHEMA = (
-    "array<struct<"
-    "ax:double,ay:double,az:double,bx:double,by:double,bz:double,"
-    "cx:double,cy:double,cz:double,c2:double>>"
+    "array<struct<" + ",".join(f"{n}:double" for n in _EDGE_FIELDS) + ">>"
 )
-
-
-def _edge_rows(rings: list[tuple[str, list[list[float]]]]) -> list[tuple]:
-    """Per-tile edge frames for the broadcast geometry side: endpoints
-    a/b, plane normal c = a x b (== convex_planes' roll(-1) cross, so
-    the inside test matches the inline form bitwise), |c|^2."""
-    rows = []
-    for idx, (_tid, ring) in enumerate(rings):
-        v = _ring_xyz(ring)
-        n = v.shape[0]
-        edges = []
-        for k in range(n):
-            a, b = v[k], v[(k + 1) % n]
-            c = np.cross(a, b)
-            edges.append(tuple(float(t) for t in (*a, *b, *c, c @ c)))
-        rows.append((idx, edges))
-    return rows
 
 
 def _buffer_agg_sql(px: str, py: str, pz: str, edges: str = "_bedges") -> str:
     """One aggregate() over the broadcast ``edges`` array producing
     struct(ins: inside-all-planes, d: min boundary chord^2) — the
     O(1)-expression-width refinement for ring counts past
-    MAX_INLINE_RINGS. Per-edge arithmetic is the same op chain as
-    segment_chord2_exprs (plan-time-literal form), so the two paths
-    agree bitwise except that the fold's pairwise least() replaces the
+    MAX_INLINE_RINGS. Per-edge arithmetic is buffer_exprs' own
+    (_edge_terms over the struct fields), so the two paths agree
+    bitwise except that the fold's pairwise least() replaces the
     variadic least() — min is exact either way."""
-    xa2 = (
-        f"(({px} - e.ax) * ({px} - e.ax) + ({py} - e.ay) * ({py} - e.ay)"
-        f" + ({pz} - e.az) * ({pz} - e.az))"
-    )
-    xb2 = (
-        f"(({px} - e.bx) * ({px} - e.bx) + ({py} - e.by) * ({py} - e.by)"
-        f" + ({pz} - e.bz) * ({pz} - e.bz))"
-    )
-    xc = f"(e.cx * {px} + e.cy * {py} + e.cz * {pz})"
-    cxx = f"(e.cy * {pz} - e.cz * {py})"
-    cxy = f"(e.cz * {px} - e.cx * {pz})"
-    cxz = f"(e.cx * {py} - e.cy * {px})"
-    ia = f"((e.ax - {px}) * {cxx} + (e.ay - {py}) * {cxy} + (e.az - {pz}) * {cxz}) < 0.0D"
-    ib = f"((e.bx - {px}) * {cxx} + (e.by - {py}) * {cxy} + (e.bz - {pz}) * {cxz}) > 0.0D"
-    cx2 = f"({cxx} * {cxx} + {cxy} * {cxy} + {cxz} * {cxz})"
-    qr = f"(1.0D - sqrt({cx2} / e.c2))"
-    d_int = f"(({xc} * {xc}) / e.c2 + {qr} * {qr})"
-    d_edge = f"(CASE WHEN {ia} AND {ib} THEN {d_int} ELSE least({xa2}, {xb2}) END)"
+    xc, d_edge = _edge_terms((px, py, pz), [f"e.{n}" for n in _EDGE_FIELDS])
     return (
         f"aggregate({edges},"
         f" named_struct('ins', true, 'd', cast('Infinity' as double)),"
@@ -302,27 +265,18 @@ def tag_within_distance_multi(
         )
         return out.drop(*drop)
 
-    def _dlit(v: float) -> str:
-        return f"CAST('{float(v)!r}' AS DOUBLE)"
-
     geom = sq.values_frame(
         spark,
         [
             f"({t}, array("
             + ", ".join(
                 "named_struct("
-                + ", ".join(
-                    f"'{n}', {_dlit(val)}"
-                    for n, val in zip(
-                        ("ax", "ay", "az", "bx", "by", "bz", "cx", "cy", "cz", "c2"),
-                        e,
-                    )
-                )
+                + ", ".join(f"'{n}', {sq.cast_lit(v)}" for n, v in zip(_EDGE_FIELDS, e))
                 + ")"
-                for e in edges
+                for e in _edge_values(ring)
             )
             + "))"
-            for t, edges in _edge_rows(rings)
+            for t, (_tid, ring) in enumerate(rings)
         ],
         f"(0, CAST(array() AS {_EDGE_SCHEMA}))",
         "_bufgeom(tile_i, edges)",

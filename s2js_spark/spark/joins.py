@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..geometry import cellid_scalar as cs
+from ..geometry.angle import chord_from_angle
 from ..geometry.metric import MIN_WIDTH_METRIC
 from . import memo
 from . import sqlkernels as sq
@@ -143,10 +144,7 @@ def _local_neighborhood_frame(
         lat, lng = float(r["qlat"]), float(r["qlng"])
         for c in _neighbors_3x3(cs.from_latlng_degrees(lat, lng), level):
             c -= (c >> 63) << 64  # raw uint64 bits as a signed long
-            vals.append(
-                f"({qid}, CAST('{lat!r}' AS DOUBLE),"
-                f" CAST('{lng!r}' AS DOUBLE), {c}L)"
-            )
+            vals.append(f"({qid}, {sq.cast_lit(lat)}, {sq.cast_lit(lng)}, {c}L)")
     out = spark.sql(
         "SELECT * FROM VALUES " + ", ".join(vals)
         + f" AS _q({query_id}, qlat, qlng, _cell)"
@@ -243,7 +241,7 @@ def knn_join(
     # certified and escalation branches (ReuseExchange), so nothing is
     # computed twice at scale.
     min_width = MIN_WIDTH_METRIC.value(level)
-    max_certified_chord2 = (2 * math.sin(min(math.pi, min_width) / 2)) ** 2
+    max_certified_chord2 = chord_from_angle(min_width)
     per_q = topk.groupBy(query_id).agg(
         F.max("chord2").alias("_kth"), F.count("*").alias("_n")
     )

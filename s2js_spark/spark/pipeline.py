@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .tiles import TileSetStruct
+from .tiles import TileSetStruct, tile_id_col
 
 
 def extract_geotags(df: DataFrame) -> DataFrame:
@@ -92,16 +92,7 @@ def tag_pipeline(
     geo = df.select("url", "lat", "lng", "text", "lang")
     pairs = tag_tiles_pairs(spark, geo, ts, cellid_col="cellid")
     out = pairs.withColumn("token", sq.s2_token_sql("cellid"))
-    # tile_i -> tile_id as a literal-map lookup: constant pairs need no
-    # broadcast join (round 6 — saves one broadcast job per run)
-    names = F.create_map(
-        *[
-            x
-            for i, t in enumerate(ts.tile_ids)
-            for x in (F.lit(i), F.lit(str(t)))
-        ]
-    )
     return out.select(
         "url", "cellid", "token", "text", "lang",
-        F.element_at(names, F.col("tile_i")).alias("tile_id"),
+        tile_id_col(ts.tile_ids).alias("tile_id"),
     )

@@ -14,7 +14,10 @@ boundary crossings, and n.P(t) is LINEAR in t:
     empty iff any plane has fa<0 and fb<0, or lo >= hi
 
 Everything is +,-,*,/ and least/greatest over plan-time plane literals
-— one whole-stage-codegen map over the segments, no shuffle, no UDF;
+— the normals n_i are the scalar port's ``Point.cross`` of the ring's
+``Point.from_latlng_degrees`` vertices (``ring_edges``, which the
+buffer join in ``distance`` shares) —
+one whole-stage-codegen map over the segments, no shuffle, no UDF;
 at 10^12 segments this runs at scan speed. The same expression text
 runs in DuckDB (dialect differs only in double-literal spelling),
 giving the oracle; outputs are rounded to 1e-6 so DuckDB's
@@ -23,29 +26,34 @@ multiply-add contraction (~ulp drift) cannot flip a hash.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..geometry.point import Point
 from . import sqlkernels as sq
 
-_D = math.pi / 180.0
+
+def ring_edges(ring: list[list[float]]) -> list[tuple[Point, Point, Point, float]]:
+    """Per edge A->B of a closed GeoJSON ring ([lng, lat] degrees,
+    first == last): (A, B, C = A x B, |C|^2). The vertices are
+    ``Point.from_latlng_degrees``, C is ``Point.cross`` and |C|^2 is
+    ``Point.norm2``: every plan literal of the clip and buffer joins
+    comes from the scalar port."""
+    v = [Point.from_latlng_degrees(p[1], p[0]) for p in ring[:-1]]
+    out = []
+    for a, b in zip(v, v[1:] + v[:1]):
+        c = a.cross(b)
+        out.append((a, b, c, c.norm2()))
+    return out
 
 
 def convex_planes(ring: list[list[float]]) -> np.ndarray:
     """(n,3) interior-side edge-plane normals C x D for a closed CCW
     GeoJSON ring ([lng, lat] degrees, first == last)."""
-    lngs = np.array([v[0] for v in ring[:-1]], dtype=np.float64) * _D
-    lats = np.array([v[1] for v in ring[:-1]], dtype=np.float64) * _D
-    x = np.cos(lats) * np.cos(lngs)
-    y = np.cos(lats) * np.sin(lngs)
-    z = np.sin(lats)
-    nx = y * np.roll(z, -1) - z * np.roll(y, -1)
-    ny = z * np.roll(x, -1) - x * np.roll(z, -1)
-    nz = x * np.roll(y, -1) - y * np.roll(x, -1)
-    return np.stack([nx, ny, nz], axis=1)
+    return np.array(
+        [(c.x, c.y, c.z) for _, _, c, _ in ring_edges(ring)], dtype=np.float64
+    ).reshape(-1, 3)
 
 
 def clip_interval_exprs(

@@ -89,6 +89,12 @@ def spark_lit(v: float) -> str:
     return f"{float(v)!r}D"
 
 
+def cast_lit(v: float) -> str:
+    """Spark SQL double as ``CAST('<repr>' AS DOUBLE)``: the round-trip
+    repr, and also spells inf and nan. The VALUES frames' spelling."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
 def radians_sql(deg: str, lit=spark_lit) -> str:
     """Degrees -> radians as ``deg * (pi / 180)``, LatLng.from_degrees."""
     return f"({deg} * {lit(_D)})"

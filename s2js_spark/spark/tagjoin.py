@@ -47,10 +47,12 @@ certified path runs with ZERO Python:
     map-side filter over the matched rows when ``exact_residuals=True``
     (the default; graded queries keep it on).
 
-Edge normals are precomputed driver-side in NumPy and shipped as
-round-trip double literals, and their origin-side determinants are
-folded there to certified signs; the band bounds the rounding error of
-that evaluation order.
+Every geometry literal comes from the tile set's scalar shapes: edge
+normals are ``Point.cross`` of a polygon loop's vertices, shipped as
+round-trip double literals, and their origin-side determinants
+(``Point.dot``) are folded on the driver to certified signs; the band
+bounds the rounding error of that evaluation order. Rect bounds and
+cap centers and radii are the shapes' own fields.
 """
 
 from __future__ import annotations
@@ -64,16 +66,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from ..geometry import cellid_scalar as cs
+from ..geometry.point import Point
+from ..geometry.polygon import Polygon
+from ..geometry.predicates import MAX_DETERMINANT_ERROR
+from ..geometry.rect import Rect
 from . import memo
 from . import sqlkernels as sq
-from .tiles import (
-    KIND_CAP,
-    KIND_POLYGON,
-    KIND_RECT,
-    MAX_DETERMINANT_ERROR,
-    TileSetStruct,
-    _origin_xyz,
-)
+from .tiles import TileSetStruct
+
+KIND_POLYGON = 0
+KIND_RECT = 1
+KIND_CAP = 2
 
 _UNCERT = 1_000_000  # accumulator stride separating crossing count / flags
 
@@ -84,28 +87,28 @@ _EDGE_STRUCT = (
 )
 
 
-def _edge_planes(ts: TileSetStruct, t: int) -> list[tuple[float, ...]]:
-    """Per edge of polygon tile ``t``: (c, d, n = c x d, s) as ten
-    floats, with s the origin's determinant n . origin folded to its
-    certified sign: +1.0 or -1.0 outside the band, 0.0 inside it.
-    Computed once in NumPy so the inlined and the array-column winding
+def _edge_planes(poly: Polygon) -> list[tuple[float, ...]]:
+    """Per edge of ``poly``'s non-empty, non-full loops: (c, d,
+    n = c x d, s) as ten floats, with s the origin's determinant
+    n . origin folded to its certified sign: +1.0 or -1.0 outside the
+    band, 0.0 inside it. The inlined and the array-column winding
     evaluate the same literals."""
-    e0, e1 = int(ts.edge_off[t]), int(ts.edge_off[t + 1])
-    cx, cy, cz = ts.cx[e0:e1], ts.cy[e0:e1], ts.cz[e0:e1]
-    dx, dy, dz = ts.dx[e0:e1], ts.dy[e0:e1], ts.dz[e0:e1]
-    nx = cy * dz - cz * dy
-    ny = cz * dx - cx * dz
-    nz = cx * dy - cy * dx
-    ox, oy, oz = _origin_xyz()
-    dea = nx * ox + ny * oy + nz * oz
-    s = np.where(
-        dea > MAX_DETERMINANT_ERROR, 1.0,
-        np.where(dea < -MAX_DETERMINANT_ERROR, -1.0, 0.0),
-    )
-    return [
-        tuple(float(v) for v in row)
-        for row in zip(cx, cy, cz, dx, dy, dz, nx, ny, nz, s)
-    ]
+    origin = Point.origin_point()
+    planes = []
+    for loop in poly.loops:
+        if loop.is_empty_or_full():
+            continue
+        v = loop.vertices
+        for c, d in zip(v, v[1:] + v[:1]):
+            n = c.cross(d)
+            dea = n.dot(origin)
+            s = (
+                1.0 if dea > MAX_DETERMINANT_ERROR
+                else -1.0 if dea < -MAX_DETERMINANT_ERROR
+                else 0.0
+            )
+            planes.append((c.x, c.y, c.z, d.x, d.y, d.z, n.x, n.y, n.z, s))
+    return planes
 
 
 def covering_frames(
@@ -133,9 +136,7 @@ def covering_frames(
     """
     levels = sorted({int(cs.level(int(c))) for c in ts.cov_cell})
 
-    def d(v: float) -> str:  # shortest round-trip double literal
-        return f"CAST('{float(v)!r}' AS DOUBLE)"
-
+    d = sq.cast_lit
     cov = sq.values_frame(
         spark,
         [
@@ -149,11 +150,20 @@ def covering_frames(
 
     no_edges = f"CAST(array() AS {_EDGE_STRUCT})"
     geom_rows = []
-    for t in range(len(ts.tile_ids)):
-        kind = int(ts.tile_kind[t])
+    for t, shape in enumerate(ts.shapes):
+        parity, planes, rect, cap = False, [], (0.0,) * 4, (0.0,) * 4
+        if isinstance(shape, Polygon):
+            kind, planes = KIND_POLYGON, _edge_planes(shape)
+            # XOR of the loops' originInside: the winding count's offset
+            parity = sum(loop.origin_inside for loop in shape.loops) % 2 == 1
+        elif isinstance(shape, Rect):
+            kind = KIND_RECT
+            rect = (shape.lat.lo, shape.lat.hi, shape.lng.lo, shape.lng.hi)
+        else:
+            kind = KIND_CAP
+            cap = (shape.center.x, shape.center.y, shape.center.z, shape.rad)
         # small polygons are fully inlined into the plan
         # (_winding_inline_sql); only big ones need the array column
-        planes = _edge_planes(ts, t) if kind == KIND_POLYGON else []
         if len(planes) > MAX_INLINE_EDGES:
             edges_sql = "array({})".format(", ".join(
                 "named_struct("
@@ -165,14 +175,9 @@ def covering_frames(
             ))
         else:
             edges_sql = no_edges
-        lat_lo, lat_hi, lng_lo, lng_hi = (float(v) for v in ts.rect_bounds[t])
-        ccx, ccy, ccz = (float(v) for v in ts.cap_center[t])
         geom_rows.append(
-            f"({t}, {kind},"
-            f" {'true' if ts.origin_parity[t] else 'false'},"
-            f" {d(lat_lo)}, {d(lat_hi)}, {d(lng_lo)}, {d(lng_hi)},"
-            f" {d(ccx)}, {d(ccy)}, {d(ccz)}, {d(float(ts.cap_r2[t]))},"
-            f" {edges_sql})"
+            f"({t}, {kind}, {'true' if parity else 'false'},"
+            f" {', '.join(d(v) for v in rect + cap)}, {edges_sql})"
         )
     zero = d(0.0)
     geom = sq.values_frame(
@@ -257,10 +262,10 @@ def _winding_inline_sql(ts: TileSetStruct) -> str:
     lane.
     """
     branches = []
-    for t in range(len(ts.tile_ids)):
-        if int(ts.tile_kind[t]) != KIND_POLYGON:
+    for t, shape in enumerate(ts.shapes):
+        if not isinstance(shape, Polygon):
             continue
-        planes = _edge_planes(ts, t)
+        planes = _edge_planes(shape)
         if not planes or len(planes) > MAX_INLINE_EDGES:
             continue
         if any(sg == 0.0 for *_, sg in planes):
@@ -345,7 +350,8 @@ def tag_candidates(
         .join(F.broadcast(geom), "tile_i")
     )
 
-    ox, oy, oz = _origin_xyz()
+    o = Point.origin_point()
+    ox, oy, oz = o.x, o.y, o.z
     px, py, pz = sq.xyz_sql(lat_col, lng_col)
     # One selectExpr of lateral aliases (single analysis pass; nested
     # Projects at runtime — see sqlkernels.with_s2_cellid). The point
@@ -447,10 +453,9 @@ def _tag_tiles_pairs_build(
     # Only non-interior polygon covering cells can produce uncertified
     # lanes; a tile set without them makes the residual branch (a
     # second full scan) a provable no-op — skip it.
-    has_poly = bool(
-        np.any(
-            (ts.tile_kind[ts.cov_tile] == KIND_POLYGON) & ~ts.cov_interior
-        )
+    has_poly = any(
+        isinstance(ts.shapes[t], Polygon) and not interior
+        for t, interior in zip(ts.cov_tile, ts.cov_interior)
     )
     if not exact_residuals or not has_poly:
         return easy

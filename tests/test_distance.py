@@ -10,15 +10,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from s2js_spark.geometry.angle import chord_from_angle
 from s2js_spark.geometry.edge_distances import _update_min_distance
 from s2js_spark.geometry.loop import Loop
 from s2js_spark.geometry.point import Point
 from s2js_spark.geometry.polygon import Polygon
-from s2js_spark.spark.distance import (
-    buffer_exprs,
-    chord2_limit,
-    tag_within_distance,
-)
+from s2js_spark.spark.distance import buffer_exprs, tag_within_distance
 from s2js_spark.spark.session import get_session
 
 D = math.pi / 180.0
@@ -64,26 +61,39 @@ def test_sql_chord2_matches_scalar_geometry(spark):
 
 
 def test_tag_within_distance_membership(spark):
-    radius = 0.5
+    """Members are the rows in the polygon or within the radius of its
+    boundary, the radius as s1.chord_from_angle takes it: from 180
+    degrees on every row, for a negative radius only inside rows.
+    Rows near the diamond's antipode (about -1, -172) are the farthest
+    from its boundary."""
     rng = np.random.RandomState(9)
     rows = [
         (i, float(rng.uniform(-1, 3)), float(rng.uniform(5, 11)))
         for i in range(400)
     ]
+    rows += [
+        (400 + i, float(rng.uniform(-3, 1)), float(rng.uniform(-175, -169)))
+        for i in range(50)
+    ]
     df = spark.createDataFrame(rows, "id long, lat double, lng double")
-    got = {r["id"] for r in tag_within_distance(df, DIAMOND, radius).collect()}
 
     loop = Loop([_pt(lat, lng) for lng, lat in DIAMOND[:-1]])
     loop.normalize()
     poly = Polygon([loop])
-    limit = chord2_limit(radius)
-    want = set()
-    for i, lat, lng in rows:
-        p = _pt(lat, lng)
-        if poly.contains_point(p) or _scalar_boundary_chord2(p) <= limit:
-            want.add(i)
-    assert got == want
-    assert 0 < len(want) < len(rows)  # fixture exercises both sides
+    inside = {i for i, lat, lng in rows if poly.contains_point(_pt(lat, lng))}
+    boundary = {i: _scalar_boundary_chord2(_pt(lat, lng)) for i, lat, lng in rows}
+    assert 0 < len(inside) < 400
+    for radius in (0.5, 200.0, 270.0, -1.0):
+        got = {r["id"] for r in tag_within_distance(df, DIAMOND, radius).collect()}
+        limit = chord_from_angle(radius * D)
+        want = inside | {i for i, c2 in boundary.items() if c2 <= limit}
+        assert got == want, radius
+        if radius == 0.5:
+            assert 0 < len(want) < len(rows)  # fixture exercises both sides
+        elif radius > 0:
+            assert len(want) == len(rows), radius
+        else:
+            assert want == inside
 
 
 def test_buffered_covering_is_superset_of_buffer():

@@ -10,7 +10,10 @@ until it is added to the allowlist with its reason.
 Under s2js_spark/spark/, only ``sqlkernels`` spells ``cos(`` / ``sin(``
 in an SQL string or calls ``F.cos`` / ``F.sin``: every lat/lng -> xyz
 goes through its helpers. The DuckDB oracle texts of __spark_entry__.py
-stay independent of the engine's and are not scanned.
+stay independent of the engine's and are not scanned. On the driver,
+no module there calls ``math`` / NumPy ``cos``, ``sin``, ``tan`` or
+``cross`` or uses ``@``: the geometry literals of its plans come from
+the scalar ``geometry/`` port.
 """
 
 from __future__ import annotations
@@ -163,3 +166,57 @@ def test_trig_scanner_sees_every_form():
         "    return a, b, c, d, e\n"
     )
     assert _trig_sites(ast.parse(src), "m") == {"m:4", "m:5", "m:6"}
+
+
+_DRIVER_TRIG = ("cos", "sin", "tan", "cross")
+_DRIVER_TRIG_MODULES = ("math", "np", "numpy")
+
+
+def _driver_geometry_sites(tree: ast.AST, module: str) -> set[str]:
+    """``module:line`` of every call of math / NumPy cos, sin, tan or
+    cross (as ``math.cos(...)`` or imported by name) and of every ``@``
+    operator."""
+    found = set()
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in _DRIVER_TRIG
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id in _DRIVER_TRIG_MODULES
+        ) or (
+            isinstance(node, ast.ImportFrom)
+            and node.module in ("math", "numpy")
+            and any(a.name in _DRIVER_TRIG for a in node.names)
+        ) or (
+            isinstance(node, (ast.BinOp, ast.AugAssign))
+            and isinstance(node.op, ast.MatMult)
+        ):
+            found.add(f"{module}:{node.lineno}")
+    return found
+
+
+def test_driver_geometry_goes_through_the_scalar_port():
+    sites = set()
+    for path in sorted((ROOT / "s2js_spark" / "spark").glob("*.py")):
+        sites |= _driver_geometry_sites(ast.parse(path.read_text()), path.stem)
+    assert not sites, f"driver geometry outside geometry/: {sorted(sites)}"
+
+
+def test_driver_geometry_scanner_sees_every_form():
+    """math / np / numpy trig and cross calls, names imported from math
+    or numpy, and @ are found; the port's Point.cross, F.cos and other
+    math calls are not."""
+    src = (
+        "from math import sin\n"
+        "def f(a, b, lat):\n"
+        "    x = math.cos(lat) + np.sin(lat) + numpy.tan(lat)\n"
+        "    c = np.cross(a, b)\n"
+        "    d = c @ c\n"
+        "    d @= c\n"
+        "    e = a.cross(b) + F.cos(lat) + math.sqrt(lat) + np.hypot(a, b)\n"
+        "    return x, c, d, e\n"
+    )
+    assert _driver_geometry_sites(ast.parse(src), "m") == {
+        "m:1", "m:3", "m:4", "m:5", "m:6",
+    }

@@ -113,7 +113,7 @@ def test_big_polygon_aggregate_path_matches_kernel(spark):
     from s2js_spark.spark.tagjoin import MAX_INLINE_EDGES
 
     ts = build_tileset(e.BIG_PIP_TILES, max_cells=64)
-    n_edges = int(ts.edge_off[1] - ts.edge_off[0])
+    n_edges = sum(len(loop.vertices) for loop in ts.shapes[0].loops)
     assert n_edges > MAX_INLINE_EDGES  # really drives the fallback
 
     geo = extract_geotags(pages(spark, SF)).filter(F.col("lat").isNotNull())
@@ -183,22 +183,24 @@ def test_inline_winding_writes_each_determinant_once(monkeypatch):
     the previous one, the band test), each edge normal's n.p at most
     twice, and no origin determinant is left as a literal."""
     import __spark_entry__ as e
+    from s2js_spark.geometry.point import Point
     from s2js_spark.spark import tagjoin
-    from s2js_spark.spark.tiles import _origin_xyz
 
     monkeypatch.setattr(tagjoin, "MAX_INLINE_EDGES", 10**6)
     ts = build_tileset(e.PIP_TILES + e.BIG_PIP_TILES, max_cells=16)
     sql = tagjoin._winding_inline_sql(ts)
-    ox, oy, oz = _origin_xyz()
+    o = Point.origin_point()
+    ox, oy, oz = o.x, o.y, o.z
     n_vertex = 0
-    for t in range(len(ts.tile_ids)):
-        for cx, cy, cz, dx, dy, dz, nx, ny, nz, _ in tagjoin._edge_planes(ts, t):
+    for shape in ts.shapes:
+        for cx, cy, cz, dx, dy, dz, nx, ny, nz, _ in tagjoin._edge_planes(shape):
             vertex = f"_abx * {cx!r}D + _aby * {cy!r}D + _abz * {cz!r}D"
             assert 1 <= sql.count(vertex) <= 3
             assert 1 <= sql.count(f"{nx!r}D * _px + {ny!r}D * _py + {nz!r}D * _pz") <= 2
             assert repr(nx * ox + ny * oy + nz * oz) not in sql
             n_vertex += 1
-    assert n_vertex == int(ts.edge_off[-1]) > 240
+    n_edges = sum(len(loop.vertices) for shape in ts.shapes for loop in shape.loops)
+    assert n_vertex == n_edges > 240
 
 
 def test_pairs_plan_stays_compact(spark):

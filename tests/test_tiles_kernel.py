@@ -16,6 +16,7 @@ import pytest
 from s2js_spark.geometry.cap import Cap
 from s2js_spark.geometry.interval import R1Interval, S1Interval
 from s2js_spark.geometry.latlng import LatLng
+from s2js_spark.geometry.loop import Loop
 from s2js_spark.geometry.point import Point
 from s2js_spark.geometry.rect import Rect
 from s2js_spark.spark.session import get_session
@@ -106,6 +107,30 @@ def test_tileset_interior_cells_marked():
     ts = build_tileset(tiles, max_cells=128)
     # a healthy chunk of a large polygon covering must be interior cells
     assert ts.cov_interior.sum() > 0
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        pytest.param(lambda: ((10.0, 20.0), 0.01), id="tuple_cap"),
+        pytest.param(
+            lambda: Loop([Point.from_latlng_degrees(*ll) for ll in ((0, 0), (0, 1), (1, 0))]),
+            id="loop",
+        ),
+    ],
+)
+def test_build_tileset_rejects_untaggable_input_before_covering(monkeypatch, bad):
+    """Only GeoJSON dicts, Polygons, Rects and Caps are tile shapes;
+    anything else is a TypeError raised before any tile is covered."""
+    from s2js_spark.spark import tiles as tiles_mod
+
+    def no_covering(*args, **kwargs):
+        raise AssertionError("covered before rejecting")
+
+    monkeypatch.setattr(tiles_mod, "GeoJSONRegionCoverer", no_covering)
+    good = ("ok", _polygon_geojson(10.0, 20.0, 1.0))
+    with pytest.raises(TypeError, match="GeoJSON Polygon dict, a Polygon, a Rect or a Cap"):
+        build_tileset([good, ("bad", bad())])
 
 
 def test_antimeridian_rect(spark):
