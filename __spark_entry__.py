@@ -791,28 +791,25 @@ def _polyline_clip_oracle_sql() -> str:
 
 def _pip_big_oracle_sql() -> str:
     """DuckDB twin of the engine's certified winding test for the big
-    concave tile (tagjoin._winding_agg_sql): the SAME edge normals and
-    origin determinants, computed from the tile's loop vertices in the
-    scalar port's op order (Point.cross, Point.dot; tagjoin._edge_planes
-    folds the latter to their banded signs), the SAME +-eps certified
-    sign bands, a VALUES edge table instead of a broadcast array
-    column. Points far from edges (asserted: zero uncertified lanes)
-    make both counts identical."""
-    from s2js_spark.spark.tagjoin import MAX_DETERMINANT_ERROR
+    concave tile (tagjoin._winding_agg_sql): the SAME edge normals,
+    origin determinants and loop parity, from the engine's own edge walk
+    (tagjoin._loop_edges, _origin_parity; _edge_planes folds the
+    determinants to their banded signs where this twin tests them in
+    SQL), the SAME +-eps certified sign bands, a VALUES edge table
+    instead of a broadcast array column. Points far from edges
+    (asserted: zero uncertified lanes) make both counts identical."""
+    from s2js_spark.spark.tagjoin import (
+        MAX_DETERMINANT_ERROR, _loop_edges, _origin_parity,
+    )
 
     poly = _tileset("pip_big", BIG_PIP_TILES, 64).shapes[0]
     o = Point.origin_point()
     ox, oy, oz = o.x, o.y, o.z
-    rows, parity = [], False
-    for loop in poly.loops:
-        parity ^= loop.origin_inside
-        v = loop.vertices
-        for c, d in zip(v, v[1:] + v[:1]):
-            n = c.cross(d)
-            rows.append(
-                f"({c.x!r}, {c.y!r}, {c.z!r}, {d.x!r}, {d.y!r}, {d.z!r},"
-                f" {n.x!r}, {n.y!r}, {n.z!r}, {n.dot(o)!r})"
-            )
+    rows = [
+        f"({c.x!r}, {c.y!r}, {c.z!r}, {d.x!r}, {d.y!r}, {d.z!r},"
+        f" {n.x!r}, {n.y!r}, {n.z!r}, {dea!r})"
+        for c, d, n, dea in _loop_edges(poly)
+    ]
     rows = ", ".join(rows)
     eps = repr(MAX_DETERMINANT_ERROR)
 
@@ -823,7 +820,7 @@ def _pip_big_oracle_sql() -> str:
     bda = sgn("abx * e.dx + aby * e.dy + abz * e.dz")
     cbd = f"(-{sgn('e.nx * px + e.ny * py + e.nz * pz')})"
     dac = sgn("e.dea")
-    parity = "TRUE" if parity else "FALSE"
+    parity = "TRUE" if _origin_parity(poly) else "FALSE"
     d = repr(D)
     return f"""{_PAGES_CTE},
         pts AS (

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..geometry.angle import chord_from_angle
 from . import sqlkernels as sq
-from .polyline_ops import ring_edges
+from .polyline_ops import ring_edges, ring_points
 
 _D = math.pi / 180.0
 
@@ -50,7 +50,7 @@ def _edge_values(ring: list[list[float]]) -> list[tuple[float, ...]]:
     the scalar port (polyline_ops.ring_edges)."""
     return [
         (a.x, a.y, a.z, b.x, b.y, b.z, c.x, c.y, c.z, c2)
-        for a, b, c, c2 in ring_edges(ring)
+        for a, b, c, c2 in ring_edges(ring_points(ring))
     ]
 
 

@@ -15,8 +15,8 @@ boundary crossings, and n.P(t) is LINEAR in t:
 
 Everything is +,-,*,/ and least/greatest over plan-time plane literals
 — the normals n_i are the scalar port's ``Point.cross`` of the ring's
-``Point.from_latlng_degrees`` vertices (``ring_edges``, which the
-buffer join in ``distance`` shares) —
+``Point.from_latlng_degrees`` vertices (``ring_edges``, the edge walk
+the buffer join in ``distance`` and the tag join's polygons share) —
 one whole-stage-codegen map over the segments, no shuffle, no UDF;
 at 10^12 segments this runs at scan speed. The same expression text
 runs in DuckDB (dialect differs only in double-literal spelling),
@@ -26,7 +26,6 @@ multiply-add contraction (~ulp drift) cannot flip a hash.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,13 +33,17 @@ from ..geometry.point import Point
 from . import sqlkernels as sq
 
 
-def ring_edges(ring: list[list[float]]) -> list[tuple[Point, Point, Point, float]]:
-    """Per edge A->B of a closed GeoJSON ring ([lng, lat] degrees,
-    first == last): (A, B, C = A x B, |C|^2). The vertices are
-    ``Point.from_latlng_degrees``, C is ``Point.cross`` and |C|^2 is
-    ``Point.norm2``: every plan literal of the clip and buffer joins
-    comes from the scalar port."""
-    v = [Point.from_latlng_degrees(p[1], p[0]) for p in ring[:-1]]
+def ring_points(ring: list[list[float]]) -> list[Point]:
+    """The vertices of a closed GeoJSON ring ([lng, lat] degrees,
+    first == last) as ``Point.from_latlng_degrees``."""
+    return [Point.from_latlng_degrees(p[1], p[0]) for p in ring[:-1]]
+
+
+def ring_edges(v: list[Point]) -> list[tuple[Point, Point, Point, float]]:
+    """Per edge A->B of the closed vertex loop ``v``: (A, B,
+    C = A x B, |C|^2), with C from ``Point.cross`` and |C|^2 from
+    ``Point.norm2``. Every edge literal of the tag, clip and buffer
+    joins comes from this one walk over the scalar port's points."""
     out = []
     for a, b in zip(v, v[1:] + v[:1]):
         c = a.cross(b)
@@ -48,16 +51,14 @@ def ring_edges(ring: list[list[float]]) -> list[tuple[Point, Point, Point, float
     return out
 
 
-def convex_planes(ring: list[list[float]]) -> np.ndarray:
-    """(n,3) interior-side edge-plane normals C x D for a closed CCW
-    GeoJSON ring ([lng, lat] degrees, first == last)."""
-    return np.array(
-        [(c.x, c.y, c.z) for _, _, c, _ in ring_edges(ring)], dtype=np.float64
-    ).reshape(-1, 3)
+def convex_planes(ring: list[list[float]]) -> list[Point]:
+    """Interior-side edge-plane normals C x D of a closed CCW GeoJSON
+    ring ([lng, lat] degrees, first == last)."""
+    return [c for _, _, c, _ in ring_edges(ring_points(ring))]
 
 
 def clip_interval_exprs(
-    planes: np.ndarray,
+    planes: list[Point],
     ax: str, ay: str, az: str,
     bx: str, by: str, bz: str,
     lit=sq.spark_lit,
@@ -78,17 +79,16 @@ def clip_interval_exprs(
 
 
 def plane_value_exprs(
-    planes: np.ndarray,
+    planes: list[Point],
     ax: str, ay: str, az: str,
     bx: str, by: str, bz: str,
     lit=sq.spark_lit,
 ) -> tuple[list[str], list[str]]:
     """Per-plane signed values (n_k . A, n_k . B) as SQL text."""
     fas, fbs = [], []
-    for k in range(planes.shape[0]):
-        nx, ny, nz = (float(v) for v in planes[k])
-        fas.append(f"({lit(nx)} * {ax} + {lit(ny)} * {ay} + {lit(nz)} * {az})")
-        fbs.append(f"({lit(nx)} * {bx} + {lit(ny)} * {by} + {lit(nz)} * {bz})")
+    for n in planes:
+        fas.append(f"({lit(n.x)} * {ax} + {lit(n.y)} * {ay} + {lit(n.z)} * {az})")
+        fbs.append(f"({lit(n.x)} * {bx} + {lit(n.y)} * {by} + {lit(n.z)} * {bz})")
     return fas, fbs
 
 
@@ -151,7 +151,7 @@ def clip_segments_convex(
     fa_cols, fb_cols = plane_value_exprs(
         planes, "_cax", "_cay", "_caz", "_cbx", "_cby", "_cbz"
     )
-    n = planes.shape[0]
+    n = len(planes)
     staged = base.selectExpr(
         "*",
         *[f"{fa_cols[k]} AS _fa{k}" for k in range(n)],

@@ -72,6 +72,7 @@ from ..geometry.predicates import MAX_DETERMINANT_ERROR
 from ..geometry.rect import Rect
 from . import memo
 from . import sqlkernels as sq
+from .polyline_ops import ring_edges
 from .tiles import TileSetStruct
 
 KIND_POLYGON = 0
@@ -87,28 +88,36 @@ _EDGE_STRUCT = (
 )
 
 
-def _edge_planes(poly: Polygon) -> list[tuple[float, ...]]:
-    """Per edge of ``poly``'s non-empty, non-full loops: (c, d,
-    n = c x d, s) as ten floats, with s the origin's determinant
-    n . origin folded to its certified sign: +1.0 or -1.0 outside the
-    band, 0.0 inside it. The inlined and the array-column winding
-    evaluate the same literals."""
+def _loop_edges(poly: Polygon) -> list[tuple[Point, Point, Point, float]]:
+    """Per edge C->D of ``poly``'s non-empty, non-full loops: (C, D,
+    N = C x D, N . origin), from ``polyline_ops.ring_edges`` and
+    ``Point.dot``."""
     origin = Point.origin_point()
-    planes = []
-    for loop in poly.loops:
-        if loop.is_empty_or_full():
-            continue
-        v = loop.vertices
-        for c, d in zip(v, v[1:] + v[:1]):
-            n = c.cross(d)
-            dea = n.dot(origin)
-            s = (
-                1.0 if dea > MAX_DETERMINANT_ERROR
-                else -1.0 if dea < -MAX_DETERMINANT_ERROR
-                else 0.0
-            )
-            planes.append((c.x, c.y, c.z, d.x, d.y, d.z, n.x, n.y, n.z, s))
-    return planes
+    return [
+        (c, d, n, n.dot(origin))
+        for loop in poly.loops
+        if not loop.is_empty_or_full()
+        for c, d, n, _ in ring_edges(loop.vertices)
+    ]
+
+
+def _origin_parity(poly: Polygon) -> bool:
+    """XOR of the loops' originInside: the winding count's offset."""
+    return sum(loop.origin_inside for loop in poly.loops) % 2 == 1
+
+
+def _edge_planes(poly: Polygon) -> list[tuple[float, ...]]:
+    """Per edge of ``_loop_edges``: (c, d, n, s) as ten floats, with s
+    the origin's determinant folded to its certified sign: +1.0 or
+    -1.0 outside the band, 0.0 inside it. The inlined and the
+    array-column winding evaluate the same literals."""
+    return [
+        (c.x, c.y, c.z, d.x, d.y, d.z, n.x, n.y, n.z,
+         1.0 if dea > MAX_DETERMINANT_ERROR
+         else -1.0 if dea < -MAX_DETERMINANT_ERROR
+         else 0.0)
+        for c, d, n, dea in _loop_edges(poly)
+    ]
 
 
 def covering_frames(
@@ -154,8 +163,7 @@ def covering_frames(
         parity, planes, rect, cap = False, [], (0.0,) * 4, (0.0,) * 4
         if isinstance(shape, Polygon):
             kind, planes = KIND_POLYGON, _edge_planes(shape)
-            # XOR of the loops' originInside: the winding count's offset
-            parity = sum(loop.origin_inside for loop in shape.loops) % 2 == 1
+            parity = _origin_parity(shape)
         elif isinstance(shape, Rect):
             kind = KIND_RECT
             rect = (shape.lat.lo, shape.lat.hi, shape.lng.lo, shape.lng.hi)

@@ -87,11 +87,11 @@ def build_tileset(
     )
 
 
-def tile_id_col(tile_ids: list, tile_i: str = "tile_i") -> Column:
+def tile_id_col(tile_ids: list) -> Column:
     """``tile_i`` -> ``str(tile_ids[tile_i])`` as a literal-map lookup:
     constant pairs need no broadcast join (a names frame cost one
     broadcast job per run)."""
     names = F.create_map(
         *[x for i, t in enumerate(tile_ids) for x in (F.lit(i), F.lit(str(t)))]
     )
-    return F.element_at(names, F.col(tile_i))
+    return F.element_at(names, F.col("tile_i"))

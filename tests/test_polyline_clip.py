@@ -38,9 +38,14 @@ def _line(coords):
     return Polyline([_pt(lat, lng) for lat, lng in coords])
 
 
+def _plane_array(ring):
+    """The ring's plane normals as an (n, 3) array."""
+    return np.array([(n.x, n.y, n.z) for n in convex_planes(ring)])
+
+
 def _numpy_clip(ring, a, b):
     """Driver-side reference of the SQL Liang-Barsky fold."""
-    planes = convex_planes(ring)
+    planes = _plane_array(ring)
     fa = planes @ np.array([a.x, a.y, a.z])
     fb = planes @ np.array([b.x, b.y, b.z])
     if np.any((fa < 0) & (fb < 0)):
@@ -110,7 +115,7 @@ def test_concave_polygon_produces_multiple_pieces():
 def test_clip_endpoints_lie_on_boundary_planes():
     ring = DIAMOND
     poly = _poly_from_ring(ring)
-    planes = convex_planes(ring)
+    planes = _plane_array(ring)
     a, b = _pt(0.2, 7.0), _pt(1.9, 9.2)
     pieces = clip_polyline_to_polygon(Polyline([a, b]), poly)
     assert len(pieces) == 1
@@ -171,8 +176,8 @@ def test_sql_exprs_match_numpy_fold():
     def scalar_clip(a, b):
         # EXACT SQL op order: nx*x + ny*y + nz*z left-to-right
         lo_v, hi_v, empty = 0.0, 1.0, False
-        for k in range(planes.shape[0]):
-            nx, ny, nz = (float(v) for v in planes[k])
+        for n in planes:
+            nx, ny, nz = n.x, n.y, n.z
             fa = nx * a.x + ny * a.y + nz * a.z
             fb = nx * b.x + ny * b.y + nz * b.z
             if fa < 0 and fb < 0:
