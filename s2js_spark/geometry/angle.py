@@ -10,15 +10,11 @@ from __future__ import annotations
 import math
 
 DEGREE = math.pi / 180
-E5 = 1e-5 * DEGREE
-E6 = 1e-6 * DEGREE
-E7 = 1e-7 * DEGREE
 EPSILON = 1e-15
 # Reference pins this truncated value (s1/angle_constants.ts:7).
 DBL_EPSILON = 2.220446049e-16
 
 # chordangle constants (s1/chordangle_constants.ts)
-ZERO_CHORDANGLE = 0.0
 NEGATIVE_CHORDANGLE = -1.0
 RIGHT_CHORDANGLE = 2.0
 STRAIGHT_CHORDANGLE = 4.0
@@ -32,25 +28,6 @@ def degrees(a: float) -> float:
 
 def from_degrees(d: float) -> float:
     return d * DEGREE
-
-
-def normalized(a: float) -> float:
-    rad = math.remainder(a, 2 * math.pi)
-    if rad <= -math.pi:
-        rad = math.pi
-    return rad if rad else 0.0
-
-
-def e5(a: float) -> int:
-    return round(degrees(a) * 1e5)
-
-
-def e6(a: float) -> int:
-    return round(degrees(a) * 1e6)
-
-
-def e7(a: float) -> int:
-    return round(degrees(a) * 1e7)
 
 
 # --------------------------------------------------------------- chordangle
@@ -90,22 +67,6 @@ def chord_expanded(c: float, e: float) -> float:
     return max(0.0, min(MAX_LENGTH2, c + e))
 
 
-def chord_successor(c: float) -> float:
-    if c >= MAX_LENGTH2:
-        return math.inf
-    if c < 0:
-        return 0.0
-    return math.nextafter(c, 10.0)
-
-
-def chord_predecessor(c: float) -> float:
-    if c <= 0:
-        return NEGATIVE_CHORDANGLE
-    if c > MAX_LENGTH2:
-        return STRAIGHT_CHORDANGLE
-    return math.nextafter(c, -10.0)
-
-
 def chord_max_point_error(c: float) -> float:
     return 4.5 * DBL_EPSILON * c + 16 * DBL_EPSILON * DBL_EPSILON
 
@@ -138,15 +99,4 @@ def chord_sin2(c: float) -> float:
 
 def chord_sin(c: float) -> float:
     v = math.sqrt(chord_sin2(c))
-    return v if v else 0.0
-
-
-def chord_cos(c: float) -> float:
-    v = 1 - 0.5 * c
-    return v if v else 0.0
-
-
-def chord_tan(c: float) -> float:
-    co = chord_cos(c)
-    v = chord_sin(c) / co if co != 0 else math.inf * chord_sin(c) if chord_sin(c) else math.nan
     return v if v else 0.0

@@ -15,7 +15,6 @@ from .angle import (
 )
 from .edge_distances import interpolate_at_distance
 from .interval import R1Interval, S1Interval
-from .latlng import LatLng
 from .metric import MIN_WIDTH_METRIC
 from .point import Point
 from .predicates import DBL_EPSILON
@@ -41,10 +40,6 @@ class Cap:
     @staticmethod
     def from_center_angle(center: Point, angle: float) -> "Cap":
         return Cap(center, ca.chord_from_angle(angle))
-
-    @staticmethod
-    def from_center_chord_angle(center: Point, radius: float) -> "Cap":
-        return Cap(center, radius)
 
     @staticmethod
     def from_center_height(center: Point, height: float) -> "Cap":
@@ -104,9 +99,6 @@ class Cap:
 
     def contains_point(self, p: Point) -> bool:
         return Point.chord_angle_between(self.center, p) <= self.rad
-
-    def interior_contains_point(self, p: Point) -> bool:
-        return self.is_full() or Point.chord_angle_between(self.center, p) < self.rad
 
     def complement(self) -> "Cap":
         if self.is_full():

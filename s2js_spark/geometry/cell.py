@@ -10,18 +10,9 @@ from __future__ import annotations
 import math
 
 from . import cellid_scalar as cs
-from .angle import (
-    NEGATIVE_CHORDANGLE,
-    RIGHT_CHORDANGLE,
-    STRAIGHT_CHORDANGLE,
-    chord_from_squared_length,
-)
-from .edge_crossings import DO_NOT_CROSS, EdgeCrosser
-from .edge_distances import update_max_distance, update_min_distance
+from .angle import chord_from_squared_length
 from .interval import R1Interval, S1Interval
 from .latlng import LatLng
-from .measures import point_area
-from .metric import AVG_AREA_METRIC
 from .point import Point
 from .predicates import DBL_EPSILON
 from .r2 import R2Point, R2Rect
@@ -140,10 +131,6 @@ def _min_chord(*vals: float) -> float:
     return min(vals)
 
 
-def _max_chord(*vals: float) -> float:
-    return max(vals)
-
-
 class Cell:
     __slots__ = ("face", "level", "orientation", "id", "uv")
 
@@ -172,9 +159,6 @@ class Cell:
     def size_ij(self) -> int:
         return cs.size_ij(self.level)
 
-    def size_st(self) -> float:
-        return cs.size_st(self.level)
-
     def vertex(self, k: int) -> Point:
         v = self.uv.vertices()[k]
         return face_uv_to_xyz(self.face, v.x, v.y).normalize()
@@ -188,9 +172,6 @@ class Cell:
         if k == 2:
             return v_norm(self.face, self.uv.y.hi).mul(-1.0).normalize()
         return u_norm(self.face, self.uv.x.lo).mul(-1.0).normalize()
-
-    def bound_uv(self) -> R2Rect:
-        return self.uv
 
     def center(self) -> Point:
         return Point(*cs.raw_point(self.id)).normalize()
@@ -227,23 +208,6 @@ class Cell:
             )
             cid = cs.next_cell(cid)
         return children
-
-    # ------------------------------------------------------------ measures
-
-    def exact_area(self) -> float:
-        v0, v1, v2, v3 = (self.vertex(k) for k in range(4))
-        return point_area(v0, v1, v2) + point_area(v0, v2, v3)
-
-    def average_area(self) -> float:
-        return AVG_AREA_METRIC.value(self.level)
-
-    def approx_area(self) -> float:
-        if self.level < 2:
-            return self.average_area()
-        flat_area = 0.5 * self.vertex(2).sub(self.vertex(0)).cross(
-            self.vertex(3).sub(self.vertex(1))
-        ).norm()
-        return (flat_area * 2) / (1 + math.sqrt(1 - min((1 / math.pi) * flat_area, 1)))
 
     # ------------------------------------------------------------ regions
 
@@ -393,61 +357,3 @@ class Cell:
 
     def distance(self, target: Point) -> float:
         return self._distance_internal(target, True)
-
-    def boundary_distance(self, target: Point) -> float:
-        return self._distance_internal(target, False)
-
-    def max_distance(self, target: Point) -> float:
-        target_uvw = face_xyz_to_uvw(self.face, target)
-        max_dist = _max_chord(
-            self._vertex_chord_dist2(target_uvw, False, False),
-            self._vertex_chord_dist2(target_uvw, True, False),
-            self._vertex_chord_dist2(target_uvw, False, True),
-            self._vertex_chord_dist2(target_uvw, True, True),
-        )
-        if max_dist <= RIGHT_CHORDANGLE:
-            return max_dist
-        return STRAIGHT_CHORDANGLE - self.distance(target.mul(-1))
-
-    def distance_to_edge(self, a: Point, b: Point) -> float:
-        min_dist = _min_chord(self.distance(a), self.distance(b))
-        if min_dist == 0:
-            return min_dist
-        crosser = EdgeCrosser.new_chain_edge_crosser(a, b, self.vertex(3))
-        for i in range(4):
-            if crosser.chain_crossing_sign(self.vertex(i)) != DO_NOT_CROSS:
-                return 0.0
-        for i in range(4):
-            min_dist, _ = update_min_distance(self.vertex(i), a, b, min_dist)
-        return min_dist
-
-    def max_distance_to_edge(self, a: Point, b: Point) -> float:
-        max_dist = _max_chord(self.max_distance(a), self.max_distance(b))
-        if max_dist <= RIGHT_CHORDANGLE:
-            return max_dist
-        return STRAIGHT_CHORDANGLE - self.distance_to_edge(a.mul(-1), b.mul(-1))
-
-    def distance_to_cell(self, target: "Cell") -> float:
-        if self.face == target.face and self.uv.intersects(target.uv):
-            return 0.0
-        va = [self.vertex(i) for i in range(4)]
-        vb = [target.vertex(i) for i in range(4)]
-        min_dist = math.inf
-        for i in range(4):
-            for j in range(4):
-                min_dist, _ = update_min_distance(va[i], vb[j], vb[(j + 1) & 3], min_dist)
-                min_dist, _ = update_min_distance(vb[i], va[j], va[(j + 1) & 3], min_dist)
-        return min_dist
-
-    def max_distance_to_cell(self, target: "Cell") -> float:
-        antipodal_uv = R2Rect(target.uv.y, target.uv.x)
-        if self.face == (target.face + 3) % 6 and self.uv.intersects(antipodal_uv):
-            return STRAIGHT_CHORDANGLE
-        va = [self.vertex(i) for i in range(4)]
-        vb = [target.vertex(i) for i in range(4)]
-        max_dist = NEGATIVE_CHORDANGLE
-        for i in range(4):
-            for j in range(4):
-                max_dist, _ = update_max_distance(va[i], vb[j], vb[(j + 1) & 3], max_dist)
-                max_dist, _ = update_max_distance(vb[i], va[j], va[(j + 1) & 3], max_dist)
-        return max_dist

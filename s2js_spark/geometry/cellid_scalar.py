@@ -307,10 +307,6 @@ def ij_to_st_min(i: int) -> float:
     return i / MAX_SIZE
 
 
-def size_st(lvl: int) -> float:
-    return ij_to_st_min(size_ij(lvl))
-
-
 def ij_level_to_bound_uv(i: int, j: int, lvl: int) -> tuple[float, float, float, float]:
     """(u_lo, u_hi, v_lo, v_hi) of the cell at ``lvl`` holding leaf
     (i, j) (cellid.ts:483-492)."""
@@ -354,11 +350,6 @@ def _st_to_uv_scalar(s: float) -> float:
 def si_ti_to_st(si: int) -> float:
     """(si,ti) -> (s,t), capped at 1.0 (stuv.ts:138-141)."""
     return 1.0 if si > MAX_SITI else si / MAX_SITI
-
-
-def st_to_si_ti(s: float) -> int:
-    """(s,t) -> nearest (si,ti) (stuv.ts:147-150)."""
-    return math.floor(s * MAX_SITI - 0.5) if s < 0 else math.floor(s * MAX_SITI + 0.5)
 
 
 def _largest_component(x: float, y: float, z: float) -> int:

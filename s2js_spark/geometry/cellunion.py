@@ -8,7 +8,6 @@ to build and manipulate coverings; the Spark side consumes the sorted
 from __future__ import annotations
 
 import bisect
-import math
 
 from . import cellid_scalar as cs
 from .cell import Cell
@@ -23,68 +22,10 @@ class CellUnion(list):
 
     # ----------------------------------------------------------- constructors
     @staticmethod
-    def from_range(begin: int, end: int) -> "CellUnion":
-        cu = CellUnion()
-        cid = cs.max_tile(begin, end)
-        while cid != end:
-            cu.append(cid)
-            cid = cs.max_tile(cs.next_cell(cid), end)
-        return cu
-
-    @staticmethod
     def from_union(*unions: "CellUnion") -> "CellUnion":
         cu = CellUnion()
         for u in unions:
             cu.extend(u)
-        cu.normalize()
-        return cu
-
-    @staticmethod
-    def from_intersection(x: "CellUnion", y: "CellUnion") -> "CellUnion":
-        """Merge-intersect two sorted unions (CellUnion.ts:55-90)."""
-        cu = CellUnion()
-        i = j = 0
-        while i < len(x) and j < len(y):
-            i_min = cs.range_min(x[i])
-            j_min = cs.range_min(y[j])
-            if i_min > j_min:
-                if x[i] <= cs.range_max(y[j]):
-                    cu.append(x[i])
-                    i += 1
-                else:
-                    j = y.lower_bound(j + 1, len(y), i_min)
-                    if x[i] <= cs.range_max(y[j - 1]):
-                        j -= 1
-            elif j_min > i_min:
-                if y[j] <= cs.range_max(x[i]):
-                    cu.append(y[j])
-                    j += 1
-                else:
-                    i = x.lower_bound(i + 1, len(x), j_min)
-                    if y[j] <= cs.range_max(x[i - 1]):
-                        i -= 1
-            else:
-                if x[i] < y[j]:
-                    cu.append(x[i])
-                    i += 1
-                else:
-                    cu.append(y[j])
-                    j += 1
-        cu.normalize()
-        return cu
-
-    @staticmethod
-    def from_intersection_with_cellid(x: "CellUnion", cid: int) -> "CellUnion":
-        cu = CellUnion()
-        if x.contains_cellid(cid):
-            cu.append(cid)
-            cu.normalize()
-            return cu
-        id_max = cs.range_max(cid)
-        i = x.lower_bound(0, len(x), cs.range_min(cid))
-        while i < len(x) and x[i] <= id_max:
-            cu.append(x[i])
-            i += 1
         cu.normalize()
         return cu
 
@@ -241,20 +182,6 @@ class CellUnion(list):
 
     def cell_union_bound(self) -> list[int]:
         return self.cap_bound().cell_union_bound()
-
-    # ------------------------------------------------------------- measures
-
-    def leaf_cells_covered(self) -> int:
-        return sum(1 << ((MAX_LEVEL - cs.level(c)) << 1) for c in self)
-
-    def average_area(self) -> float:
-        return AVG_AREA_METRIC.value(MAX_LEVEL) * self.leaf_cells_covered()
-
-    def approx_area(self) -> float:
-        return sum(Cell.from_cellid(cid).approx_area() for cid in self)
-
-    def exact_area(self) -> float:
-        return sum(Cell.from_cellid(cid).exact_area() for cid in self)
 
     # ------------------------------------------------------------ expansion
 

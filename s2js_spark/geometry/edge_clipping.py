@@ -1,10 +1,8 @@
 """Edge clipping: geodesic edges against cube faces and 2D rectangles.
 
-Port of /root/reference/s2/edge_clipping.ts:26-510 with its certified
-error constants (:13-18). This is the correctness backstop for
-cell<->edge relations: clipToFace guarantees clipped vertices lie
-within the biunit face square and within FACE_CLIP_ERROR_UV_DIST of
-the true line AB; faceSegments guarantees a continuous A->B path
+Port of the face-segment and rect-intersection parts of
+/root/reference/s2/edge_clipping.ts with their certified error
+constants (:13-18). faceSegments guarantees a continuous A->B path
 consistent with robust Sign even for near-antipodal endpoints.
 """
 
@@ -13,19 +11,14 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from .interval import R1Interval
 from .point import Point
 from .r2 import R2Point, R2Rect
 
 DBL_EPSILON = 2.220446049250313e-16
 
 # error constants (edge_clipping.ts:13-18)
-EDGE_CLIP_ERROR_UV_COORD = 2.25 * DBL_EPSILON
-EDGE_CLIP_ERROR_UV_DIST = 2.25 * DBL_EPSILON
 FACE_CLIP_ERROR_RADIANS = 3 * DBL_EPSILON
-FACE_CLIP_ERROR_UV_DIST = 9 * DBL_EPSILON
 FACE_CLIP_ERROR_UV_COORD = 9.0 * (1.0 / math.sqrt(2.0)) * DBL_EPSILON
-INTERSECTS_RECT_ERROR_UV_DIST = 3 * math.sqrt(2.0) * DBL_EPSILON
 
 AXIS_U = 0
 AXIS_V = 1
@@ -160,133 +153,11 @@ def sum_equal(u: float, v: float, w: float) -> bool:
     return u + v == w and u == w - v and v == w - u
 
 
-# ---------------------------------------------------------- face clipping
-
-def clip_to_face(a: Point, b: Point, face: int):
-    """(aUV, bUV, intersects) of edge AB clipped to a face (ts:26-28)."""
-    return clip_to_padded_face(a, b, face, 0.0)
-
-
-def clip_to_padded_face(a: Point, b: Point, f: int, padding: float):
-    """Clip AB to [-R,R]x[-R,R], R = 1+padding (ts:35-92)."""
-    if _face(a) == f and _face(b) == f:
-        au, av = _valid_face_xyz_to_uv(f, a)
-        bu, bv = _valid_face_xyz_to_uv(f, b)
-        return R2Point(au, av), R2Point(bu, bv), True
-
-    # The cross product MUST be computed in (x,y,z) first: pointCross's
-    # symbolic perturbation is coordinate-system dependent (ts:48-53).
-    norm_uvw = PointUVW(*_t(face_xyz_to_uvw(f, a.point_cross(b))))
-    a_uvw = PointUVW(*_t(face_xyz_to_uvw(f, a)))
-    b_uvw = PointUVW(*_t(face_xyz_to_uvw(f, b)))
-
-    scale_uv = 1 + padding
-    scaled_n = PointUVW(scale_uv * norm_uvw.x, scale_uv * norm_uvw.y, norm_uvw.z)
-    if not scaled_n.intersects_face():
-        return None, None, False
-
-    # Rescale subnormal normals before normalize() (ts:68-73).
-    if max(abs(norm_uvw.x), abs(norm_uvw.y), abs(norm_uvw.z)) < math.ldexp(1, -511):
-        m = math.ldexp(1, 563)
-        norm_uvw = PointUVW(norm_uvw.x * m, norm_uvw.y * m, norm_uvw.z * m)
-
-    nn = norm_uvw.normalize()
-    a_tan = PointUVW(*_t(nn.cross(a_uvw)))
-    b_tan = PointUVW(*_t(b_uvw.cross(nn)))
-
-    neg_n = PointUVW(-scaled_n.x, -scaled_n.y, -scaled_n.z)
-    a_uv, a_score = clip_destination(b_uvw, a_uvw, neg_n, b_tan, a_tan, scale_uv)
-    b_uv, b_score = clip_destination(a_uvw, b_uvw, scaled_n, a_tan, b_tan, scale_uv)
-    return a_uv, b_uv, a_score + b_score < 3
-
-
 def _t(p: Point) -> tuple[float, float, float]:
     return p.x, p.y, p.z
 
 
-def clip_destination(
-    a: PointUVW, b: PointUVW, scaled_n: PointUVW,
-    a_tan: PointUVW, b_tan: PointUVW, scale_uv: float,
-) -> tuple[R2Point, int]:
-    """Clip endpoint B of AB onto the face; score 0 if interior, up to
-    3 if the segment misses the face (ts:175-207)."""
-    max_safe_uv = 1 - FACE_CLIP_ERROR_UV_COORD
-
-    if b.z > 0:
-        uv = R2Point(b.x / b.z, b.y / b.z)
-        if max(abs(uv.x), abs(uv.y)) <= max_safe_uv:
-            return uv, 0
-
-    uv = scaled_n.exit_point(scaled_n.exit_axis()).mul(scale_uv)
-    p = Point(uv.x, uv.y, 1.0)
-
-    score = 0
-    if p.sub(a).dot(a_tan) < 0:
-        score = 2
-    elif p.sub(b).dot(b_tan) < 0:
-        score = 1
-
-    if score > 0:
-        if b.z <= 0:
-            score = 3
-        else:
-            uv = R2Point(b.x / b.z, b.y / b.z)
-    return uv, score
-
-
 # ----------------------------------------------------------- 2D clipping
-
-def update_endpoint(bound: R1Interval, high: bool, value: float) -> tuple[R1Interval, bool]:
-    """Clamp one interval endpoint; False if beyond the other
-    (ts:213-223)."""
-    if not high:
-        if bound.hi < value:
-            return bound, False
-        if bound.lo < value:
-            bound = R1Interval(value, bound.hi)
-        return bound, True
-    if bound.lo > value:
-        return bound, False
-    if bound.hi > value:
-        bound = R1Interval(bound.lo, value)
-    return bound, True
-
-
-def interpolate_float64(x: float, a: float, b: float, a1: float, b1: float) -> float:
-    """Interpolate (a1,b1) at the position x holds in (a,b), from the
-    nearer endpoint for accuracy (ts:305-306)."""
-    if abs(a - x) <= abs(b - x):
-        return a1 + ((b1 - a1) * (x - a)) / (b - a)
-    return b1 + ((a1 - b1) * (x - b)) / (a - b)
-
-
-def clip_bound_axis(
-    a0: float, b0: float, bound0: R1Interval,
-    a1: float, b1: float, bound1: R1Interval,
-    neg_slope: bool, clip: R1Interval,
-) -> tuple[R1Interval, R1Interval, bool]:
-    """Clip the 2D bounding intervals along one axis (ts:230-257)."""
-    if bound0.lo < clip.lo:
-        if bound0.hi < clip.lo:
-            return bound0, bound1, False
-        bound0 = R1Interval(clip.lo, bound0.hi)
-        bound1, updated = update_endpoint(
-            bound1, neg_slope, interpolate_float64(clip.lo, a0, b0, a1, b1)
-        )
-        if not updated:
-            return bound0, bound1, False
-
-    if bound0.hi > clip.hi:
-        if bound0.lo > clip.hi:
-            return bound0, bound1, False
-        bound0 = R1Interval(bound0.lo, clip.hi)
-        bound1, updated = update_endpoint(
-            bound1, not neg_slope, interpolate_float64(clip.hi, a0, b0, a1, b1)
-        )
-        if not updated:
-            return bound0, bound1, False
-    return bound0, bound1, True
-
 
 def edge_intersects_rect(a: R2Point, b: R2Point, r: R2Rect) -> bool:
     """Whether segment AB intersects the closed rect (ts:262-274)."""
@@ -298,36 +169,6 @@ def edge_intersects_rect(a: R2Point, b: R2Point, r: R2Rect) -> bool:
     mx = n.dot(r.vertex_ij(i, j).sub(a))
     mn = n.dot(r.vertex_ij(1 - i, 1 - j).sub(a))
     return mx >= 0 and mn <= 0
-
-
-def clip_edge_bound(a: R2Point, b: R2Point, clip: R2Rect, bound: R2Rect) -> tuple[R2Rect, bool]:
-    """Clip the bound of AB to ``clip`` (ts:290-300)."""
-    neg_slope = (a.x > b.x) != (a.y > b.y)
-    b0x, b0y, up1 = clip_bound_axis(a.x, b.x, bound.x, a.y, b.y, bound.y, neg_slope, clip.x)
-    if not up1:
-        return bound, False
-    b1y, b1x, up2 = clip_bound_axis(a.y, b.y, b0y, a.x, b.x, b0x, neg_slope, clip.y)
-    if not up2:
-        return R2Rect(b0x, b0y), False
-    return R2Rect(b1x, b1y), True
-
-
-def clipped_edge_bound(a: R2Point, b: R2Point, clip: R2Rect) -> R2Rect:
-    """Bounding rect of AB ∩ clip, empty if disjoint (ts:279-284)."""
-    bound = R2Rect.from_points(a, b)
-    b1, intersects = clip_edge_bound(a, b, clip, bound)
-    return b1 if intersects else R2Rect.empty()
-
-
-def clip_edge(a: R2Point, b: R2Point, clip: R2Rect):
-    """(aClip, bClip, intersects) of segment AB ∩ clip (ts:98-107)."""
-    bound = R2Rect.from_points(a, b)
-    clipped, intersects = clip_edge_bound(a, b, clip, bound)
-    if not intersects:
-        return None, None, False
-    ai = 1 if a.x > b.x else 0
-    aj = 1 if a.y > b.y else 0
-    return clipped.vertex_ij(ai, aj), clipped.vertex_ij(1 - ai, 1 - aj), True
 
 
 # ---------------------------------------------------------- face segments

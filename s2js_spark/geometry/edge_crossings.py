@@ -74,11 +74,6 @@ class EdgeCrosser:
             self.restart_at(c)
         return self.chain_crossing_sign(d)
 
-    def edge_or_vertex_crossing(self, c: Point, d: Point) -> bool:
-        if not c.equals(self.c):
-            self.restart_at(c)
-        return self.edge_or_vertex_chain_crossing(d)
-
     def chain_crossing_sign(self, d: Point) -> int:
         bda = triage_sign(self.a, self.b, d)
         if self.acb == -bda and bda != INDETERMINATE:
@@ -150,16 +145,6 @@ def crossing_sign(a: Point, b: Point, c: Point, d: Point) -> int:
     return crosser.chain_crossing_sign(d)
 
 
-def edge_or_vertex_crossing(a: Point, b: Point, c: Point, d: Point) -> bool:
-    """PIP-compatible crossing test (edge_crossings.ts:93-102)."""
-    s = crossing_sign(a, b, c, d)
-    if s == DO_NOT_CROSS:
-        return False
-    if s == CROSS:
-        return True
-    return vertex_crossing(a, b, c, d)
-
-
 # ----------------------------------------------------- intersection point
 # Port of /root/reference/s2/edge_crossings.ts:107-242: the stable ->
 # exact ladder producing the crossing point of two edges.
@@ -173,18 +158,6 @@ DBL_ERROR = 1.110223024625156e-16
 # instead). Ported faithfully; see tests/test_intersection.py.
 EPSILON = 1e-15
 INTERSECTION_ERROR = 8 * DBL_ERROR  # edge_crossings.ts:7
-INTERSECTION_MERGE_RADIUS = 2 * INTERSECTION_ERROR
-
-
-def robust_normal_with_length(x: Point, y: Point) -> tuple[Point, float]:
-    """Unit normal of the plane through x,y plus the pre-normalization
-    length (error proxy); (x-y)x(x+y) = 2 x*y but with less
-    cancellation (edge_crossings.ts:133-140)."""
-    tmp = x.sub(y).cross(x.add(y))
-    length = tmp.norm()
-    if length != 0.0:
-        return tmp.mul(1.0 / length), 0.5 * length
-    return Point(0, 0, 0), 0.5 * length
 
 
 def projection(x: Point, a_norm: Point, a_norm_len: float, a0: Point, a1: Point) -> tuple[float, float]:

@@ -1,16 +1,16 @@
 """Point-to-edge distances in chord-angle space.
 
 Semantics of /root/reference/s2/edge_distances.ts (the subset used by
-Cell/Cap/kNN: min/max distance updates, project, interpolate).
+Cell/Cap/kNN: min distance updates and interpolation at a distance).
 """
 
 from __future__ import annotations
 
 import math
 
-from .angle import RIGHT_CHORDANGLE, STRAIGHT_CHORDANGLE, chord_angle
+from .angle import chord_angle
 from .point import Point
-from .predicates import DBL_EPSILON, sign
+from .predicates import DBL_EPSILON
 
 
 def interior_dist(
@@ -62,39 +62,8 @@ def update_min_distance(x: Point, a: Point, b: Point, min_dist: float) -> tuple[
     return _update_min_distance(x, a, b, min_dist, False)
 
 
-def update_max_distance(x: Point, a: Point, b: Point, max_dist: float) -> tuple[float, bool]:
-    dist = max(Point.chord_angle_between(x, a), Point.chord_angle_between(x, b))
-    if dist > RIGHT_CHORDANGLE:
-        dist, _ = _update_min_distance(x.mul(-1), a, b, dist, True)
-        dist = STRAIGHT_CHORDANGLE - dist
-    if max_dist < dist:
-        return dist, True
-    return max_dist, False
-
-
 def distance_from_segment(x: Point, a: Point, b: Point) -> float:
     return chord_angle(_update_min_distance(x, a, b, 0.0, True)[0])
-
-
-def is_distance_less(x: Point, a: Point, b: Point, limit: float) -> bool:
-    return update_min_distance(x, a, b, limit)[1]
-
-
-def project(x: Point, a: Point, b: Point) -> Point:
-    """Closest point to X on edge AB (edge_distances.ts:89-100)."""
-    a_xb = a.point_cross(b)
-    v = x.sub(a_xb.mul(x.dot(a_xb) / a_xb.norm2()))
-    if sign(a_xb, a, v) and sign(v, b, a_xb):
-        return v.normalize()
-    if x.sub(a).norm2() <= x.sub(b).norm2():
-        return a
-    return b
-
-
-def distance_fraction(x: Point, a: Point, b: Point) -> float:
-    d0 = x.angle(a)
-    d1 = x.angle(b)
-    return d0 / (d0 + d1)
 
 
 def interpolate_at_distance(ax: float, a: Point, b: Point) -> Point:
@@ -111,80 +80,3 @@ def interpolate(t: float, a: Point, b: Point) -> Point:
         return b
     ab = a.angle(b)
     return interpolate_at_distance(t * ab, a, b)
-
-
-# ------------------------------------------------------ edge-pair distances
-# Ports of /root/reference/s2/edge_distances.ts:340-428 (the reference
-# comments out the pair-min/max variants; semantics follow the same
-# updateMinDistance machinery and the Go/C++ originals they transcribe).
-
-def update_edge_pair_min_distance(
-    a0: Point, a1: Point, b0: Point, b1: Point, min_dist: float
-) -> tuple[float, bool]:
-    """Minimum chord^2 distance between edges a0a1 and b0b1 (zero if
-    they cross); (dist, improved)."""
-    from .edge_crossings import CROSS, crossing_sign
-
-    if min_dist == 0:
-        return 0.0, False
-    if crossing_sign(a0, a1, b0, b1) == CROSS:
-        return 0.0, True
-    d, ok1 = update_min_distance(a0, b0, b1, min_dist)
-    d, ok2 = update_min_distance(a1, b0, b1, d)
-    d, ok3 = update_min_distance(b0, a0, a1, d)
-    d, ok4 = update_min_distance(b1, a0, a1, d)
-    return d, ok1 or ok2 or ok3 or ok4
-
-
-def update_edge_pair_max_distance(
-    a0: Point, a1: Point, b0: Point, b1: Point, max_dist: float
-) -> tuple[float, bool]:
-    """Maximum chord^2 distance between edges (pi if one edge crosses
-    the antipodal reflection of the other); (dist, improved)."""
-    from .edge_crossings import CROSS, crossing_sign
-
-    if max_dist == STRAIGHT_CHORDANGLE:
-        return STRAIGHT_CHORDANGLE, False
-    if crossing_sign(a0, a1, b0.mul(-1), b1.mul(-1)) == CROSS:
-        return STRAIGHT_CHORDANGLE, True
-    d, ok1 = update_max_distance(a0, b0, b1, max_dist)
-    d, ok2 = update_max_distance(a1, b0, b1, d)
-    d, ok3 = update_max_distance(b0, a0, a1, d)
-    d, ok4 = update_max_distance(b1, a0, a1, d)
-    return d, ok1 or ok2 or ok3 or ok4
-
-
-def edge_pair_closest_points(
-    a0: Point, a1: Point, b0: Point, b1: Point
-) -> tuple[Point, Point]:
-    """The (a, b) pair achieving the min distance between edges a0a1
-    and b0b1; both equal the intersection point if the edges cross.
-
-    NOTE: the TS reference (edge_distances.ts:401-428) seeds its
-    vertex scan with minDist=0 through the NON-always-update helper,
-    which freezes closestVertex at 0 — a transcription slip from the
-    Go original, which seeds the first candidate unconditionally. We
-    implement the Go/C++ semantics (correct closest pair)."""
-    from .edge_crossings import CROSS, crossing_sign, intersection
-
-    if crossing_sign(a0, a1, b0, b1) == CROSS:
-        x = intersection(a0, a1, b0, b1)
-        return x, x
-    min_dist, _ = _update_min_distance(a0, b0, b1, 0.0, True)
-    closest_vertex = 0
-    min_dist, ok = update_min_distance(a1, b0, b1, min_dist)
-    if ok:
-        closest_vertex = 1
-    min_dist, ok = update_min_distance(b0, a0, a1, min_dist)
-    if ok:
-        closest_vertex = 2
-    min_dist, ok = update_min_distance(b1, a0, a1, min_dist)
-    if ok:
-        closest_vertex = 3
-    if closest_vertex == 0:
-        return a0, project(a0, b0, b1)
-    if closest_vertex == 1:
-        return a1, project(a1, b0, b1)
-    if closest_vertex == 2:
-        return project(b0, a0, a1), b0
-    return project(b1, a0, a1), b1

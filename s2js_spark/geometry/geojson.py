@@ -1,4 +1,4 @@
-"""GeoJSON <-> S2 bridge and the production tile-set coverer.
+"""GeoJSON -> S2 import and the production tile-set coverer.
 
 Semantics of /root/reference/geojson/: ring normalization rules
 (geojson/loop.ts:24-73), Rect special-casing (geojson/rect.ts:42-57),
@@ -17,7 +17,6 @@ import math
 from . import cellid_scalar as cs
 from .cellunion import CellUnion
 from .interval import R1Interval, S1Interval
-from .latlng import LatLng
 from .loop import Loop
 from .point import Point
 from .polygon import Polygon
@@ -39,11 +38,6 @@ def _position_equal(a, b, epsilon: float = 0.0) -> bool:
 
 def _position_unmarshal(pos) -> Point:
     return Point.from_latlng_radians(pos[1] * DEGREE, pos[0] * DEGREE)
-
-
-def _position_marshal(p: Point) -> list[float]:
-    ll = LatLng.from_point(p)
-    return [ll.lng / DEGREE if ll.lng else 0.0, ll.lat / DEGREE if ll.lat else 0.0]
 
 
 def ring_clockwise(ring) -> bool:
@@ -79,15 +73,6 @@ def loop_unmarshal(ring) -> Loop:
         if _contains_duplicate_vertices(ring):
             return Loop([])
     return Loop([_position_unmarshal(p) for p in ring])
-
-
-def loop_marshal(loop: Loop, ordinal: int):
-    ring = [_position_marshal(v) for v in loop.vertices]
-    if ordinal > 0:
-        ring.reverse()
-    if ring:
-        ring.append(ring[0])
-    return ring
 
 
 # ----------------------------------------------------------- rect handling
@@ -153,22 +138,6 @@ def from_geojson(geometry):
             for rings in geometry["coordinates"]
         ]
     raise ValueError(f"unsupported: {t or 'UnknownGeometryType'}")
-
-
-def to_geojson(shape):
-    if isinstance(shape, Polygon):
-        return {
-            "type": "Polygon",
-            "coordinates": [loop_marshal(l, i) for i, l in enumerate(shape.loops)],
-        }
-    if isinstance(shape, Polyline):
-        return {
-            "type": "LineString",
-            "coordinates": [_position_marshal(p) for p in shape.points],
-        }
-    if isinstance(shape, Point):
-        return {"type": "Point", "coordinates": _position_marshal(shape)}
-    raise ValueError(f"unsupported: {type(shape).__name__}")
 
 
 # -------------------------------------------------------- tile-set coverer

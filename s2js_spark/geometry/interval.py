@@ -47,14 +47,6 @@ class R1Interval:
             return True
         return self.lo <= oi.lo and oi.hi <= self.hi
 
-    def interior_contains(self, p: float) -> bool:
-        return self.lo < p < self.hi
-
-    def interior_contains_interval(self, oi: "R1Interval") -> bool:
-        if oi.is_empty():
-            return True
-        return self.lo < oi.lo and oi.hi < self.hi
-
     def intersects(self, oi: "R1Interval") -> bool:
         if self.lo <= oi.lo:
             return oi.lo <= self.hi and oi.lo <= oi.hi
@@ -82,9 +74,6 @@ class R1Interval:
             return R1Interval(self.lo, p)
         return self
 
-    def clamp_point(self, p: float) -> float:
-        return max(self.lo, min(self.hi, p))
-
     def expanded(self, margin: float) -> "R1Interval":
         if self.is_empty():
             return self
@@ -96,13 +85,6 @@ class R1Interval:
         if oi.is_empty():
             return self.length() <= 2 * epsilon
         return abs(oi.lo - self.lo) <= epsilon and abs(oi.hi - self.hi) <= epsilon
-
-    def directed_hausdorff_distance(self, oi: "R1Interval") -> float:
-        if self.is_empty():
-            return 0.0
-        if oi.is_empty():
-            return math.inf
-        return max(0.0, max(self.hi - oi.hi, oi.lo - self.lo))
 
 
 @dataclass(frozen=True)
@@ -207,22 +189,6 @@ class S1Interval:
             return self.is_full() or oi.is_empty()
         return oi.lo >= self.lo and oi.hi <= self.hi
 
-    def interior_contains(self, p: float) -> bool:
-        if p == -PI:
-            p = PI
-        if self.is_inverted():
-            return p > self.lo or p < self.hi
-        return (self.lo < p < self.hi) or self.is_full()
-
-    def interior_contains_interval(self, oi: "S1Interval") -> bool:
-        if self.is_inverted():
-            if oi.is_inverted():
-                return (oi.lo > self.lo and oi.hi < self.hi) or oi.is_empty()
-            return oi.lo > self.lo or oi.hi < self.hi
-        if oi.is_inverted():
-            return self.is_full() or oi.is_empty()
-        return (oi.lo > self.lo and oi.hi < self.hi) or self.is_full()
-
     def intersects(self, oi: "S1Interval") -> bool:
         if self.is_empty() or oi.is_empty():
             return False
@@ -324,35 +290,3 @@ class S1Interval:
         if self.lo == self.hi:
             return S1Interval.full()
         return S1Interval(self.hi, self.lo)
-
-    def complement_center(self) -> float:
-        if self.lo != self.hi:
-            return self.complement().center()
-        if self.hi <= 0:
-            return self.hi + PI
-        return self.hi - PI
-
-    def directed_hausdorff_distance(self, y: "S1Interval") -> float:
-        if y.contains_interval(self):
-            return 0.0
-        if y.is_empty():
-            return PI
-        y_comp_center = y.complement_center()
-        if self.contains(y_comp_center):
-            return S1Interval.positive_distance(y.hi, y_comp_center)
-        hi_hi = 0.0
-        if S1Interval.from_endpoints(y.hi, y_comp_center).contains(self.hi):
-            hi_hi = S1Interval.positive_distance(y.hi, self.hi)
-        lo_lo = 0.0
-        if S1Interval.from_endpoints(y_comp_center, y.lo).contains(self.lo):
-            lo_lo = S1Interval.positive_distance(self.lo, y.lo)
-        return max(hi_hi, lo_lo)
-
-    def project(self, p: float) -> float:
-        if p == -PI:
-            p = PI
-        if self.fast_contains(p):
-            return p
-        dlo = S1Interval.positive_distance(p, self.lo)
-        dhi = S1Interval.positive_distance(self.hi, p)
-        return self.lo if dlo < dhi else self.hi

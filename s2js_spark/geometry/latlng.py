@@ -7,9 +7,6 @@ from dataclasses import dataclass
 
 from .point import Point
 
-NORTH_POLE_LAT = math.pi / 2
-SOUTH_POLE_LAT = -NORTH_POLE_LAT
-
 
 @dataclass(frozen=True)
 class LatLng:
@@ -30,11 +27,6 @@ class LatLng:
 
     def is_valid(self) -> bool:
         return abs(self.lat) <= math.pi / 2 and abs(self.lng) <= math.pi
-
-    def normalized(self) -> "LatLng":
-        lat = min(NORTH_POLE_LAT, max(SOUTH_POLE_LAT, self.lat))
-        lng = math.remainder(self.lng, 2 * math.pi)
-        return LatLng(lat, lng)
 
     def distance(self, o: "LatLng") -> float:
         dlat = math.sin(0.5 * (o.lat - self.lat))

@@ -58,32 +58,6 @@ def wedge_contains_semiwedge(a0: Point, ab1: Point, a2: Point, b2: Point, revers
     return ordered_ccw(a0, a2, b2, ab1)
 
 
-# Wedge relation enum (wedge_relations.ts:12-16)
-WEDGE_EQUALS = 0
-WEDGE_PROPERLY_CONTAINS = 1
-WEDGE_IS_PROPERLY_CONTAINED = 2
-WEDGE_PROPERLY_OVERLAPS = 3
-WEDGE_IS_DISJOINT = 4
-
-
-def wedge_relation(a0: Point, ab1: Point, a2: Point, b0: Point, b2: Point) -> int:
-    """Relation between wedges A=(a0,ab1,a2), B=(b0,ab1,b2)
-    (wedge_relations.ts:22-36)."""
-    if a0.equals(b0) and a2.equals(b2):
-        return WEDGE_EQUALS
-    if ordered_ccw(a0, a2, b2, ab1):
-        if ordered_ccw(b2, b0, a0, ab1):
-            return WEDGE_PROPERLY_CONTAINS
-        if a2.equals(b2):
-            return WEDGE_IS_PROPERLY_CONTAINED
-        return WEDGE_PROPERLY_OVERLAPS
-    if ordered_ccw(a0, b0, b2, ab1):
-        return WEDGE_IS_PROPERLY_CONTAINED
-    if ordered_ccw(a0, b0, a2, ab1):
-        return WEDGE_IS_DISJOINT
-    return WEDGE_PROPERLY_OVERLAPS
-
-
 class RectBounder:
     """Conservative lat/lng bound of an edge chain (RectBounder.ts:19-125)."""
 
@@ -243,14 +217,6 @@ class Loop:
     def vertex(self, i: int) -> Point:
         return self.vertices[i % len(self.vertices)]
 
-    def oriented_vertex(self, i: int) -> Point:
-        j = i - len(self.vertices)
-        if j < 0:
-            j = i
-        if self.is_hole():
-            j = len(self.vertices) - 1 - j
-        return self.vertex(j)
-
     def num_vertices(self) -> int:
         return len(self.vertices)
 
@@ -285,8 +251,12 @@ class Loop:
 
     def brute_force_contains_point(self, p: Point) -> bool:
         """Winding parity from originPoint (Loop.ts:372-380)."""
-        origin = Point.origin_point()
         inside = self.origin_inside
+        if not self.vertices:
+            # No edge to cross: a ring from_geojson cannot form (fewer
+            # than 3 distinct positions) holds no point.
+            return inside
+        origin = Point.origin_point()
         crosser = EdgeCrosser.new_chain_edge_crosser(origin, p, self.vertex(0))
         for i in range(1, len(self.vertices) + 1):
             inside = inside != crosser.edge_or_vertex_chain_crossing(self.vertex(i))
@@ -566,19 +536,3 @@ class Loop:
 
     def centroid(self) -> Point:
         return self._surface_integral_point(true_centroid)
-
-    def validate(self) -> str | None:
-        """Loop.ts:184-209."""
-        for i, v in enumerate(self.vertices):
-            if abs(v.norm2() - 1) > 5e-14:
-                return f"vertex {i} is not unit length"
-        if len(self.vertices) < 3:
-            if self.is_empty_or_full():
-                return None
-            return "non-empty, non-full loops must have at least 3 vertices"
-        for i in range(len(self.vertices)):
-            if self.vertices[i].equals(self.vertex(i + 1)):
-                return f"edge {i} is degenerate (duplicate vertex)"
-            if self.vertices[i].equals(self.vertex(i + 1).mul(-1)):
-                return f"vertices {i} and {(i + 1) % len(self.vertices)} are antipodal"
-        return None

@@ -81,19 +81,3 @@ def true_centroid(a: Point, b: Point, c: Point) -> Point:
     return Point(
         y.cross(z).dot(r), z.cross(x).dot(r), x.cross(y).dot(r)
     ).mul(0.5)
-
-
-def planar_centroid(a: Point, b: Point, c: Point) -> Point:
-    """Centroid of the planar triangle (centroids.ts:119-125)."""
-    return a.add(b).add(c).mul(1 / 3)
-
-
-def edge_true_centroid(a: Point, b: Point) -> Point:
-    """Length-scaled centroid of geodesic edge AB (centroids.ts:97-110)."""
-    v_diff = a.sub(b)
-    v_sum = a.add(b)
-    sin2 = v_diff.norm2()
-    cos2 = v_sum.norm2()
-    if cos2 == 0:
-        return Point(0.0, 0.0, 0.0)
-    return v_sum.mul(math.sqrt(sin2 / cos2))

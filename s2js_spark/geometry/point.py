@@ -217,18 +217,3 @@ def from_frame(m: list[list[float]], q: Point) -> Point:
         m[1][0] * q.x + m[1][1] * q.y + m[1][2] * q.z,
         m[2][0] * q.x + m[2][1] * q.y + m[2][2] * q.z,
     )
-
-
-def to_frame(m: list[list[float]], q: Point) -> Point:
-    """Map world coordinates into the frame (m^T * q)."""
-    return Point(
-        m[0][0] * q.x + m[1][0] * q.y + m[2][0] * q.z,
-        m[0][1] * q.x + m[1][1] * q.y + m[2][1] * q.z,
-        m[0][2] * q.x + m[1][2] * q.y + m[2][2] * q.z,
-    )
-
-
-def sort_points(points: list[Point]) -> None:
-    import functools
-
-    points.sort(key=functools.cmp_to_key(lambda a, b: a.cmp(b)))

@@ -48,32 +48,6 @@ class Polygon:
     def from_cell(cell: Cell) -> "Polygon":
         return Polygon([Loop.from_cell(cell)])
 
-    @staticmethod
-    def from_oriented_loops(loops: list[Loop]) -> "Polygon":
-        """Interior on the left of every input loop (Polygon.ts:118-188)."""
-        contained_origin: dict[int, bool] = {}
-        for l in loops:
-            contained_origin[id(l)] = l.origin_inside
-        for l in loops:
-            angle = l.turning_angle()
-            if abs(angle) > l.turning_angle_max_error():
-                if angle < 0:
-                    l.invert()
-            else:
-                if l.origin_inside:
-                    l.invert()
-        p = Polygon(loops)
-        if p.num_loops() > 0:
-            origin_loop = p.loop(0)
-            polygon_contains_origin = False
-            for l in p.loops:
-                if l.origin_inside:
-                    polygon_contains_origin = not polygon_contains_origin
-                    origin_loop = l
-            if contained_origin[id(origin_loop)] != polygon_contains_origin:
-                p.invert()
-        return p
-
     def invert(self) -> None:
         """Replace by complement (Polygon.ts:193-259)."""
         if self.is_empty():
@@ -198,17 +172,6 @@ class Polygon:
         while k < len(self.loops) and self.loops[k].depth > depth:
             k += 1
         return k - 1
-
-    def validate(self) -> str | None:
-        for i, l in enumerate(self.loops):
-            err = l.validate()
-            if err:
-                return f"loop {i}: {err}"
-            if l.is_empty():
-                return f"loop {i}: empty loops are not allowed"
-            if l.is_full() and len(self.loops) > 1:
-                return f"loop {i}: full loop appears in non-full polygon"
-        return None
 
     # -------------------------------------------------------------- region
 

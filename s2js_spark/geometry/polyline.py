@@ -1,7 +1,7 @@
 """S2 Polyline (vertex chain region).
 
 Subset of /root/reference/s2/Polyline.ts needed by the engine: bounds,
-covering support, projection/interpolation, intersects.
+covering support, length/centroid, intersects.
 """
 
 from __future__ import annotations
@@ -9,8 +9,6 @@ from __future__ import annotations
 from .cap import Cap
 from .cell import Cell
 from .edge_crossings import DO_NOT_CROSS, EdgeCrosser
-from .edge_distances import interpolate as _edge_interpolate
-from .latlng import LatLng
 from .loop import RectBounder
 from .point import Point
 from .rect import Rect
@@ -19,10 +17,6 @@ from .rect import Rect
 class Polyline:
     def __init__(self, points: list[Point] | None = None):
         self.points = points or []
-
-    @staticmethod
-    def from_latlngs(lls: list[LatLng]) -> "Polyline":
-        return Polyline([ll.to_point() for ll in lls])
 
     def reverse(self) -> None:
         self.points.reverse()
@@ -96,49 +90,3 @@ class Polyline:
                 if crosser.chain_crossing_sign(o.points[j]) != DO_NOT_CROSS:
                     return True
         return False
-
-    def interpolate(self, fraction: float) -> tuple[Point, int]:
-        """Point at the given fraction of total length (Polyline.ts:419-462)."""
-        if fraction <= 0:
-            return self.points[0], 1
-        target = fraction * self.length()
-        for i in range(1, len(self.points)):
-            length = self.points[i - 1].angle(self.points[i])
-            if target < length:
-                return _edge_interpolate(target / length, self.points[i - 1], self.points[i]), i
-            target -= length
-        return self.points[-1], len(self.points)
-
-    def uninterpolate(self, point: Point, next_vertex: int) -> float:
-        """Inverse of interpolate: the length fraction at which ``point``
-        (on edge next_vertex-1 -> next_vertex) sits (Polyline.ts
-        uninterpolate tail)."""
-        if len(self.points) < 2:
-            return 0.0
-        total = 0.0
-        for i in range(1, next_vertex):
-            total += self.points[i - 1].distance(self.points[i])
-        length_to_point = total + self.points[next_vertex - 1].distance(point)
-        for i in range(next_vertex, len(self.points)):
-            total += self.points[i - 1].distance(self.points[i])
-        return min(1.0, length_to_point / total)
-
-    def project(self, point: Point) -> tuple[Point, int]:
-        """Closest point on the polyline + next vertex index
-        (Polyline.ts:323-341)."""
-        from .edge_distances import distance_from_segment
-        from .edge_distances import project as _project
-
-        if len(self.points) == 1:
-            return self.points[0], 1
-        min_dist = 10.0
-        min_index = -1
-        for i in range(1, len(self.points)):
-            dist = distance_from_segment(point, self.points[i - 1], self.points[i])
-            if dist < min_dist:
-                min_dist = dist
-                min_index = i
-        closest = _project(point, self.points[min_index - 1], self.points[min_index])
-        if closest.equals(self.points[min_index]):
-            min_index += 1
-        return closest, min_index

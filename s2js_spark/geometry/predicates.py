@@ -18,9 +18,7 @@ CLOCKWISE = -1
 INDETERMINATE = 0
 COUNTERCLOCKWISE = 1
 
-EPSILON = 1e-15
 DBL_EPSILON = 2.220446049250313e-16
-DBL_ERROR = 1.110223024625156e-16
 
 MAX_DETERMINANT_ERROR = 1.8274 * DBL_EPSILON
 DET_ERROR_MULTIPLIER = 3.2321 * DBL_EPSILON
@@ -179,137 +177,3 @@ def robust_sign(a: Point, b: Point, c: Point) -> int:
         s = expensive_sign(a, b, c)
     return s
 
-
-# --------------------------------------------------------- distance compare
-
-def cos_distance(x: Point, y: Point) -> tuple[float, float]:
-    c = x.dot(y)
-    return c, 9.5 * DBL_ERROR * abs(c) + 1.5 * DBL_ERROR
-
-
-def sin2_distance(x: Point, y: Point) -> tuple[float, float]:
-    n = x.sub(y).cross(x.add(y))
-    sin2 = 0.25 * n.norm2()
-    err = (
-        (21 + 4 * math.sqrt(3)) * DBL_ERROR * sin2
-        + 32 * math.sqrt(3) * DBL_ERROR * DBL_ERROR * math.sqrt(sin2)
-        + 768 * DBL_ERROR * DBL_ERROR * DBL_ERROR * DBL_ERROR
-    )
-    return sin2, err
-
-
-def triage_compare_cos_distances(x: Point, a: Point, b: Point) -> int:
-    cos_ax, cos_ax_err = cos_distance(a, x)
-    cos_bx, cos_bx_err = cos_distance(b, x)
-    diff = cos_ax - cos_bx
-    err = cos_ax_err + cos_bx_err
-    if diff > err:
-        return -1
-    if diff < -err:
-        return 1
-    return 0
-
-
-def triage_compare_sin2_distances(x: Point, a: Point, b: Point) -> int:
-    sin2_ax, sin2_ax_err = sin2_distance(a, x)
-    sin2_bx, sin2_bx_err = sin2_distance(b, x)
-    diff = sin2_ax - sin2_bx
-    err = sin2_ax_err + sin2_bx_err
-    if diff > err:
-        return 1
-    if diff < -err:
-        return -1
-    return 0
-
-
-def exact_compare_distances(x, a, b) -> int:
-    """Exact comparison via Fractions (predicates.ts:502-524)."""
-    cos_ax = _fdot(x, a)
-    cos_bx = _fdot(x, b)
-    a_sign = _fsign(cos_ax)
-    b_sign = _fsign(cos_bx)
-    if a_sign != b_sign:
-        return -1 if a_sign > b_sign else 1
-    cmp = cos_bx * cos_bx * _fdot(a, a) - cos_ax * cos_ax * _fdot(b, b)
-    return a_sign * _fsign(cmp)
-
-
-def symbolic_compare_distances(_x: Point, a: Point, b: Point) -> int:
-    c = a.cmp(b)
-    if c == -1:
-        return 1
-    if c == 1:
-        return -1
-    return 0
-
-
-def compare_distances(x: Point, a: Point, b: Point) -> int:
-    """-1/0/+1 as AX < / == / > BX (predicates.ts:404-442)."""
-    s = triage_compare_cos_distances(x, a, b)
-    if s != 0:
-        return s
-    if a.equals(b):
-        return 0
-    cos_ax = a.dot(x)
-    if cos_ax > 1 / math.sqrt(2):
-        s = triage_compare_sin2_distances(x, a, b)
-    elif cos_ax < -1 / math.sqrt(2):
-        s = -triage_compare_sin2_distances(x, a, b)
-    if s != 0:
-        return s
-    s = exact_compare_distances(_frac(x), _frac(a), _frac(b))
-    if s != 0:
-        return s
-    return symbolic_compare_distances(x, a, b)
-
-
-_CA45_DEGREES = 2 - math.sqrt(2)
-
-
-def triage_compare_cos_distance(x: Point, y: Point, r2: float) -> int:
-    cos_xy, cos_xy_err = cos_distance(x, y)
-    cos_r = 1.0 - 0.5 * r2
-    cos_r_err = 2.0 * DBL_ERROR * cos_r
-    diff = cos_xy - cos_r
-    err = cos_xy_err + cos_r_err
-    if diff > err:
-        return -1
-    if diff < -err:
-        return 1
-    return 0
-
-
-def triage_compare_sin2_distance(x: Point, y: Point, r2: float) -> int:
-    sin2_xy, sin2_xy_err = sin2_distance(x, y)
-    sin2_r = r2 * (1.0 - 0.25 * r2)
-    sin2_r_err = 3.0 * DBL_ERROR * sin2_r
-    diff = sin2_xy - sin2_r
-    err = sin2_xy_err + sin2_r_err
-    if diff > err:
-        return 1
-    if diff < -err:
-        return -1
-    return 0
-
-
-def exact_compare_distance(x, y, r2: Fraction) -> int:
-    cos_xy = _fdot(x, y)
-    cos_r = Fraction(1) - Fraction(1, 2) * r2
-    xy_sign = _fsign(cos_xy)
-    r_sign = _fsign(cos_r)
-    if xy_sign != r_sign:
-        return -1 if xy_sign > r_sign else 1
-    cmp = cos_r * cos_r * _fdot(x, x) * _fdot(y, y) - cos_xy * cos_xy
-    return xy_sign * _fsign(cmp)
-
-
-def compare_distance(x: Point, y: Point, r: float) -> int:
-    """-1/0/+1 as XY < / == / > chord angle r (predicates.ts:568-584)."""
-    s = triage_compare_cos_distance(x, y, r)
-    if s != 0:
-        return s
-    if r < _CA45_DEGREES:
-        s = triage_compare_sin2_distance(x, y, r)
-        if s != 0:
-            return s
-    return exact_compare_distance(_frac(x), _frac(y), Fraction(r))

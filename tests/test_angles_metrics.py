@@ -41,25 +41,6 @@ def test_chordangle_angle_equality():
     assert abs(ca.degrees(ca.chord_angle(ca.RIGHT_CHORDANGLE)) - 90) <= 1e-13
 
 
-def test_chordangle_successor_predecessor():
-    # chordangle_test.ts:63-102
-    assert ca.chord_successor(ca.NEGATIVE_CHORDANGLE) == 0
-    assert ca.chord_successor(ca.STRAIGHT_CHORDANGLE) == INF
-    assert ca.chord_successor(INF) == INF
-    x = ca.NEGATIVE_CHORDANGLE
-    for _ in range(10):
-        assert x < ca.chord_successor(x)
-        x = ca.chord_successor(x)
-
-    assert ca.chord_predecessor(INF) == ca.STRAIGHT_CHORDANGLE
-    assert ca.chord_predecessor(0.0) == ca.NEGATIVE_CHORDANGLE
-    assert ca.chord_predecessor(ca.NEGATIVE_CHORDANGLE) == ca.NEGATIVE_CHORDANGLE
-    x = INF
-    for _ in range(10):
-        assert x > ca.chord_predecessor(x)
-        x = ca.chord_predecessor(x)
-
-
 def test_chordangle_from_angle():
     # chordangle_test.ts:104-115
     for a in [0.0, 1.0, -1.0, math.pi]:
@@ -100,17 +81,11 @@ def test_chordangle_trigonometry():
         radians = math.pi * i / 40
         c = ca.chord_from_angle(radians)
         assert abs(math.sin(radians) - ca.chord_sin(c)) <= eps
-        assert abs(math.cos(radians) - ca.chord_cos(c)) <= eps
-        assert abs(math.atan(math.tan(radians)) - math.atan(ca.chord_tan(c))) <= eps
 
     a90 = ca.chord_from_squared_length(2)
     a180 = ca.chord_from_squared_length(4)
     assert ca.chord_sin(a90) == 1
-    assert ca.chord_cos(a90) == 0
-    assert ca.chord_tan(a90) == INF
     assert ca.chord_sin(a180) == 0
-    assert ca.chord_cos(a180) == -1
-    assert ca.chord_tan(a180) == 0
 
 
 def test_chordangle_expanded():

@@ -1,33 +1,22 @@
 """Port of /root/reference/s2/edge_clipping_test.ts (golden vectors +
-the randomized invariants, seeded deterministically)."""
+the randomized face-segment invariants, seeded deterministically)."""
 
 from __future__ import annotations
 
 import math
 import random
 
-import numpy as np
-import pytest
-
 from s2js_spark.geometry.edge_clipping import (
     AXIS_U,
     AXIS_V,
-    EDGE_CLIP_ERROR_UV_DIST,
     FACE_CLIP_ERROR_RADIANS,
-    INTERSECTS_RECT_ERROR_UV_DIST,
     PointUVW,
-    clip_edge,
-    clip_edge_bound,
-    clip_to_padded_face,
-    clipped_edge_bound,
-    edge_intersects_rect,
     face_segments,
     _face_uv_to_xyz,
 )
 from s2js_spark.geometry.interval import R1Interval
 from s2js_spark.geometry.point import Point
 from s2js_spark.geometry.r2 import R2Point, R2Rect
-from s2js_spark.geometry.interval import S1Interval
 
 DBL_EPSILON = 2.220446049250313e-16
 BIUNIT = R2Rect(R1Interval(-1, 1), R1Interval(-1, 1))
@@ -115,7 +104,8 @@ def _perturbed_corner_or_midpoint(p: Point, q: Point) -> Point:
     return a
 
 
-def _check_clip_to_padded_face(a: Point, b: Point) -> None:
+def _check_face_segments(a: Point, b: Point) -> None:
+    """The face_segments half of the reference's clipToPaddedFace check."""
     a = a.normalize()
     b = b.normalize()
     if a.equals(b.mul(-1)):
@@ -150,42 +140,6 @@ def _check_clip_to_padded_face(a: Point, b: Point) -> None:
             assert p.dot(a_tan) >= -err
             assert p.dot(b_tan) >= -err
 
-    padding = 0.0
-    if rng.random() >= 0.1:
-        padding = 1e-10 * math.pow(1e-5, rng.random())
-
-    x_axis, y_axis = a, a_tan
-    expected = S1Interval(0, a.angle(b))
-    if expected.is_inverted():
-        expected = S1Interval(expected.hi, expected.lo)
-    max_angles = expected.expanded(err)
-    actual = S1Interval(0, 0)
-
-    for face in range(6):
-        a_uv, b_uv, intersects = clip_to_padded_face(a, b, face, padding)
-        if not intersects:
-            continue
-        a_clip = _face_uv_to_xyz(face, a_uv.x, a_uv.y).normalize()
-        b_clip = _face_uv_to_xyz(face, b_uv.x, b_uv.y).normalize()
-        assert abs(a_clip.dot(norm)) <= err
-        assert abs(b_clip.dot(norm)) <= err
-        if a_clip.angle(a) > err:
-            assert math.isclose(
-                max(abs(a_uv.x), abs(a_uv.y)), 1 + padding, rel_tol=1e-12, abs_tol=1e-12
-            )
-        if b_clip.angle(b) > err:
-            assert math.isclose(
-                max(abs(b_uv.x), abs(b_uv.y)), 1 + padding, rel_tol=1e-12, abs_tol=1e-12
-            )
-        a_angle = math.atan2(a_clip.dot(y_axis), a_clip.dot(x_axis))
-        b_angle = math.atan2(b_clip.dot(y_axis), b_clip.dot(x_axis))
-        face_angles = S1Interval.from_endpoints(a_angle, b_angle)
-        if face_angles.is_inverted():
-            face_angles = S1Interval(face_angles.hi, face_angles.lo)
-        assert max_angles.contains_interval(face_angles)
-        actual = actual.union(face_angles)
-    assert actual.expanded(err).contains_interval(expected)
-
 
 def test_clip_to_padded_face_simple():
     cases = [
@@ -201,7 +155,7 @@ def test_clip_to_padded_face_simple():
         (Point(-1, 0.95, 0.9), Point(1, 0.9, 0.95)),
     ]
     for a, b in cases:
-        _check_clip_to_padded_face(a, b)
+        _check_face_segments(a, b)
 
 
 def test_clip_to_padded_face_random():
@@ -215,109 +169,5 @@ def test_clip_to_padded_face_random():
         q = _face_uv_to_xyz(face, vj.x, vj.y)
         a = _perturbed_corner_or_midpoint(p, q)
         b = _perturbed_corner_or_midpoint(p, q)
-        _check_clip_to_padded_face(a, b)
+        _check_face_segments(a, b)
 
-
-# --------------------------------------------------------- clipEdge suite
-
-ERROR_DIST = EDGE_CLIP_ERROR_UV_DIST + INTERSECTS_RECT_ERROR_UV_DIST
-
-
-def _random_point_from_interval(clip: R1Interval) -> float:
-    if rng.random() < 0.2:
-        return clip.lo if rng.random() < 0.5 else clip.hi
-    c = rng.randrange(3)
-    if c == 0:
-        return clip.lo - rng.random()
-    if c == 1:
-        return clip.hi + rng.random()
-    return clip.lo + rng.random() * clip.length()
-
-
-def _choose_rect_endpoint(clip: R2Rect) -> R2Point:
-    if rng.random() < 0.1:
-        diag = rng.randrange(2)
-        t = rng.uniform(-1, 2)
-        v = clip.vertices()
-        return v[diag].mul(1 - t).add(v[diag + 2].mul(t))
-    return R2Point(
-        _random_point_from_interval(clip.x), _random_point_from_interval(clip.y)
-    )
-
-
-def _choose_point_in_rect(a: R2Point, b: R2Point) -> R2Point:
-    if rng.random() < 0.2:
-        return a if rng.random() < 0.5 else b
-    if rng.random() < 1 / 3:
-        return a.add(b.sub(a).mul(rng.random()))
-    return R2Point(rng.uniform(a.x, b.x), rng.uniform(a.y, b.y))
-
-
-def _get_fraction(x: R2Point, a: R2Point, b: R2Point) -> float:
-    if a == b:
-        return 0.0
-    d = b.sub(a).normalize()
-    assert abs(x.sub(a).dot(d.ortho())) <= ERROR_DIST
-    return x.sub(a).dot(d)
-
-
-def _check_point_on_boundary(p: R2Point, a: R2Point, clip: R2Rect) -> None:
-    assert clip.contains_point(p)
-    if p != a:
-        p1 = R2Point(np.nextafter(p.x, a.x), np.nextafter(p.y, a.y))
-        assert not clip.contains_point(p1)
-
-
-def test_clip_edge():
-    test_rects = [
-        R2Rect.from_points(
-            R2Point(rng.uniform(-1, 1), rng.uniform(-1, 1)),
-            R2Point(rng.uniform(-1, 1), rng.uniform(-1, 1)),
-        )
-        for _ in range(5)
-    ] + [
-        R2Rect(R1Interval(-0.7, -0.7), R1Interval(0.3, 0.35)),
-        R2Rect(R1Interval(0.2, 0.5), R1Interval(0.3, 0.3)),
-        R2Rect(R1Interval(-0.7, 0.3), R1Interval(0, 0)),
-        R2Rect.from_points(R2Point(0.3, 0.8)),
-        R2Rect.empty(),
-    ]
-    for r in test_rects:
-        for _ in range(300):
-            a = _choose_rect_endpoint(r)
-            b = _choose_rect_endpoint(r)
-            a_clip, b_clip, intersects = clip_edge(a, b, r)
-            if not intersects:
-                assert not edge_intersects_rect(
-                    a, b, r.expanded_by_margin(-ERROR_DIST)
-                )
-            else:
-                assert edge_intersects_rect(a, b, r.expanded_by_margin(ERROR_DIST))
-                got_a = _get_fraction(a_clip, a, b)
-                got_b = _get_fraction(b_clip, a, b)
-                assert got_a <= got_b
-                _check_point_on_boundary(a_clip, a, r)
-                _check_point_on_boundary(b_clip, b, r)
-
-            initial_clip = R2Rect.from_points(
-                _choose_point_in_rect(a, b), _choose_point_in_rect(a, b)
-            )
-            bound = clipped_edge_bound(a, b, initial_clip)
-            if bound.is_empty():
-                continue
-            max_bound = bound.intersection(r)
-            new_bound, new_intersects = clip_edge_bound(a, b, r, bound)
-            if not new_intersects:
-                assert not edge_intersects_rect(
-                    a, b, max_bound.expanded_by_margin(-ERROR_DIST)
-                )
-            else:
-                assert edge_intersects_rect(
-                    a, b, max_bound.expanded_by_margin(ERROR_DIST)
-                )
-                ai = 1 if a.x > b.x else 0
-                aj = 1 if a.y > b.y else 0
-                _check_point_on_boundary(new_bound.vertex_ij(ai, aj), a, max_bound)
-                _check_point_on_boundary(
-                    new_bound.vertex_ij(1 - ai, 1 - aj), b, max_bound
-                )

@@ -29,8 +29,6 @@ def _check(a, b, c, d, robust, edge_or_vertex):
     crosser.restart_at(c)
     assert crosser.edge_or_vertex_chain_crossing(d) == edge_or_vertex
     assert crosser.edge_or_vertex_chain_crossing(c) == edge_or_vertex
-    assert crosser.edge_or_vertex_crossing(d, c) == edge_or_vertex
-    assert crosser.edge_or_vertex_crossing(c, d) == edge_or_vertex
 
 
 def test_crossings():

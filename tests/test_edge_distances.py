@@ -10,7 +10,6 @@ from s2js_spark.geometry.edge_distances import (
     distance_from_segment,
     interpolate,
     interpolate_at_distance,
-    project,
     update_min_distance,
 )
 from s2js_spark.geometry.point import Point
@@ -23,28 +22,26 @@ def P(x, y, z):
 def test_check_distance():
     # edge_distances_test.ts:20-157
     cases = [
-        ((1, 0, 0), (1, 0, 0), (0, 1, 0), 0, (1, 0, 0)),
-        ((0, 1, 0), (1, 0, 0), (0, 1, 0), 0, (0, 1, 0)),
-        ((1, 3, 0), (1, 0, 0), (0, 1, 0), 0, (1, 3, 0)),
-        ((0, 0, 1), (1, 0, 0), (0, 1, 0), math.pi / 2, (1, 0, 0)),
-        ((0, 0, -1), (1, 0, 0), (0, 1, 0), math.pi / 2, (1, 0, 0)),
-        ((-1, -1, 0), (1, 0, 0), (0, 1, 0), 0.75 * math.pi, (1, 0, 0)),
-        ((0, 1, 0), (1, 0, 0), (1, 1, 0), math.pi / 4, (1, 1, 0)),
-        ((0, -1, 0), (1, 0, 0), (1, 1, 0), math.pi / 2, (1, 0, 0)),
-        ((0, -1, 0), (1, 0, 0), (-1, 1, 0), math.pi / 2, (1, 0, 0)),
-        ((-1, -1, 0), (1, 0, 0), (-1, 1, 0), math.pi / 2, (-1, 1, 0)),
-        ((1, 1, 1), (1, 0, 0), (0, 1, 0), math.asin(math.sqrt(1 / 3)), (1, 1, 0)),
-        ((1, 1, -1), (1, 0, 0), (0, 1, 0), math.asin(math.sqrt(1 / 3)), (1, 1, 0)),
-        ((-1, 0, 0), (1, 1, 0), (1, 1, 0), 0.75 * math.pi, (1, 1, 0)),
-        ((0, 0, -1), (1, 1, 0), (1, 1, 0), math.pi / 2, (1, 1, 0)),
-        ((-1, 0, 0), (1, 0, 0), (1, 0, 0), math.pi, (1, 0, 0)),
+        ((1, 0, 0), (1, 0, 0), (0, 1, 0), 0),
+        ((0, 1, 0), (1, 0, 0), (0, 1, 0), 0),
+        ((1, 3, 0), (1, 0, 0), (0, 1, 0), 0),
+        ((0, 0, 1), (1, 0, 0), (0, 1, 0), math.pi / 2),
+        ((0, 0, -1), (1, 0, 0), (0, 1, 0), math.pi / 2),
+        ((-1, -1, 0), (1, 0, 0), (0, 1, 0), 0.75 * math.pi),
+        ((0, 1, 0), (1, 0, 0), (1, 1, 0), math.pi / 4),
+        ((0, -1, 0), (1, 0, 0), (1, 1, 0), math.pi / 2),
+        ((0, -1, 0), (1, 0, 0), (-1, 1, 0), math.pi / 2),
+        ((-1, -1, 0), (1, 0, 0), (-1, 1, 0), math.pi / 2),
+        ((1, 1, 1), (1, 0, 0), (0, 1, 0), math.asin(math.sqrt(1 / 3))),
+        ((1, 1, -1), (1, 0, 0), (0, 1, 0), math.asin(math.sqrt(1 / 3))),
+        ((-1, 0, 0), (1, 1, 0), (1, 1, 0), 0.75 * math.pi),
+        ((0, 0, -1), (1, 1, 0), (1, 1, 0), math.pi / 2),
+        ((-1, 0, 0), (1, 0, 0), (1, 0, 0), math.pi),
     ]
-    for px, pa, pb, dist_rad, pwant in cases:
-        x, a, b, want = P(*px), P(*pa), P(*pb), P(*pwant)
+    for px, pa, pb, dist_rad in cases:
+        x, a, b = P(*px), P(*pa), P(*pb)
         d = distance_from_segment(x, a, b)
         assert abs(d - dist_rad) <= 1e-15, (px, pa, pb, d, dist_rad)
-        closest = project(x, a, b)
-        assert closest.approx_equal(want, 1e-15), (px, pa, pb)
         _, ok1 = update_min_distance(x, a, b, 0.0)
         assert not ok1
         min_dist2, ok2 = update_min_distance(x, a, b, math.inf)
@@ -88,73 +85,3 @@ def test_repeated_interpolation():
         for _ in range(100):
             a = interpolate(0.01, a, b)
         assert abs(a.norm2() - 1) < 1e-12
-
-
-def test_edge_pair_min_max_distance():
-    from s2js_spark.geometry.edge_distances import (
-        update_edge_pair_max_distance,
-        update_edge_pair_min_distance,
-    )
-    from s2js_spark.geometry.angle import STRAIGHT_CHORDANGLE
-
-    a0 = Point.from_latlng_degrees(0, 0)
-    a1 = Point.from_latlng_degrees(0, 10)
-    # crossing pair -> 0
-    b0 = Point.from_latlng_degrees(-5, 5)
-    b1 = Point.from_latlng_degrees(5, 5)
-    d, ok = update_edge_pair_min_distance(a0, a1, b0, b1, 10.0)
-    assert ok and d == 0.0
-    # disjoint pair -> endpoint distance
-    c0 = Point.from_latlng_degrees(2, 0)
-    c1 = Point.from_latlng_degrees(2, 10)
-    d, ok = update_edge_pair_min_distance(a0, a1, c0, c1, 10.0)
-    assert ok and abs(math.degrees(2 * math.asin(math.sqrt(d) / 2)) - 2.0) < 1e-9
-    # antipodal crossing -> max = straight
-    n0 = Point.from_latlng_degrees(-5, -175)
-    n1 = Point.from_latlng_degrees(5, -175)
-    d, ok = update_edge_pair_max_distance(a0, a1, n0, n1, 0.0)
-    assert ok and d == STRAIGHT_CHORDANGLE
-
-
-def test_edge_pair_closest_points():
-    from s2js_spark.geometry.edge_distances import (
-        distance_from_segment,
-        edge_pair_closest_points,
-    )
-    from s2js_spark.geometry.edge_crossings import INTERSECTION_ERROR
-
-    a0 = Point.from_latlng_degrees(0, 0)
-    a1 = Point.from_latlng_degrees(0, 10)
-    # crossing: both points are the intersection
-    b0 = Point.from_latlng_degrees(-5, 5)
-    b1 = Point.from_latlng_degrees(5, 5)
-    pa, pb = edge_pair_closest_points(a0, a1, b0, b1)
-    assert pa.equals(pb)
-    assert pa.distance(Point.from_latlng_degrees(0, 5)) <= 1e-9
-    # disjoint: closest pair is (interior projection, c-vertex);
-    # exercises closestVertex != 0 (the TS reference freezes at 0)
-    c0 = Point.from_latlng_degrees(2, 5)
-    c1 = Point.from_latlng_degrees(5, 5)
-    pa, pb = edge_pair_closest_points(a0, a1, c0, c1)
-    assert pb.equals(c0)
-    assert distance_from_segment(pa, a0, a1) < 1e-12
-    assert abs(math.degrees(pa.angle(pb)) - 2.0) < 1e-9
-    # symmetric orientation: a-vertex closest
-    pa2, pb2 = edge_pair_closest_points(c0, c1, a0, a1)
-    assert pa2.equals(c0)
-
-
-def test_polyline_uninterpolate_roundtrip():
-    from s2js_spark.geometry.polyline import Polyline
-
-    pl = Polyline(
-        [
-            Point.from_latlng_degrees(0, 0),
-            Point.from_latlng_degrees(0, 10),
-            Point.from_latlng_degrees(10, 10),
-        ]
-    )
-    for f in [0.0, 0.1, 0.25, 0.5, 0.75, 0.9, 1.0]:
-        p, nv = pl.interpolate(f)
-        back = pl.uninterpolate(p, nv)
-        assert abs(back - f) < 1e-12, (f, back)

