@@ -66,9 +66,10 @@ PIP_TILES = [
 
 def _big_pip_ring(n: int = 240) -> list[list[float]]:
     """A deterministic jagged 240-vertex CONCAVE ring around city 8
-    (1N, 8E): r(theta) = 1.2 + 0.5 sin(9 theta) degrees. Well above
-    tagjoin.MAX_INLINE_EDGES, so the engine's array-aggregate winding
-    fallback (the realistic admin-boundary path) is what runs."""
+    (1N, 8E): r(theta) = 1.2 + 0.5 sin(9 theta) degrees. Its boundary
+    covering cells each meet a few of its edges (up to about 40 at 64
+    cells), the realistic admin-boundary shape of the tag join's
+    cell-local refinement."""
     ring = []
     for k in range(n):
         th = 2.0 * math.pi * k / n
@@ -188,10 +189,11 @@ def _q_pip_tag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pip_big(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-polygon against a 240-edge concave polygon — drives the
-    array-aggregate winding path (tagjoin._winding_agg_sql) that real
-    10^4-vertex admin boundaries hit; oracle = the same certified
-    winding count reproduced over a DuckDB VALUES edge table."""
+    """Point-in-polygon against a 240-edge concave polygon — the tag
+    join's cell-local crossing count (tagjoin._winding_sql over each
+    boundary cell's own edges) that real 10^4-vertex admin boundaries
+    hit; oracle = an independent origin-based winding count over all
+    240 edges in a DuckDB VALUES edge table."""
     df = _geo_pages(spark, sf_dir).select("url", "lat", "lng")
     ts = _tileset("pip_big", BIG_PIP_TILES, 64)
     pairs = tag_tiles_pairs(spark, df, ts)
@@ -792,25 +794,26 @@ def _polyline_clip_oracle_sql() -> str:
 
 
 def _pip_big_oracle_sql() -> str:
-    """DuckDB twin of the engine's certified winding test for the big
-    concave tile (tagjoin._winding_agg_sql): the SAME edge normals,
-    origin determinants and loop parity, from the engine's own edge walk
-    (tagjoin._loop_edges, _origin_parity; _edge_planes folds the
-    determinants to their banded signs where this twin tests them in
-    SQL), the SAME +-eps certified sign bands, a VALUES edge table
-    instead of a broadcast array column. Points far from edges
-    (asserted: zero uncertified lanes) make both counts identical."""
-    from s2js_spark.spark.tagjoin import (
-        MAX_DETERMINANT_ERROR, _loop_edges, _origin_parity,
-    )
+    """DuckDB check of the big concave tile, independent of the engine's
+    cell-local refinement (tagjoin._winding_sql): the port's
+    origin-based winding parity (Loop.ts:372-380) over EVERY edge, from
+    the engine's one edge walk (polyline_ops.ring_edges) and the loops'
+    ``origin_inside``, with the same +-eps certified sign bands on all
+    four EdgeCrosser determinants, over a VALUES edge table. Points far
+    from edges (asserted: zero uncertified lanes in the engine) make
+    the engine's and this twin's answers identical."""
+    from s2js_spark.geometry.predicates import MAX_DETERMINANT_ERROR
+    from s2js_spark.spark.polyline_ops import ring_edges
 
     poly = _tileset("pip_big", BIG_PIP_TILES, 64).shapes[0]
     o = Point.origin_point()
     ox, oy, oz = o.x, o.y, o.z
     rows = [
         f"({c.x!r}, {c.y!r}, {c.z!r}, {d.x!r}, {d.y!r}, {d.z!r},"
-        f" {n.x!r}, {n.y!r}, {n.z!r}, {dea!r})"
-        for c, d, n, dea in _loop_edges(poly)
+        f" {n.x!r}, {n.y!r}, {n.z!r}, {n.dot(o)!r})"
+        for loop in poly.loops
+        if not loop.is_empty_or_full()
+        for c, d, n, _ in ring_edges(loop.vertices)
     ]
     rows = ", ".join(rows)
     eps = repr(MAX_DETERMINANT_ERROR)
@@ -822,7 +825,8 @@ def _pip_big_oracle_sql() -> str:
     bda = sgn("abx * e.dx + aby * e.dy + abz * e.dz")
     cbd = f"(-{sgn('e.nx * px + e.ny * py + e.nz * pz')})"
     dac = sgn("e.dea")
-    parity = "TRUE" if _origin_parity(poly) else "FALSE"
+    origin_inside = sum(loop.origin_inside for loop in poly.loops) % 2 == 1
+    parity = "TRUE" if origin_inside else "FALSE"
     d = repr(D)
     return f"""{_PAGES_CTE},
         pts AS (

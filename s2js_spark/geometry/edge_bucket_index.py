@@ -15,6 +15,10 @@ two loops' bucket maps:
 
 Buckets are therefore a SOUND candidate superset; the exact
 EdgeCrosser + wedge logic decides each candidate pair.
+
+The same padded cell rectangle picks, for the tag join's cell-local
+point-in-polygon refinement, the edges that meet one covering cell
+(``cell_edges``).
 """
 
 from __future__ import annotations
@@ -23,7 +27,7 @@ import math
 from collections import defaultdict
 
 from . import cellid_scalar as cs
-from .edge_clipping import edge_intersects_rect, face_segments
+from .edge_clipping import FaceSegment, edge_intersects_rect, face_segments
 from .interval import R1Interval
 from .point import Point
 from .r2 import R2Point, R2Rect
@@ -41,6 +45,15 @@ def _ij_to_uv(x: int) -> float:
     return cs._st_to_uv_scalar(x / MAX_SIZE)
 
 
+def _padded_rect(i_lo: int, j_lo: int, size: int) -> R2Rect:
+    """uv rectangle of the (i,j)-grid square of side ``size`` at
+    (i_lo, j_lo), padded by _UV_MARGIN on every side."""
+    return R2Rect(
+        R1Interval(_ij_to_uv(i_lo) - _UV_MARGIN, _ij_to_uv(i_lo + size) + _UV_MARGIN),
+        R1Interval(_ij_to_uv(j_lo) - _UV_MARGIN, _ij_to_uv(j_lo + size) + _UV_MARGIN),
+    )
+
+
 def _edge_cells_on_face(
     face: int, a: R2Point, b: R2Point, level: int, out: set[int]
 ) -> None:
@@ -50,11 +63,7 @@ def _edge_cells_on_face(
     while stack:
         depth, i_lo, j_lo = stack.pop()
         size = 1 << (MAX_LEVEL - depth)
-        rect = R2Rect(
-            R1Interval(_ij_to_uv(i_lo) - _UV_MARGIN, _ij_to_uv(i_lo + size) + _UV_MARGIN),
-            R1Interval(_ij_to_uv(j_lo) - _UV_MARGIN, _ij_to_uv(j_lo + size) + _UV_MARGIN),
-        )
-        if not edge_intersects_rect(a, b, rect):
+        if not edge_intersects_rect(a, b, _padded_rect(i_lo, j_lo, size)):
             continue
         if depth == level:
             out.add(cs.parent(cs.from_face_ij(face, i_lo, j_lo), level))
@@ -72,6 +81,20 @@ def edge_cells(a: Point, b: Point, level: int) -> set[int]:
     for seg in face_segments(a, b):
         _edge_cells_on_face(seg.face, seg.a, seg.b, level, out)
     return out
+
+
+def cell_edges(cell: int, edge_segments: list[list[FaceSegment]]) -> list[int]:
+    """Indexes of the edges, each given by its ``face_segments``, that
+    meet the padded uv rectangle of ``cell``. Every edge that crosses an
+    arc between two points of the cell is among them: the cell is
+    convex in uv, so the arc and the crossing point lie in it."""
+    face, i, j, _ = cs.face_ij_orientation(cell)
+    size = cs.size_ij(cs.level(cell))
+    rect = _padded_rect(i & -size, j & -size, size)
+    return [
+        k for k, segments in enumerate(edge_segments)
+        if any(s.face == face and edge_intersects_rect(s.a, s.b, rect) for s in segments)
+    ]
 
 
 def pick_level(*loops) -> int:

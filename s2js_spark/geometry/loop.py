@@ -188,13 +188,6 @@ class Loop:
 
     def _init_bound(self) -> None:
         """Loop.ts:146-176."""
-        if len(self.vertices) == 0:
-            other = Loop.empty_loop()
-            self.vertices = other.vertices
-            self.origin_inside = other.origin_inside
-            self.bound = other.bound
-            self.subregion_bound = other.subregion_bound
-            return
         if self.is_empty_or_full():
             self.bound = Rect.full() if self.is_full() else Rect.empty()
             self.subregion_bound = self.bound

@@ -11,7 +11,7 @@ is the vectorized kernel).
 from __future__ import annotations
 
 from .cell import Cell
-from .loop import Loop, RectBounder
+from .loop import Loop, RectBounder, wedge_contains_semiwedge
 from .point import Point
 from .rect import Rect
 
@@ -322,8 +322,6 @@ def _loop_compare_boundary(l: Loop, o: Loop) -> int:
     if o.is_full():
         return -1
 
-    from .loop import wedge_contains_semiwedge
-
     reverse = o.is_hole()
     state = {"contains_edge": False, "excludes_edge": False}
 
@@ -344,8 +342,6 @@ def _loop_compare_boundary(l: Loop, o: Loop) -> int:
 
 def _loop_contains_non_crossing_boundary(l: Loop, other: Loop, reverse_other: bool) -> bool:
     """Loop.containsNonCrossingBoundary (Loop.ts:686-699)."""
-    from .loop import wedge_contains
-
     if not l.bound.intersects(other.bound):
         return False
     if l.is_full():
@@ -355,18 +351,9 @@ def _loop_contains_non_crossing_boundary(l: Loop, other: Loop, reverse_other: bo
     m, ok = l.find_vertex(other.vertex(0))
     if not ok:
         return l.contains_point(other.vertex(0))
-    return _wedge_contains_semiwedge(
+    return wedge_contains_semiwedge(
         l.vertex(m - 1), l.vertex(m), l.vertex(m + 1), other.vertex(1), reverse_other
     )
-
-
-def _wedge_contains_semiwedge(a0: Point, ab1: Point, a2: Point, b2: Point, reverse: bool) -> bool:
-    """(Loop.ts wedgeContainsSemiwedge)."""
-    from .point import ordered_ccw
-
-    if b2.equals(a0) or b2.equals(a2):
-        return b2.equals(a0) == reverse
-    return ordered_ccw(a0, a2, b2, ab1)
 
 
 class _LoopMap:

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..geometry.angle import chord_from_angle
 from . import sqlkernels as sq
 from .polyline_ops import ring_edges, ring_points
+from .tagjoin import covering_candidates
 
 _D = math.pi / 180.0
 
@@ -154,28 +155,14 @@ def buffered_covering(
     return rows, sorted(levels)
 
 
-# Above this many rings the per-ring inline columns would regenerate
-# the janino 64KB method blow-up (two columns per ring + CASE chains
-# over all rings — O(rings) expression width); past it the refinement
-# switches to the edges-as-broadcast-data aggregate form (the
-# tagjoin._winding_agg_sql pattern). 16 covers every graded query with
-# whole-stage codegen headroom to spare.
-MAX_INLINE_RINGS = 16
-
-# type of the broadcast geometry frame's per-tile ``edges`` column
-_EDGE_SCHEMA = (
-    "array<struct<" + ",".join(f"{n}:double" for n in _EDGE_FIELDS) + ">>"
-)
-
-
 def _buffer_agg_sql(px: str, py: str, pz: str, edges: str = "_bedges") -> str:
     """One aggregate() over the broadcast ``edges`` array producing
-    struct(ins: inside-all-planes, d: min boundary chord^2) — the
-    O(1)-expression-width refinement for ring counts past
-    MAX_INLINE_RINGS. Per-edge arithmetic is buffer_exprs' own
-    (_edge_terms over the struct fields), so the two paths agree
-    bitwise except that the fold's pairwise least() replaces the
-    variadic least() — min is exact either way."""
+    struct(ins: inside-all-planes, d: min boundary chord^2): an
+    O(1)-expression-width refinement, so plan size does not grow with
+    the ring count. Per-edge arithmetic is buffer_exprs' own
+    (_edge_terms over the struct fields), so the two agree bitwise
+    except that the fold's pairwise least() replaces the variadic
+    least() — min is exact either way."""
     xc, d_edge = _edge_terms((px, py, pz), [f"e.{n}" for n in _EDGE_FIELDS])
     return (
         f"aggregate({edges},"
@@ -196,104 +183,52 @@ def tag_within_distance_multi(
 ) -> DataFrame:
     """MANY-polygon distance/buffer join, the 100 TB shape: instead of
     evaluating every polygon's distance against every row (a full
-    scan PER polygon), candidates come from a broadcast equi-join of
-    the row's cell ancestors against the radius-EXPANDED coverings
-    (tagjoin's covering-join mechanics), and only candidates run the
-    exact inside-or-within-distance refinement. Output: df columns +
-    (tile_i, ``dist_col``). All JVM; the only non-map stage is the
-    broadcast of the covering index (O(tiles x cells))."""
+    scan PER polygon), candidates come from the tag join's covering
+    stage (``tagjoin.covering_candidates``) over the radius-EXPANDED
+    coverings, and only candidates run the exact
+    inside-or-within-distance refinement: ONE aggregate over the
+    ring's broadcast edge array. Output: df columns + (tile_i,
+    ``dist_col``). All JVM; the only non-map stage is the broadcast of
+    the covering index (O(tiles x cells))."""
     spark = df.sparkSession
     cov_rows, levels = buffered_covering(rings, radius_deg)
     cov = sq.values_frame(
         spark, [f"({c}L, {t})" for c, t in cov_rows], "(0L, 0)", "_bufcov(cell, tile_i)"
     )
-
-    base = df.filter(
-        F.col(lat_col).isNotNull() & F.col(lng_col).isNotNull()
-    )
-    pts = sq.with_s2_cellid(
-        base, lat_col, lng_col, out_col="_leaf", assume_nonnull=True
-    )
-    # barrier 1 protects the encode chain (tagjoin.tag_candidates
-    # pattern); explode_OUTER defeats InferFiltersFromGenerate.
-    pts = sq.pushdown_barrier(pts, "_bufm_b1")
-    anc = F.array(*[sq.s2_parent_sql("_leaf", lv) for lv in levels])
-    cand = (
-        pts.withColumn("_anc", F.explode_outer(anc))
-        .join(F.broadcast(cov), F.col("_anc") == cov["cell"])
-        .drop("cell", "_anc", "_leaf")
-    )
+    cand = covering_candidates(df, cov, levels, lat_col, lng_col)
 
     # staged refinement (tag_within_distance pattern): unit vector
-    # once, then either per-tile inline columns (small tile sets:
-    # plan-time literals unroll into whole-stage codegen, 10-30x the
-    # interpreted HOF) or ONE aggregate over broadcast per-tile edge
-    # frames (O(1) expression width — plan size no longer grows with
-    # the tile set, so a 10^4-tile buffer join compiles).
+    # once, then the aggregate.
     ax, ay, az = sq.xyz_sql(lat_col, lng_col)
     staged = cand.selectExpr(
         "*", f"{ax} AS _bpx", f"{ay} AS _bpy", f"{az} AS _bpz"
     )
-    staged = staged.withColumn("_bufm_b2", F.col("_bufm_b1") + F.rand())
-    limit = chord2_limit(radius_deg)
-    if len(rings) <= MAX_INLINE_RINGS:
-        tile_cols = []
-        for k, (_tid, ring) in enumerate(rings):
-            inside, dist = buffer_exprs(
-                ring, lat_col, lng_col, px="_bpx", py="_bpy", pz="_bpz"
-            )
-            tile_cols.append(f"{inside} AS _bin{k}")
-            tile_cols.append(f"{dist} AS _bd{k}")
-        staged = staged.selectExpr("*", *tile_cols)
-        keep = " ".join(
-            f"WHEN {k} THEN (_bin{k} OR _bd{k} <= {sq.spark_lit(limit)})"
-            for k in range(len(rings))
-        )
-        dist_case = " ".join(
-            f"WHEN {k} THEN round(_bd{k}, 9)" for k in range(len(rings))
-        )
-        if not rings:  # a CASE needs at least one WHEN
-            keep, dist_case = "WHEN -1 THEN false", "WHEN -1 THEN CAST(NULL AS DOUBLE)"
-        out = staged.filter(
-            F.expr(f"CASE tile_i {keep} ELSE false END")
-            & sq.barrier_guard("_bufm_b2")
-        ).withColumn(dist_col, F.expr(f"CASE tile_i {dist_case} END"))
-        drop = (
-            ["_bpx", "_bpy", "_bpz", "_bufm_b1", "_bufm_b2"]
-            + [f"_bin{k}" for k in range(len(rings))]
-            + [f"_bd{k}" for k in range(len(rings))]
-        )
-        return out.drop(*drop)
-
     geom = sq.values_frame(
         spark,
         [
-            f"({t}, array("
-            + ", ".join(
-                "named_struct("
-                + ", ".join(f"'{n}', {sq.cast_lit(v)}" for n, v in zip(_EDGE_FIELDS, e))
-                + ")"
-                for e in _edge_values(ring)
-            )
-            + "))"
+            f"({t}, {sq.struct_array_sql(_EDGE_FIELDS, _edge_values(ring))})"
             for t, (_tid, ring) in enumerate(rings)
         ],
-        f"(0, CAST(array() AS {_EDGE_SCHEMA}))",
+        f"(0, {sq.struct_array_sql(_EDGE_FIELDS, [])})",
         "_bufgeom(tile_i, edges)",
     )
     staged = staged.join(
         F.broadcast(geom.withColumnRenamed("tile_i", "_geom_tile")),
         F.col("tile_i") == F.col("_geom_tile"),
     ).withColumnRenamed("edges", "_bedges")
+    # barrier 2, after the aggregate: without it the filter below is
+    # pushed into the edge join's condition, and the aggregate runs
+    # there and again for the output column
     staged = staged.withColumn(
         "_bres", F.expr(_buffer_agg_sql("_bpx", "_bpy", "_bpz"))
-    )
+    ).withColumn("_bufm_b2", F.col("_bar1") + F.rand())
+    limit = chord2_limit(radius_deg)
     out = staged.filter(
         F.expr(f"_bres.ins OR _bres.d <= {sq.spark_lit(limit)}")
         & sq.barrier_guard("_bufm_b2")
     ).withColumn(dist_col, F.expr("round(_bres.d, 9)"))
     return out.drop(
-        "_bpx", "_bpy", "_bpz", "_bufm_b1", "_bufm_b2",
+        "_bpx", "_bpy", "_bpz", "_bar1", "_bufm_b2",
         "_geom_tile", "_bedges", "_bres",
     )
 

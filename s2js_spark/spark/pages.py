@@ -87,8 +87,7 @@ FROM fmt
 """
 
 # DuckDB spells STRING casts the same way (STRING is a VARCHAR alias),
-# so the text is shared verbatim.
-PAGES_ORACLE_CTE = f"pages AS ({PAGES_SQL})"
+# so the oracle shares the text verbatim (__spark_entry__._PAGES_CTE).
 
 
 def register_documents(spark: SparkSession, sf_dir: str) -> None:

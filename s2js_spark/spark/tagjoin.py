@@ -8,14 +8,16 @@ for rects) holds for the point built as
 certified path runs with ZERO Python:
 
 1.  leaf cell ids via the pure-SQL encode (sqlkernels.with_s2_cellid);
-2.  candidate lookup: each tile's RegionCoverer covering becomes a row
-    set (cell, tile_i, interior); points compute their ancestor at
-    every covering level (pure bigint bit-ops) and broadcast-hash-join
-    ancestors == covering cells. Coverings are normalized CellUnions,
-    so a point matches at most one covering cell per tile — no dedup
-    needed. This is the canonical S2 spatial join shape at 100 TB:
-    map-side broadcast, no shuffle, skew-immune (hot cells fan out
-    across whatever partitioning the input already has).
+2.  candidate lookup (``covering_candidates``): each tile's
+    RegionCoverer covering becomes a row set (cell, tile_i, interior,
+    and for a polygon's boundary cell its centre data below); points
+    compute their ancestor at every covering level (pure bigint
+    bit-ops) and broadcast-hash-join ancestors == covering cells.
+    Coverings are normalized CellUnions, so a point matches at most one
+    covering cell per tile — no dedup needed. This is the canonical S2
+    spatial join shape at 100 TB: map-side broadcast, no shuffle,
+    skew-immune (hot cells fan out across whatever partitioning the
+    input already has).
 3.  refinement entirely in SQL, from the point-geometry texts of
     ``sqlkernels``:
     - rect tiles: ``sqlkernels.rect_contains_sql`` on the radians
@@ -27,32 +29,51 @@ certified path runs with ZERO Python:
     - cap tiles: ``sqlkernels.cap_contains_sql``, the chord^2 test in
       the operation order of ``Point.chord_angle_between`` (so exactly
       ``Cap.contains_point``);
-    - polygon tiles: winding parity (reference Loop.ts:372-380) with
-      the triage determinant sign band of predicates.ts:186-191.
-      Polygons up to ``MAX_INLINE_EDGES`` edges are unrolled into the
-      plan as one literal branch per tile; bigger ones run an
-      ``aggregate`` over the tile's edge array (broadcast column).
-      Both forms fold each edge's origin determinant to its sign on
-      the driver, so a crossing is three strict comparisons of the
-      point's determinants against the band, and the inlined form
-      writes each vertex determinant three times and each edge
-      normal's twice. A determinant's sign is used only when it lies
-      outside the certified error band (|det| <= 1.8274*eps, i.e. the
-      point within ~2.5 nm of an edge plane), so every certified lane
-      has the exact sign. Lanes with any determinant inside the band
-      are counted into the accumulator's high digits and the pair is
-      flagged uncertified.
+    - polygon tiles, boundary covering cells: the reference's
+      ContainsPointQuery (ContainsPointQuery.ts:76-117). The driver
+      records, per boundary cell, its centre X (``Cell.center``),
+      whether the polygon contains X (``Polygon.contains_point``,
+      exact) and the short list of polygon edges that meet the cell's
+      uv rectangle padded by ``edge_bucket_index._UV_MARGIN``
+      (``edge_bucket_index.cell_edges``). A point p of the cell is in
+      the polygon iff X is, XOR an odd count of edges crossing the arc
+      X->p. That parity does not depend on the path, so it is the
+      port's origin-based winding parity (Loop.ts:372-380). The point
+      lies in the padded cell (its leaf cell is a descendant of the
+      covering cell, and the encode's rounding is far inside the
+      margin); the face's gnomonic projection maps the arc X->p to a
+      straight uv segment inside that convex rectangle, so every edge
+      that crosses it is in the cell's list.
 4.  uncertified polygon lanes (statistically never on organic data)
     are exactly resolved by the scalar geometry library in one
     map-side filter over the matched rows when ``exact_residuals=True``
     (the default; graded queries keep it on).
 
+Certification of the crossing count. Edge C->D (normal N = C x D,
+``Point.cross``) crosses X->p iff the EdgeCrosser signs acb = -s(ab.C),
+bda = s(ab.D), cbd = -s(N.p) and dac = s(N.X) are all equal and
+nonzero (ab = X x p). Each determinant is evaluated in the operation
+order of ``predicates.triage_sign`` on unit vectors: ab.C and ab.D are
+``triage_sign(X, p, .)`` with X read from the covering row and p the
+SQL point (left-to-right sums, no fused multiply-add in the JVM); N.p
+is ``triage_sign(C, D, p)`` with N a round-trip double literal; N.X is
+``triage_sign(C, D, X)``, evaluated by ``Point.dot`` on the driver.
+``MAX_DETERMINANT_ERROR`` (1.8274 * eps, predicates.ts:186-191) bounds
+the rounding error of each for unit-length operands, which the
+normalized centre, vertices and point are, so a determinant outside
+that band has its exact sign. N.X is folded on the driver to +1.0 or
+-1.0 outside the band and 0.0 inside it; the SQL multiplies the other
+three determinants by it (an exact sign flip) and compares each
+strictly against the band. A lane with any of ab.C, ab.D or N.p in the
+band, and every lane of a cell with an N.X in the band, is counted
+into the accumulator's high digits and flagged uncertified; on a
+certified lane no vertex lies on the arc, so each crossing is proper
+and the count is the port's ``edge_or_vertex_crossing`` count.
+
 Every geometry literal comes from the tile set's scalar shapes: edge
-normals are ``Point.cross`` of a polygon loop's vertices, shipped as
-round-trip double literals, and their origin-side determinants
-(``Point.dot``) are folded on the driver to certified signs; the band
-bounds the rounding error of that evaluation order. Rect bounds and
-cap centers and radii are the shapes' own fields.
+vertices and normals from ``polyline_ops.ring_edges`` over a polygon
+loop's vertices, cell centres and their containment from the port.
+Rect bounds and cap centers and radii are the shapes' own fields.
 """
 
 from __future__ import annotations
@@ -66,7 +87,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from ..geometry import cellid_scalar as cs
-from ..geometry.point import Point
+from ..geometry.cell import Cell
+from ..geometry.edge_bucket_index import cell_edges
+from ..geometry.edge_clipping import face_segments
 from ..geometry.polygon import Polygon
 from ..geometry.predicates import MAX_DETERMINANT_ERROR
 from ..geometry.rect import Rect
@@ -81,43 +104,47 @@ KIND_CAP = 2
 
 _UNCERT = 1_000_000  # accumulator stride separating crossing count / flags
 
-_EDGE_STRUCT = (
-    "array<struct<cx:double,cy:double,cz:double,"
-    "dx:double,dy:double,dz:double,"
-    "nx:double,ny:double,nz:double,s:double>>"
+# One polygon edge C->D of a boundary cell's list: C, D, N = C x D and
+# s, the cell centre's determinant N.X folded to its certified sign.
+_EDGE_FIELDS = ("cx", "cy", "cz", "dx", "dy", "dz", "nx", "ny", "nz", "s")
+
+# The covering frame's per-cell columns, and their values off a
+# polygon's boundary cells. ctr_in is never NULL: a nullable input
+# grows the generated code of the stage that reads the decision.
+_CELL_COLS = (
+    ("ctr_x", "DOUBLE"), ("ctr_y", "DOUBLE"), ("ctr_z", "DOUBLE"),
+    ("ctr_in", "BOOLEAN"), ("edges", sq.struct_array_type(_EDGE_FIELDS)),
 )
+_NO_CELL = "NULL, NULL, NULL, false, NULL"
 
 
-def _loop_edges(poly: Polygon) -> list[tuple[Point, Point, Point, float]]:
-    """Per edge C->D of ``poly``'s non-empty, non-full loops: (C, D,
-    N = C x D, N . origin), from ``polyline_ops.ring_edges`` and
-    ``Point.dot``."""
-    origin = Point.origin_point()
-    return [
-        (c, d, n, n.dot(origin))
+def _boundary_cells(poly: Polygon, cells: list[int]) -> list[str]:
+    """Per boundary covering cell of ``poly``, the SQL values of its
+    _CELL_COLS: the centre X, whether ``poly`` contains X, and the
+    edges that meet the padded cell."""
+    edges = [
+        (c, d, n)
         for loop in poly.loops
         if not loop.is_empty_or_full()
         for c, d, n, _ in ring_edges(loop.vertices)
     ]
-
-
-def _origin_parity(poly: Polygon) -> bool:
-    """XOR of the loops' originInside: the winding count's offset."""
-    return sum(loop.origin_inside for loop in poly.loops) % 2 == 1
-
-
-def _edge_planes(poly: Polygon) -> list[tuple[float, ...]]:
-    """Per edge of ``_loop_edges``: (c, d, n, s) as ten floats, with s
-    the origin's determinant folded to its certified sign: +1.0 or
-    -1.0 outside the band, 0.0 inside it. The inlined and the
-    array-column winding evaluate the same literals."""
-    return [
-        (c.x, c.y, c.z, d.x, d.y, d.z, n.x, n.y, n.z,
-         1.0 if dea > MAX_DETERMINANT_ERROR
-         else -1.0 if dea < -MAX_DETERMINANT_ERROR
-         else 0.0)
-        for c, d, n, dea in _loop_edges(poly)
-    ]
+    segments = [face_segments(c, d) for c, d, _ in edges]
+    rows = []
+    for cell in cells:
+        x = Cell.from_cellid(cell).center()
+        planes = []
+        for k in cell_edges(cell, segments):
+            c, d, n = edges[k]
+            det = n.dot(x)
+            s = (1.0 if det > MAX_DETERMINANT_ERROR
+                 else -1.0 if det < -MAX_DETERMINANT_ERROR else 0.0)
+            planes.append((c.x, c.y, c.z, d.x, d.y, d.z, n.x, n.y, n.z, s))
+        inside = "true" if poly.contains_point(x) else "false"
+        rows.append(
+            f"{sq.cast_lit(x.x)}, {sq.cast_lit(x.y)}, {sq.cast_lit(x.z)}, {inside},"
+            f" {sq.struct_array_sql(_EDGE_FIELDS, planes)}"
+        )
+    return rows
 
 
 def covering_frames(
@@ -125,213 +152,107 @@ def covering_frames(
 ) -> tuple[DataFrame, DataFrame, list[int]]:
     """(covering cells df, tile geometry df, sorted covering levels).
 
-    Both frames are broadcast-sized: O(covering cells) and
-    O(tiles + polygon edges), joined separately (cell lookup, then
-    per-tile geometry). Round 6 NOTE: a merged single-frame variant
-    (geometry denormalized onto every covering row, one join) was
-    built, measured and REVERTED — it measured no better than the
-    two-join shape once the _winding_inline_sql fallback regression
-    (see that function) was isolated, and the two-join shape keeps the
-    prior plan structure.
+    Both frames are broadcast-sized: O(covering cells + the edges that
+    meet boundary cells) and O(tiles), joined separately (cell lookup,
+    then per-tile geometry). A polygon's boundary covering rows carry
+    the cell-local refinement data (_CELL_COLS); every other row has
+    _NO_CELL there.
 
-    What round 6 keeps: both frames are inline ``VALUES`` SQL, which
-    the analyzer resolves to a LocalRelation — broadcasting a
-    LocalRelation is pure driver work, while the previous
-    ``createDataFrame`` frames were pickled-RDD-backed
-    (``Scan ExistingRDD``) and every broadcast materialization
-    launched a real job with Python-deserializing tasks (2 of
-    rect_tag's 5 jobs per run). Not memoized itself: its one engine
-    caller, tag_tiles_pairs, builds it only on a ``memo`` miss.
+    Both frames are inline ``VALUES`` SQL, which the analyzer resolves
+    to a LocalRelation: each broadcast still runs one Spark job, but
+    one without Python, while ``createDataFrame`` frames are
+    pickled-RDD-backed (``Scan ExistingRDD``) and every broadcast
+    materialization ran Python-deserializing tasks. Not memoized itself:
+    its one engine caller, tag_tiles_pairs, builds it only on a
+    ``memo`` miss.
     """
     levels = sorted({int(cs.level(int(c))) for c in ts.cov_cell})
 
-    d = sq.cast_lit
+    boundary: dict[int, list[int]] = {}
+    for c, t, interior in zip(ts.cov_cell, ts.cov_tile, ts.cov_interior):
+        if not interior and isinstance(ts.shapes[t], Polygon):
+            boundary.setdefault(int(t), []).append(int(c))
+    cell_sql = {
+        (c, t): row
+        for t, cells in boundary.items()
+        for c, row in zip(cells, _boundary_cells(ts.shapes[t], cells))
+    }
     cov = sq.values_frame(
         spark,
         [
             f"({int(np.uint64(c).astype(np.int64))}L, {int(t)},"
-            f" {'true' if i else 'false'})"
+            f" {'true' if i else 'false'}, {cell_sql.get((int(c), int(t)), _NO_CELL)})"
             for c, t, i in zip(ts.cov_cell, ts.cov_tile, ts.cov_interior)
         ],
-        "(0L, 0, false)",
-        "_cov(cell, tile_i, interior)",
+        f"(0L, 0, false, {_NO_CELL})",
+        f"_cov(cell, tile_i, interior, {', '.join(n for n, _ in _CELL_COLS)})",
+    ).selectExpr(
+        "cell", "tile_i", "interior",
+        *(f"CAST({n} AS {t}) AS {n}" for n, t in _CELL_COLS),
     )
 
-    no_edges = f"CAST(array() AS {_EDGE_STRUCT})"
+    d = sq.cast_lit
     geom_rows = []
     for t, shape in enumerate(ts.shapes):
-        parity, planes, rect, cap = False, [], (0.0,) * 4, (0.0,) * 4
+        rect, cap = (0.0,) * 4, (0.0,) * 4
         if isinstance(shape, Polygon):
-            kind, planes = KIND_POLYGON, _edge_planes(shape)
-            parity = _origin_parity(shape)
+            kind = KIND_POLYGON
         elif isinstance(shape, Rect):
             kind = KIND_RECT
             rect = (shape.lat.lo, shape.lat.hi, shape.lng.lo, shape.lng.hi)
         else:
             kind = KIND_CAP
             cap = (shape.center.x, shape.center.y, shape.center.z, shape.rad)
-        # small polygons are fully inlined into the plan
-        # (_winding_inline_sql); only big ones need the array column
-        if len(planes) > MAX_INLINE_EDGES:
-            edges_sql = "array({})".format(", ".join(
-                "named_struct("
-                f"'cx', {d(cx)}, 'cy', {d(cy)}, 'cz', {d(cz)},"
-                f" 'dx', {d(dx)}, 'dy', {d(dy)}, 'dz', {d(dz)},"
-                f" 'nx', {d(nx)}, 'ny', {d(ny)}, 'nz', {d(nz)},"
-                f" 's', {d(sg)})"
-                for cx, cy, cz, dx, dy, dz, nx, ny, nz, sg in planes
-            ))
-        else:
-            edges_sql = no_edges
-        geom_rows.append(
-            f"({t}, {kind}, {'true' if parity else 'false'},"
-            f" {', '.join(d(v) for v in rect + cap)}, {edges_sql})"
-        )
-    zero = d(0.0)
+        geom_rows.append(f"({t}, {kind}, {', '.join(d(v) for v in rect + cap)})")
     geom = sq.values_frame(
         spark,
         geom_rows,
-        f"(0, 0, false, {', '.join([zero] * 8)}, {no_edges})",
-        "_geom(tile_i, kind, origin_parity,"
-        " lat_lo, lat_hi, lng_lo, lng_hi, ccx, ccy, ccz, cr2, edges)",
+        f"(0, 0, {', '.join([d(0.0)] * 8)})",
+        "_geom(tile_i, kind, lat_lo, lat_hi, lng_lo, lng_hi, ccx, ccy, ccz, cr2)",
     )
     return cov, geom, levels
 
 
 _EPS = repr(MAX_DETERMINANT_ERROR)
-# Tiles up to this many edges get their winding test UNROLLED into the
-# plan with literal edge coordinates, compiled into the refinement
-# Project's generated projection. Bigger tiles (real admin boundaries)
-# fall back to the array-column aggregate, which is interpreted per
-# element (~µs/edge/row).
-MAX_INLINE_EDGES = 96
 
 
-def _indet(x: str) -> str:
-    return f"(abs({x}) <= {_EPS})"
-
-
-def _crossing_sql(det_ab_c: str, det_ab_d: str, det_n_p: str, s: int) -> str:
-    """Edge c->d properly crosses the arc origin->p, as a boolean.
-
-    EdgeCrosser orientation identities: acb=-s(ab.c), bda=s(ab.d),
-    cbd=-s(n.p), dac=s(n.origin); proper crossing iff all equal and
-    != 0. dac is a driver-side constant folded to ``s`` = +-1
-    (_edge_planes), so the test is three strict comparisons against
-    the certified band: for s = +1, ab.c < -eps AND ab.d > eps AND
-    n.p < -eps; s = -1 flips every side. A determinant inside the band
-    fails its comparison, so a band lane never counts a crossing (the
-    caller flags it uncertified).
-    """
-    neg, pos = f"< -{_EPS}", f"> {_EPS}"
-    if s < 0:
-        neg, pos = pos, neg
-    return f"({det_ab_c} {neg} AND {det_ab_d} {pos} AND {det_n_p} {neg})"
-
-
-def _winding_agg_sql() -> str:
-    """Array-aggregate winding over the ``edges`` column (fallback path
-    for tiles too big to inline).
+def _winding_sql() -> str:
+    """Crossings of the arc X->p over the covering row's ``edges``.
 
     acc % _UNCERT   = certified crossing count,
     acc / _UNCERT  >0 = some determinant fell in the triage band.
 
-    The edge's folded sign ``e.s`` multiplies its determinants: a
-    product with +-1.0 is an exact sign flip, and 0.0 (origin
-    determinant in the band) fails every comparison. Every edge's end
-    vertex is another edge's start vertex (closed loops,
-    tiles.build_tileset), so the band test of ab.c over all edges
-    covers every vertex; ab.d is only compared.
+    The edge's folded sign ``e.s`` multiplies the three SQL
+    determinants, so a crossing is three strict comparisons against
+    the band: ab.C < -eps AND ab.D > eps AND N.p < -eps (the EdgeCrosser
+    identities of the module docstring, for s = +1; s = -1 flips every
+    side, and s = 0.0 fails them all). A cell's list need not close
+    its loops, so each of the three is band-tested.
     """
     ab_c = "(_abx * e.cx + _aby * e.cy + _abz * e.cz)"
     ab_d = "(_abx * e.dx + _aby * e.dy + _abz * e.dz)"
     n_p = "(e.nx * _px + e.ny * _py + e.nz * _pz)"
-    cross = _crossing_sql(f"e.s * {ab_c}", f"e.s * {ab_d}", f"e.s * {n_p}", 1)
+    band = " OR ".join(f"abs({x}) <= {_EPS}" for x in (ab_c, ab_d, n_p))
     return (
         f"aggregate(edges, 0L, (acc, e) -> acc"
-        f" + (CASE WHEN {cross} THEN 1L ELSE 0L END)"
-        f" + (CASE WHEN e.s = 0.0 OR {_indet(ab_c)} OR {_indet(n_p)}"
-        f" THEN {_UNCERT}L ELSE 0L END))"
+        f" + (CASE WHEN e.s * {ab_c} < -{_EPS} AND e.s * {ab_d} > {_EPS}"
+        f" AND e.s * {n_p} < -{_EPS} THEN 1L ELSE 0L END)"
+        f" + (CASE WHEN e.s = 0.0 OR {band} THEN {_UNCERT}L ELSE 0L END))"
     )
 
 
-def _winding_inline_sql(ts: TileSetStruct) -> str:
-    """Winding accumulator with the tile set inlined as literals.
-
-    The tile set is a plan-time constant, so each (small) polygon's
-    edge loop unrolls into one branch of an if-chain per tile; only
-    the matching branch is evaluated per row. This is 10-30x faster
-    than the interpreted higher-order-function aggregate. Each vertex
-    determinant ab.v is written three times (as one edge's start, the
-    previous edge's end, and once in the band test) and each edge
-    normal's n.p twice; the origin's determinants are folded to signs
-    on the driver (_edge_planes) and appear as no literal. A tile with
-    an origin determinant inside the band is uncertified on every
-    lane.
-    """
-    branches = []
-    for t, shape in enumerate(ts.shapes):
-        if not isinstance(shape, Polygon):
-            continue
-        planes = _edge_planes(shape)
-        if not planes or len(planes) > MAX_INLINE_EDGES:
-            continue
-        if any(sg == 0.0 for *_, sg in planes):
-            branches.append(f"WHEN tile_i = {t} THEN {_UNCERT}L")
-            continue
-        crosses, dets = [], {}
-        for cx, cy, cz, dx, dy, dz, nx, ny, nz, sg in planes:
-            ab_c = f"(_abx * {cx!r}D + _aby * {cy!r}D + _abz * {cz!r}D)"
-            ab_d = f"(_abx * {dx!r}D + _aby * {dy!r}D + _abz * {dz!r}D)"
-            n_p = f"({nx!r}D * _px + {ny!r}D * _py + {nz!r}D * _pz)"
-            cross = _crossing_sql(ab_c, ab_d, n_p, int(sg))
-            crosses.append(f"(CASE WHEN {cross} THEN 1L ELSE 0L END)")
-            dets.update(dict.fromkeys((ab_c, ab_d, n_p)))
-        uncert = " OR ".join(_indet(x) for x in dets)
-        body = (
-            f"(({' + '.join(crosses)})"
-            f" + (CASE WHEN {uncert} THEN {_UNCERT}L ELSE 0L END))"
-        )
-        branches.append(f"WHEN tile_i = {t} THEN {body}")
-    # The ELSE arm STAYS the aggregate form even when every polygon
-    # tile is inlined (making it unreachable). aggregate() is a
-    # CodegenFallback, so it keeps this refinement Project out of
-    # whole-stage codegen. Without it (ELSE 0L) the refinement fuses
-    # into the scan/join stage, whose largest generated method is then
-    # 12,925 bytes of bytecode for the flagship plan (6,655 with the
-    # arm; `bench_extra.py plancost`), above HotSpot's 8,000-byte
-    # huge-method limit: that method is never JIT-compiled and every
-    # row runs through it interpreted. The fixed per-task cost it saves
-    # is smaller than that per-row cost beyond a few hundred thousand
-    # rows. Best `bench_extra.py flagship` pass at local[4] on a 4-core
-    # host: x256 (1.28M pages) 8.45 s without the arm vs 5.83 s with
-    # it; x32 3.78 vs 4.16 s. With -XX:-DontCompileHugeMethods the
-    # order flips at x256 (4.85 vs 5.93 s), so the slowdown round 6
-    # measured at x1600 is this JIT limit, not CollapseProject
-    # re-evaluating the winding per consumer. The `edges` column the
-    # fallback references is always present (covering_frames ships
-    # typed empty arrays for inline tiles).
-    fallback = _winding_agg_sql()
-    if not branches:
-        return fallback
-    return "CASE " + " ".join(branches) + f" ELSE {fallback} END"
-
-
-def tag_candidates(
-    spark: SparkSession,
+def covering_candidates(
     df: DataFrame,
-    ts: TileSetStruct,
+    cov: DataFrame,
+    levels: list[int],
     lat_col: str = "lat",
     lng_col: str = "lng",
     cellid_col: str | None = None,
 ) -> DataFrame:
-    """df -> candidate rows joined with tile geometry + decision columns.
-
-    Appends ``tile_i``, ``_keep_sql`` (certified decision) and
-    ``_uncert_poly`` (needs exact residual check). All JVM.
-    """
-    cov, geom, levels = covering_frames(spark, ts)
-
+    """Rows of ``df`` with a non-null (lat, lng) joined with each
+    ``cov`` row (a ``cell`` column, at one of ``levels``) whose cell
+    holds the point: df columns (and ``cellid_col``, the leaf id) +
+    ``cov``'s columns but ``cell`` + the ``_bar1`` barrier."""
     # Pre-filter on the BASE columns (pushes to the scan as a plain
     # predicate); never filter on the derived _leaf — see
     # sqlkernels.pushdown_barrier for the optimizer blow-up that causes.
@@ -351,15 +272,31 @@ def tag_candidates(
     # textops.minhash_dedup_groups round 1). The array is built from a
     # non-null _leaf and is never empty, so outer semantics are
     # identical.
-    cand = (
+    return (
         pts.withColumn("_anc", F.explode_outer(anc))
         .join(F.broadcast(cov), F.col("_anc") == cov["cell"])
         .drop("cell", "_anc", "_leaf")
-        .join(F.broadcast(geom), "tile_i")
     )
 
-    o = Point.origin_point()
-    ox, oy, oz = o.x, o.y, o.z
+
+def tag_candidates(
+    spark: SparkSession,
+    df: DataFrame,
+    ts: TileSetStruct,
+    lat_col: str = "lat",
+    lng_col: str = "lng",
+    cellid_col: str | None = None,
+) -> DataFrame:
+    """df -> candidate rows joined with tile geometry + decision columns.
+
+    Appends ``tile_i``, ``_keep_sql`` (certified decision) and
+    ``_uncert_poly`` (needs exact residual check). All JVM.
+    """
+    cov, geom, levels = covering_frames(spark, ts)
+    cand = covering_candidates(df, cov, levels, lat_col, lng_col, cellid_col).join(
+        F.broadcast(geom), "tile_i"
+    )
+
     px, py, pz = sq.xyz_sql(lat_col, lng_col)
     # One selectExpr of lateral aliases (single analysis pass; nested
     # Projects at runtime — see sqlkernels.with_s2_cellid). The point
@@ -372,21 +309,33 @@ def tag_candidates(
         f"{px} AS _px",
         f"{py} AS _py",
         f"{pz} AS _pz",
-        f"({oy!r}D * _pz - {oz!r}D * _py) AS _abx",
-        f"({oz!r}D * _px - {ox!r}D * _pz) AS _aby",
-        f"({ox!r}D * _py - {oy!r}D * _px) AS _abz",
+        "(ctr_y * _pz - ctr_z * _py) AS _abx",
+        "(ctr_z * _px - ctr_x * _pz) AS _aby",
+        "(ctr_x * _py - ctr_y * _px) AS _abz",
         f"{sq.radians_sql(lat_col)} AS _latr",
         f"{sq.radians_sql(lng_col)} AS _lngr",
         f"{sq.rect_contains_sql('_latr', '_lngr', 'lat_lo', 'lat_hi', 'lng_lo', 'lng_hi')}"
         " AS _rect_ok",
         f"{sq.cap_contains_sql(('_px', '_py', '_pz'), ('ccx', 'ccy', 'ccz'), 'cr2')}"
         " AS _cap_ok",
-        # polygon: winding, inlined per tile (lazy CASE skips off-poly
-        # lanes; only the matching tile's unrolled branch evaluates)
+        # The refinement's one aggregate() STAYS a CodegenFallback (a
+        # higher-order function has no codegen): it keeps this
+        # refinement Project out of whole-stage codegen. Fused into the
+        # scan/join stage instead, the flagship plan's largest generated
+        # method is 12,925 bytes of bytecode (6,655 with it; `bench_extra.py
+        # plancost`), above HotSpot's 8,000-byte huge-method limit: that
+        # method is never JIT-compiled and every row runs through it
+        # interpreted. Best `bench_extra.py flagship` pass at local[4] on
+        # a 4-core host: x256 (1.28M pages) 8.45 s fused vs 5.83 s with
+        # the fallback; x32 3.78 vs 4.16 s. With
+        # -XX:-DontCompileHugeMethods the order flips at x256 (4.85 vs
+        # 5.93 s), so the slowdown is this JIT limit. Rect and cap tile
+        # sets keep it too: its CASE arm is off for them, but the
+        # expression is in the Project.
         f"(CASE WHEN kind = {KIND_POLYGON} AND NOT interior"
-        f" THEN ({_winding_inline_sql(ts)}) ELSE 0L END) AS _wind",
+        f" THEN {_winding_sql()} ELSE 0L END) AS _wind",
         f"(_wind >= {_UNCERT}L) AS _uncert",
-        f"(((_wind % {_UNCERT}L) % 2 = 1) != origin_parity) AS _poly_parity",
+        f"(((_wind % {_UNCERT}L) % 2 = 1) != ctr_in) AS _poly_parity",
         f"(CASE WHEN kind = {KIND_RECT} THEN _rect_ok WHEN interior THEN true"
         f" WHEN kind = {KIND_CAP} THEN _cap_ok"
         f" ELSE (NOT _uncert) AND _poly_parity END) AS _keep_sql",
@@ -425,7 +374,7 @@ def tag_tiles_pairs(
     The fully-analyzed result is memoized (``memo``): a call hits when
     it has the same live session, the same live tile set object, an
     input plan with the same semantics and the same arguments.
-    Catalyst analysis of the inlined encode chain + winding CASE is
+    Catalyst analysis of the inlined encode chain + refinement is
     seconds of fixed driver cost, and interactive workloads re-issue
     the same query shape.
     """

@@ -14,6 +14,11 @@ families (cellid, cap, rect, loop, regioncoverer) and from every test
 that checks the engine against the port (one that imports
 s2js_spark.spark or __spark_entry__).
 
+A module-level constant (``NAME = ...``, or ``A, B = ...``) in either
+package counts as a def: it must be read by reached code, and reading
+it reaches what its value uses. Every other module-level statement
+(imports, a ``__main__`` block) is a root of its module.
+
 Reach is by name, not by binding: a use of ``f`` anywhere in a reached
 body reaches every def named ``f``. A string constant passed to
 ``getattr``/``hasattr`` is a use, and dunders are reached, because the
@@ -42,11 +47,20 @@ GATED_TESTS = (
     "test_regioncoverer", "test_geojson_coverer",
 )
 
+_METRIC_TABLE = ("a row of the reference's metric table (Metric_constants.ts); the"
+                 " ported Metric tests bound the live rows by it (test_angles_metrics)")
+
 GEOMETRY_ALLOWLIST = {
     "edge_distances.distance_from_segment":
         "measures the error of the live intersection (test_intersection)",
     "edge_distances.interpolate":
         "samples the points Cell.from_point/contains_point are checked on (test_cell)",
+    **{f"metric.{name}": _METRIC_TABLE for name in (
+        "MIN_ANGLE_SPAN_METRIC", "AVG_ANGLE_SPAN_METRIC", "MAX_ANGLE_SPAN_METRIC",
+        "AVG_WIDTH_METRIC", "MAX_WIDTH_METRIC", "MIN_EDGE_METRIC", "MAX_EDGE_METRIC",
+        "MAX_EDGE_ASPECT", "MIN_AREA_METRIC", "MAX_AREA_METRIC",
+        "MIN_DIAG_METRIC", "AVG_DIAG_METRIC", "MAX_DIAG_METRIC", "MAX_DIAG_ASPECT",
+    )},
 }
 
 _FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
@@ -102,13 +116,34 @@ def _names(nodes) -> set[str]:
     return found
 
 
+def _constants(node: ast.stmt) -> list[str]:
+    """The names a module-level ``NAME = ...`` or ``A, B = ...`` binds;
+    [] for any other statement."""
+    if isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    elif isinstance(node, ast.Assign):
+        targets = node.targets
+    else:
+        return []
+    names = []
+    for target in targets:
+        elts = target.elts if isinstance(target, ast.Tuple) else [target]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts]
+    return names
+
+
 def _defs(tree: ast.Module, module: str) -> dict[str, list[ast.AST]]:
-    """``module.name`` for each top-level def and ``module.Class.name`` for
-    each method, mapped to the nodes reaching it walks. A class walks only
-    its header and the statements of its body that are not methods."""
+    """``module.name`` for each top-level def and module-level constant
+    and ``module.Class.name`` for each method, mapped to the nodes
+    reaching it walks. A class walks only its header and the statements
+    of its body that are not methods; a constant walks its value."""
     defs: dict[str, list[ast.AST]] = {}
     for node in tree.body:
-        if isinstance(node, ast.ClassDef):
+        if names := _constants(node):
+            defs.update((f"{module}.{name}", [node.value]) for name in names)
+        elif isinstance(node, ast.ClassDef):
             own = [n for n in node.body if not isinstance(n, _FUNCS)]
             defs[f"{module}.{node.name}"] = node.bases + node.keywords + node.decorator_list + own
             defs.update((f"{module}.{node.name}.{m.name}", [m])
@@ -132,7 +167,8 @@ def unreached(engine: dict[str, ast.Module], roots: list[ast.Module],
         defs.update(_defs(tree, module))
     frontier = _names(roots)
     for tree in engine.values():
-        frontier |= _names(node for node in tree.body if not isinstance(node, _DEFS))
+        frontier |= _names(node for node in tree.body
+                           if not isinstance(node, _DEFS) and not _constants(node))
     reached: set[str] = set()
     pending = {q for q in defs if q in allow or _is_dunder(q)}
     while True:
@@ -148,7 +184,7 @@ def _check_reach(package: pathlib.Path, roots: list[pathlib.Path],
                  allow: dict[str, str]) -> None:
     engine = {p.stem: ast.parse(p.read_text()) for p in sorted(package.glob("*.py"))}
     dead = unreached(engine, [ast.parse(p.read_text()) for p in roots], set(allow))
-    assert not dead, f"{package.name}/ defs only tests reach: {sorted(dead)}"
+    assert not dead, f"{package.name}/ defs and constants only tests reach: {sorted(dead)}"
     defs = {q for m, tree in engine.items() for q in _defs(tree, m)}
     stale = sorted(set(allow) - defs)
     assert not stale, f"allowlist entries with no def left: {stale}"
@@ -166,9 +202,15 @@ def test_reach_is_transitive_and_by_name():
     engine = {
         "a": ast.parse(
             "X = helper_const()\n"
-            "def helper_const(): return 1\n"
-            "def entry(): return inner()\n"
-            "def inner(): return 2\n"
+            "def helper_const(): return BASE\n"
+            "BASE, OTHER = 1, 2\n"
+            "UNREAD: int = 3\n"
+            "LIMIT = 4\n"
+            "if __name__ == '__main__':\n"
+            "    from_main()\n"
+            "def from_main(): return 8\n"
+            "def entry(): return inner() + X\n"
+            "def inner(): return LIMIT\n"
             "def only_tests(): return inner()\n"
             "class Kept:\n"
             "    def m(self): return via_class()\n"
@@ -183,4 +225,6 @@ def test_reach_is_transitive_and_by_name():
     }
     roots = [ast.parse("import a\na.entry()\nk = a.Kept()\nk.m()\n"
                        "getattr(k, 'by_string')\n")]
-    assert unreached(engine, roots, {"a.listed"}) == {"a.only_tests", "a.Kept.never_named"}
+    assert unreached(engine, roots, {"a.listed"}) == {
+        "a.only_tests", "a.Kept.never_named", "a.OTHER", "a.UNREAD",
+    }

@@ -103,18 +103,14 @@ def test_certified_fraction_is_total_on_organic_data(spark):
 
 
 def test_big_polygon_aggregate_path_matches_kernel(spark):
-    """The 240-edge concave tile exceeds MAX_INLINE_EDGES, so its
-    winding runs through the array-aggregate fallback — must agree
-    with the scalar port and need zero exact residuals on the organic
-    corpus."""
+    """The 240-edge concave tile, each boundary cell counting crossings
+    over its own few edges, must agree with the scalar port and need
+    zero exact residuals on the organic corpus."""
     import __spark_entry__ as e
     from s2js_spark.spark.pages import pages
     from s2js_spark.spark.pipeline import extract_geotags
-    from s2js_spark.spark.tagjoin import MAX_INLINE_EDGES
 
     ts = build_tileset(e.BIG_PIP_TILES, max_cells=64)
-    n_edges = sum(len(loop.vertices) for loop in ts.shapes[0].loops)
-    assert n_edges > MAX_INLINE_EDGES  # really drives the fallback
 
     geo = extract_geotags(pages(spark, SF)).filter(F.col("lat").isNotNull())
     geo = geo.select("url", "lat", "lng")
@@ -131,76 +127,121 @@ def _adversarial_rows(tiles) -> list[tuple[str, float, float]]:
     offs = (0.0, 1e-14, -1e-14, 1e-12, -1e-12)
     rows = []
     for _, geom in tiles:
-        ring = geom["coordinates"][0]
-        for lng, lat in ring[:-1]:
-            for dlat in offs:
-                for dlng in offs:
-                    rows.append((f"v{len(rows)}", lat + dlat, lng + dlng))
-        for (lng0, lat0), (lng1, lat1) in zip(ring, ring[1:]):
-            for f in (0.25, 1 / 3, 0.5):
-                rows.append(
-                    (f"e{len(rows)}", lat0 + f * (lat1 - lat0), lng0 + f * (lng1 - lng0))
-                )
+        for ring in geom["coordinates"]:
+            for lng, lat in ring[:-1]:
+                for dlat in offs:
+                    for dlng in offs:
+                        rows.append((f"v{len(rows)}", lat + dlat, lng + dlng))
+            for (lng0, lat0), (lng1, lat1) in zip(ring, ring[1:]):
+                for f in (0.25, 1 / 3, 0.5):
+                    rows.append(
+                        (f"e{len(rows)}", lat0 + f * (lat1 - lat0), lng0 + f * (lng1 - lng0))
+                    )
     return rows
 
 
-@pytest.mark.parametrize("tiles_name", ["PIP_TILES", "BIG_PIP_TILES"])
-def test_inline_and_aggregate_winding_decide_alike(spark, monkeypatch, tiles_name):
-    """The inlined per-tile winding and the array-aggregate winding make
-    the same decision and flag the same lanes on adversarial vertex and
-    edge points, each path forced through MAX_INLINE_EDGES; their
-    certified lanes agree with the scalar port."""
+def _face0(u: float, v: float) -> list[float]:
+    """[lng, lat] degrees of the face-0 point (1, u, v)."""
+    return [math.degrees(math.atan2(u, 1.0)), math.degrees(math.atan2(v, math.hypot(1.0, u)))]
+
+
+# Polygons whose boundary cells are hard for the cell-local refinement.
+EDGE_CASE_TILES = [
+    ("hole", {"type": "Polygon", "coordinates": [
+        [[10, 10], [14, 10], [14.5, 14], [10, 14], [10, 10]],
+        [[11, 11], [11, 13], [13, 13], [13, 11], [11, 11]],
+    ]}),
+    # continuous longitudes: a small quad across the antimeridian
+    ("antimeridian", {"type": "Polygon", "coordinates": [
+        [[178, -2], [182, -2], [181, 2], [179, 3], [178, -2]],
+    ]}),
+    # wrapped longitudes: the GeoJSON ring orientation makes this the
+    # complement of that quad, covered by face-sized cells
+    ("antimeridian_wrapped", {"type": "Polygon", "coordinates": [
+        [[178, -2], [-178, -2], [-179, 2], [179, 3], [178, -2]],
+    ]}),
+    ("north_pole", {"type": "Polygon", "coordinates": [
+        [[0, 85], [90, 85], [180, 85], [-90, 85], [0, 85]],
+    ]}),
+    ("shared_vertex_a", {"type": "Polygon", "coordinates": [
+        [[20, 0.5], [22, 0.5], [21, 1.5], [20, 0.5]],
+    ]}),
+    ("shared_vertex_b", {"type": "Polygon", "coordinates": [
+        [[22, 0.5], [24, 0.5], [23, 1.5], [22, 0.5]],
+    ]}),
+    # an edge along face 0's diagonal u = v, through the centre of every
+    # cell with i = j, so those cells' centre determinants are in the band
+    ("through_centres", {"type": "Polygon", "coordinates": [
+        [_face0(-0.3, -0.3), _face0(0.3, -0.3), _face0(0.3, 0.3), _face0(-0.3, -0.3)],
+    ]}),
+    # an edge 1e-14 degrees below the equator, a cell boundary at every
+    # level: the boundary cells above it list it only through the padding
+    ("below_equator", {"type": "Polygon", "coordinates": [
+        [[0.5, -1e-14], [1.5, -1e-14], [1.0, 1.0], [0.5, -1e-14]],
+    ]}),
+]
+
+
+def _edges_near_cell(shape, cell_id: int, margin: float) -> set[tuple[float, ...]]:
+    """Edges (C, D as six floats) of ``shape`` whose face segments meet
+    the cell's uv rectangle grown by ``margin``."""
+    from s2js_spark.geometry.cell import Cell
+    from s2js_spark.geometry.edge_clipping import edge_intersects_rect, face_segments
+    from s2js_spark.spark.polyline_ops import ring_edges
+
+    cell = Cell.from_cellid(cell_id)
+    rect = cell.uv.expanded_by_margin(margin)
+    return {
+        (c.x, c.y, c.z, d.x, d.y, d.z)
+        for loop in shape.loops
+        if not loop.is_empty_or_full()
+        for c, d, _, _ in ring_edges(loop.vertices)
+        if any(s.face == cell.face and edge_intersects_rect(s.a, s.b, rect)
+               for s in face_segments(c, d))
+    }
+
+
+@pytest.mark.parametrize("tiles_name", ["PIP_TILES", "BIG_PIP_TILES", "EDGE_CASE_TILES"])
+def test_cell_local_winding_matches_port(spark, tiles_name):
+    """The one polygon refinement, crossings from the covering cell's
+    centre over that cell's own edges, on adversarial vertex and edge
+    points: every boundary cell lists each edge that comes within 1e-12
+    (uv) of it, every certified lane equals Polygon.contains_point, some
+    lanes are flagged, and with the exact residual the pairs are the
+    scalar port's."""
     import __spark_entry__ as e
     from s2js_spark.geometry.point import Point
-    from s2js_spark.spark import tagjoin
 
-    tiles = getattr(e, tiles_name)
+    tiles = EDGE_CASE_TILES if tiles_name == "EDGE_CASE_TILES" else getattr(e, tiles_name)
     ts = build_tileset(tiles, max_cells=64)
-    df = spark.createDataFrame(
-        pd.DataFrame(_adversarial_rows(tiles), columns=["url", "lat", "lng"])
-    )
-    got = {}
-    for limit, head in ((0, "aggregate("), (10**6, "CASE ")):
-        monkeypatch.setattr(tagjoin, "MAX_INLINE_EDGES", limit)
-        assert tagjoin._winding_inline_sql(ts).startswith(head)
-        cand = tag_candidates(spark, df, ts).select(
-            "url", "lat", "lng", "tile_i", "_keep_sql", "_uncert_poly"
-        )
-        got[limit] = sorted(tuple(r) for r in cand.collect())
-    assert got[0] == got[10**6]
-    assert any(r[5] for r in got[0])  # some lanes are uncertified
+    cov = covering_frames(spark, ts)[0].collect()
+    padded = banded = 0
+    for r in cov:
+        if r["edges"] is None:  # only a polygon's boundary cells list edges
+            assert r["interior"]
+            continue
+        shape = ts.shapes[r["tile_i"]]
+        cell = int(np.int64(r["cell"]).astype(np.uint64))
+        listed = {tuple(x[f] for f in ("cx", "cy", "cz", "dx", "dy", "dz")) for x in r["edges"]}
+        assert _edges_near_cell(shape, cell, 1e-12) <= listed
+        padded += len(listed - _edges_near_cell(shape, cell, 0.0))
+        banded += sum(x["s"] == 0.0 for x in r["edges"])
+    if tiles_name == "EDGE_CASE_TILES":
+        assert padded > 0 and banded > 0  # the padding and the band both matter
+
+    rows = _adversarial_rows(tiles)
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["url", "lat", "lng"]))
+    cand = tag_candidates(spark, df, ts).select(
+        "url", "lat", "lng", "tile_i", "_keep_sql", "_uncert_poly"
+    ).collect()
+    assert any(r[5] for r in cand)  # some lanes are uncertified
     d = math.pi / 180.0
-    certified = [r for r in got[0] if not r[5]]
+    certified = [r for r in cand if not r[5]]
     assert certified
     for _, lat, lng, t, keep, _ in certified:
         p = Point.from_latlng_radians(lat * d, lng * d)
         assert keep == ts.shapes[t].contains_point(p)
-
-
-def test_inline_winding_writes_each_determinant_once(monkeypatch):
-    """Guard against the winding SQL regrowing: each vertex's
-    determinant ab.v appears at most 3 times (start of one edge, end of
-    the previous one, the band test), each edge normal's n.p at most
-    twice, and no origin determinant is left as a literal."""
-    import __spark_entry__ as e
-    from s2js_spark.geometry.point import Point
-    from s2js_spark.spark import tagjoin
-
-    monkeypatch.setattr(tagjoin, "MAX_INLINE_EDGES", 10**6)
-    ts = build_tileset(e.PIP_TILES + e.BIG_PIP_TILES, max_cells=16)
-    sql = tagjoin._winding_inline_sql(ts)
-    o = Point.origin_point()
-    ox, oy, oz = o.x, o.y, o.z
-    n_vertex = 0
-    for shape in ts.shapes:
-        for cx, cy, cz, dx, dy, dz, nx, ny, nz, _ in tagjoin._edge_planes(shape):
-            vertex = f"_abx * {cx!r}D + _aby * {cy!r}D + _abz * {cz!r}D"
-            assert 1 <= sql.count(vertex) <= 3
-            assert 1 <= sql.count(f"{nx!r}D * _px + {ny!r}D * _py + {nz!r}D * _pz") <= 2
-            assert repr(nx * ox + ny * oy + nz * oz) not in sql
-            n_vertex += 1
-    n_edges = sum(len(loop.vertices) for shape in ts.shapes for loop in shape.loops)
-    assert n_vertex == n_edges > 240
+    assert _pairs_set(tag_tiles_pairs(spark, df, ts)) == scalar_pairs(ts, rows)
 
 
 def test_pairs_plan_stays_compact(spark):
@@ -260,7 +301,9 @@ def test_empty_tileset_gives_zero_pairs(spark):
     ts = build_tileset([])
     cov, geom, levels = covering_frames(spark, ts)
     assert levels == [] and cov.count() == 0 and geom.count() == 0
-    assert cov.columns == ["cell", "tile_i", "interior"]
+    assert cov.columns == [
+        "cell", "tile_i", "interior", "ctr_x", "ctr_y", "ctr_z", "ctr_in", "edges",
+    ]
 
     df = spark.createDataFrame(
         pd.DataFrame({"url": ["a", "b"], "lat": [1.0, 50.0], "lng": [8.0, 50.0]})
