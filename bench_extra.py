@@ -14,14 +14,16 @@ Phases (select with argv[1], default "queries"):
 - ``micro``    : decomposition probes (pages scan alone, scan+regex,
                  scan+regex+dedup, encode, ...) to attribute the
                  flagship / per-query walls to pipeline stages.
-- ``plancost`` : fixed per-query plan cost of the tag-join frames
-                 (pip_tag, rect_tag, pip_big, tile_raster, flagship):
+- ``plancost`` : fixed per-query plan cost of the spatial-join frames
+                 (pip_tag, rect_tag, pip_big, tile_raster,
+                 buffer_tag_multi, flagship):
                  optimizer and planning ms, executed-plan characters,
                  the serialized bytes each task deserializes (every
                  codegen stage's ``references``; the expressions of
                  operators outside whole-stage codegen), each stage's
-                 largest generated method and the CodegenFallback
-                 expressions in the plan.
+                 largest generated method, the CodegenFallback
+                 expressions in the plan and its BroadcastExchange
+                 count.
 
 Usage: python bench_extra.py [phase] [tag] [only_query ...]
        python bench_extra.py plancost [only_frame ...]
@@ -211,8 +213,9 @@ def plan_cost(spark, build, runs: int = 3) -> dict:
     stage's largest generated method in bytecode bytes (HotSpot does
     not JIT-compile a method above 8,000), the serialized expressions
     of non-leaf operators outside whole-stage codegen (each task
-    generates their projections again) and the simple names of
-    CodegenFallback expressions."""
+    generates their projections again), the simple names of
+    CodegenFallback expressions and the number of BroadcastExchange
+    operators (each broadcast runs one Spark job)."""
     jvm = spark._jvm
     ser = jvm.org.apache.spark.util.Utils.serialize
     fallback = jvm.java.lang.Class.forName(_FALLBACK)
@@ -229,6 +232,7 @@ def plan_cost(spark, build, runs: int = 3) -> dict:
 
     codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     stages, max_method, outside, classes = {}, {}, {}, set()
+    broadcasts = 0
 
     def expr_classes(node):
         exprs = node.expressions()
@@ -236,7 +240,9 @@ def plan_cost(spark, build, runs: int = 3) -> dict:
             classes.update(n["class"] for n in json.loads(exprs.apply(k).toJSON()))
 
     def walk(node, in_stage):
+        nonlocal broadcasts
         cls = node.getClass().getSimpleName()
+        broadcasts += cls == "BroadcastExchangeExec"
         if cls == "AdaptiveSparkPlanExec":
             return walk(node.executedPlan(), False)
         if cls.endswith("QueryStageExec"):
@@ -268,11 +274,12 @@ def plan_cost(spark, build, runs: int = 3) -> dict:
         "plan_chars": plan_chars, "codegen_refs_bytes": stages,
         "max_method_bytecode": max_method,
         "outside_codegen_bytes": outside, "codegen_fallbacks": fallbacks,
+        "broadcast_exchanges": broadcasts,
     }
 
 
 def phase_plancost(only=None):
-    """plan_cost of the tag-join frames. The flagship frame runs over a
+    """plan_cost of the spatial-join frames. The flagship frame runs over a
     x1 bucketed corpus: its plan is the x1600 plan, at a size that
     fits any host."""
     import __spark_entry__ as e
@@ -283,7 +290,7 @@ def phase_plancost(only=None):
     qs = e.queries()
     builders = {
         name: (lambda name=name: qs[name](spark, SF_DIR))
-        for name in ("pip_tag", "rect_tag", "pip_big", "tile_raster")
+        for name in ("pip_tag", "rect_tag", "pip_big", "tile_raster", "buffer_tag_multi")
     }
     ts = bench.tileset()
     builders["flagship"] = lambda: bench.flagship_frames(spark, ts, amplify=1)[1]

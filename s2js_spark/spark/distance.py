@@ -155,8 +155,8 @@ def buffered_covering(
     return rows, sorted(levels)
 
 
-def _buffer_agg_sql(px: str, py: str, pz: str, edges: str = "_bedges") -> str:
-    """One aggregate() over the broadcast ``edges`` array producing
+def _buffer_agg_sql(px: str, py: str, pz: str, edges: str) -> str:
+    """One aggregate() over the ``edges`` array text producing
     struct(ins: inside-all-planes, d: min boundary chord^2): an
     O(1)-expression-width refinement, so plan size does not grow with
     the ring count. Per-edge arithmetic is buffer_exprs' own
@@ -187,9 +187,9 @@ def tag_within_distance_multi(
     stage (``tagjoin.covering_candidates``) over the radius-EXPANDED
     coverings, and only candidates run the exact
     inside-or-within-distance refinement: ONE aggregate over the
-    ring's broadcast edge array. Output: df columns + (tile_i,
-    ``dist_col``). All JVM; the only non-map stage is the broadcast of
-    the covering index (O(tiles x cells))."""
+    ring's edge array, a plan literal read by tile_i. Output: df
+    columns + (tile_i, ``dist_col``). All JVM; the only non-map stage
+    is the one broadcast, of the covering index (O(tiles x cells))."""
     spark = df.sparkSession
     cov_rows, levels = buffered_covering(rings, radius_deg)
     cov = sq.values_frame(
@@ -198,39 +198,28 @@ def tag_within_distance_multi(
     cand = covering_candidates(df, cov, levels, lat_col, lng_col)
 
     # staged refinement (tag_within_distance pattern): unit vector
-    # once, then the aggregate.
+    # once, then the aggregate over the ring's edges, a plan literal
+    # read by tile_i (an edgeless ring types it when there is no ring)
     ax, ay, az = sq.xyz_sql(lat_col, lng_col)
+    edges = ", ".join(
+        sq.struct_array_sql(_EDGE_FIELDS, _edge_values(ring)) for _, ring in rings or [("", [])]
+    )
+    agg = _buffer_agg_sql("_bpx", "_bpy", "_bpz", f"element_at(array({edges}), tile_i + 1)")
     staged = cand.selectExpr(
         "*", f"{ax} AS _bpx", f"{ay} AS _bpy", f"{az} AS _bpz"
     )
-    geom = sq.values_frame(
-        spark,
-        [
-            f"({t}, {sq.struct_array_sql(_EDGE_FIELDS, _edge_values(ring))})"
-            for t, (_tid, ring) in enumerate(rings)
-        ],
-        f"(0, {sq.struct_array_sql(_EDGE_FIELDS, [])})",
-        "_bufgeom(tile_i, edges)",
-    )
-    staged = staged.join(
-        F.broadcast(geom.withColumnRenamed("tile_i", "_geom_tile")),
-        F.col("tile_i") == F.col("_geom_tile"),
-    ).withColumnRenamed("edges", "_bedges")
     # barrier 2, after the aggregate: without it the filter below is
-    # pushed into the edge join's condition, and the aggregate runs
+    # pushed through the aggregate's Project, and the aggregate runs
     # there and again for the output column
-    staged = staged.withColumn(
-        "_bres", F.expr(_buffer_agg_sql("_bpx", "_bpy", "_bpz"))
-    ).withColumn("_bufm_b2", F.col("_bar1") + F.rand())
+    staged = staged.withColumn("_bres", F.expr(agg)).withColumn(
+        "_bufm_b2", F.col("_bar1") + F.rand()
+    )
     limit = chord2_limit(radius_deg)
     out = staged.filter(
         F.expr(f"_bres.ins OR _bres.d <= {sq.spark_lit(limit)}")
         & sq.barrier_guard("_bufm_b2")
     ).withColumn(dist_col, F.expr("round(_bres.d, 9)"))
-    return out.drop(
-        "_bpx", "_bpy", "_bpz", "_bar1", "_bufm_b2",
-        "_geom_tile", "_bedges", "_bres",
-    )
+    return out.drop("_bpx", "_bpy", "_bpz", "_bar1", "_bufm_b2", "_bres")
 
 
 def tag_within_distance(
@@ -245,7 +234,10 @@ def tag_within_distance(
     ``radius_deg`` of its boundary, with ``dist_col`` = boundary
     chord^2 rounded to 1e-9 (cross-engine FMA drift ~ulp; see
     polyline_ops). Map-only, zero shuffle; staged behind pushdown
-    barriers so whole-stage codegen always compiles."""
+    barriers so whole-stage codegen always compiles. A ring of fewer
+    than 3 distinct positions bounds nothing: zero rows."""
+    if not ring_points(ring):
+        return sq.no_rows(df, dist_col)
     ax, ay, az = sq.xyz_sql(lat_col, lng_col)
     base = df.selectExpr(
         "*", f"{ax} AS _bpx", f"{ay} AS _bpy", f"{az} AS _bpz"

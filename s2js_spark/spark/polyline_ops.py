@@ -29,14 +29,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..geometry.geojson import loop_unmarshal
 from ..geometry.point import Point
 from . import sqlkernels as sq
 
 
 def ring_points(ring: list[list[float]]) -> list[Point]:
-    """The vertices of a closed GeoJSON ring ([lng, lat] degrees,
-    first == last) as ``Point.from_latlng_degrees``."""
-    return [Point.from_latlng_degrees(p[1], p[0]) for p in ring[:-1]]
+    """The vertices of a GeoJSON ring ([lng, lat] degrees) as the tag
+    join and the coverings read it (``geojson.loop_unmarshal``): none
+    for a ring of fewer than 3 distinct positions."""
+    return loop_unmarshal(ring).vertices
 
 
 def ring_edges(v: list[Point]) -> list[tuple[Point, Point, Point, float]]:
@@ -140,6 +142,8 @@ def clip_segments_convex(
     once, exactly as spelled, same op order as the DuckDB oracle.
     """
     planes = convex_planes(ring)
+    if not planes:
+        return sq.no_rows(seg, "t0", "t1")
     ax, ay, az = sq.xyz_sql(alat, alng)
     bx, by, bz = sq.xyz_sql(blat, blng)
     base = seg.selectExpr(

@@ -9,20 +9,22 @@ certified path runs with ZERO Python:
 
 1.  leaf cell ids via the pure-SQL encode (sqlkernels.with_s2_cellid);
 2.  candidate lookup (``covering_candidates``): each tile's
-    RegionCoverer covering becomes a row set (cell, tile_i, interior,
-    and for a polygon's boundary cell its centre data below); points
-    compute their ancestor at every covering level (pure bigint
-    bit-ops) and broadcast-hash-join ancestors == covering cells.
+    RegionCoverer covering becomes a row set (cell, tile_i, the
+    driver's decision code ``dec``, and for a polygon's boundary cell
+    its centre data below); points compute their ancestor at every
+    covering level (pure bigint bit-ops) and broadcast-hash-join
+    ancestors == covering cells, the join's one broadcast (each costs
+    a Spark job): per-tile constants are a plan literal read by tile_i.
     Coverings are normalized CellUnions, so a point matches at most one
     covering cell per tile — no dedup needed. This is the canonical S2
     spatial join shape at 100 TB: map-side broadcast, no shuffle,
     skew-immune (hot cells fan out across whatever partitioning the
     input already has).
 3.  refinement entirely in SQL, from the point-geometry texts of
-    ``sqlkernels``:
+    ``sqlkernels``, by the covering row's ``DEC_*`` code:
     - rect tiles: ``sqlkernels.rect_contains_sql`` on the radians
       (multiply/compare only, so exactly ``Rect.contains_latlng``,
-      whose invalid-LatLng answer is no);
+      whose invalid-LatLng answer is no, interior cell or not);
     - interior covering cells of caps and polygons: candidate is in by
       construction (the reference's locateCellID INDEXED/interior
       trichotomy);
@@ -98,9 +100,9 @@ from . import sqlkernels as sq
 from .polyline_ops import ring_edges
 from .tiles import TileSetStruct
 
-KIND_POLYGON = 0
-KIND_RECT = 1
-KIND_CAP = 2
+# A covering row's decision code (module docstring, step 3), set on
+# the driver from the tile's shape and whether the cell is interior.
+DEC_INTERIOR, DEC_RECT, DEC_CAP, DEC_POLY = range(4)
 
 _UNCERT = 1_000_000  # accumulator stride separating crossing count / flags
 
@@ -116,6 +118,10 @@ _CELL_COLS = (
     ("ctr_in", "BOOLEAN"), ("edges", sq.struct_array_type(_EDGE_FIELDS)),
 )
 _NO_CELL = "NULL, NULL, NULL, false, NULL"
+
+# A tile's constants: a rect's bounds (radians), a cap's centre and
+# chord^2 radius; zeros for the fields its shape does not have.
+_TILE_FIELDS = ("lat_lo", "lat_hi", "lng_lo", "lng_hi", "ccx", "ccy", "ccz", "cr2")
 
 
 def _boundary_cells(poly: Polygon, cells: list[int]) -> list[str]:
@@ -147,30 +153,35 @@ def _boundary_cells(poly: Polygon, cells: list[int]) -> list[str]:
     return rows
 
 
-def covering_frames(
-    spark: SparkSession, ts: TileSetStruct
-) -> tuple[DataFrame, DataFrame, list[int]]:
-    """(covering cells df, tile geometry df, sorted covering levels).
+def _decisions(ts: TileSetStruct) -> list[int]:
+    """The DEC_* code of each covering row of ``ts``."""
+    return [
+        DEC_RECT if isinstance(ts.shapes[t], Rect) else DEC_INTERIOR if interior
+        else DEC_POLY if isinstance(ts.shapes[t], Polygon) else DEC_CAP
+        for t, interior in zip(ts.cov_tile, ts.cov_interior)
+    ]
 
-    Both frames are broadcast-sized: O(covering cells + the edges that
-    meet boundary cells) and O(tiles), joined separately (cell lookup,
-    then per-tile geometry). A polygon's boundary covering rows carry
-    the cell-local refinement data (_CELL_COLS); every other row has
-    _NO_CELL there.
 
-    Both frames are inline ``VALUES`` SQL, which the analyzer resolves
-    to a LocalRelation: each broadcast still runs one Spark job, but
-    one without Python, while ``createDataFrame`` frames are
-    pickled-RDD-backed (``Scan ExistingRDD``) and every broadcast
-    materialization ran Python-deserializing tasks. Not memoized itself:
+def covering_frames(spark: SparkSession, ts: TileSetStruct) -> tuple[DataFrame, list[int]]:
+    """(covering cells df, sorted covering levels).
+
+    The frame is broadcast-sized, O(covering cells + the edges that
+    meet boundary cells): a row per (cell, tile_i) with its DEC_* code
+    ``dec``. A polygon's boundary covering rows carry the cell-local
+    refinement data (_CELL_COLS); every other row has _NO_CELL there.
+
+    It is inline ``VALUES`` SQL, a LocalRelation: its broadcast runs one
+    Spark job, but one without Python (a ``createDataFrame`` frame's
+    broadcast ran Python-deserializing tasks). Not memoized itself:
     its one engine caller, tag_tiles_pairs, builds it only on a
     ``memo`` miss.
     """
     levels = sorted({int(cs.level(int(c))) for c in ts.cov_cell})
+    decisions = _decisions(ts)
 
     boundary: dict[int, list[int]] = {}
-    for c, t, interior in zip(ts.cov_cell, ts.cov_tile, ts.cov_interior):
-        if not interior and isinstance(ts.shapes[t], Polygon):
+    for c, t, dec in zip(ts.cov_cell, ts.cov_tile, decisions):
+        if dec == DEC_POLY:
             boundary.setdefault(int(t), []).append(int(c))
     cell_sql = {
         (c, t): row
@@ -180,37 +191,30 @@ def covering_frames(
     cov = sq.values_frame(
         spark,
         [
-            f"({int(np.uint64(c).astype(np.int64))}L, {int(t)},"
-            f" {'true' if i else 'false'}, {cell_sql.get((int(c), int(t)), _NO_CELL)})"
-            for c, t, i in zip(ts.cov_cell, ts.cov_tile, ts.cov_interior)
+            f"({int(np.uint64(c).astype(np.int64))}L, {int(t)}, {dec},"
+            f" {cell_sql.get((int(c), int(t)), _NO_CELL)})"
+            for c, t, dec in zip(ts.cov_cell, ts.cov_tile, decisions)
         ],
-        f"(0L, 0, false, {_NO_CELL})",
-        f"_cov(cell, tile_i, interior, {', '.join(n for n, _ in _CELL_COLS)})",
+        f"(0L, 0, 0, {_NO_CELL})",
+        f"_cov(cell, tile_i, dec, {', '.join(n for n, _ in _CELL_COLS)})",
     ).selectExpr(
-        "cell", "tile_i", "interior",
+        "cell", "tile_i", "dec",
         *(f"CAST({n} AS {t}) AS {n}" for n, t in _CELL_COLS),
     )
+    return cov, levels
 
-    d = sq.cast_lit
-    geom_rows = []
-    for t, shape in enumerate(ts.shapes):
-        rect, cap = (0.0,) * 4, (0.0,) * 4
-        if isinstance(shape, Polygon):
-            kind = KIND_POLYGON
-        elif isinstance(shape, Rect):
-            kind = KIND_RECT
-            rect = (shape.lat.lo, shape.lat.hi, shape.lng.lo, shape.lng.hi)
-        else:
-            kind = KIND_CAP
-            cap = (shape.center.x, shape.center.y, shape.center.z, shape.rad)
-        geom_rows.append(f"({t}, {kind}, {', '.join(d(v) for v in rect + cap)})")
-    geom = sq.values_frame(
-        spark,
-        geom_rows,
-        f"(0, 0, {', '.join([d(0.0)] * 8)})",
-        "_geom(tile_i, kind, lat_lo, lat_hi, lng_lo, lng_hi, ccx, ccy, ccz, cr2)",
-    )
-    return cov, geom, levels
+
+def _tile_sql(ts: TileSetStruct) -> str:
+    """The covering row's tile's _TILE_FIELDS struct, looked up by
+    tile_i in a plan literal built from the shapes' own fields."""
+    zero = (0.0,) * 4
+    rows = [
+        (s.lat.lo, s.lat.hi, s.lng.lo, s.lng.hi) + zero if isinstance(s, Rect)
+        else zero * 2 if isinstance(s, Polygon)
+        else zero + (s.center.x, s.center.y, s.center.z, s.rad)
+        for s in ts.shapes
+    ]
+    return f"element_at({sq.struct_array_sql(_TILE_FIELDS, rows)}, tile_i + 1)"
 
 
 _EPS = repr(MAX_DETERMINANT_ERROR)
@@ -287,15 +291,13 @@ def tag_candidates(
     lng_col: str = "lng",
     cellid_col: str | None = None,
 ) -> DataFrame:
-    """df -> candidate rows joined with tile geometry + decision columns.
+    """df -> candidate rows with their covering row's columns + decision columns.
 
     Appends ``tile_i``, ``_keep_sql`` (certified decision) and
     ``_uncert_poly`` (needs exact residual check). All JVM.
     """
-    cov, geom, levels = covering_frames(spark, ts)
-    cand = covering_candidates(df, cov, levels, lat_col, lng_col, cellid_col).join(
-        F.broadcast(geom), "tile_i"
-    )
+    cov, levels = covering_frames(spark, ts)
+    cand = covering_candidates(df, cov, levels, lat_col, lng_col, cellid_col)
 
     px, py, pz = sq.xyz_sql(lat_col, lng_col)
     # One selectExpr of lateral aliases (single analysis pass; nested
@@ -314,9 +316,10 @@ def tag_candidates(
         "(ctr_x * _py - ctr_y * _px) AS _abz",
         f"{sq.radians_sql(lat_col)} AS _latr",
         f"{sq.radians_sql(lng_col)} AS _lngr",
-        f"{sq.rect_contains_sql('_latr', '_lngr', 'lat_lo', 'lat_hi', 'lng_lo', 'lng_hi')}"
+        f"{_tile_sql(ts)} AS _tile",
+        f"{sq.rect_contains_sql('_latr', '_lngr', '_tile.lat_lo', '_tile.lat_hi', '_tile.lng_lo', '_tile.lng_hi')}"
         " AS _rect_ok",
-        f"{sq.cap_contains_sql(('_px', '_py', '_pz'), ('ccx', 'ccy', 'ccz'), 'cr2')}"
+        f"{sq.cap_contains_sql(('_px', '_py', '_pz'), ('_tile.ccx', '_tile.ccy', '_tile.ccz'), '_tile.cr2')}"
         " AS _cap_ok",
         # The refinement's one aggregate() STAYS a CodegenFallback (a
         # higher-order function has no codegen): it keeps this
@@ -332,17 +335,15 @@ def tag_candidates(
         # 5.93 s), so the slowdown is this JIT limit. Rect and cap tile
         # sets keep it too: its CASE arm is off for them, but the
         # expression is in the Project.
-        f"(CASE WHEN kind = {KIND_POLYGON} AND NOT interior"
-        f" THEN {_winding_sql()} ELSE 0L END) AS _wind",
+        f"(CASE WHEN dec = {DEC_POLY} THEN {_winding_sql()} ELSE 0L END) AS _wind",
         f"(_wind >= {_UNCERT}L) AS _uncert",
         f"(((_wind % {_UNCERT}L) % 2 = 1) != ctr_in) AS _poly_parity",
-        f"(CASE WHEN kind = {KIND_RECT} THEN _rect_ok WHEN interior THEN true"
-        f" WHEN kind = {KIND_CAP} THEN _cap_ok"
-        f" ELSE (NOT _uncert) AND _poly_parity END) AS _keep_sql",
-        f"(kind = {KIND_POLYGON} AND NOT interior AND _uncert) AS _uncert_poly",
+        f"(CASE dec WHEN {DEC_INTERIOR} THEN true WHEN {DEC_RECT} THEN _rect_ok"
+        f" WHEN {DEC_CAP} THEN _cap_ok ELSE (NOT _uncert) AND _poly_parity END) AS _keep_sql",
+        f"(dec = {DEC_POLY} AND _uncert) AS _uncert_poly",
     ]
     cand = cand.selectExpr("*", *refine_exprs).drop(
-        "_px", "_py", "_pz", "_abx", "_aby", "_abz", "_latr", "_lngr",
+        "_px", "_py", "_pz", "_abx", "_aby", "_abz", "_latr", "_lngr", "_tile",
         "_rect_ok", "_cap_ok", "_wind", "_uncert", "_poly_parity",
     )
     # barrier 2: keeps the _keep_sql / _uncert_poly filters as cheap
@@ -407,13 +408,10 @@ def _tag_tiles_pairs_build(
     # condition (measured: 530 KB plan, ~2s/execution fixed cost).
     guard = sq.barrier_guard("_bar2")
     easy = cand.filter(F.col("_keep_sql") & guard).select(*out_cols)
-    # Only non-interior polygon covering cells can produce uncertified
-    # lanes; a tile set without them makes the residual branch (a
-    # second full scan) a provable no-op — skip it.
-    has_poly = any(
-        isinstance(ts.shapes[t], Polygon) and not interior
-        for t, interior in zip(ts.cov_tile, ts.cov_interior)
-    )
+    # Only DEC_POLY covering rows can produce uncertified lanes; a tile
+    # set without them makes the residual branch (a second full scan) a
+    # provable no-op — skip it.
+    has_poly = DEC_POLY in _decisions(ts)
     if not exact_residuals or not has_poly:
         return easy
 

@@ -10,9 +10,9 @@ and SQL refinement from the shapes (polygon loops, rect bounds, cap
 center and radius), and the same shapes resolve the lanes that
 refinement cannot certify.
 
-At cluster scale the broadcast is O(total covering cells + vertices)
-per executor, docs never shuffle for this join, and skew in hot cells
-is irrelevant because membership is a map-side join, not a key join.
+At cluster scale the one broadcast is the covering, O(total covering
+cells + boundary edges) per executor, docs never shuffle for this join,
+and skew in hot cells is irrelevant: membership is a map-side join.
 """
 
 from __future__ import annotations

@@ -20,6 +20,10 @@ from s2js_spark.spark.session import get_session
 
 D = math.pi / 180.0
 DIAMOND = [[8.0, 0.3], [8.9, 1.0], [8.0, 1.7], [7.1, 1.0], [8.0, 0.3]]
+# The same ring with a position repeated, and clockwise: the coverings
+# and the tag join read both as DIAMOND (geojson.loop_unmarshal).
+DIAMOND_REPEAT = [[8.0, 0.3], [8.9, 1.0], [8.9, 1.0], [8.0, 1.7], [7.1, 1.0], [8.0, 0.3]]
+DIAMOND_CW = DIAMOND[::-1]
 
 
 @pytest.fixture(scope="module")
@@ -231,3 +235,47 @@ def test_multi_aggregate_fallback_matches_inline(spark):
             want.add((r["id"], k, r["bdist"]))
     assert got == want
     assert len(want) > 50
+
+
+def test_buffer_joins_read_the_normalized_ring(spark):
+    """Both buffer joins read a ring as its covering does: a repeated
+    position or a clockwise ring gives the declared diamond's rows, its
+    centre (1, 8) included, and a ring of fewer than 3 distinct
+    positions gives zero rows with the same columns."""
+    from s2js_spark.spark.distance import tag_within_distance_multi
+
+    rng = np.random.RandomState(5)
+    rows = [(0, 1.0, 8.0)] + [
+        (i, float(rng.uniform(-1, 3)), float(rng.uniform(5, 11))) for i in range(1, 300)
+    ]
+    df = spark.createDataFrame(rows, "id long, lat double, lng double")
+
+    def single(ring):
+        return tag_within_distance(df, ring, 0.5)
+
+    def multi(ring):
+        return tag_within_distance_multi(df, [("a", ring)], 0.5)
+
+    def got(out):
+        return {(r["id"], r["bdist"]) for r in out.collect()}
+
+    want = got(single(DIAMOND))
+    assert 0 in {i for i, _ in want} and len(want) < len(rows)
+    for ring in (DIAMOND_REPEAT, DIAMOND_CW):
+        assert got(single(ring)) == want
+        assert got(multi(ring)) == want
+    for ring in ([[8.0, 0.3]], [[8.0, 0.3], [8.9, 1.0]]):
+        for join in (single, multi):
+            out = join(ring)
+            assert out.collect() == []
+            assert out.dtypes == join(DIAMOND).dtypes
+
+
+def test_spatial_joins_broadcast_one_frame(spark):
+    """The buffer multi join broadcasts its covering and nothing else:
+    each ring's edges are a plan literal read by tile_i."""
+    from s2js_spark.spark.distance import tag_within_distance_multi
+
+    df = spark.createDataFrame([(0, 1.0, 8.0)], "id long, lat double, lng double")
+    out = tag_within_distance_multi(df, _grid_rings(3), 0.5)
+    assert out._jdf.queryExecution().executedPlan().toString().count("BroadcastExchange") == 1

@@ -248,3 +248,41 @@ def test_convex_clip_codegen_compiles(tmp_path):
         assert out.count() > 0
     finally:
         spark.conf.set("spark.sql.codegen.fallback", old)
+
+
+def test_clip_reads_the_normalized_ring():
+    """The clip reads a ring as its covering does
+    (geojson.loop_unmarshal): a repeated position or a clockwise ring
+    clips as the declared diamond, and a ring of fewer than 3 distinct
+    positions gives zero rows with the same columns."""
+    from s2js_spark.spark.polyline_ops import clip_segments_convex
+    from s2js_spark.spark.session import get_session
+
+    repeat = [[8.0, 0.3], [8.9, 1.0], [8.9, 1.0], [8.0, 1.7], [7.1, 1.0], [8.0, 0.3]]
+    clockwise = DIAMOND[::-1]
+    want = [(n.x, n.y, n.z) for n in convex_planes(DIAMOND)]
+    for ring in (repeat, clockwise):
+        assert [(n.x, n.y, n.z) for n in convex_planes(ring)] == want
+
+    spark = get_session("local[2]", shuffle_partitions=2)
+    spark.sparkContext.setLogLevel("ERROR")
+    rng = np.random.RandomState(11)
+    seg = spark.createDataFrame(
+        [
+            (i, *(float(v) for v in rng.uniform((-1, 6, -1, 6), (3, 10, 3, 10))))
+            for i in range(200)
+        ],
+        "id long, alat double, alng double, blat double, blng double",
+    )
+
+    def clip(ring):
+        return clip_segments_convex(seg, ring)
+
+    ref = {tuple(r) for r in clip(DIAMOND).collect()}
+    assert 0 < len(ref) < 200
+    for ring in (repeat, clockwise):
+        assert {tuple(r) for r in clip(ring).collect()} == ref
+    for ring in ([[8.0, 0.3]], [[8.0, 0.3], [8.9, 1.0]]):
+        out = clip(ring)
+        assert out.collect() == []
+        assert out.dtypes == clip(DIAMOND).dtypes

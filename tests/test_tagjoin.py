@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from s2js_spark.spark.session import get_session
 from s2js_spark.spark.tagjoin import (
+    DEC_INTERIOR,
     covering_frames,
     tag_candidates,
     tag_tiles_pairs,
@@ -218,7 +219,7 @@ def test_cell_local_winding_matches_port(spark, tiles_name):
     padded = banded = 0
     for r in cov:
         if r["edges"] is None:  # only a polygon's boundary cells list edges
-            assert r["interior"]
+            assert r["dec"] == DEC_INTERIOR
             continue
         shape = ts.shapes[r["tile_i"]]
         cell = int(np.int64(r["cell"]).astype(np.uint64))
@@ -266,6 +267,17 @@ def test_pairs_plan_stays_compact(spark):
     assert len(udf_line) < 2_000
 
 
+def test_tag_join_broadcasts_one_frame(spark):
+    """The tag join of a polygon, rect and cap tile set broadcasts its
+    covering and nothing else: per-tile constants are plan literals
+    read by tile_i (each broadcast frame runs one Spark job)."""
+    df = spark.createDataFrame(
+        pd.DataFrame({"url": ["a", "b"], "lat": [1.0, 50.0], "lng": [8.0, 50.0]})
+    )
+    pairs = tag_tiles_pairs(spark, df, _tileset())
+    assert pairs._jdf.queryExecution().executedPlan().toString().count("BroadcastExchange") == 1
+
+
 def test_rect_cap_sql_bitwise_vs_kernel(spark):
     """Dense sample near rect and cap boundaries: SQL refinement uses
     the correctly-rounded op order of Rect.contains_latlng and
@@ -294,15 +306,15 @@ def test_rect_cap_sql_bitwise_vs_kernel(spark):
 
 
 def test_empty_tileset_gives_zero_pairs(spark):
-    """An empty tile list yields typed empty covering frames and zero
+    """An empty tile list yields a typed empty covering frame and zero
     pairs with the same output columns as a non-empty tile set."""
     import __spark_entry__ as e
 
     ts = build_tileset([])
-    cov, geom, levels = covering_frames(spark, ts)
-    assert levels == [] and cov.count() == 0 and geom.count() == 0
+    cov, levels = covering_frames(spark, ts)
+    assert levels == [] and cov.count() == 0
     assert cov.columns == [
-        "cell", "tile_i", "interior", "ctr_x", "ctr_y", "ctr_z", "ctr_in", "edges",
+        "cell", "tile_i", "dec", "ctr_x", "ctr_y", "ctr_z", "ctr_in", "edges",
     ]
 
     df = spark.createDataFrame(
