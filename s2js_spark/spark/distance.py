@@ -190,10 +190,9 @@ def tag_within_distance_multi(
     ring's edge array, a plan literal read by tile_i. Output: df
     columns + (tile_i, ``dist_col``). All JVM; the only non-map stage
     is the one broadcast, of the covering index (O(tiles x cells))."""
-    spark = df.sparkSession
     cov_rows, levels = buffered_covering(rings, radius_deg)
     cov = sq.values_frame(
-        spark, [f"({c}L, {t})" for c, t in cov_rows], "(0L, 0)", "_bufcov(cell, tile_i)"
+        df.sparkSession, [f"({c}L, {t})" for c, t in cov_rows], "(0L, 0)", "_bufcov(cell, tile_i)"
     )
     cand = covering_candidates(df, cov, levels, lat_col, lng_col)
 
@@ -234,10 +233,10 @@ def tag_within_distance(
     ``radius_deg`` of its boundary, with ``dist_col`` = boundary
     chord^2 rounded to 1e-9 (cross-engine FMA drift ~ulp; see
     polyline_ops). Map-only, zero shuffle; staged behind pushdown
-    barriers so whole-stage codegen always compiles. A ring of fewer
-    than 3 distinct positions bounds nothing: zero rows."""
+    barriers so whole-stage codegen always compiles. A ring without
+    ``ring_points`` bounds nothing: zero rows."""
     if not ring_points(ring):
-        return sq.no_rows(df, dist_col)
+        return df.withColumn(dist_col, F.lit(None).cast("double")).limit(0)
     ax, ay, az = sq.xyz_sql(lat_col, lng_col)
     base = df.selectExpr(
         "*", f"{ax} AS _bpx", f"{ay} AS _bpy", f"{az} AS _bpz"

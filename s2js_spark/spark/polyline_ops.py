@@ -36,9 +36,10 @@ from . import sqlkernels as sq
 
 def ring_points(ring: list[list[float]]) -> list[Point]:
     """The vertices of a GeoJSON ring ([lng, lat] degrees) as the tag
-    join and the coverings read it (``geojson.loop_unmarshal``): none
-    for a ring of fewer than 3 distinct positions."""
-    return loop_unmarshal(ring).vertices
+    join and the coverings read it (``geojson.loop_unmarshal``); none
+    when fewer than 3 remain, a loop that covers no cell."""
+    v = loop_unmarshal(ring).vertices
+    return v if len(v) >= 3 else []
 
 
 def ring_edges(v: list[Point]) -> list[tuple[Point, Point, Point, float]]:
@@ -143,7 +144,7 @@ def clip_segments_convex(
     """
     planes = convex_planes(ring)
     if not planes:
-        return sq.no_rows(seg, "t0", "t1")
+        return seg.withColumns({c: F.lit(None).cast("double") for c in ("t0", "t1")}).limit(0)
     ax, ay, az = sq.xyz_sql(alat, alng)
     bx, by, bz = sq.xyz_sql(blat, blng)
     base = seg.selectExpr(

@@ -91,11 +91,6 @@ def struct_array_sql(fields: tuple[str, ...], rows: list[tuple[float, ...]]) -> 
     ))
 
 
-def no_rows(df: DataFrame, *double_cols: str) -> DataFrame:
-    """Zero rows of ``df`` with the DOUBLE columns ``double_cols`` appended."""
-    return df.select("*", *(F.lit(None).cast("double").alias(c) for c in double_cols)).limit(0)
-
-
 # --------------------------------------------------------- point geometry
 #
 # The one SQL spelling of point geometry. The tag join's refinement,

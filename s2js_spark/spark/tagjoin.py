@@ -300,6 +300,7 @@ def tag_candidates(
     cand = covering_candidates(df, cov, levels, lat_col, lng_col, cellid_col)
 
     px, py, pz = sq.xyz_sql(lat_col, lng_col)
+    tile = [f"_tile.{n}" for n in _TILE_FIELDS]
     # One selectExpr of lateral aliases (single analysis pass; nested
     # Projects at runtime — see sqlkernels.with_s2_cellid). The point
     # must be exactly Point.from_latlng_radians(lat * d, lng * d): the
@@ -317,10 +318,8 @@ def tag_candidates(
         f"{sq.radians_sql(lat_col)} AS _latr",
         f"{sq.radians_sql(lng_col)} AS _lngr",
         f"{_tile_sql(ts)} AS _tile",
-        f"{sq.rect_contains_sql('_latr', '_lngr', '_tile.lat_lo', '_tile.lat_hi', '_tile.lng_lo', '_tile.lng_hi')}"
-        " AS _rect_ok",
-        f"{sq.cap_contains_sql(('_px', '_py', '_pz'), ('_tile.ccx', '_tile.ccy', '_tile.ccz'), '_tile.cr2')}"
-        " AS _cap_ok",
+        f"{sq.rect_contains_sql('_latr', '_lngr', *tile[:4])} AS _rect_ok",
+        f"{sq.cap_contains_sql(('_px', '_py', '_pz'), tuple(tile[4:7]), tile[7])} AS _cap_ok",
         # The refinement's one aggregate() STAYS a CodegenFallback (a
         # higher-order function has no codegen): it keeps this
         # refinement Project out of whole-stage codegen. Fused into the

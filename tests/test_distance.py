@@ -240,8 +240,8 @@ def test_multi_aggregate_fallback_matches_inline(spark):
 def test_buffer_joins_read_the_normalized_ring(spark):
     """Both buffer joins read a ring as its covering does: a repeated
     position or a clockwise ring gives the declared diamond's rows, its
-    centre (1, 8) included, and a ring of fewer than 3 distinct
-    positions gives zero rows with the same columns."""
+    centre (1, 8) included, and a ring left with fewer than 3 distinct
+    vertices gives zero rows with the same columns."""
     from s2js_spark.spark.distance import tag_within_distance_multi
 
     rng = np.random.RandomState(5)
@@ -264,7 +264,7 @@ def test_buffer_joins_read_the_normalized_ring(spark):
     for ring in (DIAMOND_REPEAT, DIAMOND_CW):
         assert got(single(ring)) == want
         assert got(multi(ring)) == want
-    for ring in ([[8.0, 0.3]], [[8.0, 0.3], [8.9, 1.0]]):
+    for ring in ([[8.0, 0.3]], [[8.0, 0.3], [8.9, 1.0]], [[8.0, 0.3], [8.9, 1.0], [8.0, 0.3]]):
         for join in (single, multi):
             out = join(ring)
             assert out.collect() == []

@@ -253,8 +253,8 @@ def test_convex_clip_codegen_compiles(tmp_path):
 def test_clip_reads_the_normalized_ring():
     """The clip reads a ring as its covering does
     (geojson.loop_unmarshal): a repeated position or a clockwise ring
-    clips as the declared diamond, and a ring of fewer than 3 distinct
-    positions gives zero rows with the same columns."""
+    clips as the declared diamond, and a ring left with fewer than 3
+    distinct vertices gives zero rows with the same columns."""
     from s2js_spark.spark.polyline_ops import clip_segments_convex
     from s2js_spark.spark.session import get_session
 
@@ -282,7 +282,7 @@ def test_clip_reads_the_normalized_ring():
     assert 0 < len(ref) < 200
     for ring in (repeat, clockwise):
         assert {tuple(r) for r in clip(ring).collect()} == ref
-    for ring in ([[8.0, 0.3]], [[8.0, 0.3], [8.9, 1.0]]):
+    for ring in ([[8.0, 0.3]], [[8.0, 0.3], [8.9, 1.0]], [[8.0, 0.3], [8.9, 1.0], [8.0, 0.3]]):
         out = clip(ring)
         assert out.collect() == []
         assert out.dtypes == clip(DIAMOND).dtypes
