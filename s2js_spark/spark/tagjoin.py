@@ -27,7 +27,7 @@ certified path runs with ZERO Python:
       whose invalid-LatLng answer is no, interior cell or not);
     - interior covering cells of caps and polygons: candidate is in by
       construction (the reference's locateCellID INDEXED/interior
-      trichotomy);
+      trichotomy): the polygon arm below with no edge and the centre in;
     - cap tiles: ``sqlkernels.cap_contains_sql``, the chord^2 test in
       the operation order of ``Point.chord_angle_between`` (so exactly
       ``Cap.contains_point``);
@@ -112,12 +112,14 @@ _EDGE_FIELDS = ("cx", "cy", "cz", "dx", "dy", "dz", "nx", "ny", "nz", "s")
 
 # The covering frame's per-cell columns, and their values off a
 # polygon's boundary cells. ctr_in is never NULL: a nullable input
-# grows the generated code of the stage that reads the decision.
+# grows the generated code of the stage that reads the decision. It
+# is true on an interior cell, which the shape contains: with no edge
+# to cross, the crossing count's decision keeps its candidates.
 _CELL_COLS = (
     ("ctr_x", "DOUBLE"), ("ctr_y", "DOUBLE"), ("ctr_z", "DOUBLE"),
     ("ctr_in", "BOOLEAN"), ("edges", sq.struct_array_type(_EDGE_FIELDS)),
 )
-_NO_CELL = "NULL, NULL, NULL, false, NULL"
+_NO_CELL = "NULL, NULL, NULL, {}, NULL"
 
 # A tile's constants: a rect's bounds (radians), a cap's centre and
 # chord^2 radius; zeros for the fields its shape does not have.
@@ -192,10 +194,10 @@ def covering_frames(spark: SparkSession, ts: TileSetStruct) -> tuple[DataFrame, 
         spark,
         [
             f"({int(np.uint64(c).astype(np.int64))}L, {int(t)}, {dec},"
-            f" {cell_sql.get((int(c), int(t)), _NO_CELL)})"
+            f" {cell_sql.get((int(c), int(t)), _NO_CELL.format(dec == DEC_INTERIOR))})"
             for c, t, dec in zip(ts.cov_cell, ts.cov_tile, decisions)
         ],
-        f"(0L, 0, 0, {_NO_CELL})",
+        f"(0L, 0, 0, {_NO_CELL.format(False)})",
         f"_cov(cell, tile_i, dec, {', '.join(n for n, _ in _CELL_COLS)})",
     ).selectExpr(
         "cell", "tile_i", "dec",
@@ -337,8 +339,8 @@ def tag_candidates(
         f"(CASE WHEN dec = {DEC_POLY} THEN {_winding_sql()} ELSE 0L END) AS _wind",
         f"(_wind >= {_UNCERT}L) AS _uncert",
         f"(((_wind % {_UNCERT}L) % 2 = 1) != ctr_in) AS _poly_parity",
-        f"(CASE dec WHEN {DEC_INTERIOR} THEN true WHEN {DEC_RECT} THEN _rect_ok"
-        f" WHEN {DEC_CAP} THEN _cap_ok ELSE (NOT _uncert) AND _poly_parity END) AS _keep_sql",
+        f"(CASE dec WHEN {DEC_RECT} THEN _rect_ok WHEN {DEC_CAP} THEN _cap_ok"
+        " ELSE (NOT _uncert) AND _poly_parity END) AS _keep_sql",
         f"(dec = {DEC_POLY} AND _uncert) AS _uncert_poly",
     ]
     cand = cand.selectExpr("*", *refine_exprs).drop(
