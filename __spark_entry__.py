@@ -239,7 +239,7 @@ def _q_s2_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cellid",
         "token",
         sq.s2_level_sql("cellid").alias("level"),
-        sq.s2_token_sql(sq.parent_sql("cellid", 10)).alias("token_l10"),
+        sq.s2_token_sql(sq.s2_parent_sql("cellid", 10)).alias("token_l10"),
         sq.s2_flip_key_sql("cellid").alias("sort_key"),
     )
 
@@ -249,7 +249,7 @@ def _q_cell_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from s2js_spark.spark import sqlkernels as sq
 
     df = encode_cells(_geo_pages(spark, sf_dir).filter(F.col("lat").isNotNull()))
-    parent = sq.s2_token_sql(sq.parent_sql("cellid", 6))
+    parent = sq.s2_token_sql(sq.s2_parent_sql("cellid", 6))
     return (
         df.withColumn("cell_l6", parent)
         .groupBy("cell_l6")
@@ -281,7 +281,7 @@ def _q_tile_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = tag_tiles_pairs(spark, df, ts, cellid_col="cellid")
     return (
         pairs.withColumn("tile_id", tile_id_col(ts.tile_ids))
-        .withColumn("cell_l8", sq.s2_token_sql(sq.parent_sql("cellid", 8)))
+        .withColumn("cell_l8", sq.s2_token_sql(sq.s2_parent_sql("cellid", 8)))
         .groupBy("tile_id", "cell_l8")
         .agg(F.count("*").cast("long").alias("n_pages"))
     )

@@ -32,6 +32,8 @@ from ..geometry.geojson import GeoJSONRegionCoverer, from_geojson
 from ..geometry.point import Point
 from . import sqlkernels as sq
 
+_FLIP = "shiftleft(1L, 63)"  # XOR with 2^63: signed order == unsigned S2 order
+_PARENT_LSB = "shiftleft(1L, 60 - 2 * level)"
 _RECT_ARGS = ("lat", "lng", "lat_lo", "lat_hi", "lng_lo", "lng_hi")
 _CAP_ARGS = ("lat", "lng", "clat", "clng", "radius_deg")
 
@@ -47,19 +49,25 @@ def _predicate(name: str, args: tuple[str, ...], body: str) -> str:
 
 
 # One declaration each, with the cellid.ts lines (or the scalar
-# expression) it ports; the hierarchy bodies are sqlkernels' texts
+# expression) it ports
 _SQL_FUNCTIONS = [
-    f"s2_level(id BIGINT) RETURNS INT RETURN {sq.level_sql('id')}",
-    f"s2_parent(id BIGINT, level INT) RETURNS BIGINT RETURN {sq.parent_sql('id', 'level')}",
+    # 30 - ctz/2 (67-69); -2 for id 0, as the scalar port
+    "s2_level(id BIGINT) RETURNS INT"
+    " RETURN 30 - shiftrightunsigned(bit_count((id & -id) - 1), 1)",
+    # 74-77
+    "s2_parent(id BIGINT, level INT) RETURNS BIGINT"
+    f" RETURN (id & -{_PARENT_LSB}) | {_PARENT_LSB}",
     # 194-203
     "s2_range_min(id BIGINT) RETURNS BIGINT RETURN id - ((id & -id) - 1)",
     "s2_range_max(id BIGINT) RETURNS BIGINT RETURN id + ((id & -id) - 1)",
     # unsigned range_min(a) <= b <= range_max(a) (208-210)
     "s2_contains(a BIGINT, b BIGINT) RETURNS BOOLEAN"
-    f" RETURN {sq.flip_key_sql('b')} BETWEEN {sq.flip_key_sql('(a - ((a & -a) - 1))')}"
-    f" AND {sq.flip_key_sql('(a + ((a & -a) - 1))')}",
-    f"s2_flip_key(id BIGINT) RETURNS BIGINT RETURN {sq.flip_key_sql('id')}",
-    f"s2_token(id BIGINT) RETURNS STRING RETURN {sq.token_sql('id')}",
+    f" RETURN (b ^ {_FLIP}) BETWEEN ((a - ((a & -a) - 1)) ^ {_FLIP})"
+    f" AND ((a + ((a & -a) - 1)) ^ {_FLIP})",
+    f"s2_flip_key(id BIGINT) RETURNS BIGINT RETURN id ^ {_FLIP}",
+    # hex, trailing zeros stripped, 'X' for 0 (224-228)
+    "s2_token(id BIGINT) RETURNS STRING RETURN CASE WHEN id = 0 THEN 'X'"
+    " ELSE regexp_replace(lower(lpad(hex(id), 16, '0')), '0+$', '') END",
     # Rect(R1Interval(lat_lo, lat_hi), S1Interval(lng_lo, lng_hi))
     # .contains_latlng(LatLng(lat, lng)), every argument in degrees. An
     # interval with a NaN end contains nothing there, while Spark

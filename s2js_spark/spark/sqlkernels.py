@@ -392,49 +392,24 @@ def with_s2_neighborhood(
 
 
 # ------------------------------------------------------- hierarchy columns
-#
-# The one SQL spelling of the cell hierarchy (cellid.ts lines) over a
-# BIGINT cell id text ``c``, for the registered s2_* functions too.
+
+def s2_parent_sql(cellid: Column | str, level: int) -> Column:
+    """Ancestor at ``level`` (cellid.ts:74-77) as pure bigint bit ops.
+
+    Works on the raw uint64 bit pattern stored in LongType: AND/OR are
+    bit-pattern operations, identical under the signed reinterpret.
+    """
+    c = F.col(cellid) if isinstance(cellid, str) else cellid
+    lsb = 1 << (2 * (MAX_LEVEL - level))
+    return c.bitwiseAND(F.lit(-lsb)).bitwiseOR(F.lit(lsb))
 
 
-def level_sql(c: str) -> str:
-    """Level (67-69): 30 - ctz/2; -2 for id 0, as the scalar port."""
-    return f"(30 - shiftrightunsigned(bit_count(({c} & -{c}) - 1), 1))"
-
-
-def parent_sql(c: str, level: int | str) -> str:
-    """Ancestor at ``level``, a number or an INT text (74-77)."""
-    lsb = f"shiftleft(1L, 60 - 2 * {level})"
-    return f"(({c} & -{lsb}) | {lsb})"
-
-
-def flip_key_sql(c: str) -> str:
-    """XOR with 2^63: signed order == unsigned S2 order."""
-    return f"({c} ^ shiftleft(1L, 63))"
-
-
-def token_sql(c: str) -> str:
-    """Hex token, trailing zeros stripped, 'X' for 0 (224-228)."""
-    return (
-        f"(CASE WHEN {c} = 0 THEN 'X'"
-        f" ELSE regexp_replace(lower(lpad(hex({c}), 16, '0')), '0+$', '') END)"
-    )
-
-
-def s2_parent_sql(cellid: str, level: int) -> Column:
-    return F.expr(parent_sql(cellid, level))
-
-
-def s2_level_sql(cellid: str) -> Column:
-    return F.expr(level_sql(cellid))
-
-
-def s2_flip_key_sql(cellid: str) -> Column:
-    return F.expr(flip_key_sql(cellid))
-
-
-def s2_token_sql(cellid: str) -> Column:
-    return F.expr(token_sql(cellid))
+def s2_level_sql(cellid: Column | str) -> Column:
+    """Level in [0,30]: 30 - ctz/2 with ctz = bit_count(lsb - 1)."""
+    c = F.col(cellid) if isinstance(cellid, str) else cellid
+    lsb = c.bitwiseAND(-c)
+    ctz = F.bit_count(lsb - F.lit(1)).cast("int")
+    return (F.lit(MAX_LEVEL) - F.shiftrightunsigned(ctz, 1)).cast("int")
 
 
 def cell_union_normalize(df: DataFrame, key: str, cell: str, level: int) -> DataFrame:
@@ -473,3 +448,16 @@ def cell_union_normalize(df: DataFrame, key: str, cell: str, level: int) -> Data
         .select(key, F.coalesce(F.col("_top._anc"), F.col(cell)).alias(cell))
         .distinct()
     )
+
+
+def s2_flip_key_sql(cellid: Column | str) -> Column:
+    """XOR with 2^63: signed order == unsigned S2 order."""
+    c = F.col(cellid) if isinstance(cellid, str) else cellid
+    return c.bitwiseXOR(F.lit(-(1 << 63)))
+
+
+def s2_token_sql(cellid: Column | str) -> Column:
+    """Hex token, trailing zeros stripped, 'X' for 0 (cellid.ts:224-228)."""
+    c = F.col(cellid) if isinstance(cellid, str) else cellid
+    h = F.regexp_replace(F.lower(F.lpad(F.hex(c), 16, "0")), "0+$", "")
+    return F.when(c == 0, F.lit("X")).otherwise(h)

@@ -125,7 +125,7 @@ def test_hierarchy_sql_columns(spark):
         F.expr("s2_range_min(s2_parent(cid, 12))").alias("rmin"),
         F.expr("s2_range_max(s2_parent(cid, 12))").alias("rmax"),
         sq.s2_token_sql("cid").alias("tok"),
-        sq.s2_token_sql(sq.parent_sql("cid", 4)).alias("tok4"),
+        sq.s2_token_sql(sq.s2_parent_sql("cid", 4)).alias("tok4"),
     ).toPandas()
     col = lambda name: out[name].to_numpy(np.int64)  # noqa: E731
     assert (col("p10") == as_long([cs.parent(i, 10) for i in ids])).all()
